@@ -28,6 +28,7 @@ _FACEIJ = StructType(
 _XYZ = StructType(
     [StructField("x", DoubleType()), StructField("y", DoubleType()), StructField("z", DoubleType())]
 )
+_XYZ_LEAF = StructType(_XYZ.fields + [StructField("leaf", LongType())])
 
 from ..kernel import cellid as s2
 
@@ -120,6 +121,21 @@ def _latlng_deg_to_xyz(lat: pd.Series, lng: pd.Series) -> pd.DataFrame:
 
 def latlng_deg_to_xyz(lat, lng) -> Column:
     return _latlng_deg_to_xyz(lat, lng)
+
+
+@pandas_udf(_XYZ_LEAF)
+def _latlng_deg_to_xyz_leaf(lat: pd.Series, lng: pd.Series) -> pd.DataFrame:
+    x, y, z = s2.latlng_to_xyz(
+        np.radians(lat.to_numpy(np.float64)), np.radians(lng.to_numpy(np.float64))
+    )
+    return pd.DataFrame({"x": x, "y": y, "z": z, "leaf": s2.to_signed(s2.xyz_to_cell_id(x, y, z))})
+
+
+def latlng_deg_to_xyz_leaf(lat, lng) -> Column:
+    """struct<x,y,z,leaf>: the unit point and its leaf cell id from one
+    conversion — bit-identical to latlng_deg_to_xyz and
+    cell_id_from_latlng_deg(..., 30), which both start from the same xyz."""
+    return _latlng_deg_to_xyz_leaf(lat, lng)
 
 
 @pandas_udf(ArrayType(LongType()))

@@ -1,39 +1,34 @@
 """F5: closest-edge queries — nearest shape boundaries to each query point.
 
 Semantics follow S2ClosestEdgeQuery (S2ClosestEdgeQuery.java:158 over
-S2BestEdgesQueryBase): results ordered by S1ChordAngle length2, here over
-the DataFrame shape index (operators/shapes.shape_index_df) instead of a
-per-query priority queue:
+S2BestEdgesQueryBase): results ordered by S1ChordAngle length2, ties by
+(shape_id, edge_id), here over the DataFrame shape index
+(operators/shapes.shape_index_df) instead of a per-query priority queue.
 
-1. the index is built with a uniform min_level floor and keyed by
-   parent(cell, L);
-2. each query probes its level-L cell plus the 8 ring neighbors (A13) and
-   equi-joins the index key — candidates are every edge indexed within one
-   cell of the query;
-3. the exact point-edge chord distance runs as PURE JVM Column arithmetic
-   (edge_min_chord2_cols below — the same op order as the numpy A21 kernel
-   kernel/edges.min_chord2_to_edges, so the two paths agree bit-for-bit),
-   inside whole-stage codegen, no Python;
-4. per-query top-k by (chord2, shape_id, edge_id) window; completeness is
-   proved by the ring bound (k-th distance <= MIN_WIDTH(L) means nothing
-   outside the 3x3 ring can beat it); unfinished queries fall back to a
-   brute broadcast pass over the (distinct) edge set.
+The search is operators/ringsearch.search, the loop kNN shares. This module
+supplies the edge-specific parts:
 
-The whole search composes as ONE lazy plan: ring rounds, finished/unfinished
-splits and the brute remnant chain without driver-side isEmpty() round-trips
-(each of those was a full Spark job per round), so the caller's single action
-executes the complete search. A round whose ``remaining`` input is empty
-contributes an empty union branch — AQE's empty-relation propagation collapses
-it at runtime — so the result set is identical to the eager-loop form.
+* the keyed index: index rows keyed by parent(cell_id, lvl), so the index
+  must be built with min_level >= the search level;
+* the score: the exact point-edge chord distance as PURE JVM Column
+  arithmetic (edge_min_chord2_cols below — the same op order as the numpy
+  A21 kernel kernel/edges.min_chord2_to_edges, so the two agree
+  bit-for-bit), inside whole-stage codegen, no Python;
+* routing: an index of at most SMALL_INDEX_BRUTE_EDGES rows skips the ring
+  rounds; queries far from the whole index take the max-distance covering
+  seed (covering_pruned_edges) instead of rings that would come up empty.
+
+Like the ring search, every path composes into ONE lazy plan: the caller's
+single action executes the complete search.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
+from . import ringsearch
 from ..functions import columns as cc
-from ..functions import udfs
 from ..kernel import sphere
 
 _EPS = float(np.finfo(np.float64).eps)
@@ -94,25 +89,14 @@ def edge_min_chord2_cols(px, py, pz, ax, ay, az, bx, by, bz) -> Column:
     )
 
 
-def _query_points(queries: DataFrame, query_id: str, lat: str, lng: str) -> DataFrame:
-    """(query_id, px, py, pz, qleaf) — ONE Arrow pass over the queries,
-    shared by every ring-probe round and the brute remnant."""
-    qs = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(lat).alias("lat"),
-        F.col(lng).alias("lng"),
-        udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30).alias("qleaf"),
-    )
-    p = udfs.latlng_deg_to_xyz(F.col("lat"), F.col("lng"))
-    return (
-        qs.withColumn("_p", p)
-        .select(
-            "query_id",
-            F.col("_p.x").alias("px"),
-            F.col("_p.y").alias("py"),
-            F.col("_p.z").alias("pz"),
-            "qleaf",
-        )
+_IDS = ["shape_id", "edge_id"]
+_ENDPOINTS = ["ax", "ay", "az", "bx", "by", "bz"]
+
+
+def _edge_chord2() -> Column:
+    """edge_min_chord2_cols from the query point (qx, qy, qz) to the edge."""
+    return edge_min_chord2_cols(
+        *(F.col(c) for c in ("qx", "qy", "qz", *_ENDPOINTS))
     )
 
 
@@ -124,8 +108,6 @@ def furthest_edges(
     query_id: str = "query_id",
     lat: str = "lat",
     lng: str = "lng",
-    fallback_level_step: int = 3,
-    max_rounds: int = 3,
     covering_seed: bool | str = "auto",
     interiors: DataFrame | None = None,
     max_error_rad: float = 0.0,
@@ -164,8 +146,6 @@ def furthest_edges(
         query_id=query_id,
         lat="lat",
         lng="lng",
-        fallback_level_step=fallback_level_step,
-        max_rounds=max_rounds,
         # Max-distance covering seed (S2FurthestEdgeQuery's covering
         # traversal): antipode points of queries near a CLUSTERED index
         # are far from every cell, so rings always come up empty and the
@@ -197,8 +177,6 @@ def closest_edges(
     query_id: str = "query_id",
     lat: str = "lat",
     lng: str = "lng",
-    fallback_level_step: int = 3,
-    max_rounds: int = 3,
     covering_seed: bool | str = False,
     max_chord2: float | None = None,
     distance_cap: str = "inclusive",
@@ -239,8 +217,8 @@ def closest_edges(
     from .knn import effective_max_chord2
 
     res = _closest_edges_impl(
-        index, queries, k, level, query_id, lat, lng,
-        fallback_level_step, max_rounds, covering_seed, max_error_rad,
+        index, queries, k, level, query_id, lat, lng, covering_seed,
+        max_error_rad,
     )
     if interiors is not None:
         from . import shapes as shape_ops
@@ -259,16 +237,10 @@ def closest_edges(
         # zeros — sound because every edge row dropped by the impl ranked
         # below k edge rows that ARE present, and interior rows only push
         # rankings down further.
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc("chord2"), F.asc("shape_id"), F.asc("edge_id")
-        )
-        res = (
-            res.select("query_id", "shape_id", "edge_id", "chord2")
-            .unionByName(interior_rows)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "shape_id", "edge_id", "chord2")
-        )
+        res = ringsearch.topk(
+            res.select("query_id", *_IDS, "chord2").unionByName(interior_rows),
+            k, _IDS,
+        ).select("query_id", "rank", *_IDS, "chord2")
     eff = effective_max_chord2(max_chord2, distance_cap, edges=True)
     return res if eff is None else res.where(F.col("chord2") <= F.lit(eff))
 
@@ -281,8 +253,6 @@ def _closest_edges_impl(
     query_id: str = "query_id",
     lat: str = "lat",
     lng: str = "lng",
-    fallback_level_step: int = 3,
-    max_rounds: int = 3,
     covering_seed: bool | str = False,
     max_error_rad: float = 0.0,
 ) -> DataFrame:
@@ -291,61 +261,25 @@ def _closest_edges_impl(
     min_level >= ``level`` so parent(cell_id, level) is a valid key.
 
     The index is persisted here: its mapInPandas build runs once and every
-    ring round + the brute remnant read the cached rows. Unfinished
-    queries (k-th distance not provably final inside the 3x3 ring) retry
-    at a coarser level — the bounded-loop form knn_cell_join uses
-    (S2ClosestEdgeQuery.java:158 / S2BestEdgesQueryBase's growing search
-    region) — so the full-edge brute pass sees only the (tiny) remnant
-    still unfinished at level 0, never a whole far-from-boundary region.
+    ring round and the exact pass read the cached rows.
     """
     from pyspark import StorageLevel
 
     index = index.persist(StorageLevel.MEMORY_AND_DISK)
-    qpts = _query_points(queries, query_id, lat, lng).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # One count over the persisted index: materializes the cache every
-    # search path reads anyway, and gives the edge cardinality both routing
-    # decisions (brute-under-threshold, covering seed) want.
+    qpts = ringsearch.points(queries, query_id, "query_id", lat, lng, "q")
+    # The one driver job: a count over the persisted index fills the cache
+    # every path reads anyway and gives the edge cardinality both routing
+    # decisions (small-index exact pass, covering seed) want.
     n_edges = index.count()
     if covering_seed == "auto":
         covering_seed = n_edges >= AUTO_COVERING_SEED_EDGES
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("chord2"), F.asc("shape_id"), F.asc("edge_id")
-    )
-    if not covering_seed and n_edges <= SMALL_INDEX_BRUTE_EDGES:
-        # Exact one-pass route: broadcast the (tiny, distinct) edge set onto
-        # the query table — no query broadcast (queries may be huge), no
-        # ring rounds, one window. Identical results to the ring search. An
-        # engaged covering seed (explicit or auto) takes precedence: the
-        # caller asked for the covering-pruned traversal.
-        edges_all = index.dropDuplicates(["shape_id", "edge_id"]).select(
-            "shape_id", "edge_id", "ax", "ay", "az", "bx", "by", "bz"
-        )
-        return (
-            qpts.crossJoin(F.broadcast(edges_all))
-            .select(
-                "query_id",
-                "shape_id",
-                "edge_id",
-                edge_min_chord2_cols(
-                    F.col("px"), F.col("py"), F.col("pz"),
-                    F.col("ax"), F.col("ay"), F.col("az"),
-                    F.col("bx"), F.col("by"), F.col("bz"),
-                ).alias("chord2"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "shape_id", "edge_id", "chord2")
-        )
-    results = None
-    remaining = qpts
+    far = None
     if covering_seed:
         # Route queries whose 3x3 ring at the seed level certainly holds
         # no index cell (min distance to the whole covering exceeds the
-        # ring's completeness bound) straight to the covering-pruned exact
-        # path — their ring rounds would all come up empty (the clustered-
-        # index / antipode regime of S2FurthestEdgeQuery).
+        # ring's reach) to the covering-pruned path — their ring rounds
+        # would all come up empty (the clustered-index / antipode regime of
+        # S2FurthestEdgeQuery). Its unproven queries rejoin the ring search.
         cover = index.select(
             cc.parent("cell_id", level).alias("ccell")
         ).distinct()
@@ -354,116 +288,39 @@ def _closest_edges_impl(
                 3.0 * sphere.metric_value(sphere.MAX_ANGLE_SPAN_DERIV, level)
             )
         )
-        qmin = (
+        far_ids = (
             qpts.crossJoin(F.broadcast(cover))
             .select(
                 "query_id",
-                _cell_udf("min")("ccell", "px", "py", "pz").alias("minb"),
+                _cell_udf("min")("ccell", "qx", "qy", "qz").alias("minb"),
             )
             .groupBy("query_id")
             .agg(F.min("minb").alias("minb_min"))
+            .where(F.col("minb_min") > F.lit(ring_reach))
+            .select("query_id")
         )
-        far_ids = qmin.where(F.col("minb_min") > F.lit(ring_reach)).select(
-            "query_id"
+        far, violators = covering_pruned_edges(
+            index, qpts.join(far_ids, "query_id"), k, level
         )
-        far_q = qpts.join(far_ids, "query_id")
-        remaining = qpts.join(far_ids, "query_id", "left_anti")
-        if not far_q.isEmpty():
-            results = covering_pruned_edges(index, far_q, k, level, w)
-        if remaining.isEmpty():
-            return results
-    lvl = level
-    for round_no in range(max_rounds):
-        idx_l = index.select(
-            "shape_id",
-            "edge_id",
-            "ax", "ay", "az", "bx", "by", "bz",
-            cc.parent("cell_id", lvl).alias("cell_key"),
-        ).dropDuplicates(["shape_id", "edge_id", "cell_key"])
-        probe = remaining.select(
-            "query_id",
-            "px",
-            "py",
-            "pz",
-            F.explode(
-                F.array_union(
-                    F.array(cc.parent("qleaf", lvl)),
-                    udfs.all_neighbors(cc.parent("qleaf", lvl)),
-                )
-            ).alias("cell_key"),
-        )
-        cand = (
-            probe.join(idx_l, "cell_key")
-            .dropDuplicates(["query_id", "shape_id", "edge_id"])
-            .select(
-                "query_id",
-                "shape_id",
-                "edge_id",
-                edge_min_chord2_cols(
-                    F.col("px"), F.col("py"), F.col("pz"),
-                    F.col("ax"), F.col("ay"), F.col("az"),
-                    F.col("bx"), F.col("by"), F.col("bz"),
-                ).alias("chord2"),
-            )
-        )
-        # persisted: the verdict aggregation, the finished-query filter and
-        # the final result all read this round's top-k — without the cache
-        # the candidate join would re-execute once per consumer
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # Completeness: an edge with NO index cell inside the 3x3 ring at
-        # lvl lies entirely outside it, hence >= MIN_WIDTH(lvl) away.
-        # Options.maxError relaxes the acceptance in ANGLE space: a k-th
-        # result within maxError of that floor is acceptable even if a
-        # marginally closer unseen edge exists outside the ring.
-        bound = float(
-            sphere.chord2_from_angle(
-                sphere.metric_value(sphere.MIN_WIDTH_DERIV, lvl)
-                + max_error_rad
-            )
-        )
-        verdict = topk.groupBy("query_id").agg(
-            F.count("*").alias("found"), F.max("chord2").alias("kth")
-        )
-        finished = verdict.where(
-            (F.col("found") == k) & (F.col("kth") < F.lit(bound))
-        ).select("query_id")
-        done = topk.join(finished, "query_id").select(
-            "query_id", "rank", "shape_id", "edge_id", "chord2"
-        )
-        results = done if results is None else results.unionByName(done)
-        remaining = remaining.join(finished, "query_id", "left_anti")
-        lvl = max(0, lvl - fallback_level_step)
-        if lvl == 0:
-            break
-    # exact brute remnant — only queries still unfinished at the coarsest
-    # ring (expected ~none); reads the SAME persisted index. Unioned lazily:
-    # when every query finished in the ring rounds the remnant broadcast is
-    # empty and AQE prunes the join to nothing.
-    edges_all = index.dropDuplicates(["shape_id", "edge_id"]).select(
-        "shape_id", "edge_id", "ax", "ay", "az", "bx", "by", "bz"
+        qpts = qpts.join(far_ids, "query_id", "left_anti").unionByName(violators)
+    # A tiny index runs no ring round: the exact pass broadcasts the edge
+    # set onto the queries (the reference's brute-force-under-threshold
+    # routing, S2ClosestEdgeQuery maxBruteForceIndexSize). An engaged
+    # covering seed takes precedence.
+    small = not covering_seed and n_edges <= SMALL_INDEX_BRUTE_EDGES
+    res = ringsearch.search(
+        qpts.withColumn("lvl", F.lit(level)), k, _IDS, _edge_chord2(),
+        items=index.dropDuplicates(_IDS).select(*_IDS, *_ENDPOINTS),
+        # an edge indexed in several cells under one parent repeats here;
+        # the top-k folds the repeated candidates
+        keyed=lambda levels: index.crossJoin(levels).select(
+            *_IDS, *_ENDPOINTS, "lvl",
+            cc.parent("cell_id", F.col("lvl")).alias("cell"),
+        ),
+        seed_levels=set() if small else {level},
+        max_error_rad=max_error_rad,
     )
-    brute = (
-        F.broadcast(remaining.select("query_id", "px", "py", "pz"))
-        .crossJoin(edges_all)
-        .select(
-            "query_id",
-            "shape_id",
-            "edge_id",
-            edge_min_chord2_cols(
-                F.col("px"), F.col("py"), F.col("pz"),
-                F.col("ax"), F.col("ay"), F.col("az"),
-                F.col("bx"), F.col("by"), F.col("bz"),
-            ).alias("chord2"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "shape_id", "edge_id", "chord2")
-    )
-    return results.unionByName(brute) if results is not None else brute
+    return res if far is None else far.select(res.columns).unionByName(res)
 
 
 # ---------------------------------------------------------------------------
@@ -511,92 +368,47 @@ def covering_pruned_edges(
     far_queries: DataFrame,
     k: int,
     cover_level: int,
-    w: Window,
-) -> DataFrame:
-    """Exact top-k closest edges for queries FAR from the index, pruned by
-    the index covering instead of ring joins: per (query, covering cell)
-    exact min/max chord bounds (A19, kernel/cell.py) give a threshold
-    T = min over cells of max_chord2 — the best covering cell certainly
-    contains an edge no farther than T — so only cells with
-    min_chord2 <= T contribute candidates. Completeness is verified per
-    query (k found AND k-th distance below every excluded cell's lower
-    bound); violators — possible when k exceeds the best cells' edge
-    count — fall back to the exact brute pass. This is the antipode form
-    of the reference's max-distance covering seed (S2FurthestEdgeQuery
-    visits index cells ordered by distance bound, not by location)."""
+) -> tuple[DataFrame, DataFrame]:
+    """(done, violators) for queries FAR from the index, pruned by the
+    index covering instead of ring joins: per (query, covering cell) exact
+    min/max chord bounds (A19, kernel/cell.py) give a threshold T = min
+    over cells of max_chord2 — the best covering cell certainly contains an
+    edge no farther than T — so only cells with min_chord2 <= T contribute
+    candidates. A query is done when it has k results and its k-th distance
+    is below every excluded cell's lower bound; the violators (possible
+    when k exceeds the best cells' edge count) go back to the caller's
+    exact search. This is the antipode form of the reference's max-distance
+    covering seed (S2FurthestEdgeQuery visits index cells ordered by
+    distance bound, not by location)."""
     cover = index.select(
         cc.parent("cell_id", cover_level).alias("ccell")
     ).distinct()
     bounds = (
-        far_queries.select("query_id", "px", "py", "pz")
+        far_queries.select("query_id", "qx", "qy", "qz")
         .crossJoin(F.broadcast(cover))
         .select(
-            "query_id", "px", "py", "pz", "ccell",
-            _cell_udf("min")("ccell", "px", "py", "pz").alias("minb"),
-            _cell_udf("max")("ccell", "px", "py", "pz").alias("maxb"),
+            "query_id", "qx", "qy", "qz", "ccell",
+            _cell_udf("min")("ccell", "qx", "qy", "qz").alias("minb"),
+            _cell_udf("max")("ccell", "qx", "qy", "qz").alias("maxb"),
         )
     ).persist()
     thr = bounds.groupBy("query_id").agg(F.min("maxb").alias("thr"))
-    keep_cells = bounds.join(thr, "query_id").where(F.col("minb") <= F.col("thr"))
+    bounds = bounds.join(thr, "query_id")
     excluded_min = (
-        bounds.join(thr, "query_id")
-        .where(F.col("minb") > F.col("thr"))
+        bounds.where(F.col("minb") > F.col("thr"))
         .groupBy("query_id")
         .agg(F.min("minb").alias("exc_min"))
     )
     idx_cells = index.select(
-        "shape_id", "edge_id", "ax", "ay", "az", "bx", "by", "bz",
-        cc.parent("cell_id", cover_level).alias("ccell"),
-    ).dropDuplicates(["shape_id", "edge_id", "ccell"])
+        *_IDS, *_ENDPOINTS, cc.parent("cell_id", cover_level).alias("ccell"),
+    ).dropDuplicates([*_IDS, "ccell"])
     cand = (
-        keep_cells.select("query_id", "px", "py", "pz", "ccell")
-        .join(idx_cells, "ccell")
-        .dropDuplicates(["query_id", "shape_id", "edge_id"])
-        .select(
-            "query_id", "shape_id", "edge_id",
-            edge_min_chord2_cols(
-                F.col("px"), F.col("py"), F.col("pz"),
-                F.col("ax"), F.col("ay"), F.col("az"),
-                F.col("bx"), F.col("by"), F.col("bz"),
-            ).alias("chord2"),
-        )
-    )
-    topk = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .persist()
-    )
-    verdict = (
-        topk.groupBy("query_id")
-        .agg(F.count("*").alias("found"), F.max("chord2").alias("kth"))
+        bounds.where(F.col("minb") <= F.col("thr"))
         .join(excluded_min, "query_id", "left")
-    )
-    finished = verdict.where(
-        (F.col("found") == k)
-        & (F.col("exc_min").isNull() | (F.col("kth") < F.col("exc_min")))
-    ).select("query_id")
-    done = topk.join(finished, "query_id").select(
-        "query_id", "rank", "shape_id", "edge_id", "chord2"
-    )
-    violators = far_queries.join(finished, "query_id", "left_anti")
-    if violators.isEmpty():
-        return done
-    edges_all = index.dropDuplicates(["shape_id", "edge_id"]).select(
-        "shape_id", "edge_id", "ax", "ay", "az", "bx", "by", "bz"
-    )
-    brute = (
-        F.broadcast(violators.select("query_id", "px", "py", "pz"))
-        .crossJoin(edges_all)
+        .join(idx_cells, "ccell")
         .select(
-            "query_id", "shape_id", "edge_id",
-            edge_min_chord2_cols(
-                F.col("px"), F.col("py"), F.col("pz"),
-                F.col("ax"), F.col("ay"), F.col("az"),
-                F.col("bx"), F.col("by"), F.col("bz"),
-            ).alias("chord2"),
+            "query_id", *_IDS, _edge_chord2().alias("chord2"),
+            F.coalesce("exc_min", F.lit(float("inf"))).alias("bound"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "shape_id", "edge_id", "chord2")
     )
-    return done.unionByName(brute)
+    return ringsearch.split(cand, far_queries, k, _IDS)

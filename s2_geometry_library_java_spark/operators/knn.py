@@ -1,45 +1,28 @@
 """Spatial kNN: closest index points to each query point.
 
 Semantics follow S2ClosestPointQuery (S2ClosestPointQuery.java:311-355):
-results ordered by S1ChordAngle ``length2``, ties by cell id then payload.
+results ordered by S1ChordAngle ``length2``, ties by neighbor id.
 
 Two physical strategies, chosen like the reference chooses brute force under
 150 points (S2ClosestPointQuery.java:75):
 
-* ``knn_bruteforce`` — broadcast the query side, exact chord distances JVM-
-  side, window top-k. Exact; right when |queries| is small (the broadcast
-  nested-loop scan distributes over index partitions with no index shuffle).
+* ``knn_bruteforce`` — the exact pass of operators/ringsearch with the query
+  side broadcast; right when |queries| is small.
 
-* ``knn_cell_join`` — the scale path: both sides keyed by cell id; each
-  query probes its level-L cell plus the 8 ring neighbors (kernel A13),
-  equi-joins the index on the cell key, windows top-k, then *verifies*
-  completeness with the cell-geometry lower bound: a query's top-k is final
-  only if the k-th chord distance is <= the minimum distance to the ring
-  boundary; unfinished queries fall back to a coarser ring (bounded loop,
-  1-3 joins — the DataFrame form of the reference's shrinking-radius queue).
+* ``knn_cell_join`` — the scale path: operators/ringsearch.search over the
+  index points keyed by parent(leaf, lvl), scored by squared chord distance.
+  Seed levels come from the index count or a density histogram.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, Window
-from pyspark.sql.functions import pandas_udf
+import pandas as pd  # resolves the pandas_udf type hints in this module
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions import udfs
-from ..kernel import cellid as s2
-from ..kernel import sphere
-
-
-def _with_xyz(df: DataFrame, lat: str, lng: str, prefix: str) -> DataFrame:
-    p = udfs.latlng_deg_to_xyz(F.col(lat), F.col(lng))
-    return (
-        df.withColumn("_p", p)
-        .withColumn(f"{prefix}x", F.col("_p.x"))
-        .withColumn(f"{prefix}y", F.col("_p.y"))
-        .withColumn(f"{prefix}z", F.col("_p.z"))
-        .drop("_p")
-    )
+from . import ringsearch
 
 
 def _chord2() -> F.Column:
@@ -63,28 +46,20 @@ def knn_bruteforce(
     """(query_id, rank, neighbor_id, chord2) exact k nearest.
 
     ``max_chord2`` adds the reference's maxDistance option
-    (S2ClosestPointQuery.Options): neighbors beyond the cap are dropped
-    BEFORE ranking, so queries may return fewer than k rows.
+    (S2ClosestPointQuery.Options): neighbors beyond the cap are dropped,
+    so queries may return fewer than k rows.
     ``distance_cap='conservative'`` pads the cap by the max FP error
     (setConservativeMaxDistance) so true-within-cap points are never
     under-reported."""
-    max_chord2 = effective_max_chord2(max_chord2, distance_cap)
-    q = F.broadcast(
-        _with_xyz(queries, lat, lng, "q").select(
-            F.col(query_id).alias("query_id"), "qx", "qy", "qz"
-        )
+    q = ringsearch.points(queries, query_id, "query_id", lat, lng, "q")
+    x = ringsearch.points(index, index_id, "neighbor_id", lat, lng, "i")
+    res = ringsearch.exact(
+        q, x.select("neighbor_id", "ix", "iy", "iz"), _chord2(), k,
+        ["neighbor_id"], broadcast_queries=True,
     )
-    x = _with_xyz(index, lat, lng, "i").select(
-        F.col(index_id).alias("neighbor_id"), "ix", "iy", "iz"
-    )
-    scored = q.crossJoin(x).select("query_id", "neighbor_id", _chord2().alias("chord2"))
-    if max_chord2 is not None:
-        scored = scored.where(F.col("chord2") <= F.lit(float(max_chord2)))
-    w = Window.partitionBy("query_id").orderBy(F.asc("chord2"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "chord2")
+    return _capped(
+        res.select("query_id", "rank", "neighbor_id", "chord2"),
+        effective_max_chord2(max_chord2, distance_cap),
     )
 
 
@@ -94,8 +69,6 @@ def choose_level(n_index: int, k: int) -> int:
     reference's per-query seed-level heuristic (S2ClosestPointQuery
     initQueue). Density rollups (tiling.density_rollup) refine this per
     region when the data is skewed."""
-    import math
-
     target = max(32, 8 * k)
     ratio = 1.5 * n_index / target
     if ratio <= 1:
@@ -116,10 +89,10 @@ def density_seed_level(w: F.Column, hist_level: int, k: int) -> F.Column:
     return F.when(w.isNull() | (w <= 0), F.lit(0)).otherwise(lvl)
 
 
-def _capped(df: DataFrame | None, max_chord2: float | None):
+def _capped(df: DataFrame, max_chord2: float | None) -> DataFrame:
     """Inclusive maxDistance post-filter (sound on exact top-k output:
     capping after ranking equals ranking the capped candidate set)."""
-    if df is None or max_chord2 is None:
+    if max_chord2 is None:
         return df
     return df.where(F.col("chord2") <= F.lit(float(max_chord2)))
 
@@ -186,171 +159,74 @@ def knn_cell_join(
     index: DataFrame,
     queries: DataFrame,
     k: int,
-    level: int | None = None,
     index_id: str = "id",
     query_id: str = "query_id",
     lat: str = "lat",
     lng: str = "lng",
-    fallback_level_step: int = 3,
-    max_rounds: int = 3,
     density_hist: list[tuple[int, int]] | None = None,
     hist_level: int | None = None,
     max_chord2: float | None = None,
     distance_cap: str = "inclusive",
 ) -> DataFrame:
-    """Scale-path kNN via cell-ring equi-joins with completeness proof.
+    """Scale-path kNN: ringsearch.search over the index points.
 
     Each query carries a seed level ``lvl``; the index is keyed by
-    ``parent(leaf, lvl)`` per active level (the distinct-level set is
-    tiny); each round queries probe their ring at their level, then
-    unfinished queries retry ``fallback_level_step`` coarser. Exactness:
-    a query finishes when its k-th chord2 <= the ring's guaranteed min
-    chord2 (lower bound above), mirroring the reference's shrinking
-    maxDistanceLimit (S2ClosestPointQuery.java:121-136).
+    ``parent(leaf, lvl)`` per probed level (the distinct-level set is
+    tiny). A query finishes when its k-th chord2 is below the ring's
+    MIN_WIDTH bound, mirroring the reference's shrinking maxDistanceLimit
+    (S2ClosestPointQuery.java:121-136).
 
-    Seed level sources, in priority order: explicit ``level``; a
-    ``density_hist`` from plans/density.density_histogram at
-    ``hist_level`` (per-query local-density levels — the skewed-data
-    path, so dense metros probe deep and sparse regions probe coarse in
-    the SAME round); else the index count under a uniform prior.
+    Seed levels: a ``density_hist`` from plans/density.density_histogram
+    at ``hist_level`` gives per-query local-density levels (the skewed-data
+    path, so dense metros probe deep and sparse regions probe coarse in the
+    SAME round); else the index count under a uniform prior. A seed level
+    of 0 runs no ring round: the exact pass broadcasts the (tiny) index.
     """
+    from pyspark import StorageLevel
+
     from ..functions import columns as cc
     from ..localdf import local_df
 
-    max_chord2 = effective_max_chord2(max_chord2, distance_cap)
-    idx = _with_xyz(index, lat, lng, "i").select(
-        F.col(index_id).alias("neighbor_id"), "ix", "iy", "iz",
-        udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30).alias("leaf"),
+    idx = ringsearch.points(index, index_id, "neighbor_id", lat, lng, "i").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    qs = _with_xyz(queries, lat, lng, "q").select(
-        F.col(query_id).alias("query_id"), "qx", "qy", "qz",
-        udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30).alias("qleaf"),
-    )
-    from pyspark import StorageLevel
-
-    idx = idx.persist(StorageLevel.MEMORY_AND_DISK)
-    qs = qs.persist(StorageLevel.MEMORY_AND_DISK)
-    spark = index.sparkSession
+    qs = ringsearch.points(queries, query_id, "query_id", lat, lng, "q")
     target = max(32, 8 * k)
-    if level is not None:
-        qs2 = qs.withColumn("lvl", F.lit(int(level)))
-        seed_levels = {int(level)}
-    elif density_hist is not None:
+    if density_hist is not None:
         if hist_level is None:
             raise ValueError("density_hist requires hist_level")
         hist_df = local_df(
-            spark,
+            index.sparkSession,
             [(int(np.int64(np.uint64(c))), int(w)) for c, w in density_hist],
             "hcell long, w long",
         )
-        qs2 = (
+        qs = (
             qs.withColumn("hcell", cc.parent("qleaf", hist_level))
             .join(F.broadcast(hist_df), "hcell", "left")
             .withColumn("lvl", density_seed_level(F.col("w"), hist_level, k))
             .drop("hcell", "w")
         )
-        # the possible seed levels are derivable from the (driver-side)
-        # histogram weights — no distinct-collect job needed per round
-        import math
-
-        seed_levels = {0}
-        for _, wv in density_hist:
-            if wv > 0:
-                seed_levels.add(
-                    max(0, min(30, hist_level + int(
-                        math.floor(math.log(9.0 * wv / (1.5 * target), 4.0))
-                    )))
-                )
+        # the possible seed levels follow from the driver-side histogram
+        # weights — no distinct-collect job
+        seed_levels = {0} | {
+            max(0, min(30, hist_level + int(
+                math.floor(math.log(9.0 * wv / (1.5 * target), 4.0))
+            )))
+            for _, wv in density_hist if wv > 0
+        }
     else:
-        # Seed level from the index cardinality under a uniform prior.
-        # Counted on the RAW input (1:1 with idx rows): Catalyst prunes
-        # that count to a plain scan, whereas counting idx would eagerly
-        # run its Arrow leaf/xyz passes as a separate job — the single
-        # search action materializes the idx cache anyway.
+        # Counted on the RAW input (1:1 with idx rows): Catalyst prunes that
+        # count to a plain scan, whereas counting idx would run its Arrow
+        # pass as a separate job — the search action fills the cache anyway.
         lvl0 = choose_level(index.count(), k)
-        qs2 = qs.withColumn("lvl", F.lit(lvl0))
+        qs = qs.withColumn("lvl", F.lit(lvl0))
         seed_levels = {lvl0}
-    results = None
-    remaining = qs2
-    for round_no in range(max_rounds):
-        # level set this round, computed driver-side: every seed level
-        # decremented round_no times (a superset of the live set is fine —
-        # unused levels contribute empty join keys, no extra scan)
-        # level 0 rings are dropped: a 3x3 ring of FACES covers most of the
-        # sphere, so that round's candidate join approaches the full index —
-        # the exact brute remnant below is strictly cheaper (no verdict
-        # aggregation, no anti-join) and equally exact, matching the
-        # closest-edges loop's lvl==0 break.
-        lvls = sorted(
-            {max(0, L - round_no * int(fallback_level_step)) for L in seed_levels}
-            - {0}
-        )
-        if not lvls:
-            break
-        lvl_df = F.broadcast(local_df(spark, [(L,) for L in lvls], "lvl int"))
-        idx_l = idx.crossJoin(lvl_df).withColumn(
-            "cell", cc.parent("leaf", F.col("lvl"))
-        )
-        q_cells = remaining.withColumn("qcell", cc.parent("qleaf", F.col("lvl")))
-        probe = q_cells.select(
-            "query_id", "qx", "qy", "qz", "qcell", "lvl",
-            F.explode(
-                F.array_union(F.array(F.col("qcell")), udfs.all_neighbors(F.col("qcell")))
-            ).alias("cell"),
-        ).distinct()
-        cand = probe.join(idx_l, ["lvl", "cell"]).select(
-            "query_id", "qx", "qy", "qz", "qcell", "lvl", "neighbor_id",
-            _chord2().alias("chord2"),
-        )
-        w = Window.partitionBy("query_id").orderBy(F.asc("chord2"), F.asc("neighbor_id"))
-        # persisted (lazily): the verdict aggregation, the finished filter
-        # and the done-rows all read this round's top-k — without the cache
-        # the candidate join would re-execute once per consumer in the
-        # single-action plan
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # Completeness proof: any point OUTSIDE the 3x3 ring at level lvl is
-        # at least MIN_WIDTH(lvl) away (a geodesic leaving the ring fully
-        # crosses one neighbor cell, whose width >= the level minimum) — the
-        # DataFrame form of the reference's shrinking maxDistanceLimit.
-        # Column form of chord2_from_angle(metric_value(MIN_WIDTH, lvl)).
-        ang = F.lit(float(sphere.MIN_WIDTH_DERIV)) * F.pow(
-            F.lit(2.0), -F.col("lvl").cast("double")
-        )
-        half_sin = F.sin(F.least(F.lit(float(np.pi)), ang) / F.lit(2.0))
-        bound_col = (F.lit(2.0) * half_sin) * (F.lit(2.0) * half_sin)
-        verdict = topk.groupBy("query_id").agg(
-            F.count("*").alias("found"),
-            F.max("chord2").alias("kth"),
-            F.first("lvl").alias("lvl"),
-        ).withColumn("bound", bound_col)
-        finished_q = verdict.where(
-            (F.col("found") == k) & (F.col("kth") < F.col("bound"))
-        ).select("query_id")
-        done = topk.join(finished_q, "query_id").select(
-            "query_id", "rank", "neighbor_id", "chord2"
-        )
-        results = done if results is None else results.unionByName(done)
-        remaining = remaining.join(finished_q, "query_id", "left_anti").withColumn(
-            "lvl",
-            F.greatest(F.lit(0), F.col("lvl") - F.lit(int(fallback_level_step))),
-        )
-    # anything still unfinished: exact brute-force remnant (tiny by now).
-    # Unioned lazily — no isEmpty() driver job: an all-finished search
-    # broadcasts an empty remnant and AQE prunes the cross join to nothing.
-    leftover = remaining.select("query_id", "qx", "qy", "qz")
-    x = idx.select("neighbor_id", "ix", "iy", "iz")
-    scored = F.broadcast(leftover).crossJoin(x).select(
-        "query_id", "neighbor_id", _chord2().alias("chord2")
+    res = ringsearch.search(
+        qs, k, ["neighbor_id"], _chord2(),
+        items=idx.select("neighbor_id", "ix", "iy", "iz"),
+        keyed=lambda levels: idx.crossJoin(levels).withColumn(
+            "cell", cc.parent("ileaf", F.col("lvl"))
+        ),
+        seed_levels=seed_levels,
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("chord2"), F.asc("neighbor_id"))
-    brute = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "chord2")
-    )
-    results = brute if results is None else results.unionByName(brute)
-    return _capped(results, max_chord2)
+    return _capped(res, effective_max_chord2(max_chord2, distance_cap))

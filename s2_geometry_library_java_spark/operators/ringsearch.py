@@ -1,0 +1,172 @@
+"""Cell-ring top-k search shared by kNN and closest/furthest edges.
+
+The DataFrame form of the reference's shared search base
+(S2BestEdgesQueryBase under S2ClosestPointQuery and
+S2Closest/FurthestEdgeQuery: a queue of index cells whose distance limit
+shrinks as results arrive). A caller supplies three things:
+
+* its keyed index — its items keyed by ``cell`` at each probed ``lvl``
+  (points by parent(leaf, lvl), edges by parent(cell_id, lvl));
+* its score — a chord2 Column over the query point (qx, qy, qz) and the
+  item columns;
+* its item id columns, which break distance ties and deduplicate
+  candidates (an edge sits in several ring cells).
+
+``search`` composes the whole query as ONE lazy plan:
+
+1. ring rounds: each query probes its level-``lvl`` cell plus the 8 ring
+   neighbours (kernel A13) and equi-joins the keyed index;
+2. top-k per query by (chord2, ids);
+3. completeness: a query is finished when it has k results and its k-th
+   chord2 is below MIN_WIDTH(lvl) (plus Options.maxError). Anything
+   outside the 3x3 ring is at least that far: a geodesic leaving the ring
+   crosses a whole neighbour cell, whose width is at least the level's
+   minimum;
+4. split: an anti-join keeps the unfinished queries, which retry
+   FALLBACK_LEVEL_STEP levels coarser. Level-0 rings (a 3x3 block of cube
+   faces, most of the sphere) never run;
+5. exact pass: the unfinished remnant against every item. With no ring
+   level at all (a tiny index) the index is the broadcast side; after ring
+   rounds the remnant is.
+
+There are no driver-side round-trips: a round whose input is empty adds an
+empty union branch, which AQE's empty-relation propagation prunes.
+"""
+
+from __future__ import annotations
+
+from functools import reduce
+from typing import Callable
+
+import numpy as np
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from ..functions import columns as cc
+from ..functions import udfs
+from ..kernel import sphere
+from ..localdf import local_df
+
+#: levels an unfinished query's ring coarsens by before its next round
+FALLBACK_LEVEL_STEP = 3
+#: ring rounds before the exact pass takes the remnant
+MAX_ROUNDS = 3
+
+
+def points(df: DataFrame, id_col: str, id_as: str, lat: str, lng: str,
+           prefix: str) -> DataFrame:
+    """(id_as, {prefix}x, {prefix}y, {prefix}z, {prefix}leaf) — the unit
+    point and its leaf cell from ONE Arrow pass over lat/lng degrees."""
+    p = udfs.latlng_deg_to_xyz_leaf(F.col(lat), F.col(lng))
+    return df.select(F.col(id_col).alias(id_as), p.alias("_p")).select(
+        id_as, *(F.col(f"_p.{c}").alias(prefix + c) for c in ("x", "y", "z", "leaf"))
+    )
+
+
+def min_width_chord2(lvl: Column, max_error_rad: float = 0.0) -> Column:
+    """Column form of sphere.chord2_from_angle(sphere.metric_value(
+    MIN_WIDTH_DERIV, lvl) + max_error_rad): the ring completeness bound."""
+    ang = F.lit(float(sphere.MIN_WIDTH_DERIV)) * F.pow(
+        F.lit(2.0), -lvl.cast("double")
+    ) + F.lit(float(max_error_rad))
+    s = F.lit(2.0) * F.sin(F.least(F.lit(float(np.pi)), ang) / F.lit(2.0))
+    return s * s
+
+
+def topk(scored: DataFrame, k: int, ids: list[str]) -> DataFrame:
+    """Per-query top-k of (query_id, *ids, chord2, ...) rows by (chord2,
+    ids). dense_rank gives a candidate seen twice one rank, so the dedupe
+    after the filter reuses the window's partitioning — one Exchange."""
+    w = Window.partitionBy("query_id").orderBy("chord2", *ids)
+    return (
+        scored.withColumn("rank", F.dense_rank().over(w))
+        .where(F.col("rank") <= k)
+        .dropDuplicates(["query_id", *ids])
+    )
+
+
+def split(cand: DataFrame, queries: DataFrame, k: int,
+          ids: list[str]) -> tuple[DataFrame, DataFrame]:
+    """(done, rest): the top-k rows of the queries whose k-th chord2 is
+    below their ``bound`` column, and the ``queries`` rows of all others."""
+    # persisted: the verdict and the done rows both read the top-k;
+    # without the cache the candidate join runs once per consumer
+    top = topk(cand, k, ids).persist(StorageLevel.MEMORY_AND_DISK)
+    verdict = top.groupBy("query_id").agg(
+        F.count("*").alias("found"),
+        F.max("chord2").alias("kth"),
+        F.first("bound").alias("bound"),
+    )
+    finished = verdict.where(
+        (F.col("found") == k) & (F.col("kth") < F.col("bound"))
+    ).select("query_id")
+    return (
+        top.join(finished, "query_id"),
+        queries.join(finished, "query_id", "left_anti"),
+    )
+
+
+def exact(queries: DataFrame, items: DataFrame, score: Column, k: int,
+          ids: list[str], broadcast_queries: bool) -> DataFrame:
+    """Exact top-k of every query against every item; one side broadcast."""
+    q = queries.select("query_id", "qx", "qy", "qz")
+    pairs = (
+        F.broadcast(q).crossJoin(items) if broadcast_queries
+        else q.crossJoin(F.broadcast(items))
+    )
+    return topk(pairs.select("query_id", *ids, score.alias("chord2")), k, ids)
+
+
+def search(
+    queries: DataFrame,
+    k: int,
+    ids: list[str],
+    score: Column,
+    items: DataFrame,
+    keyed: Callable[[DataFrame], DataFrame],
+    seed_levels: set[int],
+    max_error_rad: float = 0.0,
+) -> DataFrame:
+    """(query_id, rank, *ids, chord2) exact top-k per query.
+
+    ``queries``: (query_id, qx, qy, qz, qleaf, lvl), ``lvl`` the query's
+    seed level. ``seed_levels``: a driver-side superset of the seed levels.
+    ``items``: (*ids, score inputs), one row per item, for the exact pass.
+    ``keyed(levels)``: (lvl, cell, *ids, score inputs) for the broadcast
+    table of probed levels. ``max_error_rad``: Options.maxError — a k-th
+    result within that angle of the ring bound is accepted."""
+    parts = []
+    remaining = queries
+    spark = queries.sparkSession
+    cell = cc.parent("qleaf", F.col("lvl"))
+    for r in range(MAX_ROUNDS):
+        # this round's levels, driver-side: every seed level coarsened r
+        # times, level 0 dropped (a superset of the live set is fine —
+        # unused levels add no matches)
+        step = r * FALLBACK_LEVEL_STEP
+        levels = sorted({L - step for L in seed_levels if L > step})
+        if not levels:
+            break
+        if r == 0:
+            # every round's cached top-k plan and the exact pass start from
+            # the queries: evaluate them (point prep, seed levels) once
+            remaining = remaining.persist(StorageLevel.MEMORY_AND_DISK)
+        lvl_df = F.broadcast(local_df(spark, [(L,) for L in levels], "lvl int"))
+        probe = remaining.where(F.col("lvl") > 0).select(
+            "query_id", "qx", "qy", "qz", "lvl",
+            min_width_chord2(F.col("lvl"), max_error_rad).alias("bound"),
+            F.explode(
+                F.array_union(F.array(cell), udfs.all_neighbors(cell))
+            ).alias("cell"),
+        )
+        cand = probe.join(keyed(lvl_df), ["lvl", "cell"]).select(
+            "query_id", *ids, score.alias("chord2"), "bound"
+        )
+        done, remaining = split(cand, remaining, k, ids)
+        parts.append(done)
+        remaining = remaining.withColumn(
+            "lvl", F.greatest(F.lit(0), F.col("lvl") - F.lit(FALLBACK_LEVEL_STEP))
+        )
+    parts.append(exact(remaining, items, score, k, ids, broadcast_queries=bool(parts)))
+    cols = ["query_id", "rank", *ids, "chord2"]
+    return reduce(DataFrame.unionByName, (p.select(*cols) for p in parts))

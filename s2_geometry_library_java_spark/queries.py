@@ -796,14 +796,11 @@ def q_closest_edge(spark: SparkSession, sf_dir: str) -> DataFrame:
         geo.lat_col("s_suppkey").alias("lat"),
         geo.lng_col("s_suppkey").alias("lng"),
     )
-    # max_rounds=2: one retry tier stays exercised; with this fixture's
-    # global query spread, far queries reach the (tiny-index) exact brute
-    # remnant after round 2 anyway, and a third ring round only adds jobs.
     # interiors=shapes exercises Options.includeInteriors
     # (S2BestEdgesQueryBase.java:399,410): contained queries rank an
     # interior zero-distance result first (edge_id = -1 == isInterior).
     out = closestedge.closest_edges(
-        idx, supp, k=1, level=4, query_id="k", max_rounds=2, interiors=shapes
+        idx, supp, k=1, level=4, query_id="k", interiors=shapes
     )
     return out.select(
         F.col("query_id").alias("k"),
@@ -860,7 +857,7 @@ def q_furthest_edge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interiors=shapes: a quad containing the query's ANTIPODE yields a
     # maximum-distance interior result (S2FurthestEdgeQuery.java:369-381)
     out = closestedge.furthest_edges(
-        idx, supp, k=1, level=4, query_id="k", max_rounds=2, interiors=shapes
+        idx, supp, k=1, level=4, query_id="k", interiors=shapes
     )
     return out.select(
         F.col("query_id").alias("k"),

@@ -267,7 +267,7 @@ def test_conservative_max_distance_no_under_reporting(spark):
     import numpy as np
 
     from s2_geometry_library_java_spark.kernel import sphere
-    from s2_geometry_library_java_spark.operators import knn
+    from s2_geometry_library_java_spark.operators import knn, ringsearch
 
     r = 0.37  # radians; all index points at ~this angle from q
     qlat, qlng = 10.0, 40.0
@@ -294,8 +294,8 @@ def test_conservative_max_distance_no_under_reporting(spark):
     # the operator itself uses (collected from its projection) — the
     # conservative bound covers the distance CALCULATION error, given the
     # index points as stored
-    ix = knn._with_xyz(idx, "lat", "lng", "i").orderBy("id").collect()
-    qx = knn._with_xyz(qdf, "lat", "lng", "q").collect()[0]
+    ix = ringsearch.points(idx, "id", "id", "lat", "lng", "i").orderBy("id").collect()
+    qx = ringsearch.points(qdf, "query_id", "query_id", "lat", "lng", "q").collect()[0]
     X = np.array([[row["ix"], row["iy"], row["iz"]] for row in ix],
                  dtype=np.longdouble)
     Q = np.array([qx["qx"], qx["qy"], qx["qz"]], dtype=np.longdouble)

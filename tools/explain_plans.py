@@ -22,6 +22,7 @@ QUERIES = [
     "pip_convex",
     "pip_indexed",
     "knn_brute",
+    "knn_cell",
     "tolerant_pairs",
     "near_polygon",
     "closest_edge",
