@@ -14,12 +14,15 @@ supplies the edge-specific parts:
   arithmetic (edge_min_chord2_cols below — the same op order as the numpy
   A21 kernel kernel/edges.min_chord2_to_edges, so the two agree
   bit-for-bit), inside whole-stage codegen, no Python;
-* routing: an index of at most SMALL_INDEX_BRUTE_EDGES rows skips the ring
-  rounds; queries far from the whole index take the max-distance covering
-  seed (covering_pruned_edges) instead of rings that would come up empty.
+* its numpy score for ringsearch.local_topk: that kernel itself;
+* routing from the index row count |I|, in ringsearch's order: at most
+  SMALL_INDEX_BRUTE_EDGES rows has no ring level; else local_topk while
+  |queries| x |I| <= LOCAL_PAIRS_MAX; else ring rounds. A covering seed
+  ("auto" on a large edge set) keeps the ring routes and sends queries far
+  from the whole index to covering_pruned_edges, not to empty rings.
 
-Like the ring search, every path composes into ONE lazy plan: the caller's
-single action executes the complete search.
+Past the index count (and local_queries' bounded collect) each route is ONE
+lazy plan: the caller's single action executes the complete search.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from . import ringsearch
 from ..functions import columns as cc
+from ..kernel import edges as ek
 from ..kernel import sphere
 
 _EPS = float(np.finfo(np.float64).eps)
@@ -39,16 +43,11 @@ _EPS = float(np.finfo(np.float64).eps)
 #: |queries| x |edges| over a large edge set.
 AUTO_COVERING_SEED_EDGES = 50_000
 
-#: index edge count at or below which the search skips the ring rounds and
-#: runs ONE exact pass: every query against the broadcast edge set + one
-#: top-k window (the DataFrame form of the reference's brute-force-under-
-#: threshold routing, S2ClosestEdgeQuery maxBruteForceIndexSize). Exact by
-#: construction — identical results to the ring search, which only accepts
-#: a query once its top-k is provably the true top-k. The ring path's fixed
-#: job count (persist + per-round join/window rounds) only amortizes on a
-#: large edge set; under the threshold one broadcast join is strictly
-#: cheaper at every scale (the candidate set is |queries| x n_edges rows,
-#: map-side, no index shuffle). Tests patch this.
+#: index row count at or below which the search has no ring level and runs
+#: ONE exact pass: every query against the broadcast edge set + one top-k
+#: window (the DataFrame form of the reference's brute-force-under-
+#: threshold routing, S2ClosestEdgeQuery maxBruteForceIndexSize), whatever
+#: the query side's size. Exact by construction, like every route.
 SMALL_INDEX_BRUTE_EDGES = 256
 
 
@@ -98,6 +97,13 @@ def _edge_chord2() -> Column:
     return edge_min_chord2_cols(
         *(F.col(c) for c in ("qx", "qy", "qz", *_ENDPOINTS))
     )
+
+
+def _edge_chord2_np(q: np.ndarray, items) -> np.ndarray:
+    """min_chord2_to_edges, points ``q`` (Qc, 1, 3) x Arrow edge rows."""
+    a, b = (np.stack([items[c].to_numpy() for c in e], axis=-1)
+            for e in (_ENDPOINTS[:3], _ENDPOINTS[3:]))
+    return ek.min_chord2_to_edges(q, a[None], b[None], ek.robust_cross_prod(a, b)[None])
 
 
 def furthest_edges(
@@ -150,11 +156,8 @@ def furthest_edges(
         # traversal): antipode points of queries near a CLUSTERED index
         # are far from every cell, so rings always come up empty and the
         # covering-pruned path wins when the edge set is large (remnant
-        # brute is |queries| x |edges|). For broad indexes or small edge
-        # sets the ring+remnant path is faster (the seed adds a bounds
-        # stage and several small jobs). "auto" (default) counts the
-        # persisted index once — a cache warm-up the search needs anyway
-        # — and turns the seed on above AUTO_COVERING_SEED_EDGES.
+        # brute is |queries| x |edges|). "auto" (default) turns it on at
+        # AUTO_COVERING_SEED_EDGES index rows.
         covering_seed=covering_seed,
         interiors=interiors,
         # maxError is an angle bound, symmetric under the antipode map
@@ -260,19 +263,25 @@ def _closest_edges_impl(
     edges per query. ``index`` is shape_index_df output built with
     min_level >= ``level`` so parent(cell_id, level) is a valid key.
 
-    The index is persisted here: its mapInPandas build runs once and every
-    ring round and the exact pass read the cached rows.
+    The index is persisted on the ring routes: its mapInPandas build then
+    runs once for every ring round and the exact pass.
     """
     from pyspark import StorageLevel
 
-    index = index.persist(StorageLevel.MEMORY_AND_DISK)
-    qpts = ringsearch.points(queries, query_id, "query_id", lat, lng, "q")
-    # The one driver job: a count over the persisted index fills the cache
-    # every path reads anyway and gives the edge cardinality both routing
-    # decisions (small-index exact pass, covering seed) want.
-    n_edges = index.count()
+    n_edges = index.count()  # every routing decision wants it
     if covering_seed == "auto":
         covering_seed = n_edges >= AUTO_COVERING_SEED_EDGES
+    # a tiny index has no ring level: search's exact pass broadcasts it
+    small = not covering_seed and n_edges <= SMALL_INDEX_BRUTE_EDGES
+    rings = not (small or covering_seed)  # a covering seed keeps today's routes
+    local = ringsearch.local_queries(queries, query_id, lat, lng, n_edges, rings)
+    if local is not None:
+        return ringsearch.local_topk(
+            index.select(*_IDS, *_ENDPOINTS), local, k, _IDS, _edge_chord2_np
+        )
+    if not small:
+        index = index.persist(StorageLevel.MEMORY_AND_DISK)
+    qpts = ringsearch.points(queries, query_id, "query_id", lat, lng, "q")
     far = None
     if covering_seed:
         # Route queries whose 3x3 ring at the seed level certainly holds
@@ -303,11 +312,6 @@ def _closest_edges_impl(
             index, qpts.join(far_ids, "query_id"), k, level
         )
         qpts = qpts.join(far_ids, "query_id", "left_anti").unionByName(violators)
-    # A tiny index runs no ring round: the exact pass broadcasts the edge
-    # set onto the queries (the reference's brute-force-under-threshold
-    # routing, S2ClosestEdgeQuery maxBruteForceIndexSize). An engaged
-    # covering seed takes precedence.
-    small = not covering_seed and n_edges <= SMALL_INDEX_BRUTE_EDGES
     res = ringsearch.search(
         qpts.withColumn("lvl", F.lit(level)), k, _IDS, _edge_chord2(),
         items=index.dropDuplicates(_IDS).select(*_IDS, *_ENDPOINTS),

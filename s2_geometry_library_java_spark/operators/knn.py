@@ -3,15 +3,18 @@
 Semantics follow S2ClosestPointQuery (S2ClosestPointQuery.java:311-355):
 results ordered by S1ChordAngle ``length2``, ties by neighbor id.
 
-Two physical strategies, chosen like the reference chooses brute force under
-150 points (S2ClosestPointQuery.java:75):
+Two entry points, chosen like the reference chooses brute force under 150
+points (S2ClosestPointQuery.java:75):
 
-* ``knn_bruteforce`` — the exact pass of operators/ringsearch with the query
-  side broadcast; right when |queries| is small.
+* ``knn_bruteforce`` — the queries shipped to ringsearch.local_topk, one
+  partition-local exact pass over the raw index rows; right when |queries|
+  is small.
 
-* ``knn_cell_join`` — the scale path: operators/ringsearch.search over the
-  index points keyed by parent(leaf, lvl), scored by squared chord distance.
-  Seed levels come from the index count or a density histogram.
+* ``knn_cell_join`` — one of ringsearch's routes, from the index size |I|
+  (its count, or the density histogram's weight sum): no ring level (a
+  tiny index) runs search's exact pass with the index broadcast;
+  |queries| x |I| <= ringsearch.LOCAL_PAIRS_MAX runs local_topk; otherwise
+  ring rounds over the index points keyed by parent(leaf, lvl).
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ import pandas as pd  # resolves the pandas_udf type hints in this module
 from pyspark.sql import DataFrame, functions as F
 
 from . import ringsearch
+from ..kernel import cellid as s2
 
 
 def _chord2() -> F.Column:
@@ -30,6 +34,25 @@ def _chord2() -> F.Column:
     dy = F.col("qy") - F.col("iy")
     dz = F.col("qz") - F.col("iz")
     return F.least(dx * dx + dy * dy + dz * dz, F.lit(4.0))
+
+
+def _chord2_np(q: np.ndarray, items) -> np.ndarray:
+    """_chord2 in numpy, op for op: points ``q`` (Qc, 1, 3) to an Arrow
+    block of raw (lat, lng) degree rows -> (Qc, Bc)."""
+    p = s2.latlng_to_xyz(*(np.radians(items[c].to_numpy()) for c in ("lat", "lng")))
+    dx, dy, dz = (q[..., i] - p[i] for i in range(3))
+    return np.minimum(dx * dx + dy * dy + dz * dz, 4.0)
+
+
+def _local(index: DataFrame, queries, k: int, index_id: str, lat: str,
+           lng: str) -> DataFrame:
+    """ringsearch.local_topk over the raw (id, lat, lng) index rows."""
+    items = index.select(
+        F.col(index_id).alias("neighbor_id"),
+        F.col(lat).cast("double").alias("lat"),
+        F.col(lng).cast("double").alias("lng"),
+    )
+    return ringsearch.local_topk(items, queries, k, ["neighbor_id"], _chord2_np)
 
 
 def knn_bruteforce(
@@ -51,16 +74,9 @@ def knn_bruteforce(
     ``distance_cap='conservative'`` pads the cap by the max FP error
     (setConservativeMaxDistance) so true-within-cap points are never
     under-reported."""
-    q = ringsearch.points(queries, query_id, "query_id", lat, lng, "q")
-    x = ringsearch.points(index, index_id, "neighbor_id", lat, lng, "i")
-    res = ringsearch.exact(
-        q, x.select("neighbor_id", "ix", "iy", "iz"), _chord2(), k,
-        ["neighbor_id"], broadcast_queries=True,
-    )
-    return _capped(
-        res.select("query_id", "rank", "neighbor_id", "chord2"),
-        effective_max_chord2(max_chord2, distance_cap),
-    )
+    q = ringsearch.query_rows(queries, query_id, lat, lng).toArrow()
+    res = _local(index, q, k, index_id, lat, lng)
+    return _capped(res, effective_max_chord2(max_chord2, distance_cap))
 
 
 def choose_level(n_index: int, k: int) -> int:
@@ -129,12 +145,8 @@ def filter_neighbors_in_region(results: DataFrame, index: DataFrame, region,
     the joined-back index coordinates; ranks are NOT recomputed — like
     the reference, the filter composes with k (you may get fewer than k
     in-region neighbors)."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import BooleanType
-
-    from ..kernel import cellid as s2
 
     @pandas_udf(BooleanType())
     def inside(lat_s: pd.Series, lng_s: pd.Series) -> pd.Series:
@@ -179,17 +191,14 @@ def knn_cell_join(
     Seed levels: a ``density_hist`` from plans/density.density_histogram
     at ``hist_level`` gives per-query local-density levels (the skewed-data
     path, so dense metros probe deep and sparse regions probe coarse in the
-    SAME round); else the index count under a uniform prior. A seed level
-    of 0 runs no ring round: the exact pass broadcasts the (tiny) index.
+    SAME round); else the index count under a uniform prior. The route
+    (module docstring) follows from the seed levels and |queries| x |I|.
     """
     from pyspark import StorageLevel
 
     from ..functions import columns as cc
     from ..localdf import local_df
 
-    idx = ringsearch.points(index, index_id, "neighbor_id", lat, lng, "i").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     qs = ringsearch.points(queries, query_id, "query_id", lat, lng, "q")
     target = max(32, 8 * k)
     if density_hist is not None:
@@ -214,13 +223,22 @@ def knn_cell_join(
             )))
             for _, wv in density_hist if wv > 0
         }
+        n_index = sum(int(w) for _, w in density_hist)
     else:
-        # Counted on the RAW input (1:1 with idx rows): Catalyst prunes that
-        # count to a plain scan, whereas counting idx would run its Arrow
-        # pass as a separate job — the search action fills the cache anyway.
-        lvl0 = choose_level(index.count(), k)
+        # Counted on the RAW input: Catalyst prunes the count to a plain
+        # scan, with no Arrow pass
+        n_index = index.count()
+        lvl0 = choose_level(n_index, k)
         qs = qs.withColumn("lvl", F.lit(lvl0))
         seed_levels = {lvl0}
+    rings = max(seed_levels) > 0
+    local = ringsearch.local_queries(queries, query_id, lat, lng, n_index, rings)
+    if local is not None:
+        res = _local(index, local, k, index_id, lat, lng)
+        return _capped(res, effective_max_chord2(max_chord2, distance_cap))
+    idx = ringsearch.points(index, index_id, "neighbor_id", lat, lng, "i")
+    if rings:  # every round and the remnant's exact pass read the points
+        idx = idx.persist(StorageLevel.MEMORY_AND_DISK)
     res = ringsearch.search(
         qs, k, ["neighbor_id"], _chord2(),
         items=idx.select("neighbor_id", "ix", "iy", "iz"),

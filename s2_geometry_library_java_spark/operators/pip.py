@@ -64,7 +64,7 @@ def polygons_geometry_key(polygons: dict, *params) -> bytes:
 
 def covering_rows(
     polygons: dict, max_cells: int = 8, min_level: int = 0, max_level: int = 30
-) -> list[tuple]:
+) -> tuple[tuple, ...]:
     """(polygon_id, cell_id, range_min_b, range_max_b, is_interior) rows.
 
     is_interior marks covering cells fully contained in the polygon
@@ -95,6 +95,8 @@ def covering_rows(
             )
     if len(_COVERING_MEMO) >= _COVERING_MEMO_CAP:
         _COVERING_MEMO.pop(next(iter(_COVERING_MEMO)))
+    # a tuple: every caller shares the memoized value, so none may mutate it
+    rows = tuple(rows)
     _COVERING_MEMO[key] = rows
     return rows
 

@@ -1,4 +1,4 @@
-"""Cell-ring top-k search shared by kNN and closest/furthest edges.
+"""Exact top-k search shared by kNN and closest/furthest edges.
 
 The DataFrame form of the reference's shared search base
 (S2BestEdgesQueryBase under S2ClosestPointQuery and
@@ -31,6 +31,12 @@ shrinks as results arrive). A caller supplies three things:
 
 There are no driver-side round-trips: a round whose input is empty adds an
 empty union branch, which AQE's empty-relation propagation prunes.
+
+Routes, in this order (the caller's ring levels, then ``local_queries``):
+no ring level runs ``search``'s exact pass alone; |queries| x |items| <=
+LOCAL_PAIRS_MAX ships the queries to ``local_topk``, ONE mapInArrow over
+the items whose partitions keep their local top-k, merged by one Exchange
+(no bound, no rounds, no cache); anything larger takes the ring rounds.
 """
 
 from __future__ import annotations
@@ -39,11 +45,15 @@ from functools import reduce
 from typing import Callable
 
 import numpy as np
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions import columns as cc
 from ..functions import udfs
+from ..kernel import cellid as s2
 from ..kernel import sphere
 from ..localdf import local_df
 
@@ -51,6 +61,10 @@ from ..localdf import local_df
 FALLBACK_LEVEL_STEP = 3
 #: ring rounds before the exact pass takes the remnant
 MAX_ROUNDS = 3
+#: |queries| x |items| pairs up to which local_topk replaces the ring
+#: rounds: near the measured crossover of the costlier score (edges,
+#: ~250 ns/pair), far below kNN's (~30 ns/pair)
+LOCAL_PAIRS_MAX = 100_000_000
 
 
 def points(df: DataFrame, id_col: str, id_as: str, lat: str, lng: str,
@@ -106,17 +120,6 @@ def split(cand: DataFrame, queries: DataFrame, k: int,
     )
 
 
-def exact(queries: DataFrame, items: DataFrame, score: Column, k: int,
-          ids: list[str], broadcast_queries: bool) -> DataFrame:
-    """Exact top-k of every query against every item; one side broadcast."""
-    q = queries.select("query_id", "qx", "qy", "qz")
-    pairs = (
-        F.broadcast(q).crossJoin(items) if broadcast_queries
-        else q.crossJoin(F.broadcast(items))
-    )
-    return topk(pairs.select("query_id", *ids, score.alias("chord2")), k, ids)
-
-
 def search(
     queries: DataFrame,
     k: int,
@@ -167,6 +170,98 @@ def search(
         remaining = remaining.withColumn(
             "lvl", F.greatest(F.lit(0), F.col("lvl") - F.lit(FALLBACK_LEVEL_STEP))
         )
-    parts.append(exact(remaining, items, score, k, ids, broadcast_queries=bool(parts)))
+    # exact pass: broadcast the remnant after rounds, else the (tiny) index
+    q = remaining.select("query_id", "qx", "qy", "qz")
+    pairs = F.broadcast(q).crossJoin(items) if parts else q.crossJoin(F.broadcast(items))
+    parts.append(topk(pairs.select("query_id", *ids, score.alias("chord2")), k, ids))
     cols = ["query_id", "rank", *ids, "chord2"]
     return reduce(DataFrame.unionByName, (p.select(*cols) for p in parts))
+
+
+def query_rows(queries: DataFrame, query_id: str, lat: str, lng: str) -> DataFrame:
+    """(query id, lat, lng) in double degrees: the side local_topk ships."""
+    return queries.select(query_id, F.col(lat).cast("double"), F.col(lng).cast("double"))
+
+
+def local_queries(queries: DataFrame, query_id: str, lat: str, lng: str,
+                  n_items: int, rings: bool) -> pa.Table | None:
+    """The route decision: ``query_rows`` as Arrow for local_topk when they
+    number at most LOCAL_PAIRS_MAX // n_items (one bounded collect; none
+    when ``rings`` is False or the budget holds no query), else None — the
+    caller runs ``search``."""
+    cap = LOCAL_PAIRS_MAX // max(n_items, 1)
+    if not rings or cap < 1:
+        return None
+    q = query_rows(queries, query_id, lat, lng).limit(cap + 1).toArrow()
+    return q if q.num_rows <= cap else None
+
+
+def _within_kth(t: pa.Table, k: int, ids: list[str],
+                nq: int) -> tuple[pa.Table, np.ndarray]:
+    """(rows, kth): of the (_qi, *ids, chord2) candidates, one per distinct
+    (query, item), those within their query's k-th chord2 (ties kept); and
+    each query's k-th chord2 (inf below k candidates)."""
+    t = t.group_by(["_qi", *ids], use_threads=False).aggregate([("chord2", "min")])
+    qi, d = t["_qi"].to_numpy(), t["chord2_min"].to_numpy()
+    order = np.lexsort((d, qi))
+    qs, ds = qi[order], d[order]
+    at_k = np.arange(len(qs)) - np.searchsorted(qs, qs) == k - 1
+    kth = np.full(nq, np.inf)
+    kth[qs[at_k]] = ds[at_k]
+    t = pa.table({"_qi": t["_qi"], **{c: t[c] for c in ids}, "chord2": t["chord2_min"]})
+    return t.take(np.sort(order[ds <= kth[qs]])), kth
+
+
+def local_topk(items: DataFrame, queries: pa.Table, k: int, ids: list[str],
+               score: Callable[[np.ndarray, pa.Table], np.ndarray]) -> DataFrame:
+    """(query_id, rank, *ids, chord2) exact top-k of every query against
+    every item: ONE mapInArrow over ``items``, one top-k Exchange.
+
+    ``queries``: (query id, lat, lng) degrees, made unit points on the
+    driver (the numpy calls udfs.latlng_deg_to_xyz_leaf wraps) and shipped
+    in the closure. ``score(q, block)``: (Qc, Bc) chord2 of points ``q``
+    (Qc, 1, 3) to an Arrow block of items. A partition emits per query its
+    distinct items (by ``ids``) within its local k-th chord2, ties kept —
+    the global top-k is the top-k of these."""
+    qid = queries.column(0).combine_chunks()
+    q = np.stack(s2.latlng_to_xyz(
+        *(np.radians(queries.column(c).to_numpy()) for c in (1, 2))
+    ), axis=-1)[:, None, :]
+    nq = len(q)
+    schema = StructType([
+        StructField("query_id", from_arrow_type(qid.type)),
+        *(items.schema[c] for c in ids), StructField("chord2", DoubleType()),
+    ])
+
+    def part(batches):
+        block = 1 << 18  # pairs scored at once: bounds worker memory
+        kept, kth, n_new = [], np.full(nq, np.inf), 0
+        for rb in batches:
+            t = pa.Table.from_batches([rb])
+            first = pa.table({**{c: t[c] for c in ids}, "_r": np.arange(len(t))}).group_by(
+                ids, use_threads=False).aggregate([("_r", "min")])["_r_min"]
+            if len(first) < len(t):  # an item indexed twice is scored once
+                t = t.take(np.sort(first.to_numpy()))
+            bc = max(1, min(len(t), max(256, block // max(nq, 1))))
+            qc = max(1, block // bc)
+            for b0 in range(0, len(t), bc):
+                blk = t.slice(b0, bc)
+                for q0 in range(0, nq, qc):
+                    d = score(q[q0:q0 + qc], blk)
+                    lim = kth[q0:q0 + qc, None]
+                    if d.shape[1] > k:
+                        lim = np.minimum(lim, np.partition(d, k - 1, axis=1)[:, k - 1:k])
+                    qi, j = np.nonzero(d <= lim)
+                    kept.append(pa.table({"_qi": qi + q0, **{c: blk[c].take(j) for c in ids},
+                                          "chord2": d[qi, j]}))
+                    n_new += len(qi)
+                    if n_new >= max(1 << 16, nq * k):
+                        top, kth = _within_kth(pa.concat_tables(kept), k, ids, nq)
+                        kept, n_new = [top], 0
+        if kept:
+            top, _ = _within_kth(pa.concat_tables(kept), k, ids, nq)
+            yield from top.set_column(0, "query_id", qid.take(top["_qi"])).to_batches()
+
+    return topk(items.mapInArrow(part, schema), k, ids).select(
+        "query_id", "rank", *ids, "chord2"
+    )

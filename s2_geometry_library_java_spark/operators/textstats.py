@@ -121,7 +121,8 @@ def fingerprint64_udf():
 
         @pandas_udf(LongType())
         def fp64(texts: pd.Series) -> pd.Series:
-            vals = ["" if t is None else t for t in texts]
+            null = texts.isna().to_numpy()
+            vals = ["" if n else t for t, n in zip(texts, null)]
             out = np.zeros(len(vals), dtype=np.int64)
             if not vals:
                 return pd.Series(out)
@@ -144,7 +145,8 @@ def fingerprint64_udf():
                     for c in t:
                         a = (a * BASE + ord(c)) % M
                     out[r] = a
-            return pd.Series(out)
+            # NULL text hashes to NULL, as in the Column form
+            return pd.Series(pd.arrays.IntegerArray(out, null))
 
         _fp64_udf_cache.append(fp64)
     return _fp64_udf_cache[0]

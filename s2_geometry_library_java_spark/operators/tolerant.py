@@ -142,7 +142,7 @@ def tolerant_pairs(
 
 def expanded_covering_rows(
     polygons: dict, radius_rad: float, max_cells: int = 8
-) -> list[tuple]:
+) -> tuple[tuple, ...]:
     """(polygon_id, cell_id) rows of each polygon's covering buffered by
     radius (kernel union_expand_radius = S2CellUnion.expand(S1Angle)).
     Memoized like pip.covering_rows: pure function of geometry + params,
@@ -160,6 +160,7 @@ def expanded_covering_rows(
         rows.extend((pid, int(s2.to_signed(np.uint64(c))[0])) for c in ids)
     if len(_COVERING_MEMO) >= _COVERING_MEMO_CAP:
         _COVERING_MEMO.pop(next(iter(_COVERING_MEMO)))
+    rows = tuple(rows)  # shared by every caller: immutable
     _COVERING_MEMO[key] = rows
     return rows
 

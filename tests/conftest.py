@@ -29,6 +29,32 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def count_jobs(spark):
+    """count_jobs(group, fn) -> (fn(), number of Spark jobs fn submitted),
+    counted under a fresh job group."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture
+def release_cache(spark):
+    """Clears the session's cache after the test. The ring rounds persist
+    their inputs and no caller unpersists them; left cached, their plans
+    hold driver heap for every later test in the session."""
+    yield
+    spark.catalog.clearCache()
+
+
+@pytest.fixture(scope="session")
 def duck():
     import duckdb
 

@@ -5,7 +5,7 @@ import numpy as np
 
 from s2_geometry_library_java_spark.kernel import cellid as s2
 from s2_geometry_library_java_spark.kernel import edges as ek
-from s2_geometry_library_java_spark.operators import closestedge
+from s2_geometry_library_java_spark.operators import closestedge, ringsearch
 from s2_geometry_library_java_spark.operators import shapes as shape_ops
 
 
@@ -267,7 +267,7 @@ def test_conservative_max_distance_no_under_reporting(spark):
     import numpy as np
 
     from s2_geometry_library_java_spark.kernel import sphere
-    from s2_geometry_library_java_spark.operators import knn, ringsearch
+    from s2_geometry_library_java_spark.operators import knn
 
     r = 0.37  # radians; all index points at ~this angle from q
     qlat, qlng = 10.0, 40.0
@@ -444,7 +444,7 @@ def test_include_interiors_furthest_antipode(spark):
     assert rows[1]["edge_id"] >= 0 and rows[1]["chord2"] < 4.0
 
 
-def test_max_error_early_exit(spark):
+def test_max_error_early_exit(spark, count_jobs, monkeypatch, release_cache):
     """Options.maxError (S2BestEdgesQueryBase.java:467-484): relaxing the
     ring completeness bound by maxError lets borderline queries finish in
     the first ring round — fewer Spark jobs — while the returned distance
@@ -465,17 +465,20 @@ def test_max_error_early_exit(spark):
     qdf = spark.createDataFrame(
         [(0, 0.0, 0.0)], "query_id long, lat double, lng double"
     )
-    sc = spark.sparkContext
-    tr = sc.statusTracker()
-    sc.setJobGroup("me-exact", "")
-    exact = closestedge.closest_edges(idx, qdf, k=1, level=lvl).collect()
-    n_exact = len(tr.getJobIdsForGroup("me-exact"))
-    sc.setJobGroup("me-approx", "")
-    approx = closestedge.closest_edges(
-        idx, qdf, k=1, level=lvl, max_error_rad=w
-    ).collect()
-    n_approx = len(tr.getJobIdsForGroup("me-approx"))
-    sc.setJobGroup(None, None)
+    # the ring rounds are what maxError shortens: keep the 158-row index
+    # off the tiny-index exact pass and the one query off the local pass
+    monkeypatch.setattr(closestedge, "SMALL_INDEX_BRUTE_EDGES", 0)
+    monkeypatch.setattr(ringsearch, "LOCAL_PAIRS_MAX", 0)
+    exact, n_exact = count_jobs(
+        "me-exact",
+        lambda: closestedge.closest_edges(idx, qdf, k=1, level=lvl).collect(),
+    )
+    approx, n_approx = count_jobs(
+        "me-approx",
+        lambda: closestedge.closest_edges(
+            idx, qdf, k=1, level=lvl, max_error_rad=w
+        ).collect(),
+    )
     a_exact = 2 * np.arcsin(0.5 * np.sqrt(exact[0]["chord2"]))
     a_approx = 2 * np.arcsin(0.5 * np.sqrt(approx[0]["chord2"]))
     # the option's contract: within maxError of the true best

@@ -82,3 +82,20 @@ def test_tfidf_matches_duckdb_twin(spark, duck):
     duck_rows = sorted(tuple(t) for t in duck.execute(sql).fetchall())
     duck.unregister("tiny_docs")
     assert spark_rows == duck_rows
+
+
+def test_fingerprint64_udf_null_text_is_null(spark):
+    """The Arrow fingerprint maps NULL text to NULL, as the Column form
+    does, and agrees with it on every other row (empty and non-ASCII
+    included)."""
+    df = spark.createDataFrame(
+        [(1, "apple pie"), (2, None), (3, ""), (4, "café"), (5, None)],
+        "doc_id long, text string",
+    )
+    rows = df.select(
+        "doc_id",
+        textstats.fingerprint64_udf()("text").alias("udf"),
+        textstats.fingerprint64("text").alias("col"),
+    ).collect()
+    assert all(r["udf"] == r["col"] for r in rows), rows
+    assert sorted(r["doc_id"] for r in rows if r["udf"] is None) == [2, 5]

@@ -129,3 +129,27 @@ def test_within_distance_of_polygons_matches_brute(spark):
     threshold = float(sphere.chord2_from_angle(r))
     want = set(np.nonzero(inside | (d <= threshold))[0].astype(int).tolist())
     assert got == want
+
+
+def test_covering_memo_is_immutable(spark):
+    """The covering memos hand every caller the same value: a caller's
+    attempt to mutate it fails and cannot change a later call's rows."""
+    from s2_geometry_library_java_spark.operators import pip
+
+    polys = {"p": rg.Polygon.from_text("0:0, 0:2, 2:2, 2:0")}
+    pts = spark.createDataFrame(
+        [(1, 1.0, 1.0), (2, 5.0, 5.0)], "id long, lat double, lng double"
+    )
+    for rows_of in (
+        lambda: pip.covering_rows(polys),
+        lambda: tolerant.expanded_covering_rows(polys, 0.01),
+    ):
+        rows = rows_of()
+        before = list(rows)
+        with pytest.raises(AttributeError):
+            rows.append(("q", 0, 0, 0, False))
+        with pytest.raises(TypeError):
+            rows[0] = ("q",) + tuple(rows[0][1:])
+        assert list(rows_of()) == before
+    hits = pip.pip_join(spark, pts, polys).collect()
+    assert [(r["point_id"], r["polygon_id"]) for r in hits] == [(1, "p")]
