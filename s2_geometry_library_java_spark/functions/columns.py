@@ -24,10 +24,6 @@ def biased(cell_id) -> Column:
     return _c(cell_id).bitwiseXOR(F.lit(MIN_LONG))
 
 
-def unbiased(b) -> Column:
-    return _c(b).bitwiseXOR(F.lit(MIN_LONG))
-
-
 def lowest_on_bit(cell_id) -> Column:
     cid = _c(cell_id)
     return cid.bitwiseAND(-cid)

@@ -39,14 +39,6 @@ def _lut_lit() -> Column:
     return _LUT_LIT
 
 
-def _lut_gather(idx: Column) -> Column:
-    """LOOKUP_POS[idx] as element_at over a constant array Literal (1-based).
-
-    F.lit(list) folds to a single Literal; F.array(*lits) would rebuild the
-    1024-element array per row per step (measured ~10x slower)."""
-    return F.element_at(_lut_lit(), (idx + 1).cast("int"))
-
-
 def xyz_cols(lat_deg: Column, lng_deg: Column) -> tuple[Column, Column, Column]:
     lat = F.radians(lat_deg)
     lng = F.radians(lng_deg)

@@ -16,12 +16,10 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
-_LATLNG = StructType([StructField("lat", DoubleType()), StructField("lng", DoubleType())])
 _FACEIJ = StructType(
     [StructField("face", IntegerType()), StructField("i", LongType()), StructField("j", LongType())]
 )
@@ -59,17 +57,6 @@ def cell_id_from_face_ij(face, i, j) -> Column:
     return _cell_id_from_face_ij(face, i, j)
 
 
-@pandas_udf(_LATLNG)
-def _cell_id_to_latlng_deg(cid: pd.Series) -> pd.DataFrame:
-    lat, lng = s2.cell_id_to_latlng(s2.from_signed(cid.to_numpy(np.int64)))
-    return pd.DataFrame({"lat": np.degrees(lat), "lng": np.degrees(lng)})
-
-
-def cell_id_to_latlng_deg(cid) -> Column:
-    """Cell center as struct<lat,lng> degrees."""
-    return _cell_id_to_latlng_deg(cid)
-
-
 @pandas_udf(_FACEIJ)
 def _cell_id_to_face_ij(cid: pd.Series) -> pd.DataFrame:
     f, i, j, _ = s2.to_face_ij_orientation(s2.from_signed(cid.to_numpy(np.int64)))
@@ -78,25 +65,6 @@ def _cell_id_to_face_ij(cid: pd.Series) -> pd.DataFrame:
 
 def cell_id_to_face_ij(cid) -> Column:
     return _cell_id_to_face_ij(cid)
-
-
-@pandas_udf(StringType())
-def _cell_token(cid: pd.Series) -> pd.Series:
-    return pd.Series(s2.to_token(s2.from_signed(cid.to_numpy(np.int64))))
-
-
-def cell_token(cid) -> Column:
-    """Hex token via the numpy kernel (columns.token is the pure-SQL twin)."""
-    return _cell_token(cid)
-
-
-@pandas_udf(LongType())
-def _cell_from_token(tok: pd.Series) -> pd.Series:
-    return pd.Series(s2.to_signed(s2.from_token(tok.to_numpy(object))))
-
-
-def cell_from_token(tok) -> Column:
-    return _cell_from_token(tok)
 
 
 @pandas_udf(IntegerType())

@@ -323,10 +323,6 @@ def face_uv_to_xyz(face, u, v):
     return x, y, z
 
 
-def _errstate_all_ignore():
-    return np.errstate(divide="ignore", invalid="ignore", over="ignore")
-
-
 def st_to_uv(s):
     """Quadratic ST->UV (S2Projections.java:246-252), op-order preserved."""
     s = np.asarray(s, dtype=np.float64)
@@ -467,10 +463,6 @@ def level(ids) -> np.ndarray:
 
 def is_leaf(ids) -> np.ndarray:
     return (_as_u64(ids) & _U64_1) != 0
-
-
-def is_face(ids) -> np.ndarray:
-    return (_as_u64(ids) & np.uint64((1 << POS_BITS) - 1)) == np.uint64(1 << (POS_BITS - 1))
 
 
 def is_valid(ids) -> np.ndarray:
@@ -676,11 +668,6 @@ def from_biased(biased) -> np.ndarray:
 
 _IJ_TO_ST_LINEAR = 1.0 / MAX_SIZE
 _DBL_EPSILON = float(np.finfo(np.float64).eps)
-
-
-def get_size_ij(level) -> np.ndarray:
-    """Edge length in leaf-ij units of a cell at this level."""
-    return np.asarray(1, dtype=np.int64) << (MAX_LEVEL - np.asarray(level, dtype=np.int64))
 
 
 def from_face_ij_wrap(face_idx, i, j) -> np.ndarray:

@@ -859,25 +859,6 @@ def _edges_cross_cell(loop: Loop, cell) -> bool:
     return False
 
 
-def loop_contains_cell(loop: Loop, cell) -> bool:
-    """Loop ⊇ cell iff all 4 cell vertices inside and no edge crossings."""
-    v = cell.vertices
-    if not bool(np.all(loop.contains_points(v[:, 0], v[:, 1], v[:, 2]))):
-        return False
-    return not _edges_cross_cell(loop, cell)
-
-
-def loop_may_intersect_cell(loop: Loop, cell) -> bool:
-    """Loop ∩ cell ≠ ∅ iff a cell vertex is in the loop, a loop vertex is in
-    the cell, or edges cross (both convex-cell-vs-loop cases covered)."""
-    v = cell.vertices
-    if bool(np.any(loop.contains_points(v[:, 0], v[:, 1], v[:, 2]))):
-        return True
-    if any(cell.contains_point(loop.vertices[i]) for i in range(len(loop.vertices))):
-        return True
-    return _edges_cross_cell(loop, cell)
-
-
 def polygon_contains_cell(poly: Polygon, cell) -> bool:
     """Conservative: XOR-of-loops region contains the cell if the cell's
     4 vertices and center are inside and no loop edge crosses the cell."""

@@ -60,17 +60,6 @@ def metric_max_level(deriv: float, value: float, dim: int = 1) -> int:
     return max(0, min(30, lvl))
 
 
-def metric_min_level(deriv: float, value: float, dim: int = 1) -> int:
-    """Smallest level where metric <= value (S2.java:243-257)."""
-    if value <= 0:
-        return 30
-    import math
-
-    exponent = math.frexp(value / deriv)[1] - 1
-    lvl = -(exponent >> (dim - 1))
-    return max(0, min(30, lvl))
-
-
 def meters_to_radians(m):
     return np.asarray(m, dtype=np.float64) / EARTH_RADIUS_METERS
 
@@ -123,12 +112,6 @@ def haversine_distance(lat1, lng1, lat2, lng2):
     dlng = np.sin(0.5 * (np.asarray(lng2, np.float64) - np.asarray(lng1, np.float64)))
     x = dlat * dlat + dlng * dlng * np.cos(lat1) * np.cos(lat2)
     return 2.0 * np.arcsin(np.sqrt(np.minimum(1.0, x)))
-
-
-def normalize_rows(v: np.ndarray) -> np.ndarray:
-    """Normalize an (n,3) array of vectors."""
-    n = np.sqrt((v * v).sum(axis=1, keepdims=True))
-    return v / n
 
 
 def triangle_area(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
@@ -351,12 +334,6 @@ def update_min_distance_max_error(length2: float) -> float:
         update_min_interior_distance_max_error(length2),
         s2point_constructor_max_error(length2),
     )
-
-
-def inclusive_max_chord2(length2: float) -> float:
-    """setInclusiveMaxDistance (S2ClosestPointQuery.java:196-204): strict
-    '<' against successor == '<=' against length2."""
-    return chord2_successor(length2)
 
 
 def conservative_max_chord2(length2: float, edges: bool = False) -> float:

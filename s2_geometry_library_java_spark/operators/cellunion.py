@@ -6,7 +6,7 @@ merges over sorted ranges become window functions and range joins:
 
 * ``normalize_df``     — drop contained cells (sorted cummax window), then
                          collapse complete sibling groups to parents
-                         (groupBy parent + count == 4), iterated.
+                         (window over parent, 4 distinct children), iterated.
 * ``union_df``         — unionAll + normalize.
 * ``intersection_df``  — for normalized inputs, overlapping cells nest, so
                          the intersection keeps the SMALLER cell of each
@@ -23,7 +23,7 @@ these operators exist for global cell sets too big for one machine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import columns as cc
 
@@ -91,26 +91,26 @@ def drop_contained_df(df: DataFrame, num_partitions: int | None = None) -> DataF
 
 def collapse_siblings_df(df: DataFrame, rounds: int = 4) -> DataFrame:
     """Replace complete 4-sibling groups by their parent, ``rounds`` times
-    (each round one shuffle; rounds=30 is the exact fixpoint, 4 suffices
-    for coverings whose input depth is bounded)."""
-    out = df
+    (rounds=30 is the exact fixpoint, 4 suffices for coverings whose input
+    depth is bounded). Each round reads its input once: a window over the
+    parent id counts its distinct children, the rows of a group of 4 map
+    to the parent, and a distinct folds the group — so the plan grows
+    linearly in ``rounds``."""
+    siblings = Window.partitionBy("parent_id")
+    out = df.select("cell_id")
     for _ in range(rounds):
         lvl = cc.level("cell_id")
-        parent = F.when(lvl > 0, cc.parent("cell_id", F.greatest(lvl - 1, F.lit(0)))).otherwise(
-            F.lit(None)
+        parent = F.when(lvl > 0, cc.parent("cell_id", F.greatest(lvl - 1, F.lit(0))))
+        complete = F.col("parent_id").isNotNull() & (
+            F.size(F.collect_set("cell_id").over(siblings)) == 4
         )
-        tagged = out.select("cell_id", parent.alias("parent_id"))
-        groups = (
-            tagged.where(F.col("parent_id").isNotNull())
-            .groupBy("parent_id")
-            .agg(F.count_distinct("cell_id").alias("n"))
-            .where(F.col("n") == 4)
-            .select(F.col("parent_id").alias("cell_id"))
+        out = (
+            out.withColumn("parent_id", parent)
+            .select(
+                F.when(complete, F.col("parent_id")).otherwise(F.col("cell_id")).alias("cell_id")
+            )
+            .distinct()
         )
-        kept = tagged.join(
-            groups.withColumnRenamed("cell_id", "parent_id"), "parent_id", "left_anti"
-        ).select("cell_id")
-        out = kept.unionByName(groups).distinct()
     return out
 
 

@@ -1,19 +1,24 @@
-"""Point-in-polygon spatial join.
+"""Point-in-polygon spatial join: the one owner of the point x covering join.
 
 The engine's central query shape (S2ContainsPointQuery semantics,
 S2ContainsPointQuery.java:113 / S2Loop.java:1303-1373), restructured for
 Spark exactly as SURVEY.md §3.2 plans:
 
-1. polygons -> coverings (kernel.coverer, driver-side: polygons are few)
-   exploded to (polygon_id, range_min_b, range_max_b, is_interior) rows;
-2. points get leaf cell ids (one Arrow batch kernel) biased for ordering;
-3. broadcast range join: candidate pairs are points whose leaf id falls in
-   a covering cell's Hilbert range — Catalyst turns this into a broadcast
-   nested-loop join over the tiny covering table, i.e. a map-only stage
-   with NO shuffle of the point table;
-4. interior-cell candidates are accepted immediately (is_interior flag —
-   the coverer's terminal-contains cells); only boundary-cell candidates
-   run the exact crossing-parity kernel against the polygon's edges.
+1. ``covering_rows``: polygons -> coverings (kernel.coverer, driver-side:
+   polygons are few) as (polygon_id, cell_id, is_interior) rows, where
+   is_interior marks the coverer's terminal-contains cells;
+2. ``leaf_points``: points get leaf cell ids (one Arrow batch kernel);
+3. ``candidate_join``: each point emits its ancestor at every covering
+   level and meets the tiny covering table in ONE broadcast hash join on
+   cell_id — a map-only stage with NO shuffle of the point table;
+4. ``exact_filter``: one exact filter UDF over the candidates; interior
+   candidates return True inside it without touching the kernel, the
+   boundary sliver runs the polygon's own crossing parity.
+
+pip_join, pip_join_convex, shapes.pip_join_indexed,
+streaming.geofence.geofence_hits and tolerant.within_distance_of_polygons
+all build their candidates with step 3; the convex path swaps step 4 for
+a JVM det filter and the tolerant path for its distance UDF.
 
 At 100 TB the point table never shuffles: the covering table is O(polygons
 x max_cells) rows and broadcasts; the PIP kernel sees only boundary-cell
@@ -37,7 +42,7 @@ from ..kernel.cell import Cell
 from ..localdf import local_df
 
 
-#: driver-side memo for covering_rows: the covering of a polygon is a pure
+#: driver-side memo for covering rows: the covering of a polygon is a pure
 #: function of its geometry + coverer params and is independent of any input
 #: table, yet the coverer costs ~0.5 s of driver time per 6-polygon call —
 #: paid on EVERY pip_join plan build. Keyed by a digest of loop vertices +
@@ -62,78 +67,118 @@ def polygons_geometry_key(polygons: dict, *params) -> bytes:
     return h.digest()
 
 
+def memoized_rows(key: bytes, build) -> tuple[tuple, ...]:
+    """``tuple(build())`` stored in the covering memo under ``key``."""
+    rows = _COVERING_MEMO.get(key)
+    if rows is None:
+        if len(_COVERING_MEMO) >= _COVERING_MEMO_CAP:
+            _COVERING_MEMO.pop(next(iter(_COVERING_MEMO)))
+        # a tuple: every caller shares the memoized value, so none may mutate it
+        rows = _COVERING_MEMO[key] = tuple(build())
+    return rows
+
+
 def covering_rows(
     polygons: dict, max_cells: int = 8, min_level: int = 0, max_level: int = 30
 ) -> tuple[tuple, ...]:
-    """(polygon_id, cell_id, range_min_b, range_max_b, is_interior) rows.
+    """(polygon_id, cell_id, is_interior) rows.
 
     is_interior marks covering cells fully contained in the polygon
     (computed with the polygon's own contains-cell test), enabling the
     exact-test skip (SURVEY.md §4 'interior fast accept').
     """
+
+    def build():
+        coverer = cov.RegionCoverer(
+            max_cells=max_cells, min_level=min_level, max_level=max_level
+        )
+        for pid, poly in polygons.items():
+            contains_cell, _, _ = rg.region_cell_tests(poly)
+            for cid in coverer.get_covering(poly):
+                yield pid, int(s2.to_signed(np.uint64(cid))[0]), bool(contains_cell(Cell(cid)))
+
     key = polygons_geometry_key(polygons, "cov", max_cells, min_level, max_level)
-    memo = _COVERING_MEMO.get(key)
-    if memo is not None:
-        return memo
-    rows = []
-    coverer = cov.RegionCoverer(
-        max_cells=max_cells, min_level=min_level, max_level=max_level
+    return memoized_rows(key, build)
+
+
+def leaf_points(
+    points: DataFrame,
+    point_id: str = "id",
+    lat: str = "lat",
+    lng: str = "lng",
+    leaf_col: str | None = None,
+    carry: tuple = (),
+) -> DataFrame:
+    """(*carry, point_id, lat, lng, leaf): the leaf cell id comes from the
+    Arrow encoder unless the caller already has one in ``leaf_col``."""
+    leaf = F.col(leaf_col) if leaf_col else udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30)
+    return points.select(
+        *carry,
+        F.col(point_id).alias("point_id"),
+        F.col(lat).alias("lat"),
+        F.col(lng).alias("lng"),
+        leaf.alias("leaf"),
     )
-    for pid, poly in polygons.items():
-        contains_cell, _, _ = rg.region_cell_tests(poly)
-        for cid in coverer.get_covering(poly):
-            u = np.uint64(cid)
-            interior = bool(contains_cell(Cell(cid)))
-            rows.append(
-                (
-                    pid,
-                    int(s2.to_signed(u)[0]),
-                    int(s2.to_biased(s2.range_min(u))[0]),
-                    int(s2.to_biased(s2.range_max(u))[0]),
-                    interior,
-                )
-            )
-    if len(_COVERING_MEMO) >= _COVERING_MEMO_CAP:
-        _COVERING_MEMO.pop(next(iter(_COVERING_MEMO)))
-    # a tuple: every caller shares the memoized value, so none may mutate it
-    rows = tuple(rows)
-    _COVERING_MEMO[key] = rows
-    return rows
 
 
-def make_pip_contains_udf(polygons: dict):
-    """Exact containment pandas UDF closed over the polygon geometry.
+def candidate_join(
+    spark,
+    pts: DataFrame,
+    rows,
+    schema: str = "polygon_id string, cell_id long, is_interior boolean",
+) -> DataFrame:
+    """Every (point, covering row) pair whose cell contains the point.
 
-    The dict (polygon_id -> kernel.region.Polygon) is tiny and ships to
-    executors in the UDF closure — the 'broadcast small side' of §3.2.
+    ``pts`` carries a ``leaf`` column; ``rows`` are driver-side covering
+    rows in ``schema`` whose first two fields are (polygon_id, cell_id).
+    The Hilbert-range containment test ``range_min <= leaf <= range_max``
+    is equivalent to ``parent(leaf, level(cell)) == cell``, so instead of
+    a (non-codegen, per-row interpreted) broadcast nested-loop range join,
+    each point emits its ancestor at every level present in the covering
+    set (a handful) and the join is a broadcast HASH join on the cell id —
+    whole-stage-codegen, linear, and the exact plan that survives a 100x
+    scale-up (measured 10x faster than the BNLJ form at 400k points).
     """
-    verts = {
-        pid: [lp.vertices for lp in poly.loops] for pid, poly in polygons.items()
-    }
-    origins_inside = {
-        pid: [lp.origin_inside for lp in poly.loops] for pid, poly in polygons.items()
-    }
+    ids = np.array([r[1] for r in rows], dtype=np.int64)
+    levels = np.unique(s2.level(s2.from_signed(ids))).tolist()
+    cov_df = F.broadcast(local_df(spark, rows, schema))
+    return pts.select(
+        *[c for c in pts.columns if c != "leaf"],
+        F.explode(F.array(*[cc.parent("leaf", lv) for lv in levels])).alias("cell_id"),
+    ).join(cov_df, "cell_id")
+
+
+def exact_filter(cand: DataFrame, polygons: dict) -> DataFrame:
+    """The candidate rows whose point lies in their polygon: one pandas
+    UDF over (is_interior, polygon_id, lat, lng).
+
+    Interior-cell candidates return True without touching the geometry;
+    the rest run the polygon's own crossing parity
+    (``Polygon.contains_points``). The dict (polygon_id ->
+    kernel.region.Polygon) is tiny and ships to executors in the UDF
+    closure — the 'broadcast small side' of §3.2.
+    """
 
     @pandas_udf(BooleanType())
-    def pip_contains(pid: pd.Series, lat: pd.Series, lng: pd.Series) -> pd.Series:
-        from ..kernel import predicates
-
-        lat_r = np.radians(lat.to_numpy(np.float64))
-        lng_r = np.radians(lng.to_numpy(np.float64))
-        x, y, z = s2.latlng_to_xyz(lat_r, lng_r)
-        pts = np.stack([x, y, z], axis=1)
-        out = np.zeros(len(pts), dtype=bool)
-        for p in pd.unique(pid):
-            mask = (pid == p).to_numpy()
-            sub = pts[mask]
-            inside = np.zeros(len(sub), dtype=bool)
-            for loop_v, oi in zip(verts[p], origins_inside[p]):
-                crossings = predicates.count_crossings(rg.Loop.ORIGIN, sub, loop_v)
-                inside ^= np.where((crossings & 1) == 1, not oi, oi)
-            out[mask] = inside
+    def pip_filter(
+        is_interior: pd.Series, pid: pd.Series, lat: pd.Series, lng: pd.Series
+    ) -> pd.Series:
+        out = is_interior.to_numpy(dtype=bool).copy()
+        boundary = np.flatnonzero(~out)
+        if len(boundary):
+            x, y, z = s2.latlng_to_xyz(
+                np.radians(lat.to_numpy(np.float64)[boundary]),
+                np.radians(lng.to_numpy(np.float64)[boundary]),
+            )
+            bpid = pid.to_numpy()[boundary]
+            for p in pd.unique(bpid):
+                m = bpid == p
+                out[boundary[m]] = polygons[p].contains_points(x[m], y[m], z[m])
         return pd.Series(out)
 
-    return pip_contains
+    return cand.where(
+        pip_filter(F.col("is_interior"), F.col("polygon_id"), F.col("lat"), F.col("lng"))
+    )
 
 
 def pip_join(
@@ -150,54 +195,22 @@ def pip_join(
 
     Pass ``leaf_col`` when the caller already computed leaf cell ids (e.g.
     after tiling) — saves a second Arrow kernel pass over the point table.
-
-    Physical shape: the Hilbert-range containment test ``range_min <= leaf
-    <= range_max`` is equivalent to ``parent(leaf, level(cell)) == cell``,
-    so instead of a (non-codegen, per-row interpreted) broadcast
-    nested-loop range join, each point emits its ancestor at every level
-    present in the covering set (a handful) and the join is a broadcast
-    HASH join on the cell id — whole-stage-codegen, linear, and the exact
-    plan that survives a 100x scale-up (measured 10x faster than the BNLJ
-    form at 400k points even locally).
     """
-    rows = covering_rows(polygons, max_cells=max_cells)
-    levels = sorted({int(s2.level(np.uint64(np.int64(r[1]).view(np.uint64)))) for r in rows})
-    cov_df = F.broadcast(
-        local_df(spark, 
-            rows,
-            "polygon_id string, cell_id long, range_min_b long, range_max_b long, is_interior boolean",
-        ).select("polygon_id", "cell_id", "is_interior")
+    cand = candidate_join(
+        spark,
+        leaf_points(points, point_id, lat, lng, leaf_col),
+        covering_rows(polygons, max_cells=max_cells),
     )
-    if leaf_col is not None:
-        leaf = F.col(leaf_col)
-    else:
-        leaf = udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30)
-    pts = points.select(
-        F.col(point_id).alias("point_id"),
-        F.col(lat).alias("lat"),
-        F.col(lng).alias("lng"),
-        leaf.alias("leaf"),
-    )
-    cand = pts.select(
-        "point_id",
-        "lat",
-        "lng",
-        F.explode(F.array(*[cc.parent("leaf", lv) for lv in levels])).alias("cell_id"),
-    ).join(cov_df, "cell_id")
-    pip = make_pip_contains_udf(polygons)
-    hits = cand.where(
-        F.col("is_interior") | pip(F.col("polygon_id"), F.col("lat"), F.col("lng"))
-    )
-    return hits.select("point_id", "polygon_id")
+    return exact_filter(cand, polygons).select("point_id", "polygon_id")
 
 
 def make_convex_pip_filter(polygons: dict):
     """JVM-side exact-enough containment for CONVEX single-loop polygons:
     point is inside iff det(a, b, p) > 0 for every CCW edge (a,b) — plain
     Column arithmetic with the loop vertices inlined as literals, fully
-    inside whole-stage codegen (no Python). The general crossing-parity
-    kernel (make_pip_contains_udf) remains the path for concave/holed
-    geometry; callers pick via pip_join(convex_fast_path=True).
+    inside whole-stage codegen (no Python). The crossing-parity filter
+    (exact_filter) remains the path for concave/holed geometry;
+    pip_join_convex is the caller.
 
     Returns fn(polygon_id_col, px, py, pz) -> BooleanColumn.
     """
@@ -242,14 +255,6 @@ def pip_join_convex(
     membership; divergence would need a point within ~1 ulp of an edge)."""
     from ..functions import encode_cols
 
-    rows = covering_rows(polygons, max_cells=max_cells)
-    levels = sorted({int(s2.level(np.uint64(np.int64(r[1]).view(np.uint64)))) for r in rows})
-    cov_df = F.broadcast(
-        local_df(spark, 
-            rows,
-            "polygon_id string, cell_id long, range_min_b long, range_max_b long, is_interior boolean",
-        ).select("polygon_id", "cell_id", "is_interior")
-    )
     base = points.select(
         F.col(point_id).alias("point_id"),
         F.col(lat).alias("lat"),
@@ -262,19 +267,11 @@ def pip_join_convex(
         # through the chained Hilbert steps, which can overflow the codegen
         # stack on a hot session and is ~10x slower to evaluate.
         base = encode_cols.with_cell_id(base, "lat", "lng", out="leaf")
-    pts = base
     x, y, z = encode_cols.xyz_cols(F.col("lat"), F.col("lng"))
-    cand = (
-        pts.withColumns({"_px": x, "_py": y, "_pz": z})
-        .select(
-            "point_id",
-            "_px",
-            "_py",
-            "_pz",
-            F.explode(F.array(*[cc.parent("leaf", lv) for lv in levels])).alias("cell_id"),
-        )
-        .join(cov_df, "cell_id")
+    pts = base.select(
+        "point_id", x.alias("_px"), y.alias("_py"), z.alias("_pz"), "leaf"
     )
+    cand = candidate_join(spark, pts, covering_rows(polygons, max_cells=max_cells))
     convex = make_convex_pip_filter(polygons)
     hits = cand.where(
         F.col("is_interior")

@@ -1,11 +1,11 @@
 """Executor-side shape prep: coverings and shape-index build as DataFrame
-transforms over a polygon TABLE (no driver loop, no per-polygon closure).
+transforms over a polygon TABLE (no driver-side coverer loop).
 
 This is the scale path SURVEY §2.D/§2.E planned: with 10^4-10^6 polygons
 the per-shape work (coverer priority queue, edge clipping) runs inside
-mapInPandas over the shapes table, and the geometry reaches the exact
-point-in-polygon filter as a COLUMN on the candidate rows (broadcast hash
-join on polygon_id), never as a driver-side Python object.
+mapInPandas over the shapes table. pip_join_indexed collects the covering
+rows and the parsed polygons and hands them to operators/pip's candidate
+join and exact filter.
 
 Shapes are rows (shape_id string, text string) in the S2TextFormat polygon
 grammar ('lat:lng, ...; ...' — S2TextFormat.java:484-495), the engine's
@@ -20,13 +20,9 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
-from ..functions import columns as cc
-from ..functions import udfs
 from ..kernel import cellid as s2
-from ..localdf import local_df
+from . import pip
 
 
 @lru_cache(maxsize=4096)
@@ -123,50 +119,6 @@ def shape_index_df(shapes: DataFrame, max_edges_per_cell: int = 10,
     return shapes.select(F.col(id_col), F.col(text_col)).mapInPandas(gen, _INDEX_SCHEMA)
 
 
-@pandas_udf(BooleanType())
-def _pip_contains_text(text: pd.Series, lat: pd.Series, lng: pd.Series) -> pd.Series:
-    """Exact crossing-parity containment with the polygon geometry arriving
-    as a column (parsed once per distinct polygon per batch)."""
-    lat_r = np.radians(lat.to_numpy(np.float64))
-    lng_r = np.radians(lng.to_numpy(np.float64))
-    x, y, z = s2.latlng_to_xyz(lat_r, lng_r)
-    pts = np.stack([x, y, z], axis=1)
-    out = np.zeros(len(pts), dtype=bool)
-    for t in pd.unique(text):
-        mask = (text == t).to_numpy()
-        poly = _parse_polygon(t)
-        sub = pts[mask]
-        out[mask] = poly.contains_points(sub[:, 0], sub[:, 1], sub[:, 2])
-    return pd.Series(out)
-
-
-@pandas_udf(BooleanType())
-def _pip_interior_or_contains(
-    is_interior: pd.Series, text: pd.Series, lat: pd.Series, lng: pd.Series
-) -> pd.Series:
-    """Interior fast-accept fused INTO the kernel: interior-cell candidates
-    return True without touching the geometry; the crossing-parity kernel
-    runs only on the boundary residue. One UDF -> one ArrowEvalPython ->
-    one scan of the point table (the pip.py:153 pattern, in-UDF so interior
-    rows skip the kernel work too)."""
-    out = is_interior.to_numpy(dtype=bool).copy()
-    boundary = ~out
-    if boundary.any():
-        lat_b = np.radians(lat.to_numpy(np.float64)[boundary])
-        lng_b = np.radians(lng.to_numpy(np.float64)[boundary])
-        x, y, z = s2.latlng_to_xyz(lat_b, lng_b)
-        pts = np.stack([x, y, z], axis=1)
-        res = np.zeros(len(pts), dtype=bool)
-        text_b = text[boundary]
-        for t in pd.unique(text_b):
-            mask = (text_b == t).to_numpy()
-            poly = _parse_polygon(t)
-            sub = pts[mask]
-            res[mask] = poly.contains_points(sub[:, 0], sub[:, 1], sub[:, 2])
-        out[boundary] = res
-    return pd.Series(out)
-
-
 def pip_join_indexed(
     spark,
     points: DataFrame,
@@ -176,85 +128,22 @@ def pip_join_indexed(
     lng: str = "lng",
     max_cells: int = 8,
     leaf_col: str | None = None,
-    small_shapes: bool = True,
 ) -> DataFrame:
-    """(point_id, polygon_id) PIP join with EXECUTOR-side polygon prep.
+    """(point_id, polygon_id) PIP join with EXECUTOR-side coverings.
 
-    Same physical plan as pip.pip_join (ancestor-level broadcast hash join,
-    interior fast-accept, exact kernel on boundary candidates) but the
-    covering table is computed distributed from the shapes table and the
-    exact filter reads geometry from a joined column — no driver loop, no
-    closure capture; scales to millions of polygons.
-
-    ``small_shapes`` (default): the covering rows (<= max_cells per shape)
-    are collected once and re-shipped as a local broadcast table — one
-    tiny Spark job instead of persist + distinct-levels probe +
-    InMemoryTableScan rematerialization inside the main job (~2x wall on
-    the 6-polygon gate). Set False for very large shape tables (> ~10^5
-    shapes), where the covering stays distributed/persisted.
+    Same plan as pip.pip_join (one ancestor-level broadcast hash join,
+    then the one exact filter with interior fast-accept), but the coverer
+    runs on the executors over the shapes table (coverings_df). Its rows
+    (<= max_cells per shape) are collected once and re-shipped as the
+    local broadcast side, and the exact filter gets the parsed polygons in
+    its closure: no geometry column rides on the candidate rows.
     """
-    if small_shapes:
-        import numpy as _np
-
-        from ..kernel import cellid as _ci
-
-        collected = coverings_df(shapes, max_cells=max_cells).collect()
-        levels = sorted(
-            {
-                int(_ci.level(_np.uint64(_np.int64(r["cell_id"]).view(_np.uint64))))
-                for r in collected
-            }
-        )
-        cov_b = F.broadcast(
-            local_df(spark, 
-                [(r["shape_id"], r["cell_id"], r["is_interior"]) for r in collected],
-                "polygon_id string, cell_id long, is_interior boolean",
-            )
-        )
-    else:
-        # persist the covering rows: the distinct-levels probe and the
-        # broadcast materialization would otherwise run the coverer twice
-        cov_rows = coverings_df(shapes, max_cells=max_cells).persist()
-        levels = [
-            int(r["lvl"])
-            for r in cov_rows.select(
-                cc.level("cell_id").alias("lvl")
-            ).distinct().collect()
-        ]
-        cov_b = F.broadcast(cov_rows.withColumnRenamed("shape_id", "polygon_id"))
-    geom_b = F.broadcast(
-        shapes.select(F.col("shape_id").alias("polygon_id"), F.col("text"))
+    rows = [tuple(r) for r in coverings_df(shapes, max_cells=max_cells).collect()]
+    polygons = {
+        sid: _parse_polygon(text)
+        for sid, text in shapes.select("shape_id", "text").collect()
+    }
+    cand = pip.candidate_join(
+        spark, pip.leaf_points(points, point_id, lat, lng, leaf_col), rows
     )
-    if leaf_col is not None:
-        leaf = F.col(leaf_col)
-    else:
-        leaf = udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30)
-    pts = points.select(
-        F.col(point_id).alias("point_id"),
-        F.col(lat).alias("lat"),
-        F.col(lng).alias("lng"),
-        leaf.alias("leaf"),
-    )
-    # ONE candidate pass: the covering join attaches is_interior, the
-    # geometry join attaches the text column, and the fused UDF accepts
-    # interior candidates without running the kernel. The point table is
-    # scanned and Arrow-encoded exactly once (previously the interior and
-    # boundary branches were independent subtrees and paid the dominant
-    # scan+encode cost twice).
-    cand = (
-        pts.select(
-            "point_id",
-            "lat",
-            "lng",
-            F.explode(
-                F.array(*[cc.parent("leaf", lv) for lv in levels])
-            ).alias("cell_id"),
-        )
-        .join(cov_b, "cell_id")
-        .join(geom_b, "polygon_id")
-    )
-    return cand.where(
-        _pip_interior_or_contains(
-            F.col("is_interior"), F.col("text"), F.col("lat"), F.col("lng")
-        )
-    ).select("point_id", "polygon_id")
+    return pip.exact_filter(cand, polygons).select("point_id", "polygon_id")

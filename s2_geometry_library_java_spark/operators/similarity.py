@@ -39,6 +39,24 @@ def cosine(a, b) -> Column:
     return dot(a, b) / F.sqrt(norm2(a) * norm2(b))
 
 
+def _vector_groups(cols: tuple, width: int | None = None):
+    """Yield (row mask, stacked 2-D arrays) per group of rows whose vectors
+    share one length; ``width`` keeps rows with at least that many elements
+    and stacks their first ``width``. Rows with a NULL vector, vectors of
+    different lengths or fewer than ``width`` elements fall in no group,
+    and the kernels return NULL for them: zip_with in the Column forms
+    pads the shorter array with NULLs (lsh_bucket's element_at past the
+    end is NULL with ANSI mode off and raises with it on)."""
+    lens = np.array([[-1 if v is None else len(v) for v in c] for c in cols])
+    if width is None:
+        key = np.where((lens == lens[0]).all(axis=0), lens[0], -1)
+    else:
+        key = np.where((lens >= width).all(axis=0), width, -1)
+    for n in np.unique(key[key >= 0]):
+        m = key == n
+        yield m, [np.stack([v[:n] for v in c.to_numpy()[m]]) for c in cols]
+
+
 _seq_cosine_udf_cache: list = []
 
 
@@ -58,16 +76,18 @@ def seq_cosine_udf():
 
         @pandas_udf(DoubleType())
         def seq_cosine(va: pd.Series, vb: pd.Series) -> pd.Series:
-            A = np.stack(va.to_numpy()).astype(np.float64)
-            B = np.stack(vb.to_numpy()).astype(np.float64)
-            d_ = np.zeros(len(A), dtype=np.float64)
-            na = np.zeros(len(A), dtype=np.float64)
-            nb = np.zeros(len(A), dtype=np.float64)
-            for d in range(A.shape[1]):  # dimension order == SQL aggregate
-                d_ += A[:, d] * B[:, d]
-                na += A[:, d] * A[:, d]
-                nb += B[:, d] * B[:, d]
-            return pd.Series(d_ / np.sqrt(na * nb))
+            out = np.full(len(va), np.nan)  # NaN leaves the UDF as NULL
+            for m, (A, B) in _vector_groups((va, vb)):
+                A, B = A.astype(np.float64), B.astype(np.float64)
+                d_ = np.zeros(len(A), dtype=np.float64)
+                na = np.zeros(len(A), dtype=np.float64)
+                nb = np.zeros(len(A), dtype=np.float64)
+                for d in range(A.shape[1]):  # dimension order == SQL aggregate
+                    d_ += A[:, d] * B[:, d]
+                    na += A[:, d] * A[:, d]
+                    nb += B[:, d] * B[:, d]
+                out[m] = d_ / np.sqrt(na * nb)
+            return pd.Series(out)
 
         _seq_cosine_udf_cache.append(seq_cosine)
     return _seq_cosine_udf_cache[0]
@@ -86,12 +106,12 @@ def seq_quantized_dot_udf():
 
         @pandas_udf(LongType())
         def seq_qdot(qa: pd.Series, qb: pd.Series) -> pd.Series:
-            A = np.stack(qa.to_numpy()).astype(np.int64)
-            B = np.stack(qb.to_numpy()).astype(np.int64)
-            out = np.zeros(len(A), dtype=np.int64)
-            for d in range(A.shape[1]):
-                out += A[:, d] * B[:, d]
-            return pd.Series(out)
+            out = np.zeros(len(qa), dtype=np.int64)
+            null = np.ones(len(qa), dtype=bool)
+            for m, (A, B) in _vector_groups((qa, qb)):
+                out[m] = (A.astype(np.int64) * B.astype(np.int64)).sum(axis=1)
+                null &= ~m
+            return pd.Series(pd.arrays.IntegerArray(out, null))
 
         _seq_qdot_udf_cache.append(seq_qdot)
     return _seq_qdot_udf_cache[0]
@@ -165,15 +185,20 @@ def lsh_bucket_udf(n_planes: int = 8, dim: int = 64):
 
         @pandas_udf(LongType())
         def bucket_udf(emb: pd.Series) -> pd.Series:
-            E = np.stack(emb.to_numpy()).astype(np.float64)
-            out = np.zeros(len(E), dtype=np.int64)
-            for p in range(n_planes):
-                acc = np.zeros(len(E), dtype=np.float64)
-                for d in range(dim):  # dimension order == the Column fold
-                    w = (d * 11 + p * 37) % 21 - 10
-                    acc += (E[:, d] * w) / 10.0
-                out |= (acc >= 0).astype(np.int64) << p
-            return pd.Series(out)
+            out = np.zeros(len(emb), dtype=np.int64)
+            null = np.ones(len(emb), dtype=bool)
+            for m, (E,) in _vector_groups((emb,), dim):
+                E = E.astype(np.float64)
+                bucket = np.zeros(len(E), dtype=np.int64)
+                for p in range(n_planes):
+                    acc = np.zeros(len(E), dtype=np.float64)
+                    for d in range(dim):  # dimension order == the Column fold
+                        w = (d * 11 + p * 37) % 21 - 10
+                        acc += (E[:, d] * w) / 10.0
+                    bucket |= (acc >= 0).astype(np.int64) << p
+                out[m] = bucket
+                null &= ~m
+            return pd.Series(pd.arrays.IntegerArray(out, null))
 
         _lsh_bucket_udf_cache[key] = bucket_udf
     return _lsh_bucket_udf_cache[key]
@@ -276,28 +301,6 @@ def lsh_banded_pairs(
             .where(seq_cosine_udf()(F.col("va"), F.col("vb")) >= F.lit(min_cosine))
         )
     return pairs.select("a", "b")
-
-
-def lsh_bucketed_neighbors(
-    index: DataFrame, id_col: str, vec_col: str, n_planes: int = 8, dim: int = 64
-) -> DataFrame:
-    """(a, b, sim) for pairs sharing an LSH bucket — the small-scale form
-    (single table; see lsh_banded_pairs for the 100 TB parameterization)."""
-    b = index.select(
-        _c(id_col).alias("id"),
-        _c(vec_col).alias("v"),
-        lsh_bucket_udf(n_planes, dim)(_c(vec_col)).alias("bucket"),
-    )
-    pairs = (
-        b.alias("l")
-        .join(b.alias("r"), (F.col("l.bucket") == F.col("r.bucket")) & (F.col("l.id") < F.col("r.id")))
-        .select(
-            F.col("l.id").alias("a"),
-            F.col("r.id").alias("b"),
-            seq_cosine_udf()(F.col("l.v"), F.col("r.v")).alias("sim"),
-        )
-    )
-    return pairs
 
 
 #: vector-table row cap for broadcasting the embedding side of the banded-

@@ -38,9 +38,8 @@ from ..functions import columns as cc
 from ..functions import udfs
 from ..kernel import cellid as s2
 from ..kernel import coverer as cov
-from ..kernel import region as rg
 from ..kernel import sphere
-from ..localdf import local_df
+from . import pip
 
 
 #: Max radius for which the level-0 (face) 3x3-ring adjacency guarantee
@@ -145,24 +144,17 @@ def expanded_covering_rows(
 ) -> tuple[tuple, ...]:
     """(polygon_id, cell_id) rows of each polygon's covering buffered by
     radius (kernel union_expand_radius = S2CellUnion.expand(S1Angle)).
-    Memoized like pip.covering_rows: pure function of geometry + params,
-    ~0.5 s of driver plan-build time per call otherwise."""
-    from .pip import _COVERING_MEMO, _COVERING_MEMO_CAP, polygons_geometry_key
+    Memoized like pip.covering_rows (pip.memoized_rows): pure function of
+    geometry + params, ~0.5 s of driver plan-build time per call otherwise."""
 
-    key = polygons_geometry_key(polygons, "expcov", radius_rad, max_cells)
-    memo = _COVERING_MEMO.get(key)
-    if memo is not None:
-        return memo
-    coverer = cov.RegionCoverer(max_cells=max_cells)
-    rows = []
-    for pid, poly in polygons.items():
-        ids = cov.union_expand_radius(coverer.get_covering(poly), radius_rad)
-        rows.extend((pid, int(s2.to_signed(np.uint64(c))[0])) for c in ids)
-    if len(_COVERING_MEMO) >= _COVERING_MEMO_CAP:
-        _COVERING_MEMO.pop(next(iter(_COVERING_MEMO)))
-    rows = tuple(rows)  # shared by every caller: immutable
-    _COVERING_MEMO[key] = rows
-    return rows
+    def build():
+        coverer = cov.RegionCoverer(max_cells=max_cells)
+        for pid, poly in polygons.items():
+            ids = cov.union_expand_radius(coverer.get_covering(poly), radius_rad)
+            yield from ((pid, int(s2.to_signed(np.uint64(c))[0])) for c in ids)
+
+    key = pip.polygons_geometry_key(polygons, "expcov", radius_rad, max_cells)
+    return pip.memoized_rows(key, build)
 
 
 def make_polygon_distance_udf(polygons: dict):
@@ -212,31 +204,19 @@ def within_distance_of_polygons(
     max_cells: int = 8,
 ) -> DataFrame:
     """(point_id, polygon_id, chord2) for points within radius of each
-    polygon (inside counts as distance 0). Same physical shape as the PIP
-    join: tiny broadcast covering table, ancestor-level hash join, exact
+    polygon (inside counts as distance 0). The PIP join's candidate join
+    (pip.candidate_join) over the buffered coverings, then the distance
     kernel only on covering candidates."""
     rows = expanded_covering_rows(polygons, radius_rad, max_cells=max_cells)
-    levels = sorted(
-        {int(s2.level(np.uint64(np.int64(r[1]).view(np.uint64)))) for r in rows}
-    )
-    cov_df = F.broadcast(
-        local_df(spark, rows, "polygon_id string, cell_id long")
-    )
-    threshold = float(sphere.chord2_from_angle(radius_rad))
-    pts = points.select(
-        F.col(point_id).alias("point_id"),
-        F.col(lat).alias("lat"),
-        F.col(lng).alias("lng"),
-        udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30).alias("leaf"),
-    )
     # expanded coverings are normalized (non-overlapping), so each point
     # matches a polygon through at most one covering cell — no dedup needed
-    cand = pts.select(
-        "point_id",
-        "lat",
-        "lng",
-        F.explode(F.array(*[cc.parent("leaf", lv) for lv in levels])).alias("cell_id"),
-    ).join(cov_df, "cell_id").select("point_id", "lat", "lng", "polygon_id")
+    cand = pip.candidate_join(
+        spark,
+        pip.leaf_points(points, point_id, lat, lng),
+        rows,
+        "polygon_id string, cell_id long",
+    )
+    threshold = float(sphere.chord2_from_angle(radius_rad))
     dist = make_polygon_distance_udf(polygons)
     return (
         cand.withColumn("chord2", dist(F.col("polygon_id"), F.col("lat"), F.col("lng")))

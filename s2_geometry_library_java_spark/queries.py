@@ -526,8 +526,8 @@ def _quad_text(clat: float, clng: float, h: float) -> str:
 
 def q_pip_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3/E2 scale path: polygons as a TABLE; coverings computed executor-
-    side (mapInPandas), exact filter reads geometry from a joined column —
-    no driver loop. Same oracle as pip_contains."""
+    side (mapInPandas) and collected, then pip_join's candidate join and
+    exact filter over the parsed polygons. Same oracle as pip_contains."""
     from .operators import shapes as shape_ops
 
     shapes = local_df(spark, 

@@ -18,14 +18,9 @@ bounded by (windows in watermark) x (polygons hit).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import columns as cc
-from ..functions import udfs
-from ..kernel import cellid as s2
-from ..localdf import local_df
-from ..operators.pip import covering_rows, make_pip_contains_udf
+from ..operators import pip
 
 
 def geofence_hits(
@@ -40,41 +35,14 @@ def geofence_hits(
 ) -> DataFrame:
     """(event_time, point_id, polygon_id) for every event inside each
     fence. ``events`` may be a streaming OR batch DataFrame — the plan is
-    a stateless broadcast hash join (ancestor-explode form, exactly
-    operators/pip.pip_join) plus the boundary-sliver exact kernel, so
-    streaming output bit-matches the batch join on the same rows."""
-    rows = covering_rows(polygons, max_cells=max_cells)
-    levels = sorted(
-        {int(s2.level(np.uint64(np.int64(r[1]).view(np.uint64)))) for r in rows}
+    operators/pip's candidate join and exact filter (the plan of
+    pip_join, carrying event_time along), so streaming output bit-matches
+    the batch join on the same rows."""
+    pts = pip.leaf_points(
+        events, point_id, lat, lng, carry=(F.col(time_col).alias("event_time"),)
     )
-    cov_df = F.broadcast(
-        local_df(
-            spark,
-            rows,
-            "polygon_id string, cell_id long, range_min_b long, "
-            "range_max_b long, is_interior boolean",
-        ).select("polygon_id", "cell_id", "is_interior")
-    )
-    pts = events.select(
-        F.col(time_col).alias("event_time"),
-        F.col(point_id).alias("point_id"),
-        F.col(lat).alias("lat"),
-        F.col(lng).alias("lng"),
-        udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30).alias("leaf"),
-    )
-    cand = pts.select(
-        "event_time",
-        "point_id",
-        "lat",
-        "lng",
-        F.explode(F.array(*[cc.parent("leaf", lv) for lv in levels])).alias(
-            "cell_id"
-        ),
-    ).join(cov_df, "cell_id")
-    pip = make_pip_contains_udf(polygons)
-    hits = cand.where(
-        F.col("is_interior") | pip(F.col("polygon_id"), F.col("lat"), F.col("lng"))
-    )
+    cand = pip.candidate_join(spark, pts, pip.covering_rows(polygons, max_cells=max_cells))
+    hits = pip.exact_filter(cand, polygons)
     return hits.select("event_time", "point_id", "polygon_id")
 
 

@@ -181,3 +181,60 @@ def test_ivf_recall_at_k_vs_brute(spark):
         total += k
     recall = hits / total
     assert recall >= 0.9, f"IVF recall@{k} {recall:.3f} < 0.9"
+
+
+# NULL, short and ragged vector rows: each Arrow kernel masks them to NULL
+# where its Column form gives NULL, and matches the Column form elsewhere.
+# One partition puts every row in one Arrow batch.
+
+def test_seq_cosine_udf_null_and_short_rows(spark):
+    from s2_geometry_library_java_spark.operators import similarity as sim
+
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0, 3.0], [3.0, 2.0, 1.0]),
+            (2, None, [1.0, 2.0, 3.0]),
+            (3, [1.0, 2.0], [1.0, 2.0, 3.0]),
+            (4, [1.0, 2.0], [2.0, 5.0]),
+        ],
+        "id int, a array<double>, b array<double>",
+    ).coalesce(1)
+    got = {r["id"]: r["c"] for r in df.select("id", sim.seq_cosine_udf()("a", "b").alias("c")).collect()}
+    want = {r["id"]: r["c"] for r in df.select("id", sim.cosine("a", "b").alias("c")).collect()}
+    assert got == want
+    assert got[2] is None and got[3] is None and got[4] is not None
+
+
+def test_seq_quantized_dot_udf_null_and_short_rows(spark):
+    from s2_geometry_library_java_spark.operators import similarity as sim
+
+    df = spark.createDataFrame(
+        [
+            (1, [1, 2, 3], [3, 2, 1]),
+            (2, [1, 2, 3], None),
+            (3, [1, 2, 3], [4, 5]),
+            (4, [7, 8], [2, 5]),
+        ],
+        "id int, a array<bigint>, b array<bigint>",
+    ).coalesce(1)
+    got = {r["id"]: r["d"] for r in df.select("id", sim.seq_quantized_dot_udf()("a", "b").alias("d")).collect()}
+    want = {r["id"]: r["d"] for r in df.select("id", sim.quantized_dot("a", "b").alias("d")).collect()}
+    assert got == want == {1: 10, 2: None, 3: None, 4: 54}
+
+
+def test_lsh_bucket_udf_null_and_short_rows(spark):
+    from s2_geometry_library_java_spark.operators import similarity as sim
+
+    full = [0.5, -1.0, 2.0, -0.25]
+    df = spark.createDataFrame(
+        [(1, full), (2, None), (3, [0.5, -1.0]), (4, full + [9.0, -9.0])],
+        "id int, v array<double>",
+    ).coalesce(1)
+    got = {
+        r["id"]: r["b"]
+        for r in df.select("id", sim.lsh_bucket_udf(3, 4)("v").alias("b")).collect()
+    }
+    ok = df.where("id IN (1, 4)").select("id", sim.lsh_bucket("v", 3, 4).alias("b"))
+    want = {r["id"]: r["b"] for r in ok.collect()}
+    assert got == {**want, 2: None, 3: None}
+    assert want[1] == want[4]
