@@ -31,29 +31,67 @@ _XYZ_LEAF = StructType(_XYZ.fields + [StructField("leaf", LongType())])
 from ..kernel import cellid as s2
 
 
+def _inputs(*cols: pd.Series):
+    """(null, cols): the rows where any input is NULL (None for a batch
+    without one) and the inputs with NULL read as 0.
+
+    Arrow hands NULL to pandas as NaN, and an integer column holding one
+    arrives as float64, so integer columns skip the scan; NaN input counts
+    as NULL. Only a batch that holds a NULL is copied."""
+    null = None
+    for c in cols:
+        if c.dtype.kind not in "iu":
+            m = np.isnan(c.to_numpy(np.float64))
+            if m.any():
+                null = m if null is None else null | m
+    if null is not None:
+        cols = [c.fillna(0) for c in cols]
+    return null, cols
+
+
+def _masked(values: np.ndarray, null):
+    """``values``, NULL on the ``null`` rows."""
+    if null is None:
+        return values
+    if values.dtype.kind == "f":
+        return np.where(null, np.nan, values)  # NaN leaves the UDF as NULL
+    return pd.arrays.IntegerArray(values, null)
+
+
+def _xyz(lat: pd.Series, lng: pd.Series):
+    return s2.latlng_to_xyz(
+        np.radians(lat.to_numpy(np.float64)), np.radians(lng.to_numpy(np.float64))
+    )
+
+
 @pandas_udf(LongType())
 def _cell_id_from_latlng_deg(lat: pd.Series, lng: pd.Series, level: pd.Series) -> pd.Series:
+    null, (lat, lng, level) = _inputs(lat, lng, level)
     ids = s2.latlng_degrees_to_cell_id(
         lat.to_numpy(np.float64), lng.to_numpy(np.float64), level.to_numpy(np.int64)
     )
-    return pd.Series(s2.to_signed(ids))
+    return pd.Series(_masked(s2.to_signed(ids), null))
 
 
 def cell_id_from_latlng_deg(lat, lng, level) -> Column:
-    """Leaf-or-level cell id (raw-bits int64) from lat/lng degrees columns."""
+    """Leaf-or-level cell id (raw-bits int64) from lat/lng degrees columns;
+    NULL where any input is NULL."""
     lvl = F.lit(level) if isinstance(level, int) else level
     return _cell_id_from_latlng_deg(lat, lng, lvl)
 
 
 @pandas_udf(LongType())
 def _cell_id_from_face_ij(face: pd.Series, i: pd.Series, j: pd.Series) -> pd.Series:
+    null, (face, i, j) = _inputs(face, i, j)
     ids = s2.from_face_ij(
         face.to_numpy(np.int64), i.to_numpy(np.int64), j.to_numpy(np.int64)
     )
-    return pd.Series(s2.to_signed(ids))
+    return pd.Series(_masked(s2.to_signed(ids), null))
 
 
 def cell_id_from_face_ij(face, i, j) -> Column:
+    """Leaf cell id (raw-bits int64) from (face, i, j); NULL where any
+    input is NULL."""
     return _cell_id_from_face_ij(face, i, j)
 
 
@@ -69,10 +107,8 @@ def cell_id_to_face_ij(cid) -> Column:
 
 @pandas_udf(IntegerType())
 def _face_from_latlng_deg(lat: pd.Series, lng: pd.Series) -> pd.Series:
-    x, y, z = s2.latlng_to_xyz(
-        np.radians(lat.to_numpy(np.float64)), np.radians(lng.to_numpy(np.float64))
-    )
-    return pd.Series(s2.xyz_to_face(x, y, z).astype(np.int32))
+    null, (lat, lng) = _inputs(lat, lng)
+    return pd.Series(_masked(s2.xyz_to_face(*_xyz(lat, lng)).astype(np.int32), null))
 
 
 def face_from_latlng_deg(lat, lng) -> Column:
@@ -81,28 +117,32 @@ def face_from_latlng_deg(lat, lng) -> Column:
 
 @pandas_udf(_XYZ)
 def _latlng_deg_to_xyz(lat: pd.Series, lng: pd.Series) -> pd.DataFrame:
-    x, y, z = s2.latlng_to_xyz(
-        np.radians(lat.to_numpy(np.float64)), np.radians(lng.to_numpy(np.float64))
-    )
-    return pd.DataFrame({"x": x, "y": y, "z": z})
+    null, (lat, lng) = _inputs(lat, lng)
+    x, y, z = _xyz(lat, lng)
+    return pd.DataFrame({"x": _masked(x, null), "y": _masked(y, null), "z": _masked(z, null)})
 
 
 def latlng_deg_to_xyz(lat, lng) -> Column:
+    """struct<x,y,z>: the unit point; every field is NULL where lat or lng
+    is NULL."""
     return _latlng_deg_to_xyz(lat, lng)
 
 
 @pandas_udf(_XYZ_LEAF)
 def _latlng_deg_to_xyz_leaf(lat: pd.Series, lng: pd.Series) -> pd.DataFrame:
-    x, y, z = s2.latlng_to_xyz(
-        np.radians(lat.to_numpy(np.float64)), np.radians(lng.to_numpy(np.float64))
+    null, (lat, lng) = _inputs(lat, lng)
+    x, y, z = _xyz(lat, lng)
+    leaf = s2.to_signed(s2.xyz_to_cell_id(x, y, z))
+    return pd.DataFrame(
+        {k: _masked(v, null) for k, v in (("x", x), ("y", y), ("z", z), ("leaf", leaf))}
     )
-    return pd.DataFrame({"x": x, "y": y, "z": z, "leaf": s2.to_signed(s2.xyz_to_cell_id(x, y, z))})
 
 
 def latlng_deg_to_xyz_leaf(lat, lng) -> Column:
     """struct<x,y,z,leaf>: the unit point and its leaf cell id from one
     conversion — bit-identical to latlng_deg_to_xyz and
-    cell_id_from_latlng_deg(..., 30), which both start from the same xyz."""
+    cell_id_from_latlng_deg(..., 30), which both start from the same xyz.
+    Every field is NULL where lat or lng is NULL."""
     return _latlng_deg_to_xyz_leaf(lat, lng)
 
 

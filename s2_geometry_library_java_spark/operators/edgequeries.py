@@ -116,6 +116,37 @@ def shared_vertex_cols() -> Column:
     return same("a", "c") | same("a", "d") | same("b", "c") | same("b", "d")
 
 
+def _crossing_tiers(cand: DataFrame, keys: tuple, crossing_type: str) -> DataFrame:
+    """The crossing rows of a candidate frame of edge pairs AB x CD
+    (columns ax..bz, cx..dz), as its ``keys`` columns, plus ``is_interior``
+    when ``crossing_type`` is "all"."""
+    args = [
+        F.col(n)
+        for n in ("ax", "ay", "az", "bx", "by", "bz",
+                  "cx", "cy", "cz", "dx", "dy", "dz")
+    ]
+    shared = shared_vertex_cols()
+    uncertain = ~shared & edges_cross_uncertain_cols(*args)
+    # JVM triage tier decides every certified row inside whole-stage
+    # codegen; the (expected ~0) rows whose determinants fall inside the
+    # triage bound escalate to the kernel's exact cascade. The split is a
+    # filter pair over the same candidate subtree — the escalation branch
+    # scans it again but processes only the degenerate residue.
+    # Shared-vertex pairs never enter either sign tier (robustCrossing
+    # returns 0 for them before any determinant is evaluated).
+    sure = cand.where(~shared & ~uncertain).where(edges_cross_cols(*args))
+    escalated = cand.where(uncertain).where(_edges_cross_exact_udf()(*args))
+    if crossing_type == "all":
+        touching = cand.where(shared).withColumn("is_interior", F.lit(False))
+        return (
+            sure.withColumn("is_interior", F.lit(True))
+            .unionByName(escalated.withColumn("is_interior", F.lit(True)))
+            .unionByName(touching)
+            .select(*keys, "is_interior")
+        )
+    return sure.unionByName(escalated).select(*keys)
+
+
 def crossing_edge_pairs(
     index_a: DataFrame,
     index_b: DataFrame,
@@ -161,32 +192,8 @@ def crossing_edge_pairs(
     cand = a.join(b, "cell_key").dropDuplicates(
         ["a_shape", "a_edge", "b_shape", "b_edge"]
     )
-    args = [
-        F.col(n)
-        for n in ("ax", "ay", "az", "bx", "by", "bz",
-                  "cx", "cy", "cz", "dx", "dy", "dz")
-    ]
-    shared = shared_vertex_cols()
-    uncertain = ~shared & edges_cross_uncertain_cols(*args)
-    # JVM triage tier decides every certified row inside whole-stage
-    # codegen; the (expected ~0) rows whose determinants fall inside the
-    # triage bound escalate to the kernel's exact cascade. The split is a
-    # filter pair over the same candidate subtree — the escalation branch
-    # scans it again but processes only the degenerate residue.
-    # Shared-vertex pairs never enter either sign tier (robustCrossing
-    # returns 0 for them before any determinant is evaluated).
-    sure = cand.where(~shared & ~uncertain).where(edges_cross_cols(*args))
-    escalated = cand.where(uncertain).where(_edges_cross_exact_udf()(*args))
-    if crossing_type == "all":
-        touching = cand.where(shared).withColumn("is_interior", F.lit(False))
-        return (
-            sure.withColumn("is_interior", F.lit(True))
-            .unionByName(escalated.withColumn("is_interior", F.lit(True)))
-            .unionByName(touching)
-            .select("a_shape", "a_edge", "b_shape", "b_edge", "is_interior")
-        )
-    return sure.unionByName(escalated).select(
-        "a_shape", "a_edge", "b_shape", "b_edge"
+    return _crossing_tiers(
+        cand, ("a_shape", "a_edge", "b_shape", "b_edge"), crossing_type
     )
 
 
@@ -294,24 +301,7 @@ def crossing_edges_for_edges(
     )
     if candidates_only:
         return cand.select("query_id", "shape_id", "edge_id")
-    args = [
-        F.col(n)
-        for n in ("ax", "ay", "az", "bx", "by", "bz",
-                  "cx", "cy", "cz", "dx", "dy", "dz")
-    ]
-    shared = shared_vertex_cols()
-    uncertain = ~shared & edges_cross_uncertain_cols(*args)
-    sure = cand.where(~shared & ~uncertain).where(edges_cross_cols(*args))
-    escalated = cand.where(uncertain).where(_edges_cross_exact_udf()(*args))
-    if crossing_type == "all":
-        touching = cand.where(shared).withColumn("is_interior", F.lit(False))
-        return (
-            sure.withColumn("is_interior", F.lit(True))
-            .unionByName(escalated.withColumn("is_interior", F.lit(True)))
-            .unionByName(touching)
-            .select("query_id", "shape_id", "edge_id", "is_interior")
-        )
-    return sure.unionByName(escalated).select("query_id", "shape_id", "edge_id")
+    return _crossing_tiers(cand, ("query_id", "shape_id", "edge_id"), crossing_type)
 
 
 def directed_hausdorff_brute(

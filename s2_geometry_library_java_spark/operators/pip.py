@@ -15,10 +15,9 @@ Spark exactly as SURVEY.md §3.2 plans:
    candidates return True inside it without touching the kernel, the
    boundary sliver runs the polygon's own crossing parity.
 
-pip_join, pip_join_convex, shapes.pip_join_indexed,
-streaming.geofence.geofence_hits and tolerant.within_distance_of_polygons
-all build their candidates with step 3; the convex path swaps step 4 for
-a JVM det filter and the tolerant path for its distance UDF.
+pip_join, shapes.pip_join_indexed, streaming.geofence.geofence_hits and
+tolerant.within_distance_of_polygons all build their candidates with
+step 3; the tolerant path swaps step 4 for its distance UDF.
 
 At 100 TB the point table never shuffles: the covering table is O(polygons
 x max_cells) rows and broadcasts; the PIP kernel sees only boundary-cell
@@ -202,79 +201,3 @@ def pip_join(
         covering_rows(polygons, max_cells=max_cells),
     )
     return exact_filter(cand, polygons).select("point_id", "polygon_id")
-
-
-def make_convex_pip_filter(polygons: dict):
-    """JVM-side exact-enough containment for CONVEX single-loop polygons:
-    point is inside iff det(a, b, p) > 0 for every CCW edge (a,b) — plain
-    Column arithmetic with the loop vertices inlined as literals, fully
-    inside whole-stage codegen (no Python). The crossing-parity filter
-    (exact_filter) remains the path for concave/holed geometry;
-    pip_join_convex is the caller.
-
-    Returns fn(polygon_id_col, px, py, pz) -> BooleanColumn.
-    """
-    edges = {}
-    for pid, poly in polygons.items():
-        assert len(poly.loops) == 1, "convex fast path requires single loops"
-        v = poly.loops[0].vertices
-        edges[pid] = [(v[k], v[(k + 1) % len(v)]) for k in range(len(v))]
-
-    def contains(pid_col, px, py, pz):
-        expr = None
-        for pid, es in edges.items():
-            inside = None
-            for a, b in es:
-                det = (
-                    F.lit(float(a[0])) * (F.lit(float(b[1])) * pz - F.lit(float(b[2])) * py)
-                    + F.lit(float(a[1])) * (F.lit(float(b[2])) * px - F.lit(float(b[0])) * pz)
-                    + F.lit(float(a[2])) * (F.lit(float(b[0])) * py - F.lit(float(b[1])) * px)
-                )
-                term = det > 0
-                inside = term if inside is None else (inside & term)
-            branch = (pid_col == pid) & inside
-            expr = branch if expr is None else (expr | branch)
-        return expr
-
-    return contains
-
-
-def pip_join_convex(
-    spark,
-    points,
-    polygons: dict,
-    point_id: str = "id",
-    lat: str = "lat",
-    lng: str = "lng",
-    max_cells: int = 8,
-    leaf_col: str | None = None,
-):
-    """pip_join variant with ZERO Python stages: covering broadcast hash
-    join + interior fast-accept + JVM convex det filter. Exactly equal to
-    pip_join for convex CCW polygons (both reduce to the same halfspace
-    membership; divergence would need a point within ~1 ulp of an edge)."""
-    from ..functions import encode_cols
-
-    base = points.select(
-        F.col(point_id).alias("point_id"),
-        F.col(lat).alias("lat"),
-        F.col(lng).alias("lng"),
-        *([F.col(leaf_col).alias("leaf")] if leaf_col else []),
-    )
-    if leaf_col is None:
-        # staged encoder (with_cell_id), NOT the monolithic cell_id_col: the
-        # single-expression form duplicates the projection tree ~2^8 times
-        # through the chained Hilbert steps, which can overflow the codegen
-        # stack on a hot session and is ~10x slower to evaluate.
-        base = encode_cols.with_cell_id(base, "lat", "lng", out="leaf")
-    x, y, z = encode_cols.xyz_cols(F.col("lat"), F.col("lng"))
-    pts = base.select(
-        "point_id", x.alias("_px"), y.alias("_py"), z.alias("_pz"), "leaf"
-    )
-    cand = candidate_join(spark, pts, covering_rows(polygons, max_cells=max_cells))
-    convex = make_convex_pip_filter(polygons)
-    hits = cand.where(
-        F.col("is_interior")
-        | convex(F.col("polygon_id"), F.col("_px"), F.col("_py"), F.col("_pz"))
-    )
-    return hits.select("point_id", "polygon_id")

@@ -1,9 +1,9 @@
 """Similarity search over embedding columns.
 
 Brute-force cosine top-k is the exact baseline: broadcast the (small) query
-side, compute dot products JVM-side via ``aggregate(zip_with(...))`` —
-sequential summation order, so a SQL oracle summing in index order matches
-bit-for-bit — and take top-k per query with a window.
+side, compute cosines in one Arrow kernel (``seq_cosine_udf``) that sums
+in dimension order, so a SQL oracle summing in index order matches
+bit-for-bit, and take top-k per query with a window.
 
 The scale path is hyperplane-LSH bucketing: deterministic integer-derived
 hyperplanes, sign-bit bucket per plane, equi-join on bucket. At 100 TB the
@@ -22,31 +22,12 @@ def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def dot(a, b) -> Column:
-    """Sequential-order dot product of two array<float/double> columns."""
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm2(a) -> Column:
-    return dot(a, a)
-
-
-def cosine(a, b) -> Column:
-    return dot(a, b) / F.sqrt(norm2(a) * norm2(b))
-
-
 def _vector_groups(cols: tuple, width: int | None = None):
     """Yield (row mask, stacked 2-D arrays) per group of rows whose vectors
     share one length; ``width`` keeps rows with at least that many elements
     and stacks their first ``width``. Rows with a NULL vector, vectors of
     different lengths or fewer than ``width`` elements fall in no group,
-    and the kernels return NULL for them: zip_with in the Column forms
-    pads the shorter array with NULLs (lsh_bucket's element_at past the
-    end is NULL with ANSI mode off and raises with it on)."""
+    and the kernels return NULL for them."""
     lens = np.array([[-1 if v is None else len(v) for v in c] for c in cols])
     if width is None:
         key = np.where((lens == lens[0]).all(axis=0), lens[0], -1)
@@ -61,15 +42,12 @@ _seq_cosine_udf_cache: list = []
 
 
 def seq_cosine_udf():
-    """Arrow-vectorized twin of ``cosine(a, b)`` — bit-identical by
-    construction: the numpy accumulation walks dimensions in order with one
-    vector op per dimension, so every row performs exactly the Column
-    aggregate's FP sequence (product a_d*b_d, then running add; norms
-    likewise; final dot/sqrt(na*nb)). The Column form interprets ~3*dim
-    lambda steps PER ROW inside aggregate()/zip_with() (no codegen for
-    higher-order functions) — measured ~10x slower than this batch kernel
-    on 64-dim candidate refinement. Lazily constructed: pandas_udf
-    registration needs an active session."""
+    """Cosine of two array<double> columns, as an Arrow kernel that
+    walks dimensions in order with one vector op per dimension, so every
+    row performs exactly the SQL oracle's in-order FP sequence (product
+    a_d*b_d, then running add; norms likewise; final dot/sqrt(na*nb)).
+    NULL, ragged or mismatched rows give NULL. Lazily constructed:
+    pandas_udf registration needs an active session."""
     if not _seq_cosine_udf_cache:
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import DoubleType
@@ -82,7 +60,7 @@ def seq_cosine_udf():
                 d_ = np.zeros(len(A), dtype=np.float64)
                 na = np.zeros(len(A), dtype=np.float64)
                 nb = np.zeros(len(A), dtype=np.float64)
-                for d in range(A.shape[1]):  # dimension order == SQL aggregate
+                for d in range(A.shape[1]):  # dimension order == the SQL fold
                     d_ += A[:, d] * B[:, d]
                     na += A[:, d] * A[:, d]
                     nb += B[:, d] * B[:, d]
@@ -97,9 +75,10 @@ _seq_qdot_udf_cache: list = []
 
 
 def seq_quantized_dot_udf():
-    """Arrow-vectorized twin of ``quantized_dot`` (exact BIGINT inner
-    product — integer adds are associative, so any order is bit-identical;
-    components |q| <= ~2^20 keep 64-dim sums far below 2^63)."""
+    """Exact BIGINT inner product of two quantized (array<bigint>)
+    columns — integer adds are associative, so any order is bit-identical;
+    components |q| <= ~2^20 keep 64-dim sums far below 2^63. NULL or
+    mismatched rows give NULL."""
     if not _seq_qdot_udf_cache:
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import LongType
@@ -148,36 +127,18 @@ def hyperplane_weight(p: int, d: int) -> float:
     return ((p * 37 + d * 11) % 21 - 10) / 10.0
 
 
-def lsh_bucket(vec, n_planes: int = 8, dim: int = 64) -> Column:
-    """Sign-bit bucket id over ``n_planes`` deterministic hyperplanes."""
-    def _proj_lambda(p):
-        def fn(acc, d):
-            return acc + F.element_at(_c(vec), (d + 1).cast("int")).cast(
-                "double"
-            ) * ((d * 11 + F.lit(p * 37)) % 21 - 10) / 10.0
-
-        return fn
-
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        d_idx = F.sequence(F.lit(0), F.lit(dim - 1))
-        proj = F.aggregate(d_idx, F.lit(0.0), _proj_lambda(p))
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0))
-    return bucket
-
-
 _lsh_bucket_udf_cache: dict = {}
 
 
 def lsh_bucket_udf(n_planes: int = 8, dim: int = 64):
-    """Arrow-vectorized twin of ``lsh_bucket`` — bit-identical: each term
+    """Sign-bit bucket id over ``n_planes`` deterministic hyperplanes, read
+    from the first ``dim`` elements of an array<double> column. Each term
     is computed as (elem * integer_weight) / 10.0 and accumulated in
-    dimension order, exactly the Column lambda's FP sequence (note the
+    dimension order, exactly the SQL oracle's FP sequence (note the
     association: product with the INTEGER weight first, then the /10.0 —
     NOT elem * (weight/10)). Only the projection's SIGN feeds the bucket,
-    but replicating the arithmetic makes equality unconditional. The
-    Column form interprets n_planes*dim lambda steps per row; this runs
-    one numpy pass per batch."""
+    but replicating the arithmetic makes equality unconditional. NULL rows
+    and rows shorter than ``dim`` give NULL."""
     key = (n_planes, dim)
     if key not in _lsh_bucket_udf_cache:
         from pyspark.sql.functions import pandas_udf
@@ -192,7 +153,7 @@ def lsh_bucket_udf(n_planes: int = 8, dim: int = 64):
                 bucket = np.zeros(len(E), dtype=np.int64)
                 for p in range(n_planes):
                     acc = np.zeros(len(E), dtype=np.float64)
-                    for d in range(dim):  # dimension order == the Column fold
+                    for d in range(dim):  # dimension order == the SQL fold
                         w = (d * 11 + p * 37) % 21 - 10
                         acc += (E[:, d] * w) / 10.0
                     bucket |= (acc >= 0).astype(np.int64) << p
@@ -210,8 +171,8 @@ def make_band_keys_udf(n_tables: int, planes_per_table: int, dim: int):
     Each table t hashes the vector with planes p = t*P..t*P+P-1
     (hyperplane_weight) and packs the sign bits; key = (t << P) | bits.
     The per-plane projection accumulates STRICTLY in dimension order so the
-    result is bit-identical to a sequential SQL list_reduce / Column
-    aggregate — band keys must match the oracle exactly."""
+    result is bit-identical to a sequential SQL list_reduce — band keys
+    must match the oracle exactly."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
@@ -322,20 +283,6 @@ def quantized_vec(vec) -> Column:
     )
 
 
-def quantized_dot(a, b) -> Column:
-    """Exact BIGINT inner product of two quantized (array<bigint>) columns.
-
-    Integer addition is associative, so unlike the float dots above there
-    is no sequential-order caveat — any engine, any aggregation order,
-    identical result. Components are |q| <= ~2^20, so a 64-dim product sum
-    stays far below 2^63."""
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def quantized_topk(
     index: DataFrame,
     queries: DataFrame,
@@ -434,7 +381,7 @@ def _collect_centroid_matrix(centroids: DataFrame):
 
 def _seq_dots(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     """(n, K) dot products accumulated STRICTLY in dimension order —
-    bit-identical to the SQL list_reduce / Column aggregate form (never
+    bit-identical to the SQL list_reduce form (never
     np.dot, whose pairwise/SIMD order differs)."""
     n, dim = X.shape
     out = np.zeros((n, C.shape[0]), dtype=np.float64)
@@ -583,7 +530,7 @@ def ivf_topk(
     3. each query probes its ``nprobe`` nearest centroids (same Arrow
        form, array output exploded);
     4. candidates = equi-join on list id (bucket join, never all-pairs
-       at scale), refined by exact JVM-side cosine + per-query top-k
+       at scale), refined by the exact Arrow cosine + per-query top-k
        window.
 
     Dot products everywhere accumulate in dimension order, so a SQL

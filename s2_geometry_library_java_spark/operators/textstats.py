@@ -1,6 +1,7 @@
-"""Text-analysis operators: language ID, quality scoring, token counting,
-document fingerprinting. Pure Column expressions (JVM, codegen-friendly);
-integer outputs so DuckDB oracles match bit-for-bit.
+"""Text-analysis operators: language ID, quality scoring, token counting
+(pure Column expressions, JVM, codegen-friendly) and document
+fingerprinting (one Arrow kernel); integer outputs so DuckDB oracles match
+bit-for-bit.
 """
 
 from __future__ import annotations
@@ -82,37 +83,18 @@ def quality_score(text) -> Column:
     return (len_term + punct_term + stop_term).alias("quality")
 
 
-def fingerprint64(text, modulus: int = 2147483647, base: int = 31) -> Column:
-    """Polynomial rolling hash over character codes (mod 2^31-1).
-
-    acc = (acc*31 + code(c)) mod M, left-to-right — a deterministic
-    document fingerprint computable by both Spark ``aggregate`` and the
-    DuckDB ``list_reduce`` oracle.
-    """
-    t = _c(text)
-    idx = F.sequence(F.lit(1), F.length(t))
-    agg = F.aggregate(
-        idx,
-        F.lit(0).cast("long"),
-        lambda acc, i: (acc * base + F.ascii(F.substring(t, i, 1))) % modulus,
-    )
-    # sequence(1, 0) would count DOWN in Spark; guard the empty string.
-    return F.when(F.length(t) == 0, F.lit(0).cast("long")).otherwise(agg)
-
-
 _fp64_udf_cache: list = []
 
 
 def fingerprint64_udf():
-    """Arrow-vectorized twin of ``fingerprint64`` — bit-identical by
-    construction: the recurrence acc = (acc*31 + code) mod (2^31-1) is
-    pure INTEGER arithmetic, replayed here position-by-position with one
-    vector op per character position (int64 never overflows: acc < 2^31,
-    acc*31 + 127 < 2^36). The Column form interprets one lambda step +
-    substring call PER CHARACTER per row. ASCII batches use a fixed-width
-    byte matrix; any non-ASCII row falls back to an exact per-char ord()
-    loop (Spark's ascii() returns the codepoint of the first character,
-    which is ord())."""
+    """Polynomial rolling hash of a text column over character codes:
+    acc = (acc*31 + code(c)) mod (2^31-1), left to right — a deterministic
+    document fingerprint the DuckDB ``list_reduce`` oracle computes too.
+    Pure INTEGER arithmetic, replayed position by position with one vector
+    op per character position (int64 never overflows: acc < 2^31,
+    acc*31 + 127 < 2^36). ASCII batches use a fixed-width byte matrix; any
+    non-ASCII row falls back to an exact per-char ord() loop (the code of
+    a character is its codepoint). NULL text gives NULL, "" gives 0."""
     if not _fp64_udf_cache:
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import LongType
@@ -135,7 +117,7 @@ def fingerprint64_udf():
                     if e:
                         buf[r, : len(e)] = np.frombuffer(e, dtype=np.uint8)
                 acc = np.zeros(len(vals), dtype=np.int64)
-                for i in range(width):  # char order == the Column fold
+                for i in range(width):  # char order == the SQL fold
                     live = lens > i
                     acc[live] = (acc[live] * BASE + buf[live, i]) % M
                 out = acc
@@ -145,7 +127,7 @@ def fingerprint64_udf():
                     for c in t:
                         a = (a * BASE + ord(c)) % M
                     out[r] = a
-            # NULL text hashes to NULL, as in the Column form
+            # NULL text hashes to NULL
             return pd.Series(pd.arrays.IntegerArray(out, null))
 
         _fp64_udf_cache.append(fp64)

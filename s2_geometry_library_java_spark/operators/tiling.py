@@ -18,26 +18,12 @@ from ..functions import udfs
 
 
 def tile_points(
-    df: DataFrame,
-    lat: str = "lat",
-    lng: str = "lng",
-    level: int = 12,
-    engine: str = "arrow",
+    df: DataFrame, lat: str = "lat", lng: str = "lng", level: int = 12
 ) -> DataFrame:
-    """Adds ``tile`` (cell id at ``level``) and ``leaf`` columns.
-
-    engine="arrow": the numpy kernel in a pandas UDF (reference path).
-    engine="jvm": the pure-Column encoder (bit-identical, zero Python —
-    preferred for the hot path; see functions/encode_cols.py).
-    """
-    if engine == "jvm":
-        from ..functions import encode_cols
-
-        df = encode_cols.with_cell_id(df, lat, lng, out="leaf")
-    else:
-        leaf = udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30)
-        df = df.withColumn("leaf", leaf)
-    return df.withColumn("tile", cc.parent("leaf", level))
+    """Adds ``leaf`` (the leaf cell id, from the Arrow encoder; NULL where
+    lat or lng is NULL) and ``tile`` (its ancestor at ``level``)."""
+    leaf = udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30)
+    return df.withColumn("leaf", leaf).withColumn("tile", cc.parent("leaf", level))
 
 
 def tile_counts(

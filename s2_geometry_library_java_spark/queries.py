@@ -219,20 +219,11 @@ def q_composite_region_oracle() -> str:
 # ===========================================================================
 
 def q_cellid_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6: leaf cell ids from integer-derived (face,i,j) over orders —
-    via the PURE-JVM Column encoder (functions/encode_cols): the Hilbert
-    LUT walk is integer arithmetic inside whole-stage codegen, bit-equal
-    to the numpy kernel (test_encode_cols pins it), zero Python in the
-    plan."""
-    from .functions import encode_cols as ec
-
+    """A6: leaf cell ids from integer-derived (face,i,j) over orders,
+    through the Arrow encoder (udfs.cell_id_from_face_ij); the oracle is
+    the SQL Hilbert encoder, so the gate pins the kernel bit for bit."""
     pts = _points_from_keys(tables.load_table(spark, sf_dir, "orders"), "o_orderkey")
-    return pts.select(
-        "k",
-        ec.cell_id_from_face_ij_cols(
-            F.col("face"), F.col("i"), F.col("j")
-        ).alias("cell_id"),
-    )
+    return pts.select("k", udfs.cell_id_from_face_ij("face", "i", "j").alias("cell_id"))
 
 
 def q_cellid_encode_oracle() -> str:
@@ -499,16 +490,6 @@ def q_pip_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the bench headline; handles concave/holed polygons)."""
     pts = _points_from_keys(tables.load_table(spark, sf_dir, "orders"), "o_orderkey")
     return pip.pip_join(spark, pts, pip_polygons(), point_id="k").withColumnsRenamed(
-        {"point_id": "k"}
-    )
-
-
-def q_pip_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3 zero-Python path: covering hash join + JVM convex det filter
-    (same oracle; preferred when the Python worker boundary is the
-    bottleneck, e.g. low-core executors)."""
-    pts = _points_from_keys(tables.load_table(spark, sf_dir, "orders"), "o_orderkey")
-    return pip.pip_join_convex(spark, pts, pip_polygons(), point_id="k").withColumnsRenamed(
         {"point_id": "k"}
     )
 
@@ -2698,7 +2679,7 @@ def q_ann_ivf_oracle(
             f" * {dot.format(a=b, b=b)})"
         )
 
-    # mirror of similarity.lsh_bucket(embedding, init_planes, dim)
+    # mirror of similarity.lsh_bucket_udf(init_planes, dim)
     planes = []
     for p in range(init_planes):
         proj = (
@@ -2857,7 +2838,7 @@ def q_ann_lsh_pairs_oracle() -> str:
 def q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables.load_table(spark, sf_dir, "embeddings")
     return emb.select(
-        F.col("vec_id"), similarity.lsh_bucket("embedding", 8, 64).alias("bucket")
+        F.col("vec_id"), similarity.lsh_bucket_udf(8, 64)("embedding").alias("bucket")
     )
 
 
@@ -3130,10 +3111,11 @@ def q_region_contains_oracle() -> str:
 
 
 def q_pip_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3 merged: the zero-Python convex-det path and the indexed
-    (executor-side covering, E2) path, tagged — both must reproduce the
-    same membership as the pip_contains oracle."""
-    conv = q_pip_convex(spark, sf_dir).select(
+    """F3 merged: the pip_join path and the indexed (executor-side
+    covering, E2) path, tagged — both must reproduce the same membership
+    as the pip_contains oracle. The pip_join tier is tagged 'convex'
+    because the oracle SQL text, which names the tag, is frozen."""
+    conv = q_pip_contains(spark, sf_dir).select(
         F.lit("convex").alias("variant"), "k", "polygon_id"
     )
     idx = q_pip_indexed(spark, sf_dir).select(
@@ -3478,8 +3460,8 @@ def q_cell_index_contents(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-derived cells at levels 9-11 grouped 8-per-query, so one query
     unions several leaf ranges and the at-most-once visit guarantee is
     load-bearing. The oracle is the direct range-overlap semantics on the
-    SQL-encoded cell ids (nested-or-disjoint leaf ranges)."""
-    from .functions import encode_cols as ec
+    SQL-encoded cell ids (nested-or-disjoint leaf ranges); the leaf ids
+    come from the Arrow encoder (udfs.cell_id_from_face_ij)."""
     from .operators import cellindex
 
     cust = _points_from_keys(
@@ -3487,7 +3469,7 @@ def q_cell_index_contents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("k") < 2000)
     idx = cust.select(
         cc.parent(
-            ec.cell_id_from_face_ij_cols(F.col("face"), F.col("i"), F.col("j")),
+            udfs.cell_id_from_face_ij("face", "i", "j"),
             (F.col("k") % 5 + 8).cast("int"),
         ).alias("cell_id"),
         (F.col("k") % 37).alias("label"),
@@ -3498,7 +3480,7 @@ def q_cell_index_contents(spark: SparkSession, sf_dir: str) -> DataFrame:
     tgt = ords.select(
         ((F.col("k") - F.col("k") % 8) / 8).cast("long").alias("query_id"),
         cc.parent(
-            ec.cell_id_from_face_ij_cols(F.col("face"), F.col("i"), F.col("j")),
+            udfs.cell_id_from_face_ij("face", "i", "j"),
             (F.col("k") % 3 + 9).cast("int"),
         ).alias("target"),
     )

@@ -25,7 +25,6 @@ TEXTS = {
     ),
     "quad": "-10.2:-10.1, -10.2:-6.3, -6.1:-6.3, -6.1:-10.1",
 }
-CONVEX = ("big", "quad")
 
 
 def _polygons():
@@ -67,7 +66,7 @@ def _want(brute, pids):
 def test_every_pip_operator_equals_brute(spark, fixture):
     """pip_join, pip_join_indexed and batch geofence_hits all equal brute
     Polygon.contains_points, on candidates from interior and boundary
-    cells alike; pip_join_convex agrees on the convex polygons."""
+    cells alike."""
     pts, shapes, brute = fixture
     polys = _polygons()
     cand = pip.candidate_join(spark, pip.leaf_points(pts), pip.covering_rows(polys))
@@ -79,8 +78,6 @@ def test_every_pip_operator_equals_brute(spark, fixture):
     assert _pairs(shape_ops.pip_join_indexed(spark, pts, shapes)) == want
     events = pts.withColumn("event_time", F.timestamp_seconds("id"))
     assert _pairs(geofence.geofence_hits(spark, events, polys, point_id="id")) == want
-    convex = {pid: polys[pid] for pid in CONVEX}
-    assert _pairs(pip.pip_join_convex(spark, pts, convex)) == _want(brute, CONVEX)
 
 
 def _plan(df) -> str:

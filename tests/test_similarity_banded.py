@@ -1,6 +1,8 @@
 """Banded multi-table hyperplane LSH: recall on near-dup twins, bounded
 bucket fanout, and the skew guard."""
 
+import math
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -184,41 +186,70 @@ def test_ivf_recall_at_k_vs_brute(spark):
 
 
 # NULL, short and ragged vector rows: each Arrow kernel masks them to NULL
-# where its Column form gives NULL, and matches the Column form elsewhere.
-# One partition puts every row in one Arrow batch.
+# and matches a plain-Python spec of its SQL oracle elsewhere. One
+# partition puts every row in one Arrow batch.
+
+def _cosine_spec(a, b):
+    """In-order float loop; NULL for a NULL or mismatched pair."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    d = na = nb = 0.0
+    for x, y in zip(a, b):
+        d += x * y
+        na += x * x
+        nb += y * y
+    return d / math.sqrt(na * nb)
+
+
+def _quantized_dot_spec(a, b):
+    """Integer sum; NULL for a NULL or mismatched pair."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    return sum(x * y for x, y in zip(a, b))
+
+
+def _lsh_bucket_spec(v, n_planes, dim):
+    """The (elem * w) / 10.0 fold over the first ``dim`` elements, one
+    sign bit per plane; NULL for a NULL or short row."""
+    if v is None or len(v) < dim:
+        return None
+    bucket = 0
+    for p in range(n_planes):
+        acc = 0.0
+        for d in range(dim):
+            acc += (v[d] * ((d * 11 + p * 37) % 21 - 10)) / 10.0
+        if acc >= 0:
+            bucket |= 1 << p
+    return bucket
+
 
 def test_seq_cosine_udf_null_and_short_rows(spark):
     from s2_geometry_library_java_spark.operators import similarity as sim
 
-    df = spark.createDataFrame(
-        [
-            (1, [1.0, 2.0, 3.0], [3.0, 2.0, 1.0]),
-            (2, None, [1.0, 2.0, 3.0]),
-            (3, [1.0, 2.0], [1.0, 2.0, 3.0]),
-            (4, [1.0, 2.0], [2.0, 5.0]),
-        ],
-        "id int, a array<double>, b array<double>",
-    ).coalesce(1)
+    rows = [
+        (1, [1.0, 2.0, 3.0], [3.0, 2.0, 1.0]),
+        (2, None, [1.0, 2.0, 3.0]),
+        (3, [1.0, 2.0], [1.0, 2.0, 3.0]),
+        (4, [1.0, 2.0], [2.0, 5.0]),
+    ]
+    df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>").coalesce(1)
     got = {r["id"]: r["c"] for r in df.select("id", sim.seq_cosine_udf()("a", "b").alias("c")).collect()}
-    want = {r["id"]: r["c"] for r in df.select("id", sim.cosine("a", "b").alias("c")).collect()}
-    assert got == want
+    assert got == {i: _cosine_spec(a, b) for i, a, b in rows}
     assert got[2] is None and got[3] is None and got[4] is not None
 
 
 def test_seq_quantized_dot_udf_null_and_short_rows(spark):
     from s2_geometry_library_java_spark.operators import similarity as sim
 
-    df = spark.createDataFrame(
-        [
-            (1, [1, 2, 3], [3, 2, 1]),
-            (2, [1, 2, 3], None),
-            (3, [1, 2, 3], [4, 5]),
-            (4, [7, 8], [2, 5]),
-        ],
-        "id int, a array<bigint>, b array<bigint>",
-    ).coalesce(1)
+    rows = [
+        (1, [1, 2, 3], [3, 2, 1]),
+        (2, [1, 2, 3], None),
+        (3, [1, 2, 3], [4, 5]),
+        (4, [7, 8], [2, 5]),
+    ]
+    df = spark.createDataFrame(rows, "id int, a array<bigint>, b array<bigint>").coalesce(1)
     got = {r["id"]: r["d"] for r in df.select("id", sim.seq_quantized_dot_udf()("a", "b").alias("d")).collect()}
-    want = {r["id"]: r["d"] for r in df.select("id", sim.quantized_dot("a", "b").alias("d")).collect()}
+    want = {i: _quantized_dot_spec(a, b) for i, a, b in rows}
     assert got == want == {1: 10, 2: None, 3: None, 4: 54}
 
 
@@ -226,15 +257,12 @@ def test_lsh_bucket_udf_null_and_short_rows(spark):
     from s2_geometry_library_java_spark.operators import similarity as sim
 
     full = [0.5, -1.0, 2.0, -0.25]
-    df = spark.createDataFrame(
-        [(1, full), (2, None), (3, [0.5, -1.0]), (4, full + [9.0, -9.0])],
-        "id int, v array<double>",
-    ).coalesce(1)
+    rows = [(1, full), (2, None), (3, [0.5, -1.0]), (4, full + [9.0, -9.0])]
+    df = spark.createDataFrame(rows, "id int, v array<double>").coalesce(1)
     got = {
         r["id"]: r["b"]
         for r in df.select("id", sim.lsh_bucket_udf(3, 4)("v").alias("b")).collect()
     }
-    ok = df.where("id IN (1, 4)").select("id", sim.lsh_bucket("v", 3, 4).alias("b"))
-    want = {r["id"]: r["b"] for r in ok.collect()}
-    assert got == {**want, 2: None, 3: None}
-    assert want[1] == want[4]
+    assert got == {i: _lsh_bucket_spec(v, 3, 4) for i, v in rows}
+    assert got[2] is None and got[3] is None
+    assert got[1] == got[4] is not None

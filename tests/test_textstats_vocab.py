@@ -84,18 +84,26 @@ def test_tfidf_matches_duckdb_twin(spark, duck):
     assert spark_rows == duck_rows
 
 
+def _fingerprint_spec(text):
+    """The ord() recurrence acc = (acc*31 + code) mod (2^31-1); NULL for
+    NULL text."""
+    if text is None:
+        return None
+    acc = 0
+    for c in text:
+        acc = (acc * 31 + ord(c)) % 2147483647
+    return acc
+
+
 def test_fingerprint64_udf_null_text_is_null(spark):
-    """The Arrow fingerprint maps NULL text to NULL, as the Column form
-    does, and agrees with it on every other row (empty and non-ASCII
+    """The Arrow fingerprint maps NULL text to NULL and agrees with the
+    plain-Python recurrence on every other row (empty and non-ASCII
     included)."""
-    df = spark.createDataFrame(
-        [(1, "apple pie"), (2, None), (3, ""), (4, "café"), (5, None)],
-        "doc_id long, text string",
-    )
-    rows = df.select(
-        "doc_id",
-        textstats.fingerprint64_udf()("text").alias("udf"),
-        textstats.fingerprint64("text").alias("col"),
-    ).collect()
-    assert all(r["udf"] == r["col"] for r in rows), rows
-    assert sorted(r["doc_id"] for r in rows if r["udf"] is None) == [2, 5]
+    rows = [(1, "apple pie"), (2, None), (3, ""), (4, "café"), (5, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["udf"]
+        for r in df.select("doc_id", textstats.fingerprint64_udf()("text").alias("udf")).collect()
+    }
+    assert got == {i: _fingerprint_spec(t) for i, t in rows}
+    assert sorted(i for i, v in got.items() if v is None) == [2, 5]

@@ -32,7 +32,6 @@ QUERIES = [
     "cellid_encode",
     "tile_counts",
     "pip_contains",
-    "pip_convex",
     "pip_indexed",
     "knn_brute",
     "knn_cell",
@@ -99,7 +98,7 @@ def _session_and_registry():
 
     reg = q.all_queries()
     # Components of merged gates, dumped individually for plan review.
-    for extra in ("pip_convex", "pip_indexed", "pricing_summary", "nation_revenue"):
+    for extra in ("pip_indexed", "pricing_summary", "nation_revenue"):
         reg.setdefault(extra, getattr(q, f"q_{extra}"))
     return spark, reg
 

@@ -47,7 +47,7 @@ def synth_documents(spark, n_docs: int):
     return spark.range(n_docs).select(F.col("id").alias("doc_id"), text.alias("text"))
 
 
-def run_once(cpus: int, n_docs: int, engine: str = "jvm") -> dict:
+def run_once(cpus: int, n_docs: int) -> dict:
     from pyspark.sql import SparkSession, functions as F
 
     spark = (
@@ -81,9 +81,8 @@ def run_once(cpus: int, n_docs: int, engine: str = "jvm") -> dict:
     t0 = time.time()
     d = docsrc.with_spans(documents)
     spans = docsrc.geotagged_media_spans(d)
-    tiled = tiling.tile_points(spans, level=12, engine=engine)
-    pip_fn = pip.pip_join_convex if engine == "jvm" else pip.pip_join
-    hits = pip_fn(
+    tiled = tiling.tile_points(spans, level=12)
+    hits = pip.pip_join(
         spark,
         tiled.select(
             F.concat_ws("_", "doc_id", "offset").alias("span_key"), "lat", "lng", "leaf"
@@ -144,7 +143,6 @@ def run_once(cpus: int, n_docs: int, engine: str = "jvm") -> dict:
     return {
         "cpus": cpus,
         "n_docs": n_docs,
-        "engine": engine,
         "wall_sec": round(wall, 2),
         "docs_per_sec": round(n_docs / wall, 1),
         "out_rows": n_out,
@@ -159,20 +157,18 @@ def run_once(cpus: int, n_docs: int, engine: str = "jvm") -> dict:
 
 def main():
     if len(sys.argv) >= 2 and sys.argv[1] == "--once":
-        eng = sys.argv[4] if len(sys.argv) > 4 else "jvm"
-        print(json.dumps(run_once(int(sys.argv[2]), int(sys.argv[3]), eng)))
+        print(json.dumps(run_once(int(sys.argv[2]), int(sys.argv[3]))))
         return
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 6_000_000
     base = int(os.environ.get("SPARK_GRAFT_SCALE_BASE", "1"))
     trials = int(os.environ.get("SPARK_GRAFT_SCALE_TRIALS", "3"))
-    engine = os.environ.get("SPARK_GRAFT_SCALE_ENGINE", "arrow")
     # The sandbox host has noisy neighbors (identical runs vary 1.5-2x);
     # interleave trials across levels and keep the best per level.
     raw: dict[int, list[dict]] = {base: [], base * 4: []}
     for _ in range(trials):
         for cpus in (base, base * 4):
             out = subprocess.run(
-                [sys.executable, __file__, "--once", str(cpus), str(n_docs), engine],
+                [sys.executable, __file__, "--once", str(cpus), str(n_docs)],
                 capture_output=True,
                 text=True,
                 check=True,
