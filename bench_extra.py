@@ -46,6 +46,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     from s2_geometry_library_java_spark import queries as q
+    from s2_geometry_library_java_spark.plans import cache
 
     registry = q.all_queries()
     for extra in ("pip_indexed", "pricing_summary", "nation_revenue"):
@@ -62,11 +63,12 @@ def main():
         for _ in range(reps):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             t0 = time.time()
-            df = fn(spark, sf_dir)
-            if sink == "noop":
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                n = df.count()
+            with cache.scope():  # each run releases what it held
+                df = fn(spark, sf_dir)
+                if sink == "noop":
+                    df.write.format("noop").mode("overwrite").save()
+                else:
+                    n = df.count()
             samples.append(time.time() - t0)
             spark.sparkContext.setJobDescription(None)
         print(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import columns as cc
 from .shapes import _parse_polygon, coverings_df
 from ..localdf import local_df
+from ..plans import cache
 
 
 def _levels(cov: DataFrame) -> list[int]:
@@ -102,12 +103,14 @@ def candidate_pairs(
         return local_df(spark, 
             pairs or [], "a_id string, b_id string"
         ).coalesce(max(1, min(len(pairs), 32)))
-    cov_a = coverings_df(shapes_a, max_cells=max_cells).select(
+    # held: _levels' collect and both ancestor joins read each covering, and
+    # without it the executor coverer runs once per reader
+    cov_a = cache.hold(coverings_df(shapes_a, max_cells=max_cells).select(
         F.col("shape_id").alias("a_id"), "cell_id"
-    ).persist()
-    cov_b = coverings_df(shapes_b, max_cells=max_cells).select(
+    ))
+    cov_b = cache.hold(coverings_df(shapes_b, max_cells=max_cells).select(
         F.col("shape_id").alias("b_id"), "cell_id"
-    ).persist()
+    ))
     la, lb = _levels(cov_a), _levels(cov_b)
 
     def ancestors(cov, levels, id_col):

@@ -34,6 +34,7 @@ from . import ringsearch
 from ..functions import columns as cc
 from ..kernel import edges as ek
 from ..kernel import sphere
+from ..plans import cache
 
 _EPS = float(np.finfo(np.float64).eps)
 
@@ -263,11 +264,10 @@ def _closest_edges_impl(
     edges per query. ``index`` is shape_index_df output built with
     min_level >= ``level`` so parent(cell_id, level) is a valid key.
 
-    The index is persisted on the ring routes: its mapInPandas build then
-    runs once for every ring round and the exact pass.
+    Off the local and tiny-index routes the index is held (plans/cache.py):
+    its mapInPandas build then runs once for every ring round, the covering
+    seed and the exact pass. The caller's ``cache.scope()`` releases it.
     """
-    from pyspark import StorageLevel
-
     n_edges = index.count()  # every routing decision wants it
     if covering_seed == "auto":
         covering_seed = n_edges >= AUTO_COVERING_SEED_EDGES
@@ -280,7 +280,7 @@ def _closest_edges_impl(
             index.select(*_IDS, *_ENDPOINTS), local, k, _IDS, _edge_chord2_np
         )
     if not small:
-        index = index.persist(StorageLevel.MEMORY_AND_DISK)
+        index = cache.hold(index)
     qpts = ringsearch.points(queries, query_id, "query_id", lat, lng, "q")
     far = None
     if covering_seed:
@@ -387,7 +387,9 @@ def covering_pruned_edges(
     cover = index.select(
         cc.parent("cell_id", cover_level).alias("ccell")
     ).distinct()
-    bounds = (
+    # held: the threshold, the excluded-cell bound and the candidates all
+    # read the per-cell bounds, two pandas UDF passes over query x cover
+    bounds = cache.hold(
         far_queries.select("query_id", "qx", "qy", "qz")
         .crossJoin(F.broadcast(cover))
         .select(
@@ -395,7 +397,7 @@ def covering_pruned_edges(
             _cell_udf("min")("ccell", "qx", "qy", "qz").alias("minb"),
             _cell_udf("max")("ccell", "qx", "qy", "qz").alias("maxb"),
         )
-    ).persist()
+    )
     thr = bounds.groupBy("query_id").agg(F.min("maxb").alias("thr"))
     bounds = bounds.join(thr, "query_id")
     excluded_min = (

@@ -128,15 +128,10 @@ def lsh_candidate_pairs(
     Bands become equi-join keys — the scalable path: the self-join is a
     shuffle on band values, never a cross join.
     """
-    from pyspark import StorageLevel
-
-    # Persisted: the self-join's two sides are separate subtrees (the
-    # planner broadcasts one side, so exchange reuse never applies) and
-    # would each recompute the full tokenize -> shingle -> 8x md5 minhash
-    # pipeline. The cached table is the skinny (id, band) projection.
-    bands = band_table(df, id_col, text_col, n_hashes, band_rows, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # Not held: both self-join sides read the skinny (id, band) table, yet
+    # a cold A/B (sf0.01 and sf0.1 lsh_pairs gate) ran no slower without
+    # the cache.
+    bands = band_table(df, id_col, text_col, n_hashes, band_rows, shingle_n)
     left = bands.alias("l")
     right = bands.alias("r")
     return (
@@ -275,19 +270,13 @@ def repeated_window_spans(
     splits) runs inside an (id)-partitioned window — the document is the
     natural partition unit, no cross-doc state, one sort per doc.
     """
-    from pyspark import StorageLevel
-
     words = df.select(_c(id_col).alias("id"), normalized_words(text_col).alias("w"))
-    # Persisted: the duplicated-hash aggregate AND the flagged-window join
-    # both read the window table; without the cache the tokenize + per-window
-    # md5 pass (the dominant cost) runs twice — the two consumers shuffle
-    # differently (partial-agg vs raw rows), so exchange reuse cannot dedup
-    # them. The cached rows are the skinny (id, pos, h) projection only.
+    # Not held: the duplicated-hash aggregate and the flagged-window join
+    # both read the window table, yet a cold A/B (sf0.01 and sf0.1
+    # dedup_exact gate) ran no slower without the cache.
     wins = words.select(
         "id", F.posexplode(shingles_from_words("w", w)).alias("pos", "sh")
-    ).select("id", "pos", hash32("sh", 77).alias("h")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    ).select("id", "pos", hash32("sh", 77).alias("h"))
     if min_docs == 2:
         # "at least 2 distinct docs" == "min(id) != max(id)" — min/max are
         # single-phase aggregations with map-side combine, whereas

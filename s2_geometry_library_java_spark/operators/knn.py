@@ -194,8 +194,6 @@ def knn_cell_join(
     SAME round); else the index count under a uniform prior. The route
     (module docstring) follows from the seed levels and |queries| x |I|.
     """
-    from pyspark import StorageLevel
-
     from ..functions import columns as cc
     from ..localdf import local_df
 
@@ -236,9 +234,9 @@ def knn_cell_join(
     if local is not None:
         res = _local(index, local, k, index_id, lat, lng)
         return _capped(res, effective_max_chord2(max_chord2, distance_cap))
+    # not held: a cold A/B (100k points x 2,000 queries) found the rounds'
+    # re-run of this Arrow pass no slower than caching it
     idx = ringsearch.points(index, index_id, "neighbor_id", lat, lng, "i")
-    if rings:  # every round and the remnant's exact pass read the points
-        idx = idx.persist(StorageLevel.MEMORY_AND_DISK)
     res = ringsearch.search(
         qs, k, ["neighbor_id"], _chord2(),
         items=idx.select("neighbor_id", "ix", "iy", "iz"),

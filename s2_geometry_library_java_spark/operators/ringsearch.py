@@ -36,7 +36,11 @@ Routes, in this order (the caller's ring levels, then ``local_queries``):
 no ring level runs ``search``'s exact pass alone; |queries| x |items| <=
 LOCAL_PAIRS_MAX ships the queries to ``local_topk``, ONE mapInArrow over
 the items whose partitions keep their local top-k, merged by one Exchange
-(no bound, no rounds, no cache); anything larger takes the ring rounds.
+(no bound, no rounds, nothing held); anything larger takes the ring rounds.
+
+Of these routes only the ring rounds hold cached intermediates
+(plans/cache.py): the query input and each round's top-k. Run the action
+inside ``cache.scope()`` and they are released when it ends.
 """
 
 from __future__ import annotations
@@ -46,7 +50,6 @@ from typing import Callable
 
 import numpy as np
 import pyarrow as pa
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import DoubleType, StructField, StructType
@@ -56,6 +59,7 @@ from ..functions import udfs
 from ..kernel import cellid as s2
 from ..kernel import sphere
 from ..localdf import local_df
+from ..plans import cache
 
 #: levels an unfinished query's ring coarsens by before its next round
 FALLBACK_LEVEL_STEP = 3
@@ -103,9 +107,9 @@ def split(cand: DataFrame, queries: DataFrame, k: int,
           ids: list[str]) -> tuple[DataFrame, DataFrame]:
     """(done, rest): the top-k rows of the queries whose k-th chord2 is
     below their ``bound`` column, and the ``queries`` rows of all others."""
-    # persisted: the verdict and the done rows both read the top-k;
-    # without the cache the candidate join runs once per consumer
-    top = topk(cand, k, ids).persist(StorageLevel.MEMORY_AND_DISK)
+    # held: the verdict and the done rows both read the top-k, and without
+    # it the candidate join runs once per consumer
+    top = cache.hold(topk(cand, k, ids))
     verdict = top.groupBy("query_id").agg(
         F.count("*").alias("found"),
         F.max("chord2").alias("kth"),
@@ -151,9 +155,9 @@ def search(
         if not levels:
             break
         if r == 0:
-            # every round's cached top-k plan and the exact pass start from
-            # the queries: evaluate them (point prep, seed levels) once
-            remaining = remaining.persist(StorageLevel.MEMORY_AND_DISK)
+            # held: every round and the exact pass start from the queries,
+            # so point prep and seed levels run once
+            remaining = cache.hold(remaining)
         lvl_df = F.broadcast(local_df(spark, [(L,) for L in levels], "lvl int"))
         probe = remaining.where(F.col("lvl") > 0).select(
             "query_id", "qx", "qy", "qz", "lvl",

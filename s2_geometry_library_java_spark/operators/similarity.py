@@ -17,6 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, Window
 
+from ..plans import cache
+
 
 def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
@@ -215,18 +217,16 @@ def lsh_banded_pairs(
     than max_bucket from the join (a hot bucket means the planes failed to
     split a dense cluster; callers refine those separately), bounding the
     worst-case fanout to max_bucket^2 per band."""
-    from pyspark import StorageLevel
-
     bk = make_band_keys_udf(n_tables, planes_per_table, dim)
-    # Persisted: the bucket-count aggregate and BOTH self-join sides read
-    # this table; without the cache the Arrow band-key pass over the full
-    # embedding set runs three times (the planner broadcasts one join side,
-    # so exchange reuse never applies across the subtrees).
-    b = index.select(
+    # Held: the bucket-count aggregate and BOTH self-join sides read this
+    # table; without it the Arrow band-key pass over the full embedding set
+    # runs three times (the planner broadcasts one join side, so exchange
+    # reuse never applies across the subtrees).
+    b = cache.hold(index.select(
         _c(id_col).alias("id"),
         _c(vec_col).alias("v"),
         F.explode(bk(_c(vec_col))).alias("band"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     counts = b.groupBy("band").agg(F.count("*").alias("n"))
     kept = b.join(counts.where(F.col("n") <= max_bucket), "band")
     # Dedup on the SKINNY (a, b) id pair FIRST, then re-attach the vectors
@@ -251,9 +251,9 @@ def lsh_banded_pairs(
         # Join-strategy choice (guide §3.1): when the vector table fits,
         # broadcast it so the (potentially huge) pair table is never
         # shuffled for the attach — measured 2x on a duplicate-dense 10x
-        # scale-up (3.9M pairs). The count reads the already-persisted band
-        # table. Above the cap the planner keeps the shuffle join (at true
-        # scale the index cannot broadcast).
+        # scale-up (3.9M pairs). The count reads the held band table. Above
+        # the cap the planner keeps the shuffle join (at true scale the
+        # index cannot broadcast).
         if b.count() // max(1, n_tables) <= BROADCAST_VECTORS_MAX_ROWS:
             va, vb = F.broadcast(va), F.broadcast(vb)
         pairs = (
@@ -468,37 +468,39 @@ def ivf_train_centroids(
     (centroid_id, pos) shuffle with map-side combine. K and iters are
     constants; nothing is ever quadratic in N.
     """
-    pts = index.select(
-        _c(id_col).alias("id"),
-        _c(vec_col).alias("v"),
-        quantized_vec(vec_col).alias("q"),
-        lsh_bucket_udf(init_planes, dim)(_c(vec_col)).alias("bucket"),
-    ).persist()
-    wb = Window.orderBy(F.desc("n"), F.asc("bucket"))
-    top = (
-        pts.groupBy("bucket")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("bucket"))
-        .limit(n_centroids)
-        .select("bucket", (F.row_number().over(wb) - 1).alias("centroid_id"))
-    )
-    members = pts.join(F.broadcast(top), "bucket").select("centroid_id", "q")
-    cents = _sum_vectors(members, dim)
-    for _ in range(iters):
-        ids, C = _collect_centroid_matrix(cents)
-        assign = make_ivf_assign_udf(ids, C)
-        members = pts.select(assign(F.col("v")).alias("centroid_id"), "q")
-        cents = _sum_vectors(members, dim)
-    # Collect the (tiny, K-row) centroid table and re-ship it as a local
-    # relation: one job instead of persist + count (and the caller's own
-    # _collect_centroid_matrix then reads driver-local rows for free).
     from ..localdf import local_df
 
-    rows = [
-        (int(r["centroid_id"]), [float(v) for v in r["cv"]])
-        for r in cents.collect()
-    ]
-    pts.unpersist()
+    # The held point table is read only by the collects below (the seeding
+    # and each Lloyd step), so it is released before the centroids return.
+    with cache.scope():
+        pts = cache.hold(index.select(
+            _c(id_col).alias("id"),
+            _c(vec_col).alias("v"),
+            quantized_vec(vec_col).alias("q"),
+            lsh_bucket_udf(init_planes, dim)(_c(vec_col)).alias("bucket"),
+        ))
+        wb = Window.orderBy(F.desc("n"), F.asc("bucket"))
+        top = (
+            pts.groupBy("bucket")
+            .agg(F.count("*").alias("n"))
+            .orderBy(F.desc("n"), F.asc("bucket"))
+            .limit(n_centroids)
+            .select("bucket", (F.row_number().over(wb) - 1).alias("centroid_id"))
+        )
+        members = pts.join(F.broadcast(top), "bucket").select("centroid_id", "q")
+        cents = _sum_vectors(members, dim)
+        for _ in range(iters):
+            ids, C = _collect_centroid_matrix(cents)
+            assign = make_ivf_assign_udf(ids, C)
+            members = pts.select(assign(F.col("v")).alias("centroid_id"), "q")
+            cents = _sum_vectors(members, dim)
+        # Collect the (tiny, K-row) centroid table and re-ship it as a local
+        # relation: one job instead of persist + count (and the caller's own
+        # _collect_centroid_matrix then reads driver-local rows for free).
+        rows = [
+            (int(r["centroid_id"]), [float(v) for v in r["cv"]])
+            for r in cents.collect()
+        ]
     return local_df(
         index.sparkSession, rows, "centroid_id long, cv array<double>"
     )

@@ -2214,14 +2214,9 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tok_end").cast("long").alias("y"),
         F.col("n_windows").cast("long").alias("z"),
     )
-    # ONE persisted (id, word, tf) table feeds both the vocab and tfidf
-    # tiers (and tfidf's broadcast doc-frequency side): without it the
-    # corpus tokenize + explode pass ran once per consumer subtree.
-    from pyspark import StorageLevel
-
-    tf = textstats.term_frequencies(d, "doc_id", "text").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # ONE (id, word, tf) table feeds both the vocab and tfidf tiers; not
+    # held: a cold A/B of this gate ran no slower without the cache
+    tf = textstats.term_frequencies(d, "doc_id", "text")
     vocab = textstats.vocab_topk_from_tf(tf, k=25).select(
         F.lit("vocab").alias("kind"),
         F.col("rank").cast("long").alias("id"),

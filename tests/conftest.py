@@ -45,15 +45,6 @@ def count_jobs(spark):
     return run
 
 
-@pytest.fixture
-def release_cache(spark):
-    """Clears the session's cache after the test. The ring rounds persist
-    their inputs and no caller unpersists them; left cached, their plans
-    hold driver heap for every later test in the session."""
-    yield
-    spark.catalog.clearCache()
-
-
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -444,12 +444,13 @@ def test_include_interiors_furthest_antipode(spark):
     assert rows[1]["edge_id"] >= 0 and rows[1]["chord2"] < 4.0
 
 
-def test_max_error_early_exit(spark, count_jobs, monkeypatch, release_cache):
+def test_max_error_early_exit(spark, count_jobs, monkeypatch):
     """Options.maxError (S2BestEdgesQueryBase.java:467-484): relaxing the
     ring completeness bound by maxError lets borderline queries finish in
     the first ring round — fewer Spark jobs — while the returned distance
     stays within maxError of the exact answer."""
     from s2_geometry_library_java_spark.kernel import sphere
+    from s2_geometry_library_java_spark.plans import cache
 
     lvl = 8
     w = float(sphere.metric_value(sphere.MIN_WIDTH_DERIV, lvl))
@@ -469,16 +470,21 @@ def test_max_error_early_exit(spark, count_jobs, monkeypatch, release_cache):
     # off the tiny-index exact pass and the one query off the local pass
     monkeypatch.setattr(closestedge, "SMALL_INDEX_BRUTE_EDGES", 0)
     monkeypatch.setattr(ringsearch, "LOCAL_PAIRS_MAX", 0)
-    exact, n_exact = count_jobs(
-        "me-exact",
-        lambda: closestedge.closest_edges(idx, qdf, k=1, level=lvl).collect(),
-    )
-    approx, n_approx = count_jobs(
-        "me-approx",
-        lambda: closestedge.closest_edges(
-            idx, qdf, k=1, level=lvl, max_error_rad=w
-        ).collect(),
-    )
+    # one scope for both calls, released at the end. The approx call reads
+    # the edge index the exact call held; with a scope per call the two run
+    # the same number of jobs (AQE submits every round's leaf stages up
+    # front), so the job saving below is the shared cache's
+    with cache.scope():
+        exact, n_exact = count_jobs(
+            "me-exact",
+            lambda: closestedge.closest_edges(idx, qdf, k=1, level=lvl).collect(),
+        )
+        approx, n_approx = count_jobs(
+            "me-approx",
+            lambda: closestedge.closest_edges(
+                idx, qdf, k=1, level=lvl, max_error_rad=w
+            ).collect(),
+        )
     a_exact = 2 * np.arcsin(0.5 * np.sqrt(exact[0]["chord2"]))
     a_approx = 2 * np.arcsin(0.5 * np.sqrt(approx[0]["chord2"]))
     # the option's contract: within maxError of the true best

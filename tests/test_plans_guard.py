@@ -1,7 +1,7 @@
 """Plan-regression guards (round-4 verdict #6): the driver registry must
-stay within the 50-row CORRECTNESS artifact cap, and no gate's physical
+stay within the 50-row CORRECTNESS artifact cap, no gate's physical
 plan may regress to row-at-a-time Python (BatchEvalPython) or an
-unbounded cartesian product.
+unbounded cartesian product, and only plans/cache.py persists.
 
 `explain` is plan-only — nothing executes, so the full registry sweep is
 cheap enough for the default test run.
@@ -10,7 +10,9 @@ cheap enough for the default test run.
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
+from pathlib import Path
 
 import pytest
 
@@ -49,3 +51,18 @@ def test_no_python_row_loop_or_cartesian(spark, name):
     plan = _plan_text(df)
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+
+
+def test_only_plans_cache_persists():
+    """plans/cache.py is the package's one owner of cached intermediates:
+    no other module persists, caches, unpersists or names a StorageLevel."""
+    pkg = Path(__file__).resolve().parents[1] / "s2_geometry_library_java_spark"
+    pattern = re.compile(r"\.(persist|cache|unpersist)\(|StorageLevel")
+    found = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "plans" / "cache.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert found == []

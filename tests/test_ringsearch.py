@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.operators import closestedge, knn, ringsearch
 from s2_geometry_library_java_spark.operators import shapes as shape_ops
+from s2_geometry_library_java_spark.plans import cache
 
 #: Spark jobs of one ring-round action on the fixtures below at the commit
 #: before the shared ring search (Spark 4.1.2, local[8], 8 shuffle
@@ -117,37 +118,43 @@ def test_covering_seed_build_is_lazy(spark, count_jobs):
     the far/near split, the covering-pruned pass and the remnant all wait
     for the caller's action."""
     index, queries = _edge_fixture(spark)
-    index.persist().count()
-    _, n_count = count_jobs("rs-count", index.count)
-    df, n_build = count_jobs(
-        "rs-cover-build",
-        lambda: closestedge.closest_edges(
-            index, queries, k=2, level=6, covering_seed=True
-        ),
-    )
-    assert n_build == n_count
-    plain = closestedge.closest_edges(index, queries, k=2, level=6)
-    assert sorted(df.collect()) == sorted(plain.collect())
+    with cache.scope():
+        index = cache.hold(index)
+        index.count()
+        _, n_count = count_jobs("rs-count", index.count)
+        df, n_build = count_jobs(
+            "rs-cover-build",
+            lambda: closestedge.closest_edges(
+                index, queries, k=2, level=6, covering_seed=True
+            ),
+        )
+        assert n_build == n_count
+        plain = closestedge.closest_edges(index, queries, k=2, level=6)
+        assert sorted(df.collect()) == sorted(plain.collect())
 
 
-def test_ring_search_job_counts(spark, count_jobs, monkeypatch, release_cache):
+def test_ring_search_job_counts(spark, count_jobs, monkeypatch):
     """Job counts of one knn_cell_join and one closest_edges call (plan
     build and action) on the ring rounds stay at or below the pinned
     counts."""
     monkeypatch.setattr(ringsearch, "LOCAL_PAIRS_MAX", 0)
     index, queries = _knn_fixture(spark)
-    df, n_build = count_jobs("rs-knn-build", lambda: knn.knn_cell_join(index, queries, k=5))
-    rows, n_action = count_jobs("rs-knn-action", df.collect)
+    with cache.scope():
+        df, n_build = count_jobs(
+            "rs-knn-build", lambda: knn.knn_cell_join(index, queries, k=5)
+        )
+        rows, n_action = count_jobs("rs-knn-action", df.collect)
     assert len(rows) == 5 * 64
     assert n_build <= KNN_BUILD_JOBS
     assert n_action <= KNN_ACTION_JOBS
 
     index, queries = _edge_fixture(spark)
-    df, n_build = count_jobs(
-        "rs-edge-build",
-        lambda: closestedge.closest_edges(index, queries, k=2, level=6),
-    )
-    rows, n_action = count_jobs("rs-edge-action", df.collect)
+    with cache.scope():
+        df, n_build = count_jobs(
+            "rs-edge-build",
+            lambda: closestedge.closest_edges(index, queries, k=2, level=6),
+        )
+        rows, n_action = count_jobs("rs-edge-action", df.collect)
     assert len(rows) == 2 * 64
     assert n_build <= EDGES_BUILD_JOBS
     assert n_action <= EDGES_ACTION_JOBS
@@ -183,7 +190,7 @@ def _rows(df, ids):
     )
 
 
-def test_local_pass_equals_ring_rounds_on_ties(spark, monkeypatch, release_cache):
+def test_local_pass_equals_ring_rounds_on_ties(spark, monkeypatch):
     """On tie-heavy fixtures the partition-local pass returns exactly the
     ring rounds' rows, chord2 bits included: a grid symmetric about (0, 0)
     (equidistant points), grid points duplicated under fresh ids in a
@@ -224,13 +231,14 @@ def test_local_pass_equals_ring_rounds_on_ties(spark, monkeypatch, release_cache
     assert knn.choose_level(len(pts) + 4, 5) > 0
 
     def run():
-        return (
-            _rows(knn.knn_cell_join(points, queries, k=5), ["neighbor_id"]),
-            _rows(closestedge.closest_edges(edges, equeries, k=3, level=6),
-                  ["shape_id", "edge_id"]),
-            _rows(closestedge.furthest_edges(edges, equeries, k=2, level=6),
-                  ["shape_id", "edge_id"]),
-        )
+        with cache.scope():
+            return (
+                _rows(knn.knn_cell_join(points, queries, k=5), ["neighbor_id"]),
+                _rows(closestedge.closest_edges(edges, equeries, k=3, level=6),
+                      ["shape_id", "edge_id"]),
+                _rows(closestedge.furthest_edges(edges, equeries, k=2, level=6),
+                      ["shape_id", "edge_id"]),
+            )
 
     local = run()
     monkeypatch.setattr(ringsearch, "LOCAL_PAIRS_MAX", 0)

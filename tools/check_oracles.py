@@ -21,6 +21,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from s2_geometry_library_java_spark.plans import cache  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -67,7 +68,8 @@ def main(sf_dir: str, only: list[str]):
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            with cache.scope():  # each gate releases what it held
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")

@@ -48,7 +48,9 @@ def synth_documents(spark, n_docs: int):
 
 
 def run_once(cpus: int, n_docs: int) -> dict:
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
+
+    from s2_geometry_library_java_spark.plans import cache
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -60,11 +62,21 @@ def run_once(cpus: int, n_docs: int) -> dict:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    with cache.scope():  # the held input is released before the session stops
+        out = _measure(spark, cpus, n_docs)
+    spark.stop()
+    return out
+
+
+def _measure(spark, cpus: int, n_docs: int) -> dict:
+    from pyspark.sql import functions as F
+
     from s2_geometry_library_java_spark import queries as q
     from s2_geometry_library_java_spark.operators import pip, tiling
+    from s2_geometry_library_java_spark.plans import cache
     from s2_geometry_library_java_spark.sources import docs as docsrc
 
-    documents = synth_documents(spark, n_docs).persist()
+    documents = cache.hold(synth_documents(spark, n_docs))
     documents.count()  # input materialization == reading the source table
     # warmup: spin up a FULL-WIDTH set of executor Python workers (one per
     # core) so per-cluster worker startup (imports, Arrow init) is not
@@ -139,7 +151,6 @@ def run_once(cpus: int, n_docs: int) -> dict:
     ).count()
     wall_ce = time.time() - t2
 
-    spark.stop()
     return {
         "cpus": cpus,
         "n_docs": n_docs,
