@@ -47,27 +47,22 @@ def candidate_pairs(
     shapes_a: DataFrame,
     shapes_b: DataFrame,
     max_cells: int = 8,
-    small_shapes: bool | None = None,
 ) -> DataFrame:
     """(a_id, b_id) for every pair whose coverings share sphere area —
     the covering-intersection join (a cell of one side contained in a
     cell of the other, tested as ancestor equi-joins both ways).
 
-    ``small_shapes`` True: BOTH sides' coverings come from a single
-    distributed coverer pass over the union of the shape tables, collected
-    once, and the range-overlap pairing runs driver-side on the tiny cell
-    lists — one Python-stage job instead of two persisted covering jobs
-    plus level probes. False: the ancestor equi-join form below stays
-    fully distributed. Default None AUTO-selects: the driver-side
-    O(|covA|*|covB|) pairing is only taken when both sides count at most
-    SMALL_SHAPES_THRESHOLD shapes, so large tables can never hit the
-    collect path by default."""
-    if small_shapes is None:
-        small_shapes = (
-            shapes_a.count() <= SMALL_SHAPES_THRESHOLD
-            and shapes_b.count() <= SMALL_SHAPES_THRESHOLD
-        )
-    if small_shapes:
+    When both sides count at most SMALL_SHAPES_THRESHOLD shapes, BOTH
+    sides' coverings come from a single distributed coverer pass over the
+    union of the shape tables, collected once, and the range-overlap
+    pairing runs driver-side on the tiny cell lists — one Python-stage job
+    instead of two held covering jobs plus level probes. Larger tables
+    never reach that collect: the ancestor equi-join form below stays
+    fully distributed."""
+    if (
+        shapes_a.count() <= SMALL_SHAPES_THRESHOLD
+        and shapes_b.count() <= SMALL_SHAPES_THRESHOLD
+    ):
         import numpy as _np
 
         from ..kernel import cellid as _ci

@@ -7,7 +7,6 @@ merges over sorted ranges become window functions and range joins:
 * ``normalize_df``     — drop contained cells (sorted cummax window), then
                          collapse complete sibling groups to parents
                          (window over parent, 4 distinct children), iterated.
-* ``union_df``         — unionAll + normalize.
 * ``intersection_df``  — for normalized inputs, overlapping cells nest, so
                          the intersection keeps the SMALLER cell of each
                          overlapping pair (range join + pick larger rmin).
@@ -116,10 +115,6 @@ def collapse_siblings_df(df: DataFrame, rounds: int = 4) -> DataFrame:
 
 def normalize_df(df: DataFrame, rounds: int = 4) -> DataFrame:
     return collapse_siblings_df(drop_contained_df(df), rounds)
-
-
-def union_df(a: DataFrame, b: DataFrame, rounds: int = 4) -> DataFrame:
-    return normalize_df(a.unionByName(b), rounds)
 
 
 def intersection_df(a: DataFrame, b: DataFrame) -> DataFrame:

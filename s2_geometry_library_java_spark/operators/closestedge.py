@@ -15,11 +15,12 @@ supplies the edge-specific parts:
   A21 kernel kernel/edges.min_chord2_to_edges, so the two agree
   bit-for-bit), inside whole-stage codegen, no Python;
 * its numpy score for ringsearch.local_topk: that kernel itself;
-* routing from the index row count |I|, in ringsearch's order: at most
-  SMALL_INDEX_BRUTE_EDGES rows has no ring level; else local_topk while
-  |queries| x |I| <= LOCAL_PAIRS_MAX; else ring rounds. A covering seed
-  ("auto" on a large edge set) keeps the ring routes and sends queries far
-  from the whole index to covering_pruned_edges, not to empty rings.
+* routing from the index row count |I|, in this order: at most
+  SMALL_INDEX_BRUTE_EDGES rows has no ring level (search's exact pass
+  broadcasts the index); else local_topk while |queries| x |I| <=
+  LOCAL_PAIRS_MAX; else, for furthest_edges only, the covering seed once
+  |I| >= AUTO_COVERING_SEED_EDGES (queries far from the whole index go to
+  covering_pruned_edges, not to empty rings); else the ring rounds.
 
 Past the index count (and local_queries' bounded collect) each route is ONE
 lazy plan: the caller's single action executes the complete search.
@@ -28,20 +29,24 @@ lazy plan: the caller's single action executes the complete search.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
 
 from . import ringsearch
 from ..functions import columns as cc
 from ..kernel import edges as ek
+from ..kernel.cell import cells_distance_chord2, cells_max_distance_chord2
 from ..kernel import sphere
 from ..plans import cache
 
 _EPS = float(np.finfo(np.float64).eps)
 
-#: index edge count at which covering_seed="auto" turns the max-distance
-#: covering seed on (tests patch this): the seed's bounds stage costs a few
-#: fixed jobs, which only pays off when the remnant brute would otherwise be
-#: |queries| x |edges| over a large edge set.
+#: index edge count from which furthest_edges takes the max-distance
+#: covering seed when the local pass declines (tests patch this): the seed's
+#: bounds stage costs a few fixed jobs, which only pays off when the remnant
+#: brute would otherwise be |queries| x |edges| over a large edge set.
 AUTO_COVERING_SEED_EDGES = 50_000
 
 #: index row count at or below which the search has no ring level and runs
@@ -115,17 +120,15 @@ def furthest_edges(
     query_id: str = "query_id",
     lat: str = "lat",
     lng: str = "lng",
-    covering_seed: bool | str = "auto",
     interiors: DataFrame | None = None,
-    max_error_rad: float = 0.0,
 ) -> DataFrame:
     """(query_id, rank, shape_id, edge_id, chord2) top-k FURTHEST indexed
     edges per query (S2FurthestEdgeQuery over S2BestEdgesQueryBase) via
     the antipode identity: the max angle from p to an edge is pi minus the
     min angle from -p, i.e. chord2_far = 4 - chord2_near(-p). The whole
-    search therefore reuses closest_edges on the negated query points —
-    same ring pruning, same completeness proof — and only the output
-    distance is transformed.
+    search therefore reuses the closest-edge routes on the negated query
+    points — same ring pruning, same completeness proof — and only the
+    output distance is transformed.
 
     ``interiors``: optional shapes table (shape_id, text) enabling
     Options.includeInteriors (S2BestEdgesQueryBase.java:399,410 — default
@@ -135,8 +138,8 @@ def furthest_edges(
     over the antipodal connected-component point) contributes an interior
     result at the maximum distance: (shape_id, edge_id=-1, chord2=4.0);
     Result.isInterior() == edge_id < 0 (S2BestEdgesQueryBase.java:317,347).
-    Because this wrapper already negates the query points, the inner
-    closest_edges call tests containment of exactly those antipodes."""
+    Because this wrapper already negates the query points, the interior
+    merge tests containment of exactly those antipodes."""
     neg = queries.select(
         F.col(query_id).alias(query_id),
         (-F.col(lat)).alias("lat"),
@@ -145,25 +148,14 @@ def furthest_edges(
         .otherwise(F.col(lng) + 180.0)
         .alias("lng"),
     )
-    near = closest_edges(
-        index,
-        neg,
-        k=k,
-        level=level,
-        query_id=query_id,
-        lat="lat",
-        lng="lng",
-        # Max-distance covering seed (S2FurthestEdgeQuery's covering
-        # traversal): antipode points of queries near a CLUSTERED index
-        # are far from every cell, so rings always come up empty and the
-        # covering-pruned path wins when the edge set is large (remnant
-        # brute is |queries| x |edges|). "auto" (default) turns it on at
-        # AUTO_COVERING_SEED_EDGES index rows.
-        covering_seed=covering_seed,
-        interiors=interiors,
-        # maxError is an angle bound, symmetric under the antipode map
-        max_error_rad=max_error_rad,
-    )
+    # Max-distance covering seed (S2FurthestEdgeQuery's covering
+    # traversal): antipode points of queries near a CLUSTERED index are far
+    # from every cell, so their rings always come up empty. When the local
+    # pass declines a large edge set, the covering-pruned path replaces
+    # those rounds (_closest_edges_impl's route order).
+    near = _closest_edges_impl(index, neg, k, level, query_id, "lat", "lng", furthest=True)
+    if interiors is not None:
+        near = _with_interiors(near, neg, interiors, k, query_id, "lat", "lng")
     return near.select(
         "query_id",
         "rank",
@@ -181,11 +173,9 @@ def closest_edges(
     query_id: str = "query_id",
     lat: str = "lat",
     lng: str = "lng",
-    covering_seed: bool | str = False,
     max_chord2: float | None = None,
     distance_cap: str = "inclusive",
     interiors: DataFrame | None = None,
-    max_error_rad: float = 0.0,
 ) -> DataFrame:
     """Top-k nearest indexed edges per query, with S2ClosestEdgeQuery's
     maxDistance options: ``distance_cap='inclusive'`` keeps edges AT the
@@ -193,16 +183,6 @@ def closest_edges(
     (S2EdgeUtil.getUpdateMinDistanceMaxError) so true-within-cap edges
     are never dropped. Applied as an exact-top-k post-filter (sound:
     capping after ranking equals ranking the capped set).
-
-    ``max_error_rad``: Options.maxError (S2BestEdgesQueryBase.java:467-484)
-    as an angle in radians — edges up to maxError further than the true
-    closest may be substituted in the results. Distributed payoff: the
-    ring completeness test accepts a k-th distance within maxError of the
-    ring bound, so borderline queries finish in the FIRST ring round
-    instead of retrying at coarser levels (each retry is a full
-    shuffle+join round at 100 TB). The proof stays sound: any unseen edge
-    lies outside the 3x3 ring, hence at angle >= MIN_WIDTH(L), and the
-    accepted k-th is within maxError of that floor.
 
     ``interiors``: optional shapes table (shape_id, text) enabling
     Options.includeInteriors (S2BestEdgesQueryBase.java:399,410 — the
@@ -220,33 +200,36 @@ def closest_edges(
     the one extra union + re-rank."""
     from .knn import effective_max_chord2
 
-    res = _closest_edges_impl(
-        index, queries, k, level, query_id, lat, lng, covering_seed,
-        max_error_rad,
-    )
+    res = _closest_edges_impl(index, queries, k, level, query_id, lat, lng)
     if interiors is not None:
-        from . import shapes as shape_ops
-
-        contained = shape_ops.pip_join_indexed(
-            queries.sparkSession, queries, interiors,
-            point_id=query_id, lat=lat, lng=lng,
-        )
-        interior_rows = contained.select(
-            F.col("point_id").alias("query_id"),
-            F.col("polygon_id").alias("shape_id"),
-            F.lit(-1).cast("int").alias("edge_id"),
-            F.lit(0.0).alias("chord2"),
-        )
-        # Re-rank the union: the impl's per-query top-k plus interior
-        # zeros — sound because every edge row dropped by the impl ranked
-        # below k edge rows that ARE present, and interior rows only push
-        # rankings down further.
-        res = ringsearch.topk(
-            res.select("query_id", *_IDS, "chord2").unionByName(interior_rows),
-            k, _IDS,
-        ).select("query_id", "rank", *_IDS, "chord2")
+        res = _with_interiors(res, queries, interiors, k, query_id, lat, lng)
     eff = effective_max_chord2(max_chord2, distance_cap, edges=True)
     return res if eff is None else res.where(F.col("chord2") <= F.lit(eff))
+
+
+def _with_interiors(res: DataFrame, queries: DataFrame, interiors: DataFrame,
+                    k: int, query_id: str, lat: str, lng: str) -> DataFrame:
+    """``res`` re-ranked with a (shape_id, edge_id=-1, chord2=0.0) row per
+    ``interiors`` shape containing the query point."""
+    from . import shapes as shape_ops
+
+    contained = shape_ops.pip_join_indexed(
+        queries.sparkSession, queries, interiors,
+        point_id=query_id, lat=lat, lng=lng,
+    )
+    interior_rows = contained.select(
+        F.col("point_id").alias("query_id"),
+        F.col("polygon_id").alias("shape_id"),
+        F.lit(-1).cast("int").alias("edge_id"),
+        F.lit(0.0).alias("chord2"),
+    )
+    # Re-rank the union: the per-query top-k plus interior zeros — sound
+    # because every edge row dropped from ``res`` ranked below k edge rows
+    # that ARE present, and interior rows only push rankings down further.
+    return ringsearch.topk(
+        res.select("query_id", *_IDS, "chord2").unionByName(interior_rows),
+        k, _IDS,
+    ).select("query_id", "rank", *_IDS, "chord2")
 
 
 def _closest_edges_impl(
@@ -257,24 +240,22 @@ def _closest_edges_impl(
     query_id: str = "query_id",
     lat: str = "lat",
     lng: str = "lng",
-    covering_seed: bool | str = False,
-    max_error_rad: float = 0.0,
+    furthest: bool = False,
 ) -> DataFrame:
     """(query_id, rank, shape_id, edge_id, chord2) top-k nearest indexed
     edges per query. ``index`` is shape_index_df output built with
     min_level >= ``level`` so parent(cell_id, level) is a valid key.
+    ``furthest``: the caller is furthest_edges, whose routes include the
+    covering seed (module docstring).
 
     Off the local and tiny-index routes the index is held (plans/cache.py):
     its mapInPandas build then runs once for every ring round, the covering
     seed and the exact pass. The caller's ``cache.scope()`` releases it.
     """
     n_edges = index.count()  # every routing decision wants it
-    if covering_seed == "auto":
-        covering_seed = n_edges >= AUTO_COVERING_SEED_EDGES
     # a tiny index has no ring level: search's exact pass broadcasts it
-    small = not covering_seed and n_edges <= SMALL_INDEX_BRUTE_EDGES
-    rings = not (small or covering_seed)  # a covering seed keeps today's routes
-    local = ringsearch.local_queries(queries, query_id, lat, lng, n_edges, rings)
+    small = n_edges <= SMALL_INDEX_BRUTE_EDGES
+    local = ringsearch.local_queries(queries, query_id, lat, lng, n_edges, not small)
     if local is not None:
         return ringsearch.local_topk(
             index.select(*_IDS, *_ENDPOINTS), local, k, _IDS, _edge_chord2_np
@@ -283,7 +264,7 @@ def _closest_edges_impl(
         index = cache.hold(index)
     qpts = ringsearch.points(queries, query_id, "query_id", lat, lng, "q")
     far = None
-    if covering_seed:
+    if furthest and not small and n_edges >= AUTO_COVERING_SEED_EDGES:
         # Route queries whose 3x3 ring at the seed level certainly holds
         # no index cell (min distance to the whole covering exceeds the
         # ring's reach) to the covering-pruned path — their ring rounds
@@ -299,10 +280,7 @@ def _closest_edges_impl(
         )
         far_ids = (
             qpts.crossJoin(F.broadcast(cover))
-            .select(
-                "query_id",
-                _cell_udf("min")("ccell", "qx", "qy", "qz").alias("minb"),
-            )
+            .select("query_id", _cell_min_chord2("ccell", "qx", "qy", "qz").alias("minb"))
             .groupBy("query_id")
             .agg(F.min("minb").alias("minb_min"))
             .where(F.col("minb_min") > F.lit(ring_reach))
@@ -322,7 +300,6 @@ def _closest_edges_impl(
             cc.parent("cell_id", F.col("lvl")).alias("cell"),
         ),
         seed_levels=set() if small else {level},
-        max_error_rad=max_error_rad,
     )
     return res if far is None else far.select(res.columns).unionByName(res)
 
@@ -334,37 +311,24 @@ def _closest_edges_impl(
 # through the index's covering with exact cell chord bounds.
 # ---------------------------------------------------------------------------
 
-from pyspark.sql.functions import pandas_udf as _pandas_udf  # noqa: E402
-import pandas as _pd  # noqa: E402
+def _cell_pts(px: pd.Series, py: pd.Series, pz: pd.Series) -> np.ndarray:
+    return np.stack([c.to_numpy(np.float64) for c in (px, py, pz)], axis=1)
 
 
-def _cell_bounds_udf(which: str):
-    @_pandas_udf("double")
-    def f(cell_id: _pd.Series, px: _pd.Series, py: _pd.Series,
-          pz: _pd.Series) -> _pd.Series:
-        from ..kernel.cell import cells_distance_chord2, cells_max_distance_chord2
-
-        pts = np.stack(
-            [px.to_numpy(np.float64), py.to_numpy(np.float64),
-             pz.to_numpy(np.float64)],
-            axis=1,
-        )
-        cids = cell_id.to_numpy(np.int64)
-        fn = cells_distance_chord2 if which == "min" else cells_max_distance_chord2
-        return _pd.Series(fn(cids, pts))
-
-    return f
+@pandas_udf(DoubleType())
+def _cell_min_chord2(cell_id: pd.Series, px: pd.Series, py: pd.Series,
+                     pz: pd.Series) -> pd.Series:
+    """Exact min chord2 from each point to its row's cell (kernel/cell.py)."""
+    return pd.Series(cells_distance_chord2(cell_id.to_numpy(np.int64),
+                                           _cell_pts(px, py, pz)))
 
 
-_cell_udf_cache: dict = {}
-
-
-def _cell_udf(which: str):
-    """Lazy pandas_udf creation: registration needs an active session,
-    which doesn't exist at import time."""
-    if which not in _cell_udf_cache:
-        _cell_udf_cache[which] = _cell_bounds_udf(which)
-    return _cell_udf_cache[which]
+@pandas_udf(DoubleType())
+def _cell_max_chord2(cell_id: pd.Series, px: pd.Series, py: pd.Series,
+                     pz: pd.Series) -> pd.Series:
+    """Exact max chord2 from each point to its row's cell (kernel/cell.py)."""
+    return pd.Series(cells_max_distance_chord2(cell_id.to_numpy(np.int64),
+                                               _cell_pts(px, py, pz)))
 
 
 def covering_pruned_edges(
@@ -394,8 +358,8 @@ def covering_pruned_edges(
         .crossJoin(F.broadcast(cover))
         .select(
             "query_id", "qx", "qy", "qz", "ccell",
-            _cell_udf("min")("ccell", "qx", "qy", "qz").alias("minb"),
-            _cell_udf("max")("ccell", "qx", "qy", "qz").alias("maxb"),
+            _cell_min_chord2("ccell", "qx", "qy", "qz").alias("minb"),
+            _cell_max_chord2("ccell", "qx", "qy", "qz").alias("maxb"),
         )
     )
     thr = bounds.groupBy("query_id").agg(F.min("maxb").alias("thr"))

@@ -426,12 +426,16 @@ def incremental_dedup(
 # Near-duplicate clustering: connected components over candidate pairs.
 # ---------------------------------------------------------------------------
 
+#: deduped edge count up to which connected_components runs one driver-side
+#: union-find instead of the distributed star contraction
+SMALL_GRAPH_EDGES = 200_000
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "a",
     dst: str = "b",
     max_iter: int = 25,
-    small_graph_threshold: int = 200_000,
 ) -> DataFrame:
     """(id, component) for every node in ``edges``; component = min node id
     reachable — the canonical duplicate-cluster representative.
@@ -453,12 +457,11 @@ def connected_components(
     Auto small-graph short circuit (same pattern as booleanops'
     SMALL_SHAPES_THRESHOLD guard): the deduped edge count is already
     computed to seed convergence detection, so when it is at most
-    ``small_graph_threshold`` the component assignment runs as one
-    driver-side union-find over the collected edge list — identical
-    output, ~6 fewer Spark jobs per star round. The collect is bounded
-    by the THRESHOLD, never the corpus: above it the fully distributed
-    star contraction runs unconditionally (pass 0 to disable the short
-    circuit entirely).
+    SMALL_GRAPH_EDGES the component assignment runs as one driver-side
+    union-find over the collected edge list — identical output, ~6 fewer
+    Spark jobs per star round. The collect is bounded by the threshold,
+    never the corpus: above it the fully distributed star contraction
+    runs.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -474,7 +477,7 @@ def connected_components(
     # re-runs final-stage partitions across several jobs and measured
     # ~0.6 s SLOWER than one full checkpoint pass at sf0.1.)
     e_cnt = e.count()
-    if small_graph_threshold and e_cnt <= small_graph_threshold:
+    if e_cnt <= SMALL_GRAPH_EDGES:
         probe = e.collect()
         parent: dict = {}
 

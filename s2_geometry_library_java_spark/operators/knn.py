@@ -83,26 +83,13 @@ def choose_level(n_index: int, k: int) -> int:
     """Largest level whose 3x3 ring is expected to hold >= max(32, 8k)
     points under a uniform prior — the DataFrame analogue of the
     reference's per-query seed-level heuristic (S2ClosestPointQuery
-    initQueue). Density rollups (tiling.density_rollup) refine this per
-    region when the data is skewed."""
+    initQueue). A density histogram (knn_cell_join's ``density_hist``)
+    refines this per region when the data is skewed."""
     target = max(32, 8 * k)
     ratio = 1.5 * n_index / target
     if ratio <= 1:
         return 0
     return max(0, min(30, int(math.log(ratio, 4))))
-
-
-def density_seed_level(w: F.Column, hist_level: int, k: int) -> F.Column:
-    """Per-query seed level from a local density weight ``w`` (points in
-    the query's histogram cell at ``hist_level``): the deepest level whose
-    3x3 ring still expects >= max(32, 8k) points given that local density
-    — the density-rollup refinement of choose_level's uniform prior."""
-    target = max(32, 8 * k)
-    raw = F.lit(hist_level) + F.floor(
-        F.log(4.0, F.lit(9.0) * w / F.lit(1.5 * target))
-    )
-    lvl = F.greatest(F.lit(0), F.least(F.lit(30), raw.cast("int")))
-    return F.when(w.isNull() | (w <= 0), F.lit(0)).otherwise(lvl)
 
 
 def _capped(df: DataFrame, max_chord2: float | None) -> DataFrame:
@@ -202,25 +189,22 @@ def knn_cell_join(
     if density_hist is not None:
         if hist_level is None:
             raise ValueError("density_hist requires hist_level")
-        hist_df = local_df(
-            index.sparkSession,
-            [(int(np.int64(np.uint64(c))), int(w)) for c, w in density_hist],
-            "hcell long, w long",
-        )
+        # each histogram cell's seed level, once, on the driver: the
+        # deepest level whose 3x3 ring still expects >= target points at
+        # that cell's density; queries in no histogram cell seed at 0
+        levels = [
+            (int(np.int64(np.uint64(c))), max(0, min(30, hist_level + math.floor(
+                math.log(9.0 * w / (1.5 * target), 4.0)))))
+            for c, w in density_hist if w > 0
+        ]
         qs = (
             qs.withColumn("hcell", cc.parent("qleaf", hist_level))
-            .join(F.broadcast(hist_df), "hcell", "left")
-            .withColumn("lvl", density_seed_level(F.col("w"), hist_level, k))
-            .drop("hcell", "w")
+            .join(F.broadcast(local_df(index.sparkSession, levels, "hcell long, lvl int")),
+                  "hcell", "left")
+            .withColumn("lvl", F.coalesce("lvl", F.lit(0)))
+            .drop("hcell")
         )
-        # the possible seed levels follow from the driver-side histogram
-        # weights — no distinct-collect job
-        seed_levels = {0} | {
-            max(0, min(30, hist_level + int(
-                math.floor(math.log(9.0 * wv / (1.5 * target), 4.0))
-            )))
-            for _, wv in density_hist if wv > 0
-        }
+        seed_levels = {0} | {lvl for _, lvl in levels}
         n_index = sum(int(w) for _, w in density_hist)
     else:
         # Counted on the RAW input: Catalyst prunes the count to a plain

@@ -18,10 +18,9 @@ shrinks as results arrive). A caller supplies three things:
    neighbours (kernel A13) and equi-joins the keyed index;
 2. top-k per query by (chord2, ids);
 3. completeness: a query is finished when it has k results and its k-th
-   chord2 is below MIN_WIDTH(lvl) (plus Options.maxError). Anything
-   outside the 3x3 ring is at least that far: a geodesic leaving the ring
-   crosses a whole neighbour cell, whose width is at least the level's
-   minimum;
+   chord2 is below MIN_WIDTH(lvl). Anything outside the 3x3 ring is at
+   least that far: a geodesic leaving the ring crosses a whole neighbour
+   cell, whose width is at least the level's minimum;
 4. split: an anti-join keeps the unfinished queries, which retry
    FALLBACK_LEVEL_STEP levels coarser. Level-0 rings (a 3x3 block of cube
    faces, most of the sphere) never run;
@@ -33,14 +32,21 @@ There are no driver-side round-trips: a round whose input is empty adds an
 empty union branch, which AQE's empty-relation propagation prunes.
 
 Routes, in this order (the caller's ring levels, then ``local_queries``):
-no ring level runs ``search``'s exact pass alone; |queries| x |items| <=
-LOCAL_PAIRS_MAX ships the queries to ``local_topk``, ONE mapInArrow over
-the items whose partitions keep their local top-k, merged by one Exchange
-(no bound, no rounds, nothing held); anything larger takes the ring rounds.
 
-Of these routes only the ring rounds hold cached intermediates
-(plans/cache.py): the query input and each round's top-k. Run the action
-inside ``cache.scope()`` and they are released when it ends.
+1. no ring level (a tiny index) runs ``search``'s exact pass alone;
+2. |queries| x |items| <= LOCAL_PAIRS_MAX ships the queries to
+   ``local_topk``, ONE mapInArrow over the items whose partitions keep
+   their local top-k, merged by one Exchange (no bound, no rounds,
+   nothing held);
+3. furthest edges only: the covering seed (closestedge) on a large edge
+   set sends the queries far from the whole index to a covering-pruned
+   pass, and the rest to the ring rounds;
+4. anything else takes the ring rounds.
+
+Of these routes only the ring rounds (and the covering seed in front of
+them) hold cached intermediates (plans/cache.py): here the query input and
+each round's top-k. Run the action inside ``cache.scope()`` and they are
+released when it ends.
 """
 
 from __future__ import annotations
@@ -81,12 +87,12 @@ def points(df: DataFrame, id_col: str, id_as: str, lat: str, lng: str,
     )
 
 
-def min_width_chord2(lvl: Column, max_error_rad: float = 0.0) -> Column:
+def min_width_chord2(lvl: Column) -> Column:
     """Column form of sphere.chord2_from_angle(sphere.metric_value(
-    MIN_WIDTH_DERIV, lvl) + max_error_rad): the ring completeness bound."""
+    MIN_WIDTH_DERIV, lvl)): the ring completeness bound."""
     ang = F.lit(float(sphere.MIN_WIDTH_DERIV)) * F.pow(
         F.lit(2.0), -lvl.cast("double")
-    ) + F.lit(float(max_error_rad))
+    )
     s = F.lit(2.0) * F.sin(F.least(F.lit(float(np.pi)), ang) / F.lit(2.0))
     return s * s
 
@@ -132,7 +138,6 @@ def search(
     items: DataFrame,
     keyed: Callable[[DataFrame], DataFrame],
     seed_levels: set[int],
-    max_error_rad: float = 0.0,
 ) -> DataFrame:
     """(query_id, rank, *ids, chord2) exact top-k per query.
 
@@ -140,8 +145,7 @@ def search(
     seed level. ``seed_levels``: a driver-side superset of the seed levels.
     ``items``: (*ids, score inputs), one row per item, for the exact pass.
     ``keyed(levels)``: (lvl, cell, *ids, score inputs) for the broadcast
-    table of probed levels. ``max_error_rad``: Options.maxError — a k-th
-    result within that angle of the ring bound is accepted."""
+    table of probed levels."""
     parts = []
     remaining = queries
     spark = queries.sparkSession
@@ -161,7 +165,7 @@ def search(
         lvl_df = F.broadcast(local_df(spark, [(L,) for L in levels], "lvl int"))
         probe = remaining.where(F.col("lvl") > 0).select(
             "query_id", "qx", "qy", "qz", "lvl",
-            min_width_chord2(F.col("lvl"), max_error_rad).alias("bound"),
+            min_width_chord2(F.col("lvl")).alias("bound"),
             F.explode(
                 F.array_union(F.array(cell), udfs.all_neighbors(cell))
             ).alias("cell"),

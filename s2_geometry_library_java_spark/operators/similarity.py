@@ -16,6 +16,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, Window
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from ..plans import cache
 
@@ -40,62 +42,39 @@ def _vector_groups(cols: tuple, width: int | None = None):
         yield m, [np.stack([v[:n] for v in c.to_numpy()[m]]) for c in cols]
 
 
-_seq_cosine_udf_cache: list = []
-
-
-def seq_cosine_udf():
+@pandas_udf(DoubleType())
+def seq_cosine_udf(va: pd.Series, vb: pd.Series) -> pd.Series:
     """Cosine of two array<double> columns, as an Arrow kernel that
     walks dimensions in order with one vector op per dimension, so every
     row performs exactly the SQL oracle's in-order FP sequence (product
     a_d*b_d, then running add; norms likewise; final dot/sqrt(na*nb)).
-    NULL, ragged or mismatched rows give NULL. Lazily constructed:
-    pandas_udf registration needs an active session."""
-    if not _seq_cosine_udf_cache:
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import DoubleType
-
-        @pandas_udf(DoubleType())
-        def seq_cosine(va: pd.Series, vb: pd.Series) -> pd.Series:
-            out = np.full(len(va), np.nan)  # NaN leaves the UDF as NULL
-            for m, (A, B) in _vector_groups((va, vb)):
-                A, B = A.astype(np.float64), B.astype(np.float64)
-                d_ = np.zeros(len(A), dtype=np.float64)
-                na = np.zeros(len(A), dtype=np.float64)
-                nb = np.zeros(len(A), dtype=np.float64)
-                for d in range(A.shape[1]):  # dimension order == the SQL fold
-                    d_ += A[:, d] * B[:, d]
-                    na += A[:, d] * A[:, d]
-                    nb += B[:, d] * B[:, d]
-                out[m] = d_ / np.sqrt(na * nb)
-            return pd.Series(out)
-
-        _seq_cosine_udf_cache.append(seq_cosine)
-    return _seq_cosine_udf_cache[0]
+    NULL, ragged or mismatched rows give NULL."""
+    out = np.full(len(va), np.nan)  # NaN leaves the UDF as NULL
+    for m, (A, B) in _vector_groups((va, vb)):
+        A, B = A.astype(np.float64), B.astype(np.float64)
+        d_ = np.zeros(len(A), dtype=np.float64)
+        na = np.zeros(len(A), dtype=np.float64)
+        nb = np.zeros(len(A), dtype=np.float64)
+        for d in range(A.shape[1]):  # dimension order == the SQL fold
+            d_ += A[:, d] * B[:, d]
+            na += A[:, d] * A[:, d]
+            nb += B[:, d] * B[:, d]
+        out[m] = d_ / np.sqrt(na * nb)
+    return pd.Series(out)
 
 
-_seq_qdot_udf_cache: list = []
-
-
-def seq_quantized_dot_udf():
+@pandas_udf(LongType())
+def seq_quantized_dot_udf(qa: pd.Series, qb: pd.Series) -> pd.Series:
     """Exact BIGINT inner product of two quantized (array<bigint>)
     columns — integer adds are associative, so any order is bit-identical;
     components |q| <= ~2^20 keep 64-dim sums far below 2^63. NULL or
     mismatched rows give NULL."""
-    if not _seq_qdot_udf_cache:
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import LongType
-
-        @pandas_udf(LongType())
-        def seq_qdot(qa: pd.Series, qb: pd.Series) -> pd.Series:
-            out = np.zeros(len(qa), dtype=np.int64)
-            null = np.ones(len(qa), dtype=bool)
-            for m, (A, B) in _vector_groups((qa, qb)):
-                out[m] = (A.astype(np.int64) * B.astype(np.int64)).sum(axis=1)
-                null &= ~m
-            return pd.Series(pd.arrays.IntegerArray(out, null))
-
-        _seq_qdot_udf_cache.append(seq_qdot)
-    return _seq_qdot_udf_cache[0]
+    out = np.zeros(len(qa), dtype=np.int64)
+    null = np.ones(len(qa), dtype=bool)
+    for m, (A, B) in _vector_groups((qa, qb)):
+        out[m] = (A.astype(np.int64) * B.astype(np.int64)).sum(axis=1)
+        null &= ~m
+    return pd.Series(pd.arrays.IntegerArray(out, null))
 
 
 def cosine_topk_bruteforce(
@@ -114,7 +93,7 @@ def cosine_topk_bruteforce(
     scored = q.join(x, F.col("query_id") != F.col("neighbor_id")).select(
         "query_id",
         "neighbor_id",
-        seq_cosine_udf()(F.col("qv"), F.col("xv")).alias("sim"),
+        seq_cosine_udf(F.col("qv"), F.col("xv")).alias("sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
@@ -129,9 +108,6 @@ def hyperplane_weight(p: int, d: int) -> float:
     return ((p * 37 + d * 11) % 21 - 10) / 10.0
 
 
-_lsh_bucket_udf_cache: dict = {}
-
-
 def lsh_bucket_udf(n_planes: int = 8, dim: int = 64):
     """Sign-bit bucket id over ``n_planes`` deterministic hyperplanes, read
     from the first ``dim`` elements of an array<double> column. Each term
@@ -141,30 +117,25 @@ def lsh_bucket_udf(n_planes: int = 8, dim: int = 64):
     NOT elem * (weight/10)). Only the projection's SIGN feeds the bucket,
     but replicating the arithmetic makes equality unconditional. NULL rows
     and rows shorter than ``dim`` give NULL."""
-    key = (n_planes, dim)
-    if key not in _lsh_bucket_udf_cache:
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import LongType
 
-        @pandas_udf(LongType())
-        def bucket_udf(emb: pd.Series) -> pd.Series:
-            out = np.zeros(len(emb), dtype=np.int64)
-            null = np.ones(len(emb), dtype=bool)
-            for m, (E,) in _vector_groups((emb,), dim):
-                E = E.astype(np.float64)
-                bucket = np.zeros(len(E), dtype=np.int64)
-                for p in range(n_planes):
-                    acc = np.zeros(len(E), dtype=np.float64)
-                    for d in range(dim):  # dimension order == the SQL fold
-                        w = (d * 11 + p * 37) % 21 - 10
-                        acc += (E[:, d] * w) / 10.0
-                    bucket |= (acc >= 0).astype(np.int64) << p
-                out[m] = bucket
-                null &= ~m
-            return pd.Series(pd.arrays.IntegerArray(out, null))
+    @pandas_udf(LongType())
+    def bucket_udf(emb: pd.Series) -> pd.Series:
+        out = np.zeros(len(emb), dtype=np.int64)
+        null = np.ones(len(emb), dtype=bool)
+        for m, (E,) in _vector_groups((emb,), dim):
+            E = E.astype(np.float64)
+            bucket = np.zeros(len(E), dtype=np.int64)
+            for p in range(n_planes):
+                acc = np.zeros(len(E), dtype=np.float64)
+                for d in range(dim):  # dimension order == the SQL fold
+                    w = (d * 11 + p * 37) % 21 - 10
+                    acc += (E[:, d] * w) / 10.0
+                bucket |= (acc >= 0).astype(np.int64) << p
+            out[m] = bucket
+            null &= ~m
+        return pd.Series(pd.arrays.IntegerArray(out, null))
 
-        _lsh_bucket_udf_cache[key] = bucket_udf
-    return _lsh_bucket_udf_cache[key]
+    return bucket_udf
 
 
 def make_band_keys_udf(n_tables: int, planes_per_table: int, dim: int):
@@ -175,8 +146,6 @@ def make_band_keys_udf(n_tables: int, planes_per_table: int, dim: int):
     The per-plane projection accumulates STRICTLY in dimension order so the
     result is bit-identical to a sequential SQL list_reduce — band keys
     must match the oracle exactly."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
 
     @pandas_udf(ArrayType(LongType()))
     def band_keys(emb: pd.Series) -> pd.Series:
@@ -259,7 +228,7 @@ def lsh_banded_pairs(
         pairs = (
             pairs.join(va, "a")
             .join(vb, "b")
-            .where(seq_cosine_udf()(F.col("va"), F.col("vb")) >= F.lit(min_cosine))
+            .where(seq_cosine_udf(F.col("va"), F.col("vb")) >= F.lit(min_cosine))
         )
     return pairs.select("a", "b")
 
@@ -321,7 +290,7 @@ def quantized_topk(
     scored = q.join(x, F.col("query_id") != F.col("neighbor_id")).select(
         "query_id",
         "neighbor_id",
-        seq_quantized_dot_udf()(F.col("qq"), F.col("qx")).alias("score_q"),
+        seq_quantized_dot_udf(F.col("qq"), F.col("qx")).alias("score_q"),
         "qv",
         "xv",
     )
@@ -341,7 +310,7 @@ def quantized_topk(
         F.desc("sim"), F.asc("neighbor_id")
     )
     return (
-        cand.withColumn("sim", seq_cosine_udf()(F.col("qv"), F.col("xv")))
+        cand.withColumn("sim", seq_cosine_udf(F.col("qv"), F.col("xv")))
         .withColumn("rank", F.row_number().over(rw))
         .where(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "score_q")
@@ -394,8 +363,6 @@ def make_ivf_assign_udf(ids: np.ndarray, C: np.ndarray):
     """pandas UDF embedding -> best centroid_id by cosine (tie -> smallest
     id). One Arrow pass over the data, no N x K row expansion: the K x dim
     centroid matrix rides in the UDF closure (broadcast-by-serialization)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
 
     cnorm = np.zeros(len(C), dtype=np.float64)
     for d in range(C.shape[1]):
@@ -419,8 +386,6 @@ def make_ivf_assign_udf(ids: np.ndarray, C: np.ndarray):
 def make_ivf_probe_udf(ids: np.ndarray, C: np.ndarray, nprobe: int):
     """pandas UDF embedding -> the nprobe nearest centroid ids (sim DESC,
     id ASC) as an array — replaces the query x centroid nested-loop join."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
 
     cnorm = np.zeros(len(C), dtype=np.float64)
     for d in range(C.shape[1]):
@@ -565,7 +530,7 @@ def ivf_topk(
         scored.select(
             "query_id",
             "neighbor_id",
-            seq_cosine_udf()(F.col("qv"), F.col("xv")).alias("sim"),
+            seq_cosine_udf(F.col("qv"), F.col("xv")).alias("sim"),
         )
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)

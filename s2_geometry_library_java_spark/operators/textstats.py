@@ -9,6 +9,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import LongType
 
 from .dedup import normalized_words
 
@@ -83,10 +85,8 @@ def quality_score(text) -> Column:
     return (len_term + punct_term + stop_term).alias("quality")
 
 
-_fp64_udf_cache: list = []
-
-
-def fingerprint64_udf():
+@pandas_udf(LongType())
+def fingerprint64_udf(texts: pd.Series) -> pd.Series:
     """Polynomial rolling hash of a text column over character codes:
     acc = (acc*31 + code(c)) mod (2^31-1), left to right — a deterministic
     document fingerprint the DuckDB ``list_reduce`` oracle computes too.
@@ -95,43 +95,33 @@ def fingerprint64_udf():
     acc*31 + 127 < 2^36). ASCII batches use a fixed-width byte matrix; any
     non-ASCII row falls back to an exact per-char ord() loop (the code of
     a character is its codepoint). NULL text gives NULL, "" gives 0."""
-    if not _fp64_udf_cache:
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import LongType
-
-        M, BASE = 2147483647, 31
-
-        @pandas_udf(LongType())
-        def fp64(texts: pd.Series) -> pd.Series:
-            null = texts.isna().to_numpy()
-            vals = ["" if n else t for t, n in zip(texts, null)]
-            out = np.zeros(len(vals), dtype=np.int64)
-            if not vals:
-                return pd.Series(out)
-            enc = [t.encode("utf-8") for t in vals]
-            lens = np.array([len(t) for t in vals], dtype=np.int64)
-            if all(len(e) == n for e, n in zip(enc, lens)):  # pure ASCII
-                width = int(lens.max())
-                buf = np.zeros((len(vals), width), dtype=np.int64)
-                for r, e in enumerate(enc):
-                    if e:
-                        buf[r, : len(e)] = np.frombuffer(e, dtype=np.uint8)
-                acc = np.zeros(len(vals), dtype=np.int64)
-                for i in range(width):  # char order == the SQL fold
-                    live = lens > i
-                    acc[live] = (acc[live] * BASE + buf[live, i]) % M
-                out = acc
-            else:
-                for r, t in enumerate(vals):
-                    a = 0
-                    for c in t:
-                        a = (a * BASE + ord(c)) % M
-                    out[r] = a
-            # NULL text hashes to NULL
-            return pd.Series(pd.arrays.IntegerArray(out, null))
-
-        _fp64_udf_cache.append(fp64)
-    return _fp64_udf_cache[0]
+    M, BASE = 2147483647, 31
+    null = texts.isna().to_numpy()
+    vals = ["" if n else t for t, n in zip(texts, null)]
+    out = np.zeros(len(vals), dtype=np.int64)
+    if not vals:
+        return pd.Series(out)
+    enc = [t.encode("utf-8") for t in vals]
+    lens = np.array([len(t) for t in vals], dtype=np.int64)
+    if all(len(e) == n for e, n in zip(enc, lens)):  # pure ASCII
+        width = int(lens.max())
+        buf = np.zeros((len(vals), width), dtype=np.int64)
+        for r, e in enumerate(enc):
+            if e:
+                buf[r, : len(e)] = np.frombuffer(e, dtype=np.uint8)
+        acc = np.zeros(len(vals), dtype=np.int64)
+        for i in range(width):  # char order == the SQL fold
+            live = lens > i
+            acc[live] = (acc[live] * BASE + buf[live, i]) % M
+        out = acc
+    else:
+        for r, t in enumerate(vals):
+            a = 0
+            for c in t:
+                a = (a * BASE + ord(c)) % M
+            out[r] = a
+    # NULL text hashes to NULL
+    return pd.Series(pd.arrays.IntegerArray(out, null))
 
 
 def term_frequencies(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -321,5 +311,5 @@ def doc_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         punct_count(text_col).alias("puncts"),
         lang_guess(text_col).alias("lang_guess"),
         quality_score(text_col).alias("quality"),
-        fingerprint64_udf()(_c(text_col)).alias("fingerprint"),
+        fingerprint64_udf(_c(text_col)).alias("fingerprint"),
     )

@@ -26,18 +26,6 @@ def tile_points(
     return df.withColumn("leaf", leaf).withColumn("tile", cc.parent("leaf", level))
 
 
-def tile_counts(
-    df: DataFrame, lat: str = "lat", lng: str = "lng", level: int = 12, extra_keys=()
-) -> DataFrame:
-    """Per-tile row counts (+ optional distinct keys): the density rollup
-    primitive (E4). One shuffle with map-side combine."""
-    tiled = tile_points(df, lat, lng, level)
-    aggs = [F.count("*").alias("n")]
-    for key in extra_keys:
-        aggs.append(F.approx_count_distinct(key).alias(f"approx_{key}"))
-    return tiled.groupBy("tile").agg(*aggs)
-
-
 def tile_top_categories(
     tiled: DataFrame, cat_col: str, k: int = 2, tile_col: str = "tile"
 ) -> DataFrame:
@@ -62,23 +50,6 @@ def tile_top_categories(
         .where(F.col("rank") <= k)
         .select("tile", "cat", "n", "rank")
     )
-
-
-def density_rollup(tiled: DataFrame, levels: list[int], weight_col=None) -> DataFrame:
-    """S2DensityTree-style multi-level rollup (S2DensityTree.java:502-560):
-    per-level cell weights from one pass per level over the leaf column.
-    Output: (level, cell_id, weight) — the engine's skew/metrics table."""
-    out = None
-    w = F.lit(1) if weight_col is None else F.col(weight_col)
-    for lvl in levels:
-        cur = (
-            tiled.select(cc.parent("leaf", lvl).alias("cell_id"), w.alias("w"))
-            .groupBy("cell_id")
-            .agg(F.sum("w").alias("weight"))
-            .withColumn("level", F.lit(lvl))
-        )
-        out = cur if out is None else out.unionByName(cur)
-    return out.select("level", "cell_id", "weight")
 
 
 def mercator_tile_cols(lat_deg, lng_deg, zoom: int):

@@ -4,8 +4,7 @@ Reimplements the *intent* of S2DensityTree.getPartitioning
 (S2DensityTree.java:329-349) and S2DensityClusterQuery
 (S2DensityClusterQuery.java:48-94) in DataFrame terms:
 
-1. roll up leaf weights per cell at a chosen level (tiling.density_rollup
-   — the engine's skew/metrics table);
+1. roll up leaf weights per cell at a chosen level (density_histogram);
 2. collect the (tiny) per-cell histogram to the driver and walk it in
    Hilbert order, emitting equal-weight contiguous cell-range boundaries;
 3. repartitionByRange on the biased cell id against those boundaries, so

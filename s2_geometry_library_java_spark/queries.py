@@ -2487,7 +2487,7 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id"),
         ne,
         ni,
-        textstats.fingerprint64_udf()(textstats.redact_pii(injected)).alias("pii_fp"),
+        textstats.fingerprint64_udf(textstats.redact_pii(injected)).alias("pii_fp"),
     )
     return packed.join(qual, "id").join(pii, "id")
 

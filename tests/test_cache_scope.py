@@ -59,7 +59,7 @@ def _table(op, load, *args, **kw):
 def _boolean_pairs(spark):
     a = _quads(spark, "a", [(0.0, 0.0), (10.0, 10.0), (-20.0, 30.0)], 2.0)
     b = _quads(spark, "b", [(1.0, 1.0), (11.5, 8.5), (40.0, 40.0)], 2.0)
-    return lambda: booleanops.candidate_pairs(a, b, small_shapes=False).collect()
+    return lambda: booleanops.candidate_pairs(a, b).collect()
 
 
 #: name -> make(spark): builds the inputs once and returns the call, which
@@ -68,10 +68,9 @@ def _boolean_pairs(spark):
 CALLS = {
     "knn_cell_join": _ring(knn.knn_cell_join, _knn_fixture, k=5),
     "closest_edges": _ring(closestedge.closest_edges, _edge_fixture, k=2, level=6),
-    "furthest_edges": _ring(closestedge.furthest_edges, _edge_fixture, k=2,
-                            level=6, covering_seed=False),
-    "closest_edges_covering_seed": _ring(
-        closestedge.closest_edges, _edge_fixture, k=2, level=6, covering_seed=True),
+    "furthest_edges": _ring(closestedge.furthest_edges, _edge_fixture, k=2, level=6),
+    "furthest_edges_seed_route": _ring(
+        closestedge.furthest_edges, _edge_fixture, k=2, level=6),
     "candidate_pairs": _boolean_pairs,
     "lsh_banded_pairs": _table(similarity.lsh_banded_pairs, _emb, "vec_id",
                                "embedding", min_cosine=0.5),
@@ -90,10 +89,20 @@ CALLS = {
 JOB_SPREAD = 1
 SEED_JOB_SPREAD = 4
 
+#: name -> (module, constant, value) that routes the call to the route that
+#: holds: the covering seed on the 302-row edge index, the distributed
+#: covering join for three shapes a side
+ROUTES = {
+    "furthest_edges_seed_route": (closestedge, "AUTO_COVERING_SEED_EDGES", 1),
+    "candidate_pairs": (booleanops, "SMALL_SHAPES_THRESHOLD", 0),
+}
+
 
 @pytest.mark.parametrize("name", sorted(CALLS))
 def test_scope_releases_what_it_held(spark, count_jobs, monkeypatch, name):
     monkeypatch.setattr(ringsearch, "LOCAL_PAIRS_MAX", 0)
+    if name in ROUTES:
+        monkeypatch.setattr(*ROUTES[name])
     held = []
     real_hold = cache.hold
 
@@ -118,5 +127,5 @@ def test_scope_releases_what_it_held(spark, count_jobs, monkeypatch, name):
         jobs.append(n)
         assert state() == before
         assert all(df.storageLevel == StorageLevel.NONE for df in held)
-    spread = SEED_JOB_SPREAD if name == "closest_edges_covering_seed" else JOB_SPREAD
+    spread = SEED_JOB_SPREAD if name == "furthest_edges_seed_route" else JOB_SPREAD
     assert abs(jobs[1] - jobs[0]) <= spread, jobs

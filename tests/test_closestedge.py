@@ -100,17 +100,40 @@ def test_edge_chord2_column_bit_matches_kernel(spark):
     assert got == list(want), (got[:3], want[:3])
 
 
+def _assert_furthest_brute(rows, texts, qs, k):
+    """furthest_edges ``rows`` equal the numpy brute maximum-distance
+    ranking (max over each edge's points, per the reference semantics),
+    ties by (shape, edge) as the operator orders them."""
+    from s2_geometry_library_java_spark.kernel import region as rg
+
+    got = {
+        (r["query_id"], r["rank"]): (r["shape_id"], r["edge_id"], r["chord2"])
+        for r in rows
+    }
+    edges = []
+    for sid, t in texts.items():
+        v = rg.Polygon.from_text(t).loops[0].vertices
+        for e in range(len(v)):
+            edges.append((sid, e, v[e], v[(e + 1) % len(v)]))
+    for qid, la, ln in qs:
+        x, y, z = s2.latlng_to_xyz(np.radians(la), np.radians(ln))
+        p = np.array([float(x), float(y), float(z)])
+        scored = []
+        for sid, e, a, b in edges:
+            far = float(ek.max_chord2_to_edges(p[None], a[None], b[None])[0])
+            # rank by near-chord2 of the antipode ascending == far desc
+            scored.append((4.0 - far, sid, e, far))
+        scored.sort()
+        for rank in range(1, k + 1):
+            _, wsid, we, wfar = scored[rank - 1]
+            gsid, ge, gfar = got[(qid, rank)]
+            assert (gsid, ge) == (wsid, we), (qid, rank)
+            assert abs(gfar - wfar) < 1e-9
+
+
 def test_furthest_edges_antipode_identity(spark):
     """F5 furthest-edge query: results equal the numpy brute maximum-
     distance ranking (max over edge points, per the reference semantics)."""
-    import numpy as np
-
-    from s2_geometry_library_java_spark.kernel import cellid as ci
-    from s2_geometry_library_java_spark.kernel import edges as ek
-    from s2_geometry_library_java_spark.kernel import region as rg
-    from s2_geometry_library_java_spark.operators import closestedge
-    from s2_geometry_library_java_spark.operators import shapes as shape_ops
-
     texts = {
         "s0": "0.0:0.0, 0.0:10.0, 10.0:10.0, 10.0:0.0",
         "s1": "-30.0:60.0, -30.0:70.0, -20.0:70.0, -20.0:60.0",
@@ -121,123 +144,69 @@ def test_furthest_edges_antipode_identity(spark):
     idx = shape_ops.shape_index_df(shapes, min_level=4)
     qs = [(1, 5.0, 5.0), (2, -40.0, -120.0), (3, 70.0, 30.0)]
     queries = spark.createDataFrame(qs, "query_id long, lat double, lng double")
-    got = {
-        (r["query_id"], r["rank"]): (r["shape_id"], r["edge_id"], r["chord2"])
-        for r in closestedge.furthest_edges(idx, queries, k=2, level=4).collect()
-    }
-    # brute: per query, max chord2 over each edge's points
-    edges = []
-    for sid, t in texts.items():
-        v = rg.Polygon.from_text(t).loops[0].vertices
-        for e in range(4):
-            edges.append((sid, e, v[e], v[(e + 1) % 4]))
-    for qid, la, ln in qs:
-        x, y, z = ci.latlng_to_xyz(np.radians(la), np.radians(ln))
-        p = np.array([float(x), float(y), float(z)])
-        scored = []
-        for sid, e, a, b in edges:
-            far = float(ek.max_chord2_to_edges(p[None], a[None], b[None])[0])
-            # rank by near-chord2 of the antipode ascending == far desc,
-            # ties by (shape, edge) — replicate the operator's order
-            scored.append((4.0 - far, sid, e, far))
-        scored.sort()
-        for rank in (1, 2):
-            wsid, we, wfar = scored[rank - 1][1], scored[rank - 1][2], scored[rank - 1][3]
-            gsid, ge, gfar = got[(qid, rank)]
-            assert (gsid, ge) == (wsid, we), (qid, rank)
-            assert abs(gfar - wfar) < 1e-9
+    rows = closestedge.furthest_edges(idx, queries, k=2, level=4).collect()
+    _assert_furthest_brute(rows, texts, qs, 2)
+
+
+#: all shapes inside one ~2-degree patch: a clustered index
+_CLUSTERED = {
+    f"s{i}": f"{10 + 0.4 * i}:{20.0}, {10 + 0.4 * i}:{20.6}, "
+             f"{10.3 + 0.4 * i}:{20.6}, {10.3 + 0.4 * i}:{20.0}"
+    for i in range(4)
+}
+#: queries near the cluster: their ANTIPODES are far from every cell
+_NEAR_CLUSTER = [(1, 11.0, 20.3), (2, 12.0, 20.1)]
+
+
+def _covering_spy(monkeypatch):
+    calls = {"covering": 0}
+    real = closestedge.covering_pruned_edges
+
+    def spy(*a, **k):
+        calls["covering"] += 1
+        return real(*a, **k)
+
+    monkeypatch.setattr(closestedge, "covering_pruned_edges", spy)
+    return calls
 
 
 def test_furthest_covering_seed_engages_on_clustered_index(spark, monkeypatch):
     """Max-distance covering seed (NOTES_ROUND3 gap): with a CLUSTERED
     index, the antipode query points are far from every index cell, so
     the covering-pruned path must handle them (zero ring rounds for those
-    queries) and the results still equal the brute max-distance ranking."""
-    import numpy as np
-
-    from s2_geometry_library_java_spark.kernel import cellid as ci
-    from s2_geometry_library_java_spark.kernel import edges as ek
-    from s2_geometry_library_java_spark.kernel import region as rg
-    from s2_geometry_library_java_spark.operators import closestedge
-    from s2_geometry_library_java_spark.operators import shapes as shape_ops
-
-    # all shapes inside one ~2-degree patch: a clustered index
-    texts = {
-        f"s{i}": f"{10 + 0.4 * i}:{20.0}, {10 + 0.4 * i}:{20.6}, "
-                 f"{10.3 + 0.4 * i}:{20.6}, {10.3 + 0.4 * i}:{20.0}"
-        for i in range(4)
-    }
+    queries) and the results still equal the brute max-distance ranking.
+    The constants are patched so that the 16-edge index takes the seed:
+    no tiny-index pass, no local pass, a seed threshold of 1."""
     shapes = spark.createDataFrame(
-        list(texts.items()), "shape_id string, text string"
+        list(_CLUSTERED.items()), "shape_id string, text string"
     )
     idx = shape_ops.shape_index_df(shapes, min_level=4)
-    # queries near the cluster: their ANTIPODES are far from every cell
-    qs = [(1, 11.0, 20.3), (2, 12.0, 20.1)]
-    queries = spark.createDataFrame(qs, "query_id long, lat double, lng double")
-
-    calls = {"covering": 0}
-    real = closestedge.covering_pruned_edges
-
-    def spy(*a, **k):
-        calls["covering"] += 1
-        return real(*a, **k)
-
-    monkeypatch.setattr(closestedge, "covering_pruned_edges", spy)
-    got = {
-        (r["query_id"], r["rank"]): (r["shape_id"], r["edge_id"], r["chord2"])
-        for r in closestedge.furthest_edges(
-            idx, queries, k=2, level=4, covering_seed=True
-        ).collect()
-    }
+    queries = spark.createDataFrame(
+        _NEAR_CLUSTER, "query_id long, lat double, lng double"
+    )
+    monkeypatch.setattr(closestedge, "SMALL_INDEX_BRUTE_EDGES", 0)
+    monkeypatch.setattr(ringsearch, "LOCAL_PAIRS_MAX", 0)
+    monkeypatch.setattr(closestedge, "AUTO_COVERING_SEED_EDGES", 1)
+    calls = _covering_spy(monkeypatch)
+    rows = closestedge.furthest_edges(idx, queries, k=2, level=4).collect()
     assert calls["covering"] == 1, "covering seed did not engage"
-
-    edges = []
-    for sid, t in texts.items():
-        v = rg.Polygon.from_text(t).loops[0].vertices
-        for e in range(4):
-            edges.append((sid, e, v[e], v[(e + 1) % 4]))
-    for qid, la, ln in qs:
-        x, y, z = ci.latlng_to_xyz(np.radians(la), np.radians(ln))
-        p = np.array([float(x), float(y), float(z)])
-        scored = []
-        for sid, e, a, b in edges:
-            far = float(ek.max_chord2_to_edges(p[None], a[None], b[None])[0])
-            scored.append((4.0 - far, sid, e, far))
-        scored.sort()
-        for rank in (1, 2):
-            wsid, we, wfar = scored[rank - 1][1], scored[rank - 1][2], scored[rank - 1][3]
-            gsid, ge, gfar = got[(qid, rank)]
-            assert (gsid, ge) == (wsid, we), (qid, rank)
-            assert abs(gfar - wfar) < 1e-9
+    _assert_furthest_brute(rows, _CLUSTERED, _NEAR_CLUSTER, 2)
 
 
 def test_furthest_covering_seed_auto_threshold(spark, monkeypatch):
-    """covering_seed="auto" (the default) engages the covering-pruned path
-    iff the index edge count reaches AUTO_COVERING_SEED_EDGES, with
-    identical results either way."""
-    from s2_geometry_library_java_spark.operators import closestedge
-    from s2_geometry_library_java_spark.operators import shapes as shape_ops
-
-    texts = {
-        f"s{i}": f"{10 + 0.4 * i}:{20.0}, {10 + 0.4 * i}:{20.6}, "
-                 f"{10.3 + 0.4 * i}:{20.6}, {10.3 + 0.4 * i}:{20.0}"
-        for i in range(4)
-    }
+    """When the local pass declines, furthest_edges takes the covering-
+    pruned path iff the index edge count reaches AUTO_COVERING_SEED_EDGES,
+    with identical results either way."""
     shapes = spark.createDataFrame(
-        list(texts.items()), "shape_id string, text string"
+        list(_CLUSTERED.items()), "shape_id string, text string"
     )
     idx = shape_ops.shape_index_df(shapes, min_level=4)
-    qs = [(1, 11.0, 20.3), (2, 12.0, 20.1)]
-    queries = spark.createDataFrame(qs, "query_id long, lat double, lng double")
-
-    calls = {"covering": 0}
-    real = closestedge.covering_pruned_edges
-
-    def spy(*a, **k):
-        calls["covering"] += 1
-        return real(*a, **k)
-
-    monkeypatch.setattr(closestedge, "covering_pruned_edges", spy)
+    queries = spark.createDataFrame(
+        _NEAR_CLUSTER, "query_id long, lat double, lng double"
+    )
+    monkeypatch.setattr(closestedge, "SMALL_INDEX_BRUTE_EDGES", 0)
+    monkeypatch.setattr(ringsearch, "LOCAL_PAIRS_MAX", 0)
+    calls = _covering_spy(monkeypatch)
 
     def run():
         return sorted(
@@ -249,13 +218,45 @@ def test_furthest_covering_seed_auto_threshold(spark, monkeypatch):
     # 16 indexed edges: below the default threshold -> ring path
     monkeypatch.setattr(closestedge, "AUTO_COVERING_SEED_EDGES", 50_000)
     base = run()
-    assert calls["covering"] == 0, "seed engaged below the auto threshold"
+    assert calls["covering"] == 0, "seed engaged below the threshold"
 
-    # threshold of 1: the same call auto-routes through the covering seed
+    # threshold of 1: the same call routes through the covering seed
     monkeypatch.setattr(closestedge, "AUTO_COVERING_SEED_EDGES", 1)
     seeded = run()
-    assert calls["covering"] == 1, "auto seed did not engage"
+    assert calls["covering"] == 1, "seed did not engage"
     assert seeded == base
+
+
+def test_furthest_local_pass_before_seed_route(spark, count_jobs, monkeypatch):
+    """Route order: a query side inside the pair budget takes the local
+    pass even when the index reaches the covering-seed threshold — plan
+    build plus action stay within the local pass's pinned job count (the
+    seed route runs dozens) and the rows equal the brute max-distance
+    ranking."""
+    from tests.test_ringsearch import LOCAL_EDGES_JOBS
+
+    # 8 clustered 40-gons: 320 edges, above SMALL_INDEX_BRUTE_EDGES
+    t = np.linspace(0.0, 2 * np.pi, 40, endpoint=False)
+    texts = {
+        f"c{i}": ", ".join(
+            f"{float(10 + 0.25 * i + 0.1 * np.sin(a))!r}:{float(20 + 0.1 * np.cos(a))!r}"
+            for a in t
+        )
+        for i in range(8)
+    }
+    shapes = spark.createDataFrame(list(texts.items()), "shape_id string, text string")
+    idx = shape_ops.shape_index_df(shapes, min_level=4)
+    qs = [(i, 10.0 + 0.3 * i, 19.5 + 0.2 * i) for i in range(6)]
+    queries = spark.createDataFrame(qs, "query_id long, lat double, lng double")
+    monkeypatch.setattr(closestedge, "AUTO_COVERING_SEED_EDGES", 1)
+    calls = _covering_spy(monkeypatch)
+    rows, n_jobs = count_jobs(
+        "furthest-local",
+        lambda: closestedge.furthest_edges(idx, queries, k=2, level=4).collect(),
+    )
+    assert calls["covering"] == 0, "the covering seed ran before the local pass"
+    assert n_jobs <= LOCAL_EDGES_JOBS, n_jobs
+    _assert_furthest_brute(rows, texts, qs, 2)
 
 
 def test_conservative_max_distance_no_under_reporting(spark):
@@ -435,7 +436,7 @@ def test_include_interiors_furthest_antipode(spark):
     rows = {
         r["query_id"]: r
         for r in closestedge.furthest_edges(
-            idx, qdf, k=1, level=4, interiors=shapes_df, covering_seed=False
+            idx, qdf, k=1, level=4, interiors=shapes_df
         ).collect()
     }
     assert rows[0]["edge_id"] == -1 and rows[0]["chord2"] == 4.0
@@ -444,11 +445,11 @@ def test_include_interiors_furthest_antipode(spark):
     assert rows[1]["edge_id"] >= 0 and rows[1]["chord2"] < 4.0
 
 
-def test_max_error_early_exit(spark, count_jobs, monkeypatch):
-    """Options.maxError (S2BestEdgesQueryBase.java:467-484): relaxing the
-    ring completeness bound by maxError lets borderline queries finish in
-    the first ring round — fewer Spark jobs — while the returned distance
-    stays within maxError of the exact answer."""
+def test_ring_rounds_exact_past_strict_bound(spark, monkeypatch):
+    """A query whose nearest edge lies inside its 3x3 ring but past the
+    strict MIN_WIDTH(lvl) completeness bound is not finished by the first
+    ring round: it retries at coarser levels, and the ring rounds still
+    return the exact nearest edge, equal to the tiny-index exact pass."""
     from s2_geometry_library_java_spark.kernel import sphere
     from s2_geometry_library_java_spark.plans import cache
 
@@ -456,8 +457,7 @@ def test_max_error_early_exit(spark, count_jobs, monkeypatch):
     w = float(sphere.metric_value(sphere.MIN_WIDTH_DERIV, lvl))
     d_deg = float(np.degrees(1.5 * w))
     # long quad whose near edge passes ~1.5*MIN_WIDTH(lvl) from the query:
-    # inside the 3x3 ring (candidates found) but past the strict bound, so
-    # the exact run must retry at coarser levels / brute
+    # inside the 3x3 ring (candidates found) but past the strict bound
     text = f"{d_deg!r}:-10.0, {d_deg!r}:10.0, {d_deg + 5.0!r}:10.0, {d_deg + 5.0!r}:-10.0"
     shapes_df = spark.createDataFrame(
         [("s0", text)], "shape_id string, text string"
@@ -466,31 +466,12 @@ def test_max_error_early_exit(spark, count_jobs, monkeypatch):
     qdf = spark.createDataFrame(
         [(0, 0.0, 0.0)], "query_id long, lat double, lng double"
     )
-    # the ring rounds are what maxError shortens: keep the 158-row index
-    # off the tiny-index exact pass and the one query off the local pass
+    # the 158-row index takes the tiny-index exact pass by default
+    exact = closestedge.closest_edges(idx, qdf, k=1, level=lvl).collect()
+    # keep it off that pass and the one query off the local pass
     monkeypatch.setattr(closestedge, "SMALL_INDEX_BRUTE_EDGES", 0)
     monkeypatch.setattr(ringsearch, "LOCAL_PAIRS_MAX", 0)
-    # one scope for both calls, released at the end. The approx call reads
-    # the edge index the exact call held; with a scope per call the two run
-    # the same number of jobs (AQE submits every round's leaf stages up
-    # front), so the job saving below is the shared cache's
     with cache.scope():
-        exact, n_exact = count_jobs(
-            "me-exact",
-            lambda: closestedge.closest_edges(idx, qdf, k=1, level=lvl).collect(),
-        )
-        approx, n_approx = count_jobs(
-            "me-approx",
-            lambda: closestedge.closest_edges(
-                idx, qdf, k=1, level=lvl, max_error_rad=w
-            ).collect(),
-        )
-    a_exact = 2 * np.arcsin(0.5 * np.sqrt(exact[0]["chord2"]))
-    a_approx = 2 * np.arcsin(0.5 * np.sqrt(approx[0]["chord2"]))
-    # the option's contract: within maxError of the true best
-    assert a_approx <= a_exact + w + 1e-12
-    # and the distributed payoff: strictly fewer jobs (round-1 finish)
-    assert n_approx < n_exact
-    # on this fixture the in-ring edge IS the true best, so results match
-    assert approx[0]["edge_id"] == exact[0]["edge_id"]
-    assert approx[0]["chord2"] == exact[0]["chord2"]
+        ring = closestedge.closest_edges(idx, qdf, k=1, level=lvl).collect()
+    assert exact[0]["chord2"] > float(sphere.chord2_from_angle(w))
+    assert [tuple(r) for r in ring] == [tuple(r) for r in exact]

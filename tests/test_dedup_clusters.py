@@ -4,8 +4,10 @@ shape (every doc assigned, component = min reachable id)."""
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from s2_geometry_library_java_spark.operators import dedup
 from s2_geometry_library_java_spark.operators.dedup import (
     connected_components,
     near_dup_clusters,
@@ -41,16 +43,16 @@ def _union_find(pairs):
 def _check(spark, pairs):
     edges = spark.createDataFrame(pairs, "a: long, b: long")
     want = set(_union_find(pairs).items())
-    # both execution paths must agree with the oracle: the auto
-    # small-graph union-find short circuit (default) and the fully
-    # distributed star contraction (threshold 0 disables the guard)
-    for thresh in (200_000, 0):
-        got = {
-            (r["id"], r["component"])
-            for r in connected_components(
-                edges, "a", "b", small_graph_threshold=thresh
-            ).collect()
-        }
+    # both execution paths must agree with the oracle: the small-graph
+    # union-find short circuit (default) and the fully distributed star
+    # contraction (a threshold of 0 sends every graph with an edge there)
+    for thresh in (dedup.SMALL_GRAPH_EDGES, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "SMALL_GRAPH_EDGES", thresh)
+            got = {
+                (r["id"], r["component"])
+                for r in connected_components(edges, "a", "b").collect()
+            }
         assert got == want, f"threshold={thresh}"
 
 

@@ -416,9 +416,9 @@ def test_streaming_first_seen_stateful(spark, tmp_path):
 
 
 def test_candidate_pairs_auto_guard(spark, monkeypatch):
-    """candidate_pairs default (auto) must flip to the fully distributed
-    ancestor equi-join when a side exceeds SMALL_SHAPES_THRESHOLD, and
-    both paths must produce identical pair sets."""
+    """candidate_pairs must flip to the fully distributed ancestor
+    equi-join when a side exceeds SMALL_SHAPES_THRESHOLD, and both paths
+    must produce identical pair sets."""
     from s2_geometry_library_java_spark.operators import booleanops as bpo
 
     def quad(lat0, lng0, d=3.0):
@@ -437,11 +437,10 @@ def test_candidate_pairs_auto_guard(spark, monkeypatch):
     def pairs_of(df):
         return sorted((r["a_id"], r["b_id"]) for r in df.collect())
 
-    small = pairs_of(bpo.candidate_pairs(sa, sb, small_shapes=True))
-    dist = pairs_of(bpo.candidate_pairs(sa, sb, small_shapes=False))
-    assert small == dist and len(small) >= 4  # overlapping ladder pairs
+    # 4 shapes a side: the driver-side pairing
+    small = pairs_of(bpo.candidate_pairs(sa, sb))
 
-    # force the threshold below the table size: auto must take the
+    # force the threshold below the table size: the call must take the
     # distributed path (collect() on coverings would raise if called)
     monkeypatch.setattr(bpo, "SMALL_SHAPES_THRESHOLD", 2)
     called = {"collect": False}
@@ -461,9 +460,9 @@ def test_candidate_pairs_auto_guard(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(bpo, "coverings_df", spy)
-    auto = pairs_of(bpo.candidate_pairs(sa, sb))
-    assert auto == dist
-    assert not called["collect"], "auto took the driver-side collect path"
+    dist = pairs_of(bpo.candidate_pairs(sa, sb))
+    assert not called["collect"], "the distributed route took the driver-side collect"
+    assert small == dist and len(small) >= 4  # overlapping ladder pairs
 
 
 def test_knn_density_seed_fewer_fallbacks(spark):

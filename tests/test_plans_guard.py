@@ -1,7 +1,8 @@
 """Plan-regression guards (round-4 verdict #6): the driver registry must
 stay within the 50-row CORRECTNESS artifact cap, no gate's physical
 plan may regress to row-at-a-time Python (BatchEvalPython) or an
-unbounded cartesian product, and only plans/cache.py persists.
+unbounded cartesian product, only plans/cache.py persists, and every
+top-level package function or class has a reference somewhere.
 
 `explain` is plan-only — nothing executes, so the full registry sweep is
 cheap enough for the default test run.
@@ -9,6 +10,7 @@ cheap enough for the default test run.
 
 from __future__ import annotations
 
+import ast
 import io
 import re
 from contextlib import redirect_stdout
@@ -66,3 +68,53 @@ def test_only_plans_cache_persists():
         if pattern.search(line)
     ]
     assert found == []
+
+
+#: top-level package names with no reference by name, each with its reason
+UNREFERENCED_OK = {
+    "tiling.raster_vector_join": "PAPER.md names raster<->vector joins",
+    "booleanop.symmetric_difference": "tests reach it through the op-name string",
+}
+
+
+def _referenced_names(tree: ast.Module) -> set[str]:
+    """Names a module references through ast.Name, ast.Attribute or an
+    import alias, leaving out each top-level definition's references to
+    itself (recursion)."""
+    names = set()
+    for stmt in tree.body:
+        own = getattr(stmt, "name", None)
+        for node in ast.walk(stmt):
+            if isinstance(node, ast.Name):
+                found = {node.id}
+            elif isinstance(node, ast.Attribute):
+                found = {node.attr}
+            elif isinstance(node, ast.alias):
+                found = {*node.name.split("."), node.asname}
+            else:
+                continue
+            names |= found - {own, None}
+    return names
+
+
+def test_every_package_definition_is_referenced():
+    """A top-level package function or class that nothing references by
+    name (package, tools, bench scripts, entry point, perfbench, tests) is
+    dead code: delete it, or give it a caller."""
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "s2_geometry_library_java_spark"
+    files = [
+        *pkg.rglob("*.py"), *(root / "tools").rglob("*.py"), *root.glob("bench*.py"),
+        root / "__spark_entry__.py", *(root / "perfbench").rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+    ]
+    defined, used = {}, set()
+    for path in files:
+        tree = ast.parse(path.read_text())
+        used |= _referenced_names(tree)
+        if pkg in path.parents:
+            for stmt in tree.body:
+                if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    defined[f"{path.stem}.{stmt.name}"] = stmt.name
+    unused = sorted(q for q, name in defined.items() if name not in used)
+    assert unused == sorted(UNREFERENCED_OK), unused

@@ -113,23 +113,24 @@ def test_tiny_knn_index_broadcasts_the_index(spark):
     assert rows == want
 
 
-def test_covering_seed_build_is_lazy(spark, count_jobs):
-    """Building closest_edges(covering_seed=True) runs only the edge count:
-    the far/near split, the covering-pruned pass and the remnant all wait
-    for the caller's action."""
+def test_covering_seed_build_is_lazy(spark, count_jobs, monkeypatch):
+    """Building furthest_edges on the covering-seed route runs only the
+    edge count: the far/near split, the covering-pruned pass and the
+    remnant all wait for the caller's action."""
     index, queries = _edge_fixture(spark)
+    monkeypatch.setattr(ringsearch, "LOCAL_PAIRS_MAX", 0)
     with cache.scope():
         index = cache.hold(index)
         index.count()
         _, n_count = count_jobs("rs-count", index.count)
+        monkeypatch.setattr(closestedge, "AUTO_COVERING_SEED_EDGES", 1)
         df, n_build = count_jobs(
             "rs-cover-build",
-            lambda: closestedge.closest_edges(
-                index, queries, k=2, level=6, covering_seed=True
-            ),
+            lambda: closestedge.furthest_edges(index, queries, k=2, level=6),
         )
         assert n_build == n_count
-        plain = closestedge.closest_edges(index, queries, k=2, level=6)
+        monkeypatch.setattr(closestedge, "AUTO_COVERING_SEED_EDGES", 50_000)
+        plain = closestedge.furthest_edges(index, queries, k=2, level=6)
         assert sorted(df.collect()) == sorted(plain.collect())
 
 

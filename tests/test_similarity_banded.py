@@ -233,7 +233,7 @@ def test_seq_cosine_udf_null_and_short_rows(spark):
         (4, [1.0, 2.0], [2.0, 5.0]),
     ]
     df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>").coalesce(1)
-    got = {r["id"]: r["c"] for r in df.select("id", sim.seq_cosine_udf()("a", "b").alias("c")).collect()}
+    got = {r["id"]: r["c"] for r in df.select("id", sim.seq_cosine_udf("a", "b").alias("c")).collect()}
     assert got == {i: _cosine_spec(a, b) for i, a, b in rows}
     assert got[2] is None and got[3] is None and got[4] is not None
 
@@ -248,7 +248,7 @@ def test_seq_quantized_dot_udf_null_and_short_rows(spark):
         (4, [7, 8], [2, 5]),
     ]
     df = spark.createDataFrame(rows, "id int, a array<bigint>, b array<bigint>").coalesce(1)
-    got = {r["id"]: r["d"] for r in df.select("id", sim.seq_quantized_dot_udf()("a", "b").alias("d")).collect()}
+    got = {r["id"]: r["d"] for r in df.select("id", sim.seq_quantized_dot_udf("a", "b").alias("d")).collect()}
     want = {i: _quantized_dot_spec(a, b) for i, a, b in rows}
     assert got == want == {1: 10, 2: None, 3: None, 4: 54}
 

@@ -103,7 +103,7 @@ def test_fingerprint64_udf_null_text_is_null(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: r["udf"]
-        for r in df.select("doc_id", textstats.fingerprint64_udf()("text").alias("udf")).collect()
+        for r in df.select("doc_id", textstats.fingerprint64_udf("text").alias("udf")).collect()
     }
     assert got == {i: _fingerprint_spec(t) for i, t in rows}
     assert sorted(i for i, v in got.items() if v is None) == [2, 5]
