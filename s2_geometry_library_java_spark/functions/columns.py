@@ -69,10 +69,6 @@ def range_max_biased(cell_id) -> Column:
     return biased(range_max(cell_id))
 
 
-def is_leaf(cell_id) -> Column:
-    return _c(cell_id).bitwiseAND(F.lit(1)) == F.lit(1)
-
-
 def face(cell_id) -> Column:
     """face = unsigned id >> 61 (use the biased trick to emulate >>> in SQL)."""
     return F.shiftrightunsigned(_c(cell_id), 61).bitwiseAND(F.lit(7)).cast("int")

@@ -19,8 +19,6 @@ any hot path):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -197,113 +195,6 @@ def crossing_edge_pairs(
     )
 
 
-def crossing_edges_for_edges(
-    index: DataFrame,
-    query_edges: DataFrame,
-    level: int = 8,
-    crossing_type: str = "interior",
-    candidates_only: bool = False,
-    query_id: str = "query_id",
-) -> DataFrame:
-    """S2CrossingEdgeQuery: index edges crossed by each query edge.
-
-    The reference's one-edge-at-a-time query (S2CrossingEdgeQuery.java:
-    36-44 — "finds edges or shapes that are crossed by one edge at a
-    time"; see crossing_edge_pairs for the bulk index-vs-index form its
-    docs point to). ``query_edges`` carries (query_id, a_lat, a_lng,
-    b_lat, b_lng) in degrees; ``index`` is a shape_index_df built with
-    min_level >= ``level`` so the cell equi-join covers every candidate
-    (same completeness argument as crossing_edge_pairs).
-
-    * ``candidates_only=True`` — getCandidates semantics
-      (S2CrossingEdgeQuery.java:114-157): the superset of index edges
-      whose index cells intersect the query edge's level-``level``
-      covering, no crossing test.
-    * otherwise getCrossings (S2CrossingEdgeQuery.java:95-104): pairs
-      where robustCrossing >= the CrossingType threshold — "interior"
-      keeps proper crossings (+1), "all" also keeps shared-vertex
-      touches (0) and adds the ``is_interior`` flag.
-
-    Each query edge's covering is built independently (the reference
-    class targets "just a few edges" not worth bulk-indexing), but the
-    whole batch crosses the Arrow boundary once and the join + crossing
-    tiers run JVM-side."""
-    if crossing_type not in ("interior", "all"):
-        raise ValueError(f"crossing_type must be interior|all: {crossing_type}")
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-    )
-
-    from ..functions import columns as cc
-
-    out_schema = StructType([
-        StructField("query_id", StringType()),
-        StructField("cell_key", LongType()),
-        StructField("cx", DoubleType()), StructField("cy", DoubleType()),
-        StructField("cz", DoubleType()),
-        StructField("dx", DoubleType()), StructField("dy", DoubleType()),
-        StructField("dz", DoubleType()),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernel import cellid as ci
-        from ..kernel import shapeindex as si
-
-        for pdf in batches:
-            ax_, ay_, az_ = ci.latlng_to_xyz(
-                np.radians(pdf["a_lat"].to_numpy(np.float64)),
-                np.radians(pdf["a_lng"].to_numpy(np.float64)),
-            )
-            bx_, by_, bz_ = ci.latlng_to_xyz(
-                np.radians(pdf["b_lat"].to_numpy(np.float64)),
-                np.radians(pdf["b_lng"].to_numpy(np.float64)),
-            )
-            rows = {k: [] for k in out_schema.fieldNames()}
-            for i, qid in enumerate(pdf["qid"]):
-                va = np.array([[ax_[i], ay_[i], az_[i]]])
-                vb = np.array([[bx_[i], by_[i], bz_[i]]])
-                # exactly-level-`level` cells intersecting this edge
-                for cid, edge_ids, _ in si.build_edge_soup_index(
-                    va, vb, max_edges_per_cell=1,
-                    max_level=level, min_level=level,
-                ):
-                    if len(edge_ids) == 0:
-                        continue
-                    rows["query_id"].append(qid)
-                    rows["cell_key"].append(
-                        int(np.int64(np.uint64(cid)))
-                    )
-                    rows["cx"].append(float(va[0, 0]))
-                    rows["cy"].append(float(va[0, 1]))
-                    rows["cz"].append(float(va[0, 2]))
-                    rows["dx"].append(float(vb[0, 0]))
-                    rows["dy"].append(float(vb[0, 1]))
-                    rows["dz"].append(float(vb[0, 2]))
-            yield pd.DataFrame(rows)
-
-    q = (
-        query_edges.select(
-            F.col(query_id).cast("string").alias("qid"),
-            "a_lat", "a_lng", "b_lat", "b_lng",
-        )
-        .mapInPandas(gen, out_schema)
-        # route through the same parent() expression as the index side so
-        # the signed-id join key representation is bit-identical
-        .withColumn("cell_key", cc.parent("cell_key", level))
-    )
-    idx = index.select(
-        "shape_id", "edge_id",
-        "ax", "ay", "az", "bx", "by", "bz",
-        cc.parent("cell_id", level).alias("cell_key"),
-    ).dropDuplicates(["shape_id", "edge_id", "cell_key"])
-    cand = idx.join(F.broadcast(q), "cell_key").dropDuplicates(
-        ["query_id", "shape_id", "edge_id"]
-    )
-    if candidates_only:
-        return cand.select("query_id", "shape_id", "edge_id")
-    return _crossing_tiers(cand, ("query_id", "shape_id", "edge_id"), crossing_type)
-
-
 def directed_hausdorff_brute(
     points: DataFrame,
     edges: DataFrame,
@@ -391,67 +282,6 @@ def directed_hausdorff(
     )
     return _directed_hausdorff_xyz(pts, edges, sample_step).select(
         "shape_id", "worst_point_id", "chord2"
-    )
-
-
-def directed_hausdorff_index(
-    edges_a: DataFrame,
-    edges_b: DataFrame,
-    sample_step: int = 8,
-    refine: int = 4,
-) -> DataFrame:
-    """Index <-> index directed Hausdorff (S2HausdorffDistanceQuery.java:28+
-    over S2BestEdgesQueryBase): per (a_shape, b_shape) pair, the point ON
-    A's boundary farthest from B's boundary. The point set fed to the
-    pruned point->boundary search is A's vertex set DENSIFIED ``refine``x
-    (each A edge contributes its start plus interior slerp samples),
-    because the true directed Hausdorff supremum can fall in an edge
-    interior; the densification error is bounded by half the largest
-    refined sub-edge length, reported per a_shape as ``max_error_rad``.
-
-    Output: (a_shape, b_shape, worst_point_id, chord2, max_error_rad) with
-    worst_point_id = a_edge * refine + sample index. Fully vectorized over
-    all (a_shape, b_shape) pairs — no driver loop."""
-    e_a = edges_a.dropDuplicates(["shape_id", "edge_id"]).select(
-        F.col("shape_id").alias("a_shape"),
-        "edge_id",
-        "ax", "ay", "az", "bx", "by", "bz",
-    )
-    t = F.explode(F.array(*[F.lit(k / refine) for k in range(refine)])).alias("t")
-    samples = e_a.select(
-        "a_shape", "edge_id", "ax", "ay", "az", "bx", "by", "bz", t
-    )
-    chord2_ab = (
-        (F.col("ax") - F.col("bx")) ** 2
-        + (F.col("ay") - F.col("by")) ** 2
-        + (F.col("az") - F.col("bz")) ** 2
-    )
-    ang = F.lit(2.0) * F.asin(F.lit(0.5) * F.sqrt(chord2_ab))
-    sa_ = F.sin((F.lit(1.0) - F.col("t")) * ang) / F.sin(ang)
-    sb_ = F.sin(F.col("t") * ang) / F.sin(ang)
-    px = F.when(F.col("t") > 0, sa_ * F.col("ax") + sb_ * F.col("bx")).otherwise(F.col("ax"))
-    py = F.when(F.col("t") > 0, sa_ * F.col("ay") + sb_ * F.col("by")).otherwise(F.col("ay"))
-    pz = F.when(F.col("t") > 0, sa_ * F.col("az") + sb_ * F.col("bz")).otherwise(F.col("az"))
-    nrm = F.sqrt(px * px + py * py + pz * pz)
-    pts = samples.select(
-        "a_shape",
-        (F.col("edge_id").cast("long") * refine
-         + (F.col("t") * refine).cast("long")).alias("point_id"),
-        (px / nrm).alias("px"),
-        (py / nrm).alias("py"),
-        (pz / nrm).alias("pz"),
-        (ang / (2 * refine)).alias("half_gap"),
-    )
-    err = pts.groupBy("a_shape").agg(F.max("half_gap").alias("max_error_rad"))
-    out = _directed_hausdorff_xyz(
-        pts.select("a_shape", "point_id", "px", "py", "pz"), edges_b, sample_step
-    )
-    return out.join(F.broadcast(err), "a_shape").select(
-        "a_shape",
-        F.col("shape_id").alias("b_shape"),
-        "worst_point_id",
-        "chord2",
-        "max_error_rad",
     )
 
 

@@ -61,20 +61,9 @@ def index_terms(
     level_mod: int = 1,
     optimize_for_space: bool = False,
     doc_id: str = "shape_id",
-    only_points_indexed: bool = False,
 ) -> DataFrame:
     """(doc_id, term) rows for covering rows (doc_id, cell_id)
-    (S2IndexingHelperImpl.getIndexTerms(Iterable<S2CellId>)).
-
-    ``only_points_indexed=True`` declares a points-only index; region
-    documents cannot be added to it (the reference throws,
-    S2IndexingHelper.java points-only contract) — use point_index_terms
-    for the documents of such an index."""
-    if only_points_indexed:
-        raise ValueError(
-            "points-only index: region documents cannot be indexed "
-            "(use point_index_terms)"
-        )
+    (S2IndexingHelperImpl.getIndexTerms(Iterable<S2CellId>))."""
     lvl = cc.level("cell_id")
     tok = cc.token("cell_id")
     own = [
@@ -102,7 +91,6 @@ def query_terms(
     max_level: int,
     level_mod: int = 1,
     optimize_for_space: bool = False,
-    only_points_indexed: bool = False,
     query_id: str = "query_id",
 ) -> DataFrame:
     """(query_id, term) rows for query covering rows
@@ -110,15 +98,12 @@ def query_terms(
     lvl = cc.level("cell_id")
     tok = cc.token("cell_id")
     own = [tok]
-    if not only_points_indexed and optimize_for_space:
+    if optimize_for_space:
         # RULE 3: look up non-leaf query cells as covering terms too
         own.append(F.when(lvl < max_level, F.concat(F.lit("$"), tok)))
-    anc = (
-        F.array()
-        if only_points_indexed
-        else _ancestor_terms(min_level, max_level, level_mod, "$")
+    terms = F.concat(
+        F.array(*own), _ancestor_terms(min_level, max_level, level_mod, "$")
     )
-    terms = F.concat(F.array(*own), anc)
     return (
         coverings.select(
             F.col(query_id).alias("query_id"),
@@ -126,58 +111,6 @@ def query_terms(
         )
         .distinct()
     )
-
-
-def point_index_terms(
-    points: DataFrame,
-    min_level: int,
-    max_level: int,
-    level_mod: int = 1,
-    doc_id: str = "id",
-    lat: str = "lat",
-    lng: str = "lng",
-) -> DataFrame:
-    """(doc_id, term) for point documents (RULE 4): the max_level cell's
-    ancestor terms at every valid level, no covering terms."""
-    from ..functions import udfs
-
-    cell = udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), max_level)
-    terms = F.array(
-        *[
-            cc.token(cc.parent(cell, L))
-            for L in _valid_levels(min_level, max_level, level_mod)
-        ]
-    )
-    return points.select(
-        F.col(doc_id).alias("doc_id"), F.explode(terms).alias("term")
-    ).distinct()
-
-
-def point_query_terms(
-    points: DataFrame,
-    min_level: int,
-    max_level: int,
-    level_mod: int = 1,
-    only_points_indexed: bool = False,
-    query_id: str = "query_id",
-    lat: str = "lat",
-    lng: str = "lng",
-) -> DataFrame:
-    """(query_id, term) for point queries (RULE 6): the deepest valid
-    level(s) as ancestor terms, shallower ancestors as covering terms
-    (dropped entirely when only points were indexed, RULE 5)."""
-    from ..functions import udfs
-
-    cell = udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), max_level)
-    terms = []
-    for L in _valid_levels(min_level, max_level, level_mod):
-        if (max_level - L) < level_mod:
-            terms.append(cc.token(cc.parent(cell, L)))
-        elif not only_points_indexed:
-            terms.append(F.concat(F.lit("$"), cc.token(cc.parent(cell, L))))
-    return points.select(
-        F.col(query_id).alias("query_id"), F.explode(F.array(*terms)).alias("term")
-    ).distinct()
 
 
 def term_matches(doc_terms: DataFrame, q_terms: DataFrame) -> DataFrame:

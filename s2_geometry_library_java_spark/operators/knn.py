@@ -22,7 +22,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd  # resolves the pandas_udf type hints in this module
 from pyspark.sql import DataFrame, functions as F
 
 from . import ringsearch
@@ -121,37 +120,6 @@ def effective_max_chord2(
     if distance_cap == "conservative":
         return sphere.conservative_max_chord2(float(max_chord2), edges=edges)
     raise ValueError(f"unknown distance_cap: {distance_cap!r}")
-
-
-def filter_neighbors_in_region(results: DataFrame, index: DataFrame, region,
-                               index_id: str = "id", lat: str = "lat",
-                               lng: str = "lng") -> DataFrame:
-    """F4 region-filter option (S2ClosestPointQuery.Options.setRegion):
-    keep only result neighbors whose index point lies inside ``region``
-    (any kernel region with contains_points). One Arrow-batched UDF over
-    the joined-back index coordinates; ranks are NOT recomputed — like
-    the reference, the filter composes with k (you may get fewer than k
-    in-region neighbors)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BooleanType
-
-    @pandas_udf(BooleanType())
-    def inside(lat_s: pd.Series, lng_s: pd.Series) -> pd.Series:
-        x, y, z = s2.latlng_to_xyz(
-            np.radians(lat_s.to_numpy()), np.radians(lng_s.to_numpy())
-        )
-        return pd.Series(np.asarray(region.contains_points(x, y, z), dtype=bool))
-
-    coords = index.select(
-        F.col(index_id).alias("neighbor_id"),
-        F.col(lat).alias("_nlat"),
-        F.col(lng).alias("_nlng"),
-    )
-    return (
-        results.join(F.broadcast(coords), "neighbor_id")
-        .where(inside(F.col("_nlat"), F.col("_nlng")))
-        .drop("_nlat", "_nlng")
-    )
 
 
 def knn_cell_join(

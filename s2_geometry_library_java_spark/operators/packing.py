@@ -1,6 +1,6 @@
 """Sequence packing for training-data pipelines.
 
-Two operators a 100-TB pretraining pipeline needs after token counting
+Operators a 100-TB pretraining pipeline needs after token counting
 (operators/textstats.py):
 
 - ``with_chunk_assignments``: concat-and-chunk. Documents are
@@ -14,18 +14,12 @@ Two operators a 100-TB pretraining pipeline needs after token counting
   driver-cumulated per-partition offsets back via a broadcast join.
   The driver state is one row per partition — O(partitions), not
   O(rows) — so the shape survives 10^12 docs.
-
-- ``greedy_pack``: whole-document bin packing. Documents never split;
-  within each shard, docs are packed first-fit in id order into packs
-  of at most ``budget`` tokens (an oversized doc gets its own pack).
-  The per-shard fill state is inherently sequential, so it runs as one
-  Arrow pass per shard (applyInPandas) — shards are the parallelism
-  unit, exactly how packing runs in production loaders.
+- ``sliding_chunks``: RAG-style overlapping fixed-width token chunks,
+  each with a content hash.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -161,38 +155,4 @@ def sliding_chunks(
         tok_end.alias("tok_end"),
         (tok_end - tok_start).alias("n_tokens"),
         hash32(F.array_join(words, " "), 5).alias("chunk_hash"),
-    )
-
-
-def greedy_pack(
-    df: DataFrame,
-    budget: int,
-    shard_col: str,
-    id_col: str = "doc_id",
-    tokens_col: str = "re_tokens",
-) -> DataFrame:
-    """(shard, id, pack_id, pack_fill): first-fit greedy packing in
-    ``id_col`` order within each shard; docs never split; a doc larger
-    than ``budget`` occupies its own pack. One Arrow pass per shard."""
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        fills, packs = [], []
-        fill, pack_id = 0, 0
-        for t in pdf[tokens_col].astype("int64"):
-            if fill > 0 and fill + t > budget:
-                pack_id += 1
-                fill = 0
-            fill += int(t)
-            packs.append(pack_id)
-            fills.append(fill)
-        pdf["pack_id"] = pd.Series(packs, dtype="int64")
-        pdf["pack_fill"] = pd.Series(fills, dtype="int64")
-        return pdf[[shard_col, id_col, "pack_id", "pack_fill"]]
-
-    out_schema = (
-        f"{shard_col} long, {id_col} long, pack_id long, pack_fill long"
-    )
-    return df.select(shard_col, id_col, tokens_col).groupBy(shard_col).applyInPandas(
-        pack, out_schema
     )

@@ -15,9 +15,9 @@ Spark exactly as SURVEY.md §3.2 plans:
    candidates return True inside it without touching the kernel, the
    boundary sliver runs the polygon's own crossing parity.
 
-pip_join, shapes.pip_join_indexed, streaming.geofence.geofence_hits and
-tolerant.within_distance_of_polygons all build their candidates with
-step 3; the tolerant path swaps step 4 for its distance UDF.
+pip_join, shapes.pip_join_indexed and tolerant.within_distance_of_polygons
+all build their candidates with step 3; the tolerant path swaps step 4 for
+its distance UDF.
 
 At 100 TB the point table never shuffles: the covering table is O(polygons
 x max_cells) rows and broadcasts; the PIP kernel sees only boundary-cell
@@ -106,13 +106,11 @@ def leaf_points(
     lat: str = "lat",
     lng: str = "lng",
     leaf_col: str | None = None,
-    carry: tuple = (),
 ) -> DataFrame:
-    """(*carry, point_id, lat, lng, leaf): the leaf cell id comes from the
-    Arrow encoder unless the caller already has one in ``leaf_col``."""
+    """(point_id, lat, lng, leaf): the leaf cell id comes from the Arrow
+    encoder unless the caller already has one in ``leaf_col``."""
     leaf = F.col(leaf_col) if leaf_col else udfs.cell_id_from_latlng_deg(F.col(lat), F.col(lng), 30)
     return points.select(
-        *carry,
         F.col(point_id).alias("point_id"),
         F.col(lat).alias("lat"),
         F.col(lng).alias("lng"),

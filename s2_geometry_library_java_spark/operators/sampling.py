@@ -1,14 +1,13 @@
 """Deterministic sampling for training-mix construction.
 
 Sampling a 100-TB corpus must be reproducible (re-runs and backfills
-pick the SAME rows), seedable, and shuffle-free. Both operators here
-decide membership from a pure integer hash of the row id — a 31-bit
-LCG step (the same java.util.Random multiplier family the reference's
+pick the SAME rows) and seedable. The exact-count and training-mix
+samples rank rows by a pure integer hash of the row id — a 31-bit LCG
+step (the same java.util.Random multiplier family the reference's
 TestDataGenerator uses, kernel/javarandom.py) — evaluated as plain
-Column arithmetic: no RNG state, no UDF, no shuffle for rate sampling,
-one per-stratum shuffle for exact-count sampling. Every expression is
-mirrorable in ANSI SQL (the tests run the DuckDB twin), keeping the
-engine's everything-has-an-oracle property.
+Column arithmetic: no RNG state, no UDF, one per-stratum shuffle.
+Every expression is mirrorable in ANSI SQL (the tests run the DuckDB
+twin), keeping the engine's everything-has-an-oracle property.
 """
 
 from __future__ import annotations
@@ -36,25 +35,6 @@ def hash01_sql(id_expr: str, seed: int) -> str:
     u = f"(({u}) * {_A} + {_C}) % {_M}"
     u = f"(({u}) * {_A} + {_C}) % {_M}"
     return f"CAST({u} AS DOUBLE) / {_M}.0"
-
-
-def stratified_rate_sample(
-    df: DataFrame,
-    rates: dict[str, float],
-    stratum_col: str,
-    id_col: str = "doc_id",
-    seed: int = 0,
-    default_rate: float = 0.0,
-) -> DataFrame:
-    """Keep each row iff hash01(id) < rates[stratum]: a per-stratum
-    Bernoulli sample that is a pure filter — no shuffle, no state, and
-    membership is stable under re-runs, repartitioning, and appends
-    (a row's verdict depends only on its id and the seed). Strata not
-    in ``rates`` fall back to ``default_rate``."""
-    rate = F.lit(float(default_rate))
-    for k, v in sorted(rates.items()):
-        rate = F.when(F.col(stratum_col) == k, F.lit(float(v))).otherwise(rate)
-    return df.where(_hash01(F.col(id_col), seed) < rate)
 
 
 def mixture_allocation(

@@ -4,8 +4,8 @@ transforms over a polygon TABLE (no driver-side coverer loop).
 This is the scale path SURVEY §2.D/§2.E planned: with 10^4-10^6 polygons
 the per-shape work (coverer priority queue, edge clipping) runs inside
 mapInPandas over the shapes table. pip_join_indexed collects the covering
-rows and the parsed polygons and hands them to operators/pip's candidate
-join and exact filter.
+rows and the shape texts in one pass and hands them, with the parsed
+polygons, to operators/pip's candidate join and exact filter.
 
 Shapes are rows (shape_id string, text string) in the S2TextFormat polygon
 grammar ('lat:lng, ...; ...' — S2TextFormat.java:484-495), the engine's
@@ -35,6 +35,19 @@ def _parse_polygon(text: str):
 _COVERING_SCHEMA = "shape_id string, cell_id long, is_interior boolean"
 
 
+def _covering_cells(coverer, text: str) -> list[tuple[int, bool]]:
+    """(signed cell_id, is_interior) for each cell of one polygon's covering."""
+    from ..kernel import region as rg
+    from ..kernel.cell import Cell
+
+    poly = _parse_polygon(text)
+    contains_cell, _, _ = rg.region_cell_tests(poly)
+    return [
+        (int(s2.to_signed(np.uint64(cid))[0]), bool(contains_cell(Cell(cid))))
+        for cid in coverer.get_covering(poly)
+    ]
+
+
 def coverings_df(shapes: DataFrame, max_cells: int = 8,
                  id_col: str = "shape_id", text_col: str = "text",
                  min_level: int = 0, max_level: int = 30,
@@ -46,25 +59,18 @@ def coverings_df(shapes: DataFrame, max_cells: int = 8,
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernel import coverer as cov
-        from ..kernel import region as rg
-        from ..kernel.cell import Cell
 
         coverer = cov.RegionCoverer(
             max_cells=max_cells, min_level=min_level, max_level=max_level,
             level_mod=level_mod,
         )
         for pdf in batches:
-            out_sid, out_cid, out_int = [], [], []
-            for sid, text in zip(pdf[id_col], pdf[text_col]):
-                poly = _parse_polygon(text)
-                contains_cell, _, _ = rg.region_cell_tests(poly)
-                for cid in coverer.get_covering(poly):
-                    out_sid.append(sid)
-                    out_cid.append(int(s2.to_signed(np.uint64(cid))[0]))
-                    out_int.append(bool(contains_cell(Cell(cid))))
-            yield pd.DataFrame(
-                {"shape_id": out_sid, "cell_id": out_cid, "is_interior": out_int}
-            )
+            rows = [
+                (sid, cid, interior)
+                for sid, text in zip(pdf[id_col], pdf[text_col])
+                for cid, interior in _covering_cells(coverer, text)
+            ]
+            yield pd.DataFrame(rows, columns=["shape_id", "cell_id", "is_interior"])
 
     return shapes.select(F.col(id_col).alias(id_col), F.col(text_col)).mapInPandas(
         gen, _COVERING_SCHEMA
@@ -133,15 +139,33 @@ def pip_join_indexed(
 
     Same plan as pip.pip_join (one ancestor-level broadcast hash join,
     then the one exact filter with interior fast-accept), but the coverer
-    runs on the executors over the shapes table (coverings_df). Its rows
-    (<= max_cells per shape) are collected once and re-shipped as the
-    local broadcast side, and the exact filter gets the parsed polygons in
-    its closure: no geometry column rides on the candidate rows.
+    runs on the executors over the shapes table, as in coverings_df. One
+    pass over the shapes and one collect bring back its rows (<= max_cells per
+    shape), re-shipped as the local broadcast side, and each shape's text,
+    parsed into the exact filter's closure: no geometry column rides on
+    the candidate rows. A shape with an empty covering has no candidates,
+    so the filter never needs its polygon.
     """
-    rows = [tuple(r) for r in coverings_df(shapes, max_cells=max_cells).collect()]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from ..kernel import coverer as cov
+
+        coverer = cov.RegionCoverer(max_cells=max_cells)
+        for pdf in batches:
+            # the text rides on each shape's first covering row only
+            rows = [
+                (sid, cid, interior, None if k else text)
+                for sid, text in zip(pdf["shape_id"], pdf["text"])
+                for k, (cid, interior) in enumerate(_covering_cells(coverer, text))
+            ]
+            yield pd.DataFrame(rows, columns=["shape_id", "cell_id", "is_interior", "text"])
+
+    collected = shapes.select("shape_id", "text").mapInPandas(
+        gen, _COVERING_SCHEMA + ", text string"
+    ).collect()
+    rows = [(sid, cid, interior) for sid, cid, interior, _ in collected]
     polygons = {
-        sid: _parse_polygon(text)
-        for sid, text in shapes.select("shape_id", "text").collect()
+        sid: _parse_polygon(text) for sid, _, _, text in collected if text is not None
     }
     cand = pip.candidate_join(
         spark, pip.leaf_points(points, point_id, lat, lng, leaf_col), rows

@@ -126,10 +126,11 @@ def fingerprint64_udf(texts: pd.Series) -> pd.Series:
 
 def term_frequencies(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, word, tf) per-document term counts — the shared first stage of
-    vocab_topk and tfidf_top_terms. One shuffle keyed by (id, word) with
-    map-side combine. Both downstream views read it as it is: caching it
-    for two consumers (vocab and tfidf, or tfidf's own doc-frequency
-    aggregate) ran no faster in a cold A/B (sf0.01 and sf0.1)."""
+    vocab_topk_from_tf and tfidf_top_terms_from_tf. One shuffle keyed by
+    (id, word) with map-side combine. Both downstream views read it as it
+    is: caching it for two consumers (vocab and tfidf, or tfidf's own
+    doc-frequency aggregate) ran no faster in a cold A/B (sf0.01 and
+    sf0.1)."""
     return (
         df.select(_c(id_col).alias("id"), normalized_words(text_col).alias("w"))
         .select("id", F.explode("w").alias("word"))
@@ -140,9 +141,16 @@ def term_frequencies(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def vocab_topk_from_tf(tf: DataFrame, k: int = 100) -> DataFrame:
-    """vocab_topk over a precomputed term_frequencies table: the global
-    word count is the sum of per-doc counts (identical integers), so the
-    corpus tokenization is shared instead of re-run."""
+    """Corpus vocabulary over a term_frequencies table: global top-k words
+    by total count, ties broken by word ascending; returns (word, n, rank)
+    with rank 1..k. The global word count is the sum of per-doc counts.
+
+    Scale shape: the only shuffle is keyed by word (cardinality = vocab
+    size, NOT corpus size), then orderBy().limit(k) — Spark plans that as
+    TakeOrderedAndProject (per-partition heap + driver merge of k rows per
+    partition), never a full sort. The rank window runs over the k-row
+    result only.
+    """
     counts = tf.groupBy("word").agg(F.sum("tf").alias("n"))
     top = counts.orderBy(F.desc("n"), F.asc("word")).limit(k)
     rank_w = Window.orderBy(F.desc("n"), F.asc("word"))
@@ -150,7 +158,22 @@ def vocab_topk_from_tf(tf: DataFrame, k: int = 100) -> DataFrame:
 
 
 def tfidf_top_terms_from_tf(tf: DataFrame, top_n: int = 3) -> DataFrame:
-    """tfidf_top_terms over a precomputed term_frequencies table."""
+    """Per-document top-n keywords by an integer-exact TF-IDF variant, over
+    a term_frequencies table.
+
+    idf here is the raw reciprocal document frequency (no log), quantized
+    so the score is exact integer arithmetic on both engines:
+    ``score_q = (tf * 1_000_000) div doc_freq`` — Spark ``DIV`` ==
+    DuckDB ``//`` on non-negative longs, so the gate hash-matches without
+    any float in the pipeline (same mirrored-algorithm rule as the other
+    approximate operators). Ranking within a doc by tf/df is the
+    idf-without-log member of the standard TF-IDF family.
+
+    Scale shape: one word-keyed aggregation for document frequency
+    (vocab-sized output — AQE broadcasts it back onto the term table when
+    small), one id-keyed window for the per-doc top-n. No step is
+    corpus-pairwise.
+    """
     dfreq = tf.groupBy("word").agg(F.count("*").alias("doc_freq"))
     scored = tf.join(dfreq, "word").withColumn(
         "score_q", F.expr("tf * 1000000 DIV doc_freq")
@@ -161,49 +184,6 @@ def tfidf_top_terms_from_tf(tf: DataFrame, top_n: int = 3) -> DataFrame:
         .where(F.col("rank") <= top_n)
         .select("id", "word", "tf", "doc_freq", "score_q", "rank")
     )
-
-
-def vocab_topk(df: DataFrame, text_col: str, k: int = 100) -> DataFrame:
-    """Corpus vocabulary: global top-k words by total count, ties broken by
-    word ascending; returns (word, n, rank) with rank 1..k.
-
-    Scale shape: explode -> groupBy(word) with map-side partial counts (the
-    only shuffle is keyed by word, cardinality = vocab size, NOT corpus
-    size), then orderBy().limit(k) — Spark plans that as
-    TakeOrderedAndProject (per-partition heap + driver merge of k rows per
-    partition), never a full sort. The rank window runs over the k-row
-    result only.
-    """
-    words = (
-        df.select(normalized_words(text_col).alias("w"))
-        .select(F.explode("w").alias("word"))
-        .where(F.col("word") != "")
-    )
-    counts = words.groupBy("word").agg(F.count("*").alias("n"))
-    top = counts.orderBy(F.desc("n"), F.asc("word")).limit(k)
-    rank_w = Window.orderBy(F.desc("n"), F.asc("word"))
-    return top.withColumn("rank", F.row_number().over(rank_w))
-
-
-def tfidf_top_terms(
-    df: DataFrame, id_col: str, text_col: str, top_n: int = 3
-) -> DataFrame:
-    """Per-document top-n keywords by an integer-exact TF-IDF variant.
-
-    idf here is the raw reciprocal document frequency (no log), quantized
-    so the score is exact integer arithmetic on both engines:
-    ``score_q = (tf * 1_000_000) div doc_freq`` — Spark ``DIV`` ==
-    DuckDB ``//`` on non-negative longs, so the gate hash-matches without
-    any float in the pipeline (same mirrored-algorithm rule as the other
-    approximate operators). Ranking within a doc by tf/df is the
-    idf-without-log member of the standard TF-IDF family.
-
-    Scale shape: one shuffle for (id, word) term counts (map-side combine),
-    one word-keyed aggregation for document frequency (vocab-sized output —
-    AQE broadcasts it back onto the term table when small), one id-keyed
-    window for the per-doc top-n. No step is corpus-pairwise.
-    """
-    return tfidf_top_terms_from_tf(term_frequencies(df, id_col, text_col), top_n)
 
 
 def grouped_percentiles(

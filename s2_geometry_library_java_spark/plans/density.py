@@ -186,47 +186,3 @@ def with_hot_cell_salt(
             F.pmod(F.xxhash64(*salt_src), F.col("n_salts")).cast("int"),
         ).otherwise(F.lit(0)),
     )
-
-
-class RegionSharder:
-    """Route query regions to partitions/shards (S2RegionSharder.java:58-128
-    intent): shards are the equal-weight Hilbert ranges from
-    equal_weight_boundaries; a region's covering intersects a subset of
-    them — queries then add ``partition_id IN (...)``, which Iceberg/parquet
-    metadata turns into file pruning."""
-
-    def __init__(self, boundaries_biased: list[int]):
-        self.boundaries = sorted(boundaries_biased)
-
-    def _shard_of(self, biased_id: int) -> int:
-        import bisect
-
-        return bisect.bisect_right(self.boundaries, biased_id)
-
-    def intersecting_shards(self, covering_ids: list[int]) -> list[int]:
-        """All shard indexes intersecting any covering cell's range."""
-        out: set[int] = set()
-        for cid in covering_ids:
-            u = np.uint64(cid)
-            lo = int(s2.to_biased(s2.range_min(u))[0])
-            hi = int(s2.to_biased(s2.range_max(u))[0])
-            out.update(range(self._shard_of(lo), self._shard_of(hi) + 1))
-        return sorted(out)
-
-    def most_intersecting_shard(self, covering_ids: list[int]) -> int:
-        """Shard overlapping the most covering leaf-range mass."""
-        from collections import Counter
-
-        weights: Counter = Counter()
-        for cid in covering_ids:
-            u = np.uint64(cid)
-            lo = int(s2.to_biased(s2.range_min(u))[0])
-            hi = int(s2.to_biased(s2.range_max(u))[0])
-            lo_s, hi_s = self._shard_of(lo), self._shard_of(hi)
-            if lo_s == hi_s:
-                weights[lo_s] += hi - lo + 1
-            else:
-                bounds = [lo] + self.boundaries[lo_s:hi_s] + [hi]
-                for s_idx, (a, b) in enumerate(zip(bounds, bounds[1:]), start=lo_s):
-                    weights[s_idx] += max(0, b - a)
-        return weights.most_common(1)[0][0] if weights else 0

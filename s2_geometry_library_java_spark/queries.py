@@ -2189,7 +2189,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated-substring spans (operators/dedup.repeated_window_spans,
     Lee-et-al-style 8-token window dedup with island merging) over docs
     plus their truncated twins, + corpus vocabulary top-k + per-doc
-    TF-IDF keywords (operators/textstats.vocab_topk / tfidf_top_terms).
+    TF-IDF keywords (operators/textstats.vocab_topk_from_tf /
+    tfidf_top_terms_from_tf).
     kind='doc' rows carry (key=content_md5, x=group_size, y=canonical_id);
     kind='span' rows carry (x=tok_start, y=tok_end, z=n_windows);
     kind='vocab' rows carry (id=rank, key=word, x=n);

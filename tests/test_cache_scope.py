@@ -17,7 +17,6 @@ from s2_geometry_library_java_spark.operators import (
     knn,
     ringsearch,
     similarity,
-    textstats,
 )
 from s2_geometry_library_java_spark.plans import cache
 from s2_geometry_library_java_spark.sources import tables
@@ -78,7 +77,6 @@ CALLS = {
                                   "embedding", n_centroids=8),
     "lsh_candidate_pairs": _table(dedup.lsh_candidate_pairs, _docs, "doc_id", "text"),
     "repeated_window_spans": _table(dedup.repeated_window_spans, _docs, "doc_id", "text"),
-    "tfidf_top_terms": _table(textstats.tfidf_top_terms, _docs, "doc_id", "text"),
 }
 
 #: jobs by which two identical calls may differ with nothing cached between

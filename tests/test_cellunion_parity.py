@@ -1,8 +1,8 @@
 """S2CellUnionTest parity (S2CellUnionTest.java:48-425): the addCells
 normalize property (inputs selected at every level with a predetermined
 expected normalization), containment monotonicity, and the union/contains
-basics — against union_normalize (kernel/coverer.py, D5/D6) and the
-distributed forms (operators/cellunion.py). RNG is numpy-seeded: geometry
+basics — against union_normalize (kernel/coverer.py, D5/D6). RNG is
+numpy-seeded: geometry
 family and invariants match the reference's test, draws are not
 seed-bit-matched."""
 
@@ -198,74 +198,3 @@ def test_expand_radius_covers_nearby_points():
             # drifted past the boundary; the expand guarantee still holds
             # because distance(q, union) <= ang <= radius
             assert covered(grown, leaf), (ang, radius)
-
-
-def _descendants(cid, levels_down):
-    """All descendants of ``cid`` ``levels_down`` levels below it."""
-    out = [cid]
-    for _ in range(levels_down):
-        nxt = []
-        for p in out:
-            child = _child_begin(p)
-            for _pos in range(4):
-                nxt.append(child)
-                child = _next(child)
-        out = nxt
-    return out
-
-
-def _cell_df(spark, ids):
-    return spark.createDataFrame(
-        [(int(np.uint64(i).astype(np.int64)),) for i in ids], "cell_id long"
-    )
-
-
-def _unsigned_sorted(df):
-    return sorted(int(np.int64(r["cell_id"]).astype(np.uint64)) for r in df.collect())
-
-
-def test_collapse_siblings_plan_is_linear_in_rounds(spark):
-    """Each collapse round reads its input once: four rounds over a
-    64-row range plan keep at most four Range leaves (the group-then-
-    anti-join form read each round's input twice and planned 360), and
-    the 64 level-3 descendants of a face collapse back to the face."""
-    from pyspark.sql import functions as F
-
-    from s2_geometry_library_java_spark.operators import cellunion
-
-    face0 = _from_face(0)
-    ids = _descendants(face0, 3)
-    lsb = ids[0] & -ids[0]
-    df = spark.range(64).select(
-        (F.lit(ids[0]) + F.col("id") * F.lit(2 * lsb)).alias("cell_id")
-    )
-    out = cellunion.collapse_siblings_df(df, rounds=4)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Range (") <= 4, plan.count("Range (")
-    assert _unsigned_sorted(out) == [face0]
-
-
-def test_normalize_df_equals_union_normalize(spark):
-    """normalize_df == kernel union_normalize on unions of random cap
-    coverings plus the complete 1-, 2- and 3-level descendant sets of
-    random cells, which only sibling collapsing folds back."""
-    from s2_geometry_library_java_spark.kernel import region as rg
-    from s2_geometry_library_java_spark.operators import cellunion
-
-    rng = np.random.RandomState(17)
-    coverer = cov.RegionCoverer(max_cells=12)
-    for _ in range(3):
-        ids = []
-        for _cap in range(4):
-            cap = rg.Cap.from_latlng_deg(
-                float(rng.uniform(-60, 60)), float(rng.uniform(-170, 170)),
-                float(rng.uniform(1, 15)),
-            )
-            ids.extend(int(i) for i in coverer.get_covering(cap))
-        for depth in (1, 2, 3):
-            leaf = c.latlng_to_cell_id(
-                np.radians(rng.uniform(-60, 60, 1)), np.radians(rng.uniform(-170, 170, 1))
-            )
-            ids.extend(_descendants(int(c.parent(leaf, rng.randint(4, 12))[0]), depth))
-        want = sorted(cov.union_normalize(ids))
-        assert _unsigned_sorted(cellunion.normalize_df(_cell_df(spark, ids))) == want

@@ -253,44 +253,6 @@ def test_hausdorff_pruned_equals_brute(spark):
     assert got[0]["chord2"] == want[0]["chord2"]
 
 
-def test_hausdorff_index_to_index(spark):
-    """Index<->index directed Hausdorff: witness within the reported
-    densification error of a dense numpy brute answer."""
-    from s2_geometry_library_java_spark.kernel import edges as ekk
-    from s2_geometry_library_java_spark.operators import edgequeries
-    from s2_geometry_library_java_spark.operators import shapes as shape_ops
-
-    sa = spark.createDataFrame(
-        [("A", "0.0:0.0, 0.0:10.0, 10.0:10.0, 10.0:0.0")],
-        "shape_id string, text string",
-    )
-    sb = spark.createDataFrame(
-        [("B", "2.0:2.0, 2.0:8.0, 8.0:8.0, 8.0:2.0")],
-        "shape_id string, text string",
-    )
-    ia = shape_ops.shape_index_df(sa)
-    ib = shape_ops.shape_index_df(sb)
-    out = edgequeries.directed_hausdorff_index(ia, ib, refine=8).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["a_shape"] == "A" and r["b_shape"] == "B"
-    got_ang = 2 * np.arcsin(0.5 * np.sqrt(r["chord2"]))
-    # dense numpy truth: max over dense A-boundary samples of min distance
-    # to B's boundary
-    va = rg.Polygon.from_text("0.0:0.0, 0.0:10.0, 10.0:10.0, 10.0:0.0").loops[0].vertices
-    vb = rg.Polygon.from_text("2.0:2.0, 2.0:8.0, 8.0:8.0, 8.0:2.0").loops[0].vertices
-    dense = []
-    for k in range(4):
-        a, b = va[k], va[(k + 1) % 4]
-        for t in np.linspace(0, 1, 400, endpoint=False):
-            p = (1 - t) * a + t * b
-            dense.append(p / np.linalg.norm(p))
-    dense = np.asarray(dense)
-    d2 = ekk.min_chord2_points_to_chain(dense, vb, np.roll(vb, -1, axis=0))
-    want_ang = float(2 * np.arcsin(0.5 * np.sqrt(d2.max())))
-    assert abs(got_ang - want_ang) <= r["max_error_rad"] + 1e-6
-
-
 def test_hausdorff_pruned_tiny_hole_chain_aware(spark):
     """A shape with a 4-edge hole (smaller than sample_step): the
     chain-aware gap bound must keep the pruned witness identical to
@@ -409,64 +371,3 @@ def test_crossing_pairs_all_includes_shared_vertices(spark):
     # the exact-copy shape contributes 4 same-edge + 8 adjacent pairs
     assert sum(1 for (ka, i, kb, j), v in want.items()
                if ka == "a0" and kb == "a0c" and not v) == 12
-
-
-def test_crossing_edges_for_edges_matches_brute(spark):
-    """S2CrossingEdgeQuery per-edge getCrossings/getCandidates vs brute
-    force over every index edge (S2CrossingEdgeQuery.java:95-157)."""
-    from s2_geometry_library_java_spark.operators import edgequeries
-    from s2_geometry_library_java_spark.operators import shapes as shape_ops
-
-    specs = {"p0": (10.0, 10.0, 4.0), "p1": (-20.0, 100.0, 5.0)}
-    shapes = spark.createDataFrame(
-        [(k, _quad_text_(*v)) for k, v in specs.items()],
-        "shape_id string, text string")
-    idx = shape_ops.shape_index_df(shapes, min_level=5)
-    # q0 slices through p0; q1 far away; q2 shares the exact SW corner
-    # vertex of p0 (6.0, 6.0) but does not properly cross anything
-    qrows = [
-        ("q0", 8.0, 4.0, 12.0, 16.0),
-        ("q1", 80.0, 0.0, 80.0, 10.0),
-        ("q2", 6.0, 6.0, 2.0, 2.0),
-    ]
-    qdf = spark.createDataFrame(
-        qrows, "query_id string, a_lat double, a_lng double, b_lat double, b_lng double")
-
-    got_int = {
-        (r["query_id"], r["shape_id"], r["edge_id"])
-        for r in edgequeries.crossing_edges_for_edges(idx, qdf, level=5).collect()
-    }
-    got_all = {
-        (r["query_id"], r["shape_id"], r["edge_id"]): r["is_interior"]
-        for r in edgequeries.crossing_edges_for_edges(
-            idx, qdf, level=5, crossing_type="all").collect()
-    }
-    cands = {
-        (r["query_id"], r["shape_id"], r["edge_id"])
-        for r in edgequeries.crossing_edges_for_edges(
-            idx, qdf, level=5, candidates_only=True).collect()
-    }
-
-    def pt(lat, lng):
-        x, y, z = s2.latlng_to_xyz(np.radians(np.array([lat])),
-                                   np.radians(np.array([lng])))
-        return np.array([x[0], y[0], z[0]])
-
-    want_all = {}
-    for qid, alat, alng, blat, blng in qrows:
-        A, B = pt(alat, alng), pt(blat, blng)
-        for sid, spec in specs.items():
-            pv = rg.Polygon.from_text(_quad_text_(*spec)).loops[0].vertices
-            for j in range(4):
-                C, D = pv[j], pv[(j + 1) % 4]
-                if any((P == Q).all() for P in (A, B) for Q in (C, D)):
-                    want_all[(qid, sid, j)] = False
-                elif predicates._arcs_cross_scalar(C, D, A, B):
-                    want_all[(qid, sid, j)] = True
-    assert got_all == want_all
-    assert got_int == {k for k, v in want_all.items() if v}
-    # shared-corner query edge is reported, and only via the vertex touch
-    assert any(q == "q2" and v is False for (q, s, e), v in got_all.items())
-    assert not any(q == "q1" for (q, s, e) in got_all)
-    # getCandidates is a superset of getCrossings
-    assert set(got_all) <= cands

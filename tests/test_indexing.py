@@ -1,8 +1,5 @@
 """S2IndexingHelper term generation (operators/indexing.py): retrieval
-equivalence across modes, point rules, and hierarchy completeness."""
-
-import numpy as np
-from pyspark.sql import functions as F
+equivalence across the space and complexity modes."""
 
 from s2_geometry_library_java_spark.operators import indexing
 from s2_geometry_library_java_spark.operators import shapes as shp
@@ -51,51 +48,3 @@ def test_space_and_complexity_modes_retrieve_identically(spark):
     n_space = indexing.index_terms(dcov, optimize_for_space=True, **LV).count()
     n_cplx = indexing.index_terms(dcov, optimize_for_space=False, **LV).count()
     assert n_space <= n_cplx
-
-
-def test_point_rules(spark):
-    """RULES 4-6: point documents index only ancestor terms; point
-    queries hit exactly the documents whose region contains the point
-    (up to covering slack); only_points_indexed drops covering lookups
-    without changing point->point matching."""
-    docs = spark.createDataFrame(
-        [("d0", _quad(20, 20, 10.0)), ("d1", _quad(-40, -120, 3.0))],
-        "shape_id string, text string",
-    )
-    dcov = shp.coverings_df(docs, max_cells=8, **LV)
-    dt = indexing.index_terms(dcov, **LV)
-    pts = spark.createDataFrame(
-        [(1, 20.0, 20.0), (2, -40.0, -120.0), (3, 55.0, 90.0)],
-        "query_id long, lat double, lng double",
-    )
-    qt = indexing.point_query_terms(pts, **LV)
-    got = _pairs(indexing.term_matches(dt, qt))
-    assert ("d0", 1) in got and ("d1", 2) in got
-    assert all(q != 3 for _, q in got)
-    # point documents: no covering ('$') terms at all (RULE 4)
-    pdt = indexing.point_index_terms(
-        pts.withColumnRenamed("query_id", "id"), **LV
-    )
-    assert pdt.where(F.col("term").startswith("$")).count() == 0
-    # region query over point docs finds the contained points
-    qs = spark.createDataFrame(
-        [("q0", _quad(20, 20, 2.0))], "shape_id string, text string"
-    )
-    qcov = shp.coverings_df(qs, max_cells=8, **LV)
-    rqt = indexing.query_terms(qcov, query_id="shape_id", **LV)
-    got2 = _pairs(indexing.term_matches(pdt, rqt))
-    assert (1, "q0") in got2
-    assert all(d != 2 for d, _ in got2)
-
-
-def test_points_only_index_rejects_region_documents(spark):
-    """S2IndexingHelper points-only contract: a region document cannot be
-    added to a points-only index (the reference throws); the flag is now
-    enforced doc-side too, not just query-side."""
-    import pytest
-
-    from s2_geometry_library_java_spark.operators import indexing
-
-    cov = spark.createDataFrame([("d0", 1)], "shape_id string, cell_id long")
-    with pytest.raises(ValueError, match="points-only"):
-        indexing.index_terms(cov, 4, 16, only_points_indexed=True)

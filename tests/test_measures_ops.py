@@ -1,8 +1,7 @@
-"""shape_measures / index_measures vs kernel brute force and the
-reference's S2ShapeMeasures / S2ShapeIndexMeasures semantics."""
+"""Loop measures of the sphere kernel against the reference's
+S2ShapeMeasures consistency relations."""
 
 import numpy as np
-import pytest
 
 from s2_geometry_library_java_spark.kernel import cellid as ci
 from s2_geometry_library_java_spark.kernel import sphere
@@ -25,71 +24,6 @@ def _pts(text):
 
 
 SHELL = "0:0, 0:10, 10:10, 10:0"            # CCW shell
-HOLE = "2:2, 8:2, 8:8, 2:8"                  # CW (reversed winding) hole
-LINE = "0:0, 0:5, 5:5, 5:10"
-POINTS = "1:1, 2:2, 3:3"
-
-
-@pytest.fixture(scope="module")
-def measured(spark):
-    from s2_geometry_library_java_spark.operators import measures as m
-
-    shapes = spark.createDataFrame(
-        [
-            ("poly", "polygon", SHELL + "; " + HOLE),
-            ("line", "polyline", LINE),
-            ("pts", "points", POINTS),
-        ],
-        "shape_id string, kind string, text string",
-    )
-    df = m.shape_measures(shapes)
-    return {r["shape_id"]: r for r in df.collect()}, df
-
-
-def test_polygon_area_subtracts_cw_holes(measured):
-    """S2ShapeMeasures.area (java:99-113): oriented per-loop signed areas
-    summed, holes wound CW subtract."""
-    rows, _ = measured
-    shell_area = sphere.signed_loop_area(_pts(SHELL))
-    hole_area = sphere.signed_loop_area(_pts(HOLE)[::-1])  # CCW form
-    want = shell_area - hole_area
-    assert rows["poly"]["dim"] == 2
-    assert abs(rows["poly"]["area"] - want) < 1e-12
-    assert want > 0
-
-
-def test_polygon_perimeter_counts_all_loops(measured):
-    """Perimeter includes shells AND holes (java:72-92)."""
-    rows, _ = measured
-    shell = _pts(SHELL)
-    hole = _pts(HOLE)
-    want = sphere.polyline_length(
-        np.concatenate([shell, shell[:1]])
-    ) + sphere.polyline_length(np.concatenate([hole, hole[:1]]))
-    assert abs(rows["poly"]["perimeter"] - want) < 1e-12
-    assert rows["poly"]["length"] == 0.0
-
-
-def test_polyline_measures(measured):
-    rows, _ = measured
-    v = _pts(LINE)
-    assert rows["line"]["dim"] == 1
-    assert abs(rows["line"]["length"] - sphere.polyline_length(v)) < 1e-15
-    want_c = sphere.edge_true_centroid(v[:-1], v[1:]).sum(axis=0)
-    got_c = np.array([rows["line"]["cx"], rows["line"]["cy"], rows["line"]["cz"]])
-    assert np.allclose(got_c, want_c, atol=1e-15)
-    assert rows["line"]["area"] == 0.0 and rows["line"]["perimeter"] == 0.0
-
-
-def test_points_centroid_is_vertex_sum(measured):
-    """Dimension-0 measure = point count; centroid = plain vertex sum
-    (S2ShapeMeasures.java:449-453)."""
-    rows, _ = measured
-    want = _pts(POINTS).sum(axis=0)
-    got = np.array([rows["pts"]["cx"], rows["pts"]["cy"], rows["pts"]["cz"]])
-    assert np.allclose(got, want, atol=0)
-    assert rows["pts"]["dim"] == 0
-    assert rows["pts"]["length"] == 0.0 and rows["pts"]["area"] == 0.0
 
 
 def test_polygon_area_gauss_bonnet_consistency():
@@ -99,52 +33,3 @@ def test_polygon_area_gauss_bonnet_consistency():
     assert abs(
         sphere.raw_signed_loop_area(v) - (2 * np.pi - sphere.loop_curvature(v))
     ) < 1e-9
-
-
-def test_index_measures_max_dimension_rule(spark, measured):
-    """S2ShapeIndexMeasures.centroid (java:124-133): only maximal-dimension
-    shapes contribute to the index centroid; length/area sum their own
-    dimensions regardless."""
-    from s2_geometry_library_java_spark.operators import measures as m
-
-    rows, df = measured
-    out = m.index_measures(df).collect()[0]
-    assert out["dimension"] == 2
-    assert abs(out["length"] - rows["line"]["length"]) < 1e-15
-    assert abs(out["area"] - rows["poly"]["area"]) < 1e-15
-    assert abs(out["perimeter"] - rows["poly"]["perimeter"]) < 1e-15
-    # centroid == polygon centroid alone (line + points ignored)
-    for c in ("cx", "cy", "cz"):
-        assert out[c] == rows["poly"][c]
-
-    # drop the polygon: dimension falls to 1 and the centroid switches
-    # to the polyline's
-    out1 = m.index_measures(df.where(F_ne("shape_id", "poly"))).collect()[0]
-    assert out1["dimension"] == 1
-    for c in ("cx", "cy", "cz"):
-        assert out1[c] == rows["line"][c]
-    assert out1["area"] == 0.0
-
-    # empty index: dimension -1, everything zero
-    out_empty = m.index_measures(df.where("dim > 99")).collect()[0]
-    assert out_empty["dimension"] == -1
-    assert out_empty["cx"] == 0.0
-
-
-def F_ne(col, val):
-    from pyspark.sql import functions as F
-
-    return F.col(col) != val
-
-
-def test_approx_area_close_to_exact():
-    """approxArea ~ area within the documented per-vertex error bound
-    (S2ShapeMeasures.java:121-130); hole orientation respected."""
-    from s2_geometry_library_java_spark.operators import measures as m
-
-    exact = sphere.signed_loop_area(_pts(SHELL)) - sphere.signed_loop_area(
-        _pts(HOLE)[::-1]
-    )
-    approx = m.approx_shape_area("polygon", SHELL + "; " + HOLE)
-    assert abs(approx - exact) < 8 * 2.22e-15
-    assert m.approx_shape_area("polyline", LINE) == 0.0

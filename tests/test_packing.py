@@ -1,9 +1,8 @@
 """Sequence packing: distributed prefix sum, concat-and-chunk window
-assignment, and per-shard greedy whole-doc packing."""
+assignment and sliding chunks."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Window, functions as F
 
 from s2_geometry_library_java_spark.operators import packing
@@ -88,44 +87,6 @@ def test_chunk_assignments_on_documents_table(spark):
         F.explode(F.sequence("chunk_first", "chunk_last")).alias("w")
     ).distinct().count()
     assert n_windows == agg["last"] + 1
-
-
-def test_greedy_pack_matches_sequential_oracle(spark):
-    budget = 256
-    df = _tokens_df(spark, n=400).withColumn(
-        "shard", F.col("doc_id") % 5
-    )
-    got = (
-        packing.greedy_pack(df, budget, "shard")
-        .toPandas()
-        .sort_values(["shard", "doc_id"])
-        .reset_index(drop=True)
-    )
-    pdf = df.toPandas()
-    frames = []
-    for shard, grp in pdf.groupby("shard"):
-        grp = grp.sort_values("doc_id").reset_index(drop=True)
-        fill, pack_id, packs, fills = 0, 0, [], []
-        for t in grp["re_tokens"]:
-            if fill > 0 and fill + t > budget:
-                pack_id += 1
-                fill = 0
-            fill += int(t)
-            packs.append(pack_id)
-            fills.append(fill)
-        grp["pack_id"], grp["pack_fill"] = packs, fills
-        frames.append(grp[["shard", "doc_id", "pack_id", "pack_fill"]])
-    want = (
-        pd.concat(frames)
-        .sort_values(["shard", "doc_id"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-    # no pack exceeds budget except single-oversized-doc packs
-    per_pack = got.groupby(["shard", "pack_id"]).agg(
-        total=("pack_fill", "max"), n=("doc_id", "count")
-    )
-    assert ((per_pack["total"] <= budget) | (per_pack["n"] == 1)).all()
 
 
 def test_sliding_chunks_boundaries(spark):

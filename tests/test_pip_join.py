@@ -7,13 +7,11 @@ from contextlib import redirect_stdout
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.kernel import cellid as s2
 from s2_geometry_library_java_spark.kernel import region as rg
 from s2_geometry_library_java_spark.operators import pip
 from s2_geometry_library_java_spark.operators import shapes as shape_ops
-from s2_geometry_library_java_spark.streaming import geofence
 
 # a 30-degree quad (large enough for an interior covering cell at the
 # default max_cells), a quad with a quad hole, and a small convex quad
@@ -64,7 +62,7 @@ def _want(brute, pids):
 
 
 def test_every_pip_operator_equals_brute(spark, fixture):
-    """pip_join, pip_join_indexed and batch geofence_hits all equal brute
+    """pip_join and pip_join_indexed both equal brute
     Polygon.contains_points, on candidates from interior and boundary
     cells alike."""
     pts, shapes, brute = fixture
@@ -76,8 +74,6 @@ def test_every_pip_operator_equals_brute(spark, fixture):
     assert all(brute[pid] for pid in TEXTS)
     assert _pairs(pip.pip_join(spark, pts, polys)) == want
     assert _pairs(shape_ops.pip_join_indexed(spark, pts, shapes)) == want
-    events = pts.withColumn("event_time", F.timestamp_seconds("id"))
-    assert _pairs(geofence.geofence_hits(spark, events, polys, point_id="id")) == want
 
 
 def _plan(df) -> str:
@@ -106,3 +102,12 @@ def test_one_join_one_exact_filter_no_point_shuffle(spark, fixture, indexed):
     udf_args = re.findall(r"\(\d+\) ArrowEvalPython\nInput.*\nArguments: (.*)", details)
     exact = [a for a in udf_args if "pip_filter" in a]
     assert len(exact) == 1 and "is_interior" in exact[0]
+
+
+def test_indexed_plan_build_is_one_job(spark, fixture, count_jobs):
+    """pip_join_indexed builds its plan with one pass over the shapes: a
+    single collect brings back the covering rows and the shape texts."""
+    pts, shapes, brute = fixture
+    df, n = count_jobs("pip-join-indexed-plan", lambda: shape_ops.pip_join_indexed(spark, pts, shapes))
+    assert n == 1
+    assert _pairs(df) == _want(brute, TEXTS)

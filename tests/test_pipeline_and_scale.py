@@ -1,12 +1,10 @@
-"""Pipeline resume, density partitioner, streaming, and multimodal tests."""
+"""Pipeline resume, density partitioner and distributed-operator tests."""
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from s2_geometry_library_java_spark.operators import multimodal
 from s2_geometry_library_java_spark.plans import density
-from s2_geometry_library_java_spark.sources import docs as docsrc
 from s2_geometry_library_java_spark.sources import geo, tables
 from tests.conftest import SF_DIR
 
@@ -92,78 +90,6 @@ def test_hot_cell_salt(spark):
     assert salted.count() == 2000
 
 
-def test_streaming_tile_counts(spark):
-    from s2_geometry_library_java_spark.streaming import tiles
-
-    q = tiles.run_to_memory_sink(spark, level=4, rows_per_second=2000, name="t_tiles")
-    q.awaitTermination(60)
-    out = spark.sql("SELECT * FROM t_tiles")
-    # rate + availableNow may deliver few rows; schema is the contract
-    assert out.columns == ["window_start", "tile_token", "n", "approx_ids"]
-
-
-def test_multimodal_features(spark):
-    docs = docsrc.with_spans(tables.load_table(spark, SF_DIR, "documents"))
-    spans = docsrc.exploded_spans(docs)
-    media = multimodal.synthesize_media_assets(spans)
-    feats = multimodal.extract_features(
-        media, decoder=multimodal.deterministic_fake_decoder
-    )
-    pdf = feats.limit(20).toPandas()
-    assert len(pdf) == 20
-    assert all(len(f) == 16 for f in pdf["feature"])
-    assert (pdf["n_bytes"] == 32).all()
-    # stub decoder must raise loudly
-    import pytest
-
-    with pytest.raises(Exception, match="NotImplementedError|media decode"):
-        multimodal.extract_features(media).limit(1).toPandas()
-
-
-def test_multimodal_resize(spark):
-    docs = docsrc.with_spans(tables.load_table(spark, SF_DIR, "documents"))
-    media = multimodal.synthesize_media_assets(docsrc.exploded_spans(docs))
-    small = multimodal.resize_media(
-        media, 16, 16, resizer=multimodal.deterministic_fake_resizer
-    )
-    pdf = small.limit(20).toPandas()
-    assert len(pdf) == 20
-    assert (pdf["width"] == 16).all() and (pdf["height"] == 16).all()
-    # 32x32 -> 16x16 quarters the payload (fake resizer scales by pixels)
-    assert all(len(p) == 8 for p in pdf["payload"])
-    # deterministic: same input -> same bytes
-    pdf2 = small.limit(20).toPandas()
-    assert list(pdf["payload"]) == list(pdf2["payload"])
-    import pytest
-
-    with pytest.raises(Exception, match="NotImplementedError|image resize"):
-        multimodal.resize_media(media, 16, 16).limit(1).toPandas()
-
-
-def test_multimodal_frame_sampling(spark):
-    from pyspark.sql import functions as F
-
-    docs = docsrc.with_spans(tables.load_table(spark, SF_DIR, "documents"))
-    media = multimodal.synthesize_media_assets(docsrc.exploded_spans(docs))
-    videos = media.limit(10).withColumn("kind", F.lit("video")).withColumn(
-        "duration_ms", (F.length("media_ref") * 700).cast("int")
-    )
-    frames = multimodal.sample_frames(
-        videos, every_ms=1000, max_frames=4,
-        extractor=multimodal.deterministic_fake_frame_extractor,
-    )
-    pdf = frames.toPandas()
-    vids = videos.select("media_ref", "duration_ms").toPandas()
-    want = int(sum(min(d // 1000, 4) for d in vids["duration_ms"]))
-    assert len(pdf) == want
-    assert (pdf["t_ms"] == pdf["frame_no"] * 1000).all()
-    assert all(len(p) == 16 for p in pdf["payload"])
-    import pytest
-
-    with pytest.raises(Exception, match="NotImplementedError|frame extraction"):
-        multimodal.sample_frames(videos).toPandas()
-
-
 def test_simple_covering_flood_fill():
     from s2_geometry_library_java_spark.kernel import cellid as ci
     from s2_geometry_library_java_spark.kernel import coverer as cv
@@ -187,232 +113,6 @@ def test_simple_covering_flood_fill():
         & (leaf[:, None] <= ci.range_max(u)[None, :])
     ).any(axis=1)
     assert bool(covered[inside].all())
-
-
-def test_region_sharder():
-    from s2_geometry_library_java_spark.kernel import cellid as ci
-    from s2_geometry_library_java_spark.kernel import coverer as cv
-    from s2_geometry_library_java_spark.kernel import region as rg
-
-    # shards from a synthetic histogram over a cap's neighborhood
-    boundaries = density.equal_weight_boundaries(
-        [(int(ci.parent(ci.latlng_degrees_to_cell_id(float(la), 30.0), 6)), 10)
-         for la in range(-40, 41, 2)],
-        8,
-    )
-    sharder = density.RegionSharder(boundaries)
-    cov8 = cv.RegionCoverer(max_cells=8)
-    ids = cov8.get_covering(rg.Cap.from_latlng_deg(10.0, 30.0, 2.0))
-    shards = sharder.intersecting_shards(ids)
-    assert shards and len(shards) <= 8
-    assert sharder.most_intersecting_shard(ids) in shards
-
-
-def test_cellunion_difference_df(spark):
-    from s2_geometry_library_java_spark.kernel import cellid as ci
-    from s2_geometry_library_java_spark.kernel import coverer as cv
-    from s2_geometry_library_java_spark.kernel import region as rg
-    from s2_geometry_library_java_spark.operators import cellunion
-
-    cap_a = rg.Cap.from_latlng_deg(20.0, 30.0, 10.0)
-    cap_b = rg.Cap.from_latlng_deg(23.0, 34.0, 8.0)
-    cov = cv.RegionCoverer(max_cells=20)
-    ua = spark.createDataFrame(
-        [(int(np.int64(np.uint64(c))),) for c in cov.get_covering(cap_a)], "cell_id long"
-    )
-    ub = spark.createDataFrame(
-        [(int(np.int64(np.uint64(c))),) for c in cov.get_covering(cap_b)], "cell_id long"
-    )
-    ids = np.array(
-        [np.uint64(np.int64(r["cell_id"])) for r in cellunion.difference_df(ua, ub).collect()],
-        dtype=np.uint64,
-    )
-    assert bool(np.all(ci.is_valid(ids)))
-    rng = np.random.RandomState(0)
-    lat = np.radians(rng.uniform(5, 35, 10000))
-    lng = np.radians(rng.uniform(15, 45, 10000))
-    leaf = ci.latlng_to_cell_id(lat, lng)
-
-    def member(u):
-        return (
-            (leaf[:, None] >= ci.range_min(u)[None, :])
-            & (leaf[:, None] <= ci.range_max(u)[None, :])
-        ).any(axis=1)
-
-    ua_ids = np.array(cov.get_covering(cap_a), dtype=np.uint64)
-    ub_ids = np.array(cov.get_covering(cap_b), dtype=np.uint64)
-    assert np.array_equal(member(ids), member(ua_ids) & ~member(ub_ids))
-
-
-def test_drop_contained_df_distributed(spark):
-    """Range-partitioned two-pass cummax == kernel union_normalize's
-    drop-contained step, across many partitions and cross-partition
-    containment (a face cell swallowing later partitions' cells)."""
-    from s2_geometry_library_java_spark.kernel import cellid as ci
-    from s2_geometry_library_java_spark.kernel import coverer as cv
-    from s2_geometry_library_java_spark.operators import cellunion
-
-    rng = np.random.RandomState(7)
-    lat = np.radians(rng.uniform(-80, 80, 4000))
-    lng = np.radians(rng.uniform(-179, 179, 4000))
-    lvls = rng.randint(2, 14, 4000)
-    ids = ci.parent(ci.latlng_to_cell_id(lat, lng), lvls)
-    # plus a face cell that contains a big slab of them
-    face4 = (np.uint64(4) << np.uint64(61)) | (np.uint64(1) << np.uint64(60))
-    ids = np.concatenate([ids, [face4]])
-    df = spark.createDataFrame(
-        [(int(np.int64(u)),) for u in ids], "cell_id long"
-    )
-    got = sorted(
-        int(np.uint64(np.int64(r["cell_id"])))
-        for r in cellunion.drop_contained_df(df, num_partitions=16).collect()
-    )
-    # oracle: scalar drop-contained (sort by biased rmin, keep rmax > cummax)
-    b = (ids ^ (np.uint64(1) << np.uint64(63))).view(np.int64)
-    rminb = (ci.range_min(ids) ^ (np.uint64(1) << np.uint64(63))).view(np.int64)
-    rmaxb = (ci.range_max(ids) ^ (np.uint64(1) << np.uint64(63))).view(np.int64)
-    order = np.lexsort((-rmaxb, rminb))
-    keep = []
-    run = None
-    for k in order:
-        if run is None or rmaxb[k] > run:
-            keep.append(int(ids[k]))
-            run = rmaxb[k] if run is None else max(run, rmaxb[k])
-        else:
-            run = max(run, rmaxb[k])
-    assert got == sorted(keep)
-
-
-def test_drop_contained_df_no_global_sort(spark):
-    """The plan must not contain a single-partition exchange (the round-1
-    global Window.orderBy anti-pattern)."""
-    from s2_geometry_library_java_spark.operators import cellunion
-
-    df = spark.range(100).selectExpr("cast(shiftleft(id, 32) + 1 as long) as cell_id")
-    plan = cellunion.drop_contained_df(df)._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan, plan
-
-
-def test_difference_df_deep_refinement(spark):
-    """ADVICE regression: face cell minus one leaf-level cell must reach
-    the full 30-level refinement depth without dropping the last frontier."""
-    from s2_geometry_library_java_spark.kernel import cellid as ci
-    from s2_geometry_library_java_spark.operators import cellunion
-
-    face0 = (np.uint64(0) << np.uint64(61)) | (np.uint64(1) << np.uint64(60))
-    leaf = ci.latlng_to_cell_id(np.array([0.1]), np.array([0.1]))[0]
-    ua = spark.createDataFrame([(int(np.int64(face0)),)], "cell_id long")
-    ub = spark.createDataFrame([(int(np.int64(leaf)),)], "cell_id long")
-    out = np.array(
-        [
-            np.uint64(np.int64(r["cell_id"]))
-            for r in cellunion.difference_df(ua, ub).collect()
-        ],
-        dtype=np.uint64,
-    )
-    # exact difference of a level-0 cell minus one leaf: 4 cells per level
-    # 1..30 minus the shared path = 30 levels x 3 siblings = 90 cells
-    assert len(out) == 90
-    assert bool(np.all(ci.is_valid(out)))
-    # the removed leaf is NOT covered; its 3 siblings are
-    lb = int(leaf)
-    rmin = ci.range_min(out).astype(np.uint64)
-    rmax = ci.range_max(out).astype(np.uint64)
-    covered = bool(((np.uint64(lb) >= rmin) & (np.uint64(lb) <= rmax)).any())
-    assert not covered
-
-
-def test_spatial_layout_partition_pruning(spark, tmp_path):
-    """Iceberg-style layout: part_cell partition column + covering IN
-    filter -> the scan's PartitionFilters prune files; results equal the
-    unpruned range filter."""
-    from s2_geometry_library_java_spark.kernel import cellid as ci
-    from s2_geometry_library_java_spark.kernel import coverer as cv
-    from s2_geometry_library_java_spark.kernel import region as rg
-    from s2_geometry_library_java_spark.sources import spatial_layout as sl
-
-    rng = np.random.RandomState(4)
-    lat = rng.uniform(-80, 80, 5000)
-    lng = rng.uniform(-179, 179, 5000)
-    leaf = ci.latlng_to_cell_id(np.radians(lat), np.radians(lng))
-    df = spark.createDataFrame(
-        [(int(i), int(np.int64(leaf[i]))) for i in range(5000)], "id long, leaf long"
-    )
-    path = str(tmp_path / "pts")
-    sl.write_spatial_table(df, path, part_level=2)
-
-    cap = rg.Cap.from_latlng_deg(20.0, 30.0, 9.0)
-    ids = cv.RegionCoverer(max_cells=8).get_covering(cap)
-    pruned = sl.pruned_scan(spark, path, ids, part_level=2)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "part_cell" in plan
-
-    # correctness: pruned scan + range membership == brute membership
-    lob = [int(np.int64(np.uint64(ci.range_min(np.uint64(c))))) for c in ids]
-    hib = [int(np.int64(np.uint64(ci.range_max(np.uint64(c))))) for c in ids]
-    from pyspark.sql import functions as F
-    from s2_geometry_library_java_spark.functions import columns as cc
-
-    cond = None
-    for lo, hi in zip(lob, hib):
-        b = cc.biased("leaf")
-        lo_b, hi_b = lo ^ -(2**63), hi ^ -(2**63)
-        c = (b >= F.lit(lo_b)) & (b <= F.lit(hi_b))
-        cond = c if cond is None else (cond | c)
-    got = {r["id"] for r in pruned.where(cond).collect()}
-    want = {r["id"] for r in spark.read.parquet(path).where(cond).collect()}
-    assert got == want and len(want) > 0
-
-    # the pruned scan reads strictly fewer partitions than exist
-    n_parts_all = spark.read.parquet(path).select("part_cell").distinct().count()
-    n_parts_pruned = pruned.select("part_cell").distinct().count()
-    assert n_parts_pruned < n_parts_all
-
-
-def test_streaming_first_seen_stateful(spark, tmp_path):
-    """applyInPandasWithState spatial dedup: across micro-batches, each
-    (tile, entity) surfaces exactly once — driven deterministically via a
-    file-source stream over pre-written parquet."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from s2_geometry_library_java_spark.streaming import tiles
-
-    base = dt.datetime(2026, 1, 1)
-    rows = []
-    # 3 entities x repeated events in 2 locations; duplicates across files
-    for batch in range(2):
-        for k in range(30):
-            eid = k % 3
-            lat, lng = (10.0, 20.0) if k % 2 == 0 else (-40.0, 100.0)
-            rows.append((base + dt.timedelta(seconds=batch * 60 + k), eid, lat, lng))
-    src = str(tmp_path / "events")
-    spark.createDataFrame(
-        rows, "event_time timestamp, entity_id long, lat double, lng double"
-    ).write.parquet(src)
-    stream = (
-        spark.readStream.schema(
-            "event_time timestamp, entity_id long, lat double, lng double"
-        ).parquet(src)
-    )
-    out = tiles.streaming_first_seen(stream, level=4)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_first_seen")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT tile, entity_id FROM t_first_seen").collect()
-    pairs = [(r["tile"], r["entity_id"]) for r in got]
-    assert len(pairs) == len(set(pairs))  # exactly-once per (tile, entity)
-    # 2 tiles x 3 entities... entity k%3 at k%2 location: entity 0 and 2
-    # hit the even location, 1 the odd one; expect 4 distinct pairs? derive:
-    want = {(k % 3, (10.0, 20.0) if k % 2 == 0 else (-40.0, 100.0)) for k in range(30)}
-    assert len(pairs) == len(want)
 
 
 def test_candidate_pairs_auto_guard(spark, monkeypatch):
@@ -628,22 +328,6 @@ def test_knn_max_distance_cap(spark):
     assert per_q[2] == 0          # nothing within 3 degrees
 
 
-def test_knn_region_filter(spark):
-    """F4 region option (S2ClosestPointQuery.Options.setRegion): only
-    neighbors inside the region survive."""
-    from s2_geometry_library_java_spark.kernel import region as rgk
-    from s2_geometry_library_java_spark.operators import knn
-
-    pts = [(0, 10.0, 20.0), (1, 10.2, 20.2), (2, 30.0, 60.0), (3, 10.1, 19.9)]
-    idx = spark.createDataFrame(pts, "id long, lat double, lng double")
-    queries = spark.createDataFrame([(0, 10.0, 20.0)], "query_id long, lat double, lng double")
-    res = knn.knn_bruteforce(idx, queries, k=4)
-    cap = rgk.Cap.from_latlng_deg(10.0, 20.0, 1.0)  # 1-degree disc
-    kept = knn.filter_neighbors_in_region(res, idx, cap).collect()
-    ids = sorted(r["neighbor_id"] for r in kept)
-    assert ids == [0, 1, 3]  # the faraway point 2 is filtered out
-
-
 def test_density_interpolation_splits_hot_metro(spark):
     """Round-4 verdict #4 'done' criterion: a single cell heavier than a
     whole target partition is split FRACTIONALLY along its Hilbert range
@@ -693,77 +377,3 @@ def test_equal_weight_boundaries_interpolates_within_cell():
     assert len(inside) >= 3, (boundaries, rmin, rmax)
     # boundaries strictly increasing
     assert boundaries == sorted(set(boundaries))
-
-
-def test_streaming_geofence_matches_batch(spark, tmp_path):
-    """Stream-static geofence join: streaming hits over a file-source
-    stream bit-match the batch pip_join on the same rows, and the
-    watermarked windowed counts roll those hits up per (window, fence)."""
-    import datetime as dt
-
-    from s2_geometry_library_java_spark.kernel import region as rg
-    from s2_geometry_library_java_spark.operators import pip
-    from s2_geometry_library_java_spark.streaming import geofence
-
-    fences = {
-        "a": rg.Polygon.from_text("0:0, 0:10, 10:10, 10:0"),
-        "b": rg.Polygon.from_text("20:20, 20:30, 30:30, 30:20"),
-    }
-    base = dt.datetime(2026, 1, 1)
-    rows = []
-    for k in range(120):
-        if k % 3 == 0:
-            lat, lng = 5.0 + (k % 7) * 0.3, 5.0 + (k % 11) * 0.3  # inside a
-        elif k % 3 == 1:
-            lat, lng = 25.0 + (k % 5) * 0.4, 25.0 + (k % 13) * 0.2  # inside b
-        else:
-            lat, lng = -40.0, 100.0  # outside both
-        rows.append((base + dt.timedelta(seconds=k), k % 10, lat, lng))
-    schema = "event_time timestamp, entity_id long, lat double, lng double"
-    src = str(tmp_path / "geofence_events")
-    batch_df = spark.createDataFrame(rows, schema)
-    batch_df.write.parquet(src)
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    hits = geofence.geofence_hits(spark, stream, fences)
-    q = (
-        hits.writeStream.format("memory")
-        .queryName("t_geofence_hits")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "gf_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["event_time"], r["point_id"], r["polygon_id"])
-        for r in spark.sql("SELECT * FROM t_geofence_hits").collect()
-    }
-    # batch oracle: the same join run as a plain batch DataFrame op
-    want_pairs = {
-        (r["point_id"], r["polygon_id"])
-        for r in pip.pip_join(
-            spark, batch_df.withColumn("id", F.monotonically_increasing_id()),
-            fences, point_id="entity_id",
-        ).collect()
-    }
-    assert {(p, pid) for _, p, pid in got} == want_pairs
-    assert len(got) == 80  # 40 events in each fence, every event once
-    # windowed counts finalize per fence under availableNow
-    counts = geofence.streaming_geofence_counts(
-        spark, spark.readStream.schema(schema).parquet(src), fences,
-        window="1 minute", watermark="10 seconds",
-    )
-    q2 = (
-        counts.writeStream.format("memory")
-        .queryName("t_geofence_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "gf_ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    crows = spark.sql(
-        "SELECT polygon_id, sum(n_events) AS n FROM t_geofence_counts GROUP BY polygon_id"
-    ).collect()
-    assert {r["polygon_id"]: r["n"] for r in crows} == {"a": 40, "b": 40}

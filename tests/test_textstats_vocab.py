@@ -1,5 +1,6 @@
-"""vocab_topk / tfidf_top_terms: hand-computed oracles on a tiny corpus,
-plus determinism/tie-break properties."""
+"""vocab_topk_from_tf / tfidf_top_terms_from_tf over term_frequencies:
+hand-computed oracles on a tiny corpus, plus determinism/tie-break
+properties."""
 
 import math
 
@@ -14,12 +15,13 @@ CORPUS = [
 ]
 
 
-def _df(spark):
-    return spark.createDataFrame(CORPUS, "doc_id long, text string")
+def _tf(spark):
+    df = spark.createDataFrame(CORPUS, "doc_id long, text string")
+    return textstats.term_frequencies(df, "doc_id", "text")
 
 
 def test_vocab_topk_counts_and_ties(spark):
-    rows = textstats.vocab_topk(_df(spark), "text", k=3).collect()
+    rows = textstats.vocab_topk_from_tf(_tf(spark), k=3).collect()
     # counts: apple 3, banana 3, date 4, cherry 1, fig 1
     # top-3 by (n desc, word asc): date(4), apple(3), banana(3)
     got = [(r["rank"], r["word"], r["n"]) for r in sorted(rows, key=lambda r: r["rank"])]
@@ -27,13 +29,13 @@ def test_vocab_topk_counts_and_ties(spark):
 
 
 def test_vocab_topk_k_larger_than_vocab(spark):
-    rows = textstats.vocab_topk(_df(spark), "text", k=100).collect()
+    rows = textstats.vocab_topk_from_tf(_tf(spark), k=100).collect()
     assert len(rows) == 5  # whole vocabulary, empty doc contributes nothing
     assert sorted(r["rank"] for r in rows) == [1, 2, 3, 4, 5]
 
 
 def test_tfidf_top_terms_exact(spark):
-    rows = textstats.tfidf_top_terms(_df(spark), "doc_id", "text", top_n=2).collect()
+    rows = textstats.tfidf_top_terms_from_tf(_tf(spark), top_n=2).collect()
     # doc freq: apple 2, banana 2, cherry 1, date 2, fig 1
     # doc 1: apple tf2 df2 -> 1_000_000; cherry tf1 df1 -> 1_000_000;
     #        banana tf1 df2 -> 500_000. top2 ties broken by word asc:
@@ -51,7 +53,7 @@ def test_tfidf_top_terms_exact(spark):
 
 
 def test_tfidf_score_is_integer_division(spark):
-    rows = textstats.tfidf_top_terms(_df(spark), "doc_id", "text", top_n=5).collect()
+    rows = textstats.tfidf_top_terms_from_tf(_tf(spark), top_n=5).collect()
     for r in rows:
         assert r["score_q"] == math.floor(r["tf"] * 1_000_000 / r["doc_freq"])
 
@@ -63,7 +65,7 @@ def test_tfidf_matches_duckdb_twin(spark, duck):
 
     spark_rows = sorted(
         (r["id"], r["word"], r["tf"], r["doc_freq"], r["score_q"], r["rank"])
-        for r in textstats.tfidf_top_terms(_df(spark), "doc_id", "text", 3).collect()
+        for r in textstats.tfidf_top_terms_from_tf(_tf(spark), 3).collect()
     )
     pdf = pd.DataFrame(CORPUS, columns=["doc_id", "text"])
     duck.register("tiny_docs", pdf)
