@@ -6,9 +6,9 @@ like the reference, whose S2BooleanOperation is single-threaded per pair
 promises lives here:
 
 1. candidate pairs come from a covering join: each shape's covering cells
-   (computed executor-side, operators/shapes.coverings_df) emit ancestors
-   at the OTHER side's covering levels and equi-join on the cell id —
-   cell-id equality means Hilbert-range containment, so a pair is a
+   (computed executor-side, operators/shapes.coverings_df) meet the other
+   side's in operators/cellindex.intersecting_pairs, whose ancestor
+   equi-joins stand for Hilbert-range containment, so a pair is a
    candidate iff the coverings actually intersect (no false negatives by
    covering soundness, no nested-loop range join);
 2. the pair kernel runs inside mapInPandas over the candidate pair rows
@@ -24,20 +24,15 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import columns as cc
+from ..kernel import cellid as s2
+from . import cellindex
 from .shapes import _parse_polygon, coverings_df
 from ..localdf import local_df
 from ..plans import cache
-
-
-def _levels(cov: DataFrame) -> list[int]:
-    return [
-        int(r["lvl"])
-        for r in cov.select(cc.level("cell_id").alias("lvl")).distinct().collect()
-    ]
 
 
 SMALL_SHAPES_THRESHOLD = 1000
@@ -63,10 +58,6 @@ def candidate_pairs(
         shapes_a.count() <= SMALL_SHAPES_THRESHOLD
         and shapes_b.count() <= SMALL_SHAPES_THRESHOLD
     ):
-        import numpy as _np
-
-        from ..kernel import cellid as _ci
-
         spark = shapes_a.sparkSession
         tagged = shapes_a.select(
             F.concat(F.lit("a|"), F.col("shape_id")).alias("shape_id"), "text"
@@ -79,9 +70,9 @@ def candidate_pairs(
         sides: dict[str, list[tuple[str, int, int]]] = {"a": [], "b": []}
         for r in rows:
             side, sid = r["shape_id"].split("|", 1)
-            u = _np.uint64(_np.int64(r["cell_id"]).view(_np.uint64))
-            lo = int(_np.atleast_1d(_ci.range_min(u))[0])
-            hi = int(_np.atleast_1d(_ci.range_max(u))[0])
+            u = np.uint64(np.int64(r["cell_id"]).view(np.uint64))
+            lo = int(np.atleast_1d(s2.range_min(u))[0])
+            hi = int(np.atleast_1d(s2.range_max(u))[0])
             sides[side].append((sid, lo, hi))
         pairs = sorted(
             {
@@ -98,44 +89,20 @@ def candidate_pairs(
         return local_df(spark, 
             pairs or [], "a_id string, b_id string"
         ).coalesce(max(1, min(len(pairs), 32)))
-    # held: _levels' collect and both ancestor joins read each covering, and
-    # without it the executor coverer runs once per reader
+    # held: intersecting_pairs' level probe and both ancestor joins read
+    # each covering, and without it the executor coverer runs once per reader
     cov_a = cache.hold(coverings_df(shapes_a, max_cells=max_cells).select(
         F.col("shape_id").alias("a_id"), "cell_id"
     ))
     cov_b = cache.hold(coverings_df(shapes_b, max_cells=max_cells).select(
         F.col("shape_id").alias("b_id"), "cell_id"
     ))
-    la, lb = _levels(cov_a), _levels(cov_b)
-
-    def ancestors(cov, levels, id_col):
-        lvl = cc.level("cell_id")
-        return cov.select(
-            id_col,
-            F.explode(
-                F.filter(
-                    F.array(
-                        *[
-                            F.when(lvl >= L, cc.parent("cell_id", L))
-                            for L in levels
-                        ]
-                    ),
-                    lambda c: c.isNotNull(),
-                )
-            ).alias("cell"),
-        )
-
-    a_in_b = ancestors(cov_a, lb, "a_id").join(
-        cov_b.withColumnRenamed("cell_id", "cell"), "cell"
+    pairs = cellindex.intersecting_pairs(
+        cov_a, cov_b, label_col="a_id", target_col="cell_id", query_col="b_id"
     )
-    b_in_a = ancestors(cov_b, la, "b_id").join(
-        cov_a.withColumnRenamed("cell_id", "cell"), "cell"
-    )
-    return (
-        a_in_b.select("a_id", "b_id")
-        .unionByName(b_in_a.select("a_id", "b_id"))
-        .distinct()
-    )
+    return pairs.select(
+        F.col("label").alias("a_id"), F.col("query_id").alias("b_id")
+    ).distinct()
 
 
 _PAIR_SCHEMA = (

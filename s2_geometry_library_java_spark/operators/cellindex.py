@@ -13,8 +13,15 @@ visitIntersectingCells :225-280) decomposes into two ancestor equi-joins:
 Both joins are keyed hash joins on int64 cell ids — no range join, no
 broadcast requirement; the explode factor is bounded by the number of
 distinct LEVELS (<= 31), collected driver-side like the kNN ring levels.
-The reference's "each (cellId, label) pair visited at most once" guarantee
+One collect of (side, level) pairs probes both sides' level sets. The
+reference's "each (cellId, label) pair visited at most once" guarantee
 (ContentsIterator visited-node dedup) is the final dropDuplicates.
+
+This module owns "cell intersects cell" when both sides are DataFrames:
+the S2CellIndex gate, ``intersection`` (S2CellUnion.getIntersection, D10)
+and booleanops' distributed candidate pairs all build on
+``intersecting_pairs``. Leaf-in-covering against driver-side rows is
+operators/pip.candidate_join.
 """
 
 from __future__ import annotations
@@ -24,17 +31,11 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..functions import columns as cc
 
 
-def _distinct_levels(df: DataFrame, col: str) -> list[int]:
-    # <= 31 rows: a driver-side level set, not data
-    return sorted(
-        int(r["lvl"])
-        for r in df.select(cc.level(col).alias("lvl")).distinct().collect()
-    )
-
-
 def _ancestors_at(col: str, levels: list[int], strict: bool) -> Column:
     """array<struct<lvl,anc>> of this cell's ancestors at the given levels
     (lvl < level(col) when strict, else lvl <= level(col))."""
+    if not levels:  # the other side is empty: F.array() alone is array<void>
+        return F.array().cast("array<struct<lvl:int,anc:bigint>>")
     own = cc.level(col)
     entries = F.array(
         *[
@@ -61,14 +62,20 @@ def intersecting_pairs(
     that intersects the query's target cell, each pair at most once per
     query (S2CellIndex.visitIntersectingCells semantics; distinct labels
     per query = getIntersectingLabels)."""
-    idx_levels = _distinct_levels(index, cell_col)
-    tgt_levels = _distinct_levels(targets, target_col)
     idx = index.select(
         F.col(cell_col).alias("cell_id"), F.col(label_col).alias("label")
     )
     tgt = targets.select(
         F.col(query_col).alias("query_id"), F.col(target_col).alias("target")
     )
+    # <= 62 rows: both sides' level sets, tagged by side, in one collect
+    probe = idx.select(F.lit(0).alias("side"), cc.level("cell_id").alias("lvl"))
+    probe = probe.unionByName(
+        tgt.select(F.lit(1).alias("side"), cc.level("target").alias("lvl"))
+    )
+    side_levels = sorted((r["side"], r["lvl"]) for r in probe.distinct().collect())
+    idx_levels = [int(lv) for side, lv in side_levels if side == 0]
+    tgt_levels = [int(lv) for side, lv in side_levels if side == 1]
     # 1. index cell contains (or equals) the target
     t_anc = (
         tgt.withColumn(
@@ -88,3 +95,16 @@ def intersecting_pairs(
     return contains_t.unionByName(contains_i).dropDuplicates(
         ["query_id", "cell_id", "label"]
     )
+
+
+def intersection(a: DataFrame, b: DataFrame) -> DataFrame:
+    """(cell_id) intersection of two NORMALIZED cell unions
+    (S2CellUnion.getIntersection): intersecting cells of normalized unions
+    nest, so each pair contributes its deeper cell."""
+    pairs = intersecting_pairs(
+        a, b, label_col="cell_id", target_col="cell_id", query_col="cell_id"
+    )
+    deeper = F.when(
+        cc.level("cell_id") >= cc.level("query_id"), F.col("cell_id")
+    ).otherwise(F.col("query_id"))
+    return pairs.select(deeper.alias("cell_id")).distinct()

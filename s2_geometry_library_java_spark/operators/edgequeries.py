@@ -269,40 +269,20 @@ def directed_hausdorff(
     The big point table is scanned once, joins a broadcast vertex sample,
     and never shuffles; the full edge set is only read against the tiny
     candidate band."""
-    p = udfs.latlng_deg_to_xyz(F.col(lat), F.col(lng))
-    pts = (
-        points.withColumn("_p", p)
-        .select(
-            F.col(point_id).alias("point_id"),
-            F.lit("_").alias("a_shape"),
-            F.col("_p.x").alias("px"),
-            F.col("_p.y").alias("py"),
-            F.col("_p.z").alias("pz"),
-        )
-    )
-    return _directed_hausdorff_xyz(pts, edges, sample_step).select(
-        "shape_id", "worst_point_id", "chord2"
-    )
-
-
-def _directed_hausdorff_xyz(
-    points: DataFrame, edges: DataFrame, sample_step: int = 8
-) -> DataFrame:
-    """Pruned directed-Hausdorff core over unit-xyz points carrying an
-    ``a_shape`` group column: every (a_shape, shape_id) pair gets its own
-    bound/prune/exact phases in one set of joins (keys are composite).
-
-    Sampling is CHAIN-AWARE when the edge table carries a ``chain_id``
-    column (shape_index_df emits one per loop): each chain's first edge is
-    always sampled and runs never straddle loop boundaries, so the gap
-    bound is sound for any loop size — no minimum-edges-per-loop
-    assumption. Tables without chain_id are treated as one chain."""
     e_all = edges.dropDuplicates(["shape_id", "edge_id"])
+    # shape_index_df emits a chain_id per loop; a table without one is
+    # treated as one chain
     if "chain_id" not in e_all.columns:
         e_all = e_all.withColumn("chain_id", F.lit(0))
     wch = Window.partitionBy("shape_id", "chain_id")
     e_all = e_all.withColumn("_rel", F.col("edge_id") - F.min("edge_id").over(wch))
-    pts = points.select("a_shape", "point_id", "px", "py", "pz")
+    p = udfs.latlng_deg_to_xyz(F.col(lat), F.col(lng))
+    pts = points.withColumn("_p", p).select(
+        F.col(point_id).alias("point_id"),
+        F.col("_p.x").alias("px"),
+        F.col("_p.y").alias("py"),
+        F.col("_p.z").alias("pz"),
+    )
     elen = F.lit(2.0) * F.asin(
         F.lit(0.5)
         * F.sqrt(
@@ -335,20 +315,19 @@ def _directed_hausdorff_xyz(
     )
     ub = (
         pts.crossJoin(samples)
-        .groupBy("a_shape", "shape_id", "point_id")
+        .groupBy("shape_id", "point_id")
         .agg(F.min(vchord2).alias("u2"))
         .withColumn("u_ang", F.lit(2.0) * F.asin(F.lit(0.5) * F.sqrt(F.col("u2"))))
     )
-    wmax = Window.partitionBy("a_shape", "shape_id")
+    wmax = Window.partitionBy("shape_id")
     cand = (
         ub.join(F.broadcast(runs), "shape_id")
         .withColumn("u_max", F.max("u_ang").over(wmax))
         .where(F.col("u_ang") >= F.col("u_max") - F.col("gap"))
-        .select("a_shape", "shape_id", "point_id")
+        .select("shape_id", "point_id")
     )
-    cpts = F.broadcast(cand.join(pts, ["a_shape", "point_id"]))
+    cpts = F.broadcast(cand.join(pts, "point_id"))
     exact = cpts.join(e_all, "shape_id").select(
-        "a_shape",
         "shape_id",
         "point_id",
         edge_min_chord2_cols(
@@ -357,17 +336,14 @@ def _directed_hausdorff_xyz(
             F.col("bx"), F.col("by"), F.col("bz"),
         ).alias("chord2"),
     )
-    per_point = exact.groupBy("a_shape", "shape_id", "point_id").agg(
+    per_point = exact.groupBy("shape_id", "point_id").agg(
         F.min("chord2").alias("dmin")
     )
-    w = Window.partitionBy("a_shape", "shape_id").orderBy(
-        F.desc("dmin"), F.asc("point_id")
-    )
+    w = Window.partitionBy("shape_id").orderBy(F.desc("dmin"), F.asc("point_id"))
     return (
         per_point.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select(
-            "a_shape",
             "shape_id",
             F.col("point_id").alias("worst_point_id"),
             F.col("dmin").alias("chord2"),

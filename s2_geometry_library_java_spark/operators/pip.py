@@ -77,24 +77,32 @@ def memoized_rows(key: bytes, build) -> tuple[tuple, ...]:
     return rows
 
 
-def covering_rows(
-    polygons: dict, max_cells: int = 8, min_level: int = 0, max_level: int = 30
-) -> tuple[tuple, ...]:
-    """(polygon_id, cell_id, is_interior) rows.
+def covering_cells(coverer, poly) -> list[tuple[int, bool]]:
+    """(signed cell_id, is_interior) for each cell of one polygon's covering.
 
     is_interior marks covering cells fully contained in the polygon
     (computed with the polygon's own contains-cell test), enabling the
     exact-test skip (SURVEY.md §4 'interior fast accept').
     """
+    contains_cell, _, _ = rg.region_cell_tests(poly)
+    return [
+        (int(s2.to_signed(np.uint64(cid))[0]), bool(contains_cell(Cell(cid))))
+        for cid in coverer.get_covering(poly)
+    ]
+
+
+def covering_rows(
+    polygons: dict, max_cells: int = 8, min_level: int = 0, max_level: int = 30
+) -> tuple[tuple, ...]:
+    """(polygon_id, cell_id, is_interior) rows of ``covering_cells``."""
 
     def build():
         coverer = cov.RegionCoverer(
             max_cells=max_cells, min_level=min_level, max_level=max_level
         )
         for pid, poly in polygons.items():
-            contains_cell, _, _ = rg.region_cell_tests(poly)
-            for cid in coverer.get_covering(poly):
-                yield pid, int(s2.to_signed(np.uint64(cid))[0]), bool(contains_cell(Cell(cid)))
+            for cid, interior in covering_cells(coverer, poly):
+                yield pid, cid, interior
 
     key = polygons_geometry_key(polygons, "cov", max_cells, min_level, max_level)
     return memoized_rows(key, build)

@@ -35,19 +35,6 @@ def _parse_polygon(text: str):
 _COVERING_SCHEMA = "shape_id string, cell_id long, is_interior boolean"
 
 
-def _covering_cells(coverer, text: str) -> list[tuple[int, bool]]:
-    """(signed cell_id, is_interior) for each cell of one polygon's covering."""
-    from ..kernel import region as rg
-    from ..kernel.cell import Cell
-
-    poly = _parse_polygon(text)
-    contains_cell, _, _ = rg.region_cell_tests(poly)
-    return [
-        (int(s2.to_signed(np.uint64(cid))[0]), bool(contains_cell(Cell(cid))))
-        for cid in coverer.get_covering(poly)
-    ]
-
-
 def coverings_df(shapes: DataFrame, max_cells: int = 8,
                  id_col: str = "shape_id", text_col: str = "text",
                  min_level: int = 0, max_level: int = 30,
@@ -68,7 +55,7 @@ def coverings_df(shapes: DataFrame, max_cells: int = 8,
             rows = [
                 (sid, cid, interior)
                 for sid, text in zip(pdf[id_col], pdf[text_col])
-                for cid, interior in _covering_cells(coverer, text)
+                for cid, interior in pip.covering_cells(coverer, _parse_polygon(text))
             ]
             yield pd.DataFrame(rows, columns=["shape_id", "cell_id", "is_interior"])
 
@@ -156,7 +143,9 @@ def pip_join_indexed(
             rows = [
                 (sid, cid, interior, None if k else text)
                 for sid, text in zip(pdf["shape_id"], pdf["text"])
-                for k, (cid, interior) in enumerate(_covering_cells(coverer, text))
+                for k, (cid, interior) in enumerate(
+                    pip.covering_cells(coverer, _parse_polygon(text))
+                )
             ]
             yield pd.DataFrame(rows, columns=["shape_id", "cell_id", "is_interior", "text"])
 

@@ -169,17 +169,19 @@ def _composite_contains_udf(lat: pd.Series, lng: pd.Series) -> pd.Series:
     return pd.Series(comp.contains_points(x, y, z))
 
 
+def _covering_members(spark: SparkSession, pts: DataFrame, cell_ids) -> DataFrame:
+    """Rows of ``pts`` (with a ``leaf`` column) whose leaf lies in one of
+    the non-nested signed ``cell_ids``: pip.candidate_join over them as
+    one covering (C5: containment is a JOIN, not a kernel)."""
+    rows = [("_", int(c)) for c in cell_ids]
+    return pip.candidate_join(spark, pts, rows, "polygon_id string, cell_id long")
+
+
 def q_composite_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6: points inside cap AND rect — the COMPOSITE region drives the
     coverer (covering soundness end-to-end), the exact predicate refines."""
-    from .operators import cellunion
-
     region = rg.RegionIntersection([_CAP, _RECT2])
-    coverer = cov.RegionCoverer(max_cells=12)
-    ids = coverer.get_covering(region)
-    union = local_df(spark, 
-        [(int(np.int64(np.uint64(c))),) for c in ids], "cell_id long"
-    )
+    ids = cov.RegionCoverer(max_cells=12).get_covering(region)
     pts = tables.load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
         geo.lat_col("c_custkey").alias("lat"),
@@ -188,7 +190,7 @@ def q_composite_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = pts.withColumn(
         "leaf", udfs.cell_id_from_latlng_deg(F.col("lat"), F.col("lng"), 30)
     )
-    cand = cellunion.contains_points_df(union, pts, "leaf")
+    cand = _covering_members(spark, pts, s2.to_signed(ids))
     return cand.where(_composite_contains_udf(F.col("lat"), F.col("lng"))).select("k")
 
 
@@ -1317,19 +1319,14 @@ def q_buffered_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverer runs over the BufferedRegion view (triangle-inequality cell
     tests), membership joins the covering, the exact buffered contains
     refines. Same exact semantics as inside-or-within-radius."""
-    from .operators import cellunion
-
     poly = _quad_polygon(*PIP_QUADS["p0"])
     reg = rg.BufferedRegion(poly, NEAR_POLY_RADIUS_RAD)
     ids = cov.RegionCoverer(max_cells=16).get_covering(reg)
-    union = local_df(spark, 
-        [(int(np.int64(np.uint64(c))),) for c in ids], "cell_id long"
-    )
     pts = _points_from_keys(tables.load_table(spark, sf_dir, "orders"), "o_orderkey")
     pts = pts.withColumn(
         "leaf", udfs.cell_id_from_latlng_deg(F.col("lat"), F.col("lng"), 30)
     )
-    cand = cellunion.contains_points_df(union, pts, "leaf")
+    cand = _covering_members(spark, pts, s2.to_signed(ids))
     dist = tolerant.make_polygon_distance_udf({"p0": poly})
     threshold = float(sphere.chord2_from_angle(NEAR_POLY_RADIUS_RAD))
     return cand.where(
@@ -3903,19 +3900,17 @@ def q_jaccard_pairs_oracle() -> str:
 def q_union_intersection_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D10/C5: points inside the INTERSECTION of two cap coverings, where
     the intersection is computed by the DataFrame cell-union operator and
-    membership is the broadcast semi-join (containment is a JOIN)."""
-    from .operators import cellunion
+    membership is the broadcast join on the collected intersection."""
+    from .operators import cellindex
 
-    cap_a = rg.Cap.from_latlng_deg(20.0, 30.0, 12.0)
-    cap_b = rg.Cap.from_latlng_deg(24.0, 36.0, 12.0)
     coverer = cov.RegionCoverer(max_cells=24)
-    ua = local_df(spark, 
-        [(int(np.int64(np.uint64(c))),) for c in coverer.get_covering(cap_a)], "cell_id long"
-    )
-    ub = local_df(spark, 
-        [(int(np.int64(np.uint64(c))),) for c in coverer.get_covering(cap_b)], "cell_id long"
-    )
-    inter = cellunion.intersection_df(ua, ub)
+
+    def covering(lat, lng):
+        ids = s2.to_signed(coverer.get_covering(rg.Cap.from_latlng_deg(lat, lng, 12.0)))
+        return local_df(spark, [(int(c),) for c in ids], "cell_id long")
+
+    inter = cellindex.intersection(covering(20.0, 30.0), covering(24.0, 36.0))
+    inter = [r["cell_id"] for r in inter.collect()]
     pts = tables.load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
         geo.lat_col("c_custkey").alias("lat"),
@@ -3924,7 +3919,7 @@ def q_union_intersection_membership(spark: SparkSession, sf_dir: str) -> DataFra
     pts = pts.withColumn(
         "leaf", udfs.cell_id_from_latlng_deg(F.col("lat"), F.col("lng"), 30)
     )
-    return cellunion.contains_points_df(inter, pts, "leaf").select("k")
+    return _covering_members(spark, pts, inter).select("k")
 
 
 def q_union_intersection_membership_oracle() -> str:

@@ -62,11 +62,14 @@ def main(sf_dir: str, only: list[str]):
         )
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    sc = spark.sparkContext
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
+        # the gate's Spark jobs, plan build and action, under its own group
+        sc.setJobGroup(f"gate-{name}", name)
         try:
             with cache.scope():  # each gate releases what it held
                 sdf = fn(spark, sf_dir).toPandas()
@@ -74,8 +77,14 @@ def main(sf_dir: str, only: list[str]):
             failures.append(name)
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
             continue
+        finally:
+            sc.setJobGroup(None, None)
+        cost = (
+            f"({time.time()-t0:.1f}s, "
+            f"{len(sc.statusTracker().getJobIdsForGroup(f'gate-{name}'))} jobs)"
+        )
         if name not in oracles:
-            print(f"rows-only {name}: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
+            print(f"rows-only {name}: {len(sdf)} rows  {cost}")
             continue
         try:
             odf = con.sql(oracles[name]).df()
@@ -97,9 +106,9 @@ def main(sf_dir: str, only: list[str]):
             print("  duck :", b[neq].head(3).to_dict("records"))
         if status:
             failures.append(name)
-            print(f"FAIL {name}: {'; '.join(status)}  ({time.time()-t0:.1f}s)")
+            print(f"FAIL {name}: {'; '.join(status)}  {cost}")
         else:
-            print(f"OK   {name}: {len(a)} rows  ({time.time()-t0:.1f}s)")
+            print(f"OK   {name}: {len(a)} rows  {cost}")
     print("\nFAILURES:", failures if failures else "none")
     spark.stop()
     return 1 if failures else 0
