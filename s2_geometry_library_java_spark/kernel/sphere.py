@@ -284,69 +284,3 @@ def polyline_length(vertices: np.ndarray) -> float:
         return 0.0
     d = v[1:] - v[:-1]
     return float(np.sum(2.0 * np.arcsin(0.5 * np.sqrt((d * d).sum(axis=1)))))
-
-
-# ---------------------------------------------------------------------------
-# S1ChordAngle error plumbing (conservative distance caps)
-# ---------------------------------------------------------------------------
-
-_DBL_EPSILON = float(np.finfo(np.float64).eps)
-MAX_CHORD2 = 4.0
-
-
-def chord2_successor(length2: float) -> float:
-    """S1ChordAngle.successor (S1ChordAngle.java:555-563): the smallest
-    representable squared chord length greater than ``length2``."""
-    if length2 >= MAX_CHORD2:
-        return float("inf")
-    if length2 < 0.0:
-        return 0.0
-    return float(np.nextafter(length2, 10.0))
-
-
-def s2point_constructor_max_error(length2: float) -> float:
-    """S1ChordAngle.getS2PointConstructorMaxError
-    (S1ChordAngle.java:723-731): max error of a squared chord computed
-    from two normalized points."""
-    return 4.5 * _DBL_EPSILON * length2 + 16.0 * _DBL_EPSILON * _DBL_EPSILON
-
-
-def update_min_interior_distance_max_error(length2: float) -> float:
-    """S2EdgeUtil.getUpdateMinInteriorDistanceMaxError
-    (S2EdgeUtil.java:2972-2989): max error of the point-to-edge-interior
-    squared chord distance."""
-    if length2 >= 2.0:  # >= 90 degrees: min distance is to an endpoint
-        return 0.0
-    b = min(1.0, 0.5 * length2)
-    a = float(np.sqrt(b * (2.0 - b)))
-    return (
-        (2.5 + 2.0 * np.sqrt(3.0) + 8.5 * a) * a
-        + (2.0 + 2.0 * np.sqrt(3.0) / 3.0 + 6.5 * (1.0 - b)) * b
-        + (23.0 + 16.0 / np.sqrt(3.0)) * _DBL_EPSILON
-    ) * _DBL_EPSILON
-
-
-def update_min_distance_max_error(length2: float) -> float:
-    """S2EdgeUtil.getUpdateMinDistanceMaxError (S2EdgeUtil.java:3002-3007):
-    max error of point-to-edge squared chord distance (interior or
-    endpoint case)."""
-    return max(
-        update_min_interior_distance_max_error(length2),
-        s2point_constructor_max_error(length2),
-    )
-
-
-def conservative_max_chord2(length2: float, edges: bool = False) -> float:
-    """setConservativeMaxDistance (S2ClosestPointQuery.java:174-186 /
-    S2ClosestEdgeQuery): pad the cap by the maximum distance-calculation
-    error, then take the successor — no point/edge whose TRUE distance is
-    within the cap can be under-reported by the floating-point filter.
-    ``edges`` uses the edge-distance error bound (for closest-edge
-    queries); plain point queries use the point-constructor bound."""
-    err = (
-        update_min_distance_max_error(length2)
-        if edges
-        else s2point_constructor_max_error(length2)
-    )
-    padded = max(0.0, min(MAX_CHORD2, length2 + err))
-    return chord2_successor(padded)

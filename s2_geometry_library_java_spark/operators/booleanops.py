@@ -38,11 +38,7 @@ from ..plans import cache
 SMALL_SHAPES_THRESHOLD = 1000
 
 
-def candidate_pairs(
-    shapes_a: DataFrame,
-    shapes_b: DataFrame,
-    max_cells: int = 8,
-) -> DataFrame:
+def candidate_pairs(shapes_a: DataFrame, shapes_b: DataFrame) -> DataFrame:
     """(a_id, b_id) for every pair whose coverings share sphere area —
     the covering-intersection join (a cell of one side contained in a
     cell of the other, tested as ancestor equi-joins both ways).
@@ -66,7 +62,7 @@ def candidate_pairs(
                 F.concat(F.lit("b|"), F.col("shape_id")).alias("shape_id"), "text"
             )
         )
-        rows = coverings_df(tagged.coalesce(1), max_cells=max_cells).collect()
+        rows = coverings_df(tagged.coalesce(1)).collect()
         sides: dict[str, list[tuple[str, int, int]]] = {"a": [], "b": []}
         for r in rows:
             side, sid = r["shape_id"].split("|", 1)
@@ -91,10 +87,10 @@ def candidate_pairs(
         ).coalesce(max(1, min(len(pairs), 32)))
     # held: intersecting_pairs' level probe and both ancestor joins read
     # each covering, and without it the executor coverer runs once per reader
-    cov_a = cache.hold(coverings_df(shapes_a, max_cells=max_cells).select(
+    cov_a = cache.hold(coverings_df(shapes_a).select(
         F.col("shape_id").alias("a_id"), "cell_id"
     ))
-    cov_b = cache.hold(coverings_df(shapes_b, max_cells=max_cells).select(
+    cov_b = cache.hold(coverings_df(shapes_b).select(
         F.col("shape_id").alias("b_id"), "cell_id"
     ))
     pairs = cellindex.intersecting_pairs(
@@ -110,34 +106,10 @@ _PAIR_SCHEMA = (
     "n_loops int, n_vertices int"
 )
 
-_PAIR_MIXED_SCHEMA = (
-    _PAIR_SCHEMA
-    + ", degen_edges string, degen_points string, "
-    "n_degen_edges int, n_degen_points int"
-)
-
-
-def _pts_text(points) -> str:
-    """lat:lng list (S2TextFormat point-list grammar) for degenerate
-    elements; edges are 'lat:lng, lat:lng' pairs joined by ';'."""
-    import numpy as np
-
-    from ..kernel import cellid as s2
-
-    parts = []
-    for p in points:
-        la, ln = s2.xyz_to_latlng(p[0], p[1], p[2])
-        parts.append(f"{float(np.degrees(la))!r}:{float(np.degrees(ln))!r}")
-    return ", ".join(parts)
-
-
 def boolean_pairs(
     shapes_a: DataFrame,
     shapes_b: DataFrame,
     op: str | list[str],
-    max_cells: int = 8,
-    mixed: bool = False,
-    model: str = "closed",
 ) -> DataFrame:
     """(a_id, b_id, op, result_text, n_loops, n_vertices) for every
     covering-intersecting pair; result is the kernel boolean_op polygon
@@ -146,19 +118,11 @@ def boolean_pairs(
 
     ``op`` may be a list: all ops are computed in ONE pass over the
     candidate pairs (one mapInPandas stage total — Python stages carry a
-    fixed scheduling cost, so multi-op callers should batch).
-
-    ``mixed=True`` runs boolean_op_mixed under ``model`` ("closed"
-    default, "open", or "semi_open" — S2BooleanOperation polygon models)
-    instead and adds degenerate-output columns: ';'-joined degenerate
-    edges and a point list (S2TextFormat lat:lng grammar) plus their
-    counts — additive shells/points under CLOSED, subtractive
-    cracks/punctures under OPEN — the distributed surface for
-    tangent-geometry degeneracies."""
+    fixed scheduling cost, so multi-op callers should batch)."""
     from ..kernel import booleanop as bo
 
     ops = [op] if isinstance(op, str) else list(op)
-    cand = candidate_pairs(shapes_a, shapes_b, max_cells=max_cells)
+    cand = candidate_pairs(shapes_a, shapes_b)
     ta = F.broadcast(
         shapes_a.select(F.col("shape_id").alias("a_id"), F.col("text").alias("a_text"))
     )
@@ -168,8 +132,6 @@ def boolean_pairs(
     pairs = cand.join(ta, "a_id").join(tb, "b_id")
 
     cols = ["a_id", "b_id", "op", "result", "n_loops", "n_vertices"]
-    if mixed:
-        cols += ["degen_edges", "degen_points", "n_degen_edges", "n_degen_points"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -179,10 +141,7 @@ def boolean_pairs(
             ):
                 pa, pb = _parse_polygon(a_text), _parse_polygon(b_text)
                 for o in ops:
-                    if mixed:
-                        res, de, dp = bo.boolean_op_mixed(pa, pb, o, model=model)
-                    else:
-                        res = bo.boolean_op(pa, pb, o)
+                    res = bo.boolean_op(pa, pb, o)
                     out["a_id"].append(a_id)
                     out["b_id"].append(b_id)
                     out["op"].append(o)
@@ -191,16 +150,9 @@ def boolean_pairs(
                     out["n_vertices"].append(
                         sum(len(lp.vertices) for lp in res.loops)
                     )
-                    if mixed:
-                        out["degen_edges"].append(
-                            "; ".join(_pts_text(e) for e in de)
-                        )
-                        out["degen_points"].append(_pts_text(dp))
-                        out["n_degen_edges"].append(len(de))
-                        out["n_degen_points"].append(len(dp))
             yield pd.DataFrame(out)
 
-    return pairs.mapInPandas(gen, _PAIR_MIXED_SCHEMA if mixed else _PAIR_SCHEMA)
+    return pairs.mapInPandas(gen, _PAIR_SCHEMA)
 
 
 def polygon_relations(shapes_a: DataFrame, shapes_b: DataFrame) -> DataFrame:
@@ -212,8 +164,6 @@ def polygon_relations(shapes_a: DataFrame, shapes_b: DataFrame) -> DataFrame:
     All-pairs form (B broadcast): right for relation GATES and small B
     sets. At scale, pre-prune with candidate_pairs — pairs with disjoint
     coverings are all-false and need no kernel call."""
-    from ..kernel import region as rgk
-
     ta = shapes_a.select(
         F.col("shape_id").alias("a_id"), F.col("text").alias("a_text")
     )

@@ -173,16 +173,9 @@ def closest_edges(
     query_id: str = "query_id",
     lat: str = "lat",
     lng: str = "lng",
-    max_chord2: float | None = None,
-    distance_cap: str = "inclusive",
     interiors: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-k nearest indexed edges per query, with S2ClosestEdgeQuery's
-    maxDistance options: ``distance_cap='inclusive'`` keeps edges AT the
-    cap; 'conservative' pads by the max point-to-edge FP error
-    (S2EdgeUtil.getUpdateMinDistanceMaxError) so true-within-cap edges
-    are never dropped. Applied as an exact-top-k post-filter (sound:
-    capping after ranking equals ranking the capped set).
+    """Top-k nearest indexed edges per query (S2ClosestEdgeQuery).
 
     ``interiors``: optional shapes table (shape_id, text) enabling
     Options.includeInteriors (S2BestEdgesQueryBase.java:399,410 — the
@@ -198,13 +191,10 @@ def closest_edges(
     Scale shape: the containment test is the indexed PIP broadcast hash
     join (operators/shapes.pip_join_indexed) — no per-query work beyond
     the one extra union + re-rank."""
-    from .knn import effective_max_chord2
-
     res = _closest_edges_impl(index, queries, k, level, query_id, lat, lng)
     if interiors is not None:
         res = _with_interiors(res, queries, interiors, k, query_id, lat, lng)
-    eff = effective_max_chord2(max_chord2, distance_cap, edges=True)
-    return res if eff is None else res.where(F.col("chord2") <= F.lit(eff))
+    return res
 
 
 def _with_interiors(res: DataFrame, queries: DataFrame, interiors: DataFrame,

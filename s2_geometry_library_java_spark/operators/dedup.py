@@ -14,9 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from ..functions.columns import _c
 
 
 def hash32(col, seed: int) -> Column:
@@ -75,14 +73,14 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n_hashes: int = 8, shingle_n: int = 3
+    df: DataFrame, id_col: str, text_col: str, n_hashes: int = 8
 ) -> DataFrame:
     """(id, mh_0..mh_{n-1}): per-doc min over shingles of seeded hash32.
 
     Explode-then-groupBy(id) — a single shuffle keyed by doc id, partial
     min() combine on the map side.
     """
-    ex = exploded_shingles(df, id_col, text_col, shingle_n)
+    ex = exploded_shingles(df, id_col, text_col)
     aggs = [F.min(hash32("sh", s)).alias(f"mh_{s}") for s in range(n_hashes)]
     return ex.groupBy("id").agg(*aggs)
 
@@ -93,10 +91,9 @@ def band_table(
     text_col: str,
     n_hashes: int = 8,
     band_rows: int = 2,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """(id, band) rows: each doc exploded to its MinHash-LSH band keys."""
-    sig = minhash_signatures(df, id_col, text_col, n_hashes, shingle_n)
+    sig = minhash_signatures(df, id_col, text_col, n_hashes)
     n_bands = n_hashes // band_rows
     return sig.select(
         "id",
@@ -121,7 +118,6 @@ def lsh_candidate_pairs(
     text_col: str,
     n_hashes: int = 8,
     band_rows: int = 2,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs (a < b): docs sharing any band.
 
@@ -131,7 +127,7 @@ def lsh_candidate_pairs(
     # Not held: both self-join sides read the skinny (id, band) table, yet
     # a cold A/B (sf0.01 and sf0.1 lsh_pairs gate) ran no slower without
     # the cache.
-    bands = band_table(df, id_col, text_col, n_hashes, band_rows, shingle_n)
+    bands = band_table(df, id_col, text_col, n_hashes, band_rows)
     left = bands.alias("l")
     right = bands.alias("r")
     return (
@@ -147,7 +143,6 @@ def lsh_pairs_with_estimates(
     text_col: str,
     n_hashes: int = 8,
     band_rows: int = 2,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """(a, b, sig_matches, est_pct): LSH candidate pairs annotated with the
     MinHash Jaccard ESTIMATE — matching signature components out of
@@ -160,10 +155,8 @@ def lsh_pairs_with_estimates(
     cardinality, never corpus-pairwise. est_pct is exact integer
     (100 * matches DIV n_hashes -> floor), oracle-mirrorable.
     """
-    sig = minhash_signatures(df, id_col, text_col, n_hashes, shingle_n)
-    pairs = lsh_candidate_pairs(
-        df, id_col, text_col, n_hashes, band_rows, shingle_n
-    )
+    sig = minhash_signatures(df, id_col, text_col, n_hashes)
+    pairs = lsh_candidate_pairs(df, id_col, text_col, n_hashes, band_rows)
     sa = sig.select(
         F.col("id").alias("a"), *[F.col(f"mh_{s}").alias(f"a{s}") for s in range(n_hashes)]
     )
@@ -215,7 +208,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     text_col: str,
     threshold_pct: int = 80,
-    shingle_n: int = 3,
     max_doc_freq: int = 50,
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard >= threshold_pct/100.
@@ -226,7 +218,7 @@ def ngram_jaccard_pairs(
     the DuckDB oracle applies the identical rule). The threshold compare is
     exact integer math: 100*|A∩B| >= pct*(|A|+|B|-|A∩B|).
     """
-    ex = exploded_shingles(df, id_col, text_col, shingle_n).distinct()
+    ex = exploded_shingles(df, id_col, text_col).distinct()
     freq = ex.groupBy("sh").agg(F.count("*").alias("df"))
     ex = ex.join(F.broadcast(freq.where(F.col("df") <= max_doc_freq)), "sh")
     sizes = ex.groupBy("id").agg(F.count("*").alias("n_sh"))
@@ -252,10 +244,9 @@ def repeated_window_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     w: int = 8,
-    min_docs: int = 2,
 ) -> DataFrame:
     """(id, tok_start, tok_end, n_windows): maximal token spans covered
-    by ``w``-token windows whose exact content occurs in >= ``min_docs``
+    by ``w``-token windows whose exact content occurs in at least two
     distinct documents — the within-corpus repeated-passage finder
     ("exact substring dedup" a la Lee et al., Deduplicating Training
     Data Makes Language Models Better, on word tokens). Downstream
@@ -277,24 +268,16 @@ def repeated_window_spans(
     wins = words.select(
         "id", F.posexplode(shingles_from_words("w", w)).alias("pos", "sh")
     ).select("id", "pos", hash32("sh", 77).alias("h"))
-    if min_docs == 2:
-        # "at least 2 distinct docs" == "min(id) != max(id)" — min/max are
-        # single-phase aggregations with map-side combine, whereas
-        # count_distinct plans as a two-phase Expand over every window row
-        # (guide §2.3 aggregate-before-shuffle). Identical dup-hash set.
-        dup = (
-            wins.groupBy("h")
-            .agg(F.min("id").alias("_mn"), F.max("id").alias("_mx"))
-            .where(F.col("_mn") != F.col("_mx"))
-            .select("h")
-        )
-    else:
-        dup = (
-            wins.groupBy("h")
-            .agg(F.count_distinct("id").alias("n_docs"))
-            .where(F.col("n_docs") >= min_docs)
-            .select("h")
-        )
+    # "at least 2 distinct docs" == "min(id) != max(id)" — min/max are
+    # single-phase aggregations with map-side combine, whereas
+    # count_distinct plans as a two-phase Expand over every window row
+    # (guide §2.3 aggregate-before-shuffle). Identical dup-hash set.
+    dup = (
+        wins.groupBy("h")
+        .agg(F.min("id").alias("_mn"), F.max("id").alias("_mx"))
+        .where(F.col("_mn") != F.col("_mx"))
+        .select("h")
+    )
     byid = Window.partitionBy("id").orderBy("pos")
     flagged = (
         wins.join(dup, "h")
@@ -326,7 +309,6 @@ def ngram_contamination(
     bench_id_col: str = "bench_id",
     bench_text_col: str = "text",
     shingle_n: int = 5,
-    min_collisions: int = 1,
 ) -> DataFrame:
     """Benchmark decontamination: distinct word-n-gram collisions between
     each training doc and each benchmark (eval-set) doc.
@@ -360,7 +342,6 @@ def ngram_contamination(
             F.col("bench_size").alias("bench_size"),
         )
         .agg(F.count_distinct(F.col("sh")).alias("collisions"))
-        .where(F.col("collisions") >= min_collisions)
         .select("doc_id", "bench_id", "collisions", "bench_size")
     )
 
@@ -370,9 +351,6 @@ def incremental_dedup(
     batch: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 8,
-    band_rows: int = 2,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Dedup an incoming batch AGAINST an existing corpus (the steady-state
     ingestion shape: the corpus is petabytes, the day's batch is not).
@@ -398,10 +376,8 @@ def incremental_dedup(
         .groupBy("id")
         .agg(F.min("cid").alias("exact_id"))
     )
-    cb = band_table(
-        corpus, id_col, text_col, n_hashes, band_rows, shingle_n
-    ).withColumnRenamed("id", "cid")
-    bb = band_table(batch, id_col, text_col, n_hashes, band_rows, shingle_n)
+    cb = band_table(corpus, id_col, text_col).withColumnRenamed("id", "cid")
+    bb = band_table(batch, id_col, text_col)
     near = (
         cb.join(F.broadcast(bb), "band")
         .groupBy("id")
@@ -435,7 +411,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "a",
     dst: str = "b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """(id, component) for every node in ``edges``; component = min node id
     reachable — the canonical duplicate-cluster representative.
@@ -452,7 +427,7 @@ def connected_components(
     lineage so the Catalyst plan doesn't double per round.
 
     Convergence is detected exactly (count + exceptAll emptiness), not by
-    hash. Raises after ``max_iter`` rounds — 25 covers n ~ 2^25 splits.
+    hash. Raises after 25 rounds, which cover n ~ 2^25 splits.
 
     Auto small-graph short circuit (same pattern as booleanops'
     SMALL_SHAPES_THRESHOLD guard): the deduped edge count is already
@@ -538,7 +513,7 @@ def connected_components(
             .distinct()
         )
 
-    for _ in range(max_iter):
+    for _ in range(25):
         nxt = small_star(large_star(e)).localCheckpoint()
         nxt_cnt = nxt.count()
         # counts equal + multiset difference empty == exact convergence;
@@ -548,7 +523,7 @@ def connected_components(
             break
         e, e_cnt = nxt, nxt_cnt
     else:
-        raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
+        raise RuntimeError("connected_components: no convergence in 25 rounds")
 
     # converged edges are stars (node > root) -> assignment = min neighbor
     return (
@@ -565,13 +540,12 @@ def near_dup_clusters(
     text_col: str,
     n_hashes: int = 8,
     band_rows: int = 2,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """(id, component) for EVERY document: MinHash-LSH candidate pairs
     contracted to duplicate clusters; docs with no candidate partner are
     their own singleton component. The keep-one-per-component filter is
     ``WHERE id = component``."""
-    pairs = lsh_candidate_pairs(df, id_col, text_col, n_hashes, band_rows, shingle_n)
+    pairs = lsh_candidate_pairs(df, id_col, text_col, n_hashes, band_rows)
     comp = connected_components(pairs, "a", "b")
     return (
         df.select(_c(id_col).alias("id"))

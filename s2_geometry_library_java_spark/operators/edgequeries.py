@@ -244,15 +244,14 @@ def directed_hausdorff(
     point_id: str = "id",
     lat: str = "lat",
     lng: str = "lng",
-    sample_step: int = 8,
 ) -> DataFrame:
     """(shape_id, worst_point_id, chord2): directed discrete Hausdorff
     witness from the point set to each shape's boundary (F7), PRUNED — the
     DataFrame form of S2HausdorffDistanceQuery over S2BestEdgesQueryBase's
     shrinking search bound:
 
-    1. bound pass: every point joins only a 1/``sample_step`` sample of
-       boundary vertices. u(p) = min sampled-vertex angle is an UPPER
+    1. bound pass: every point joins only a 1/8 sample of boundary
+       vertices. u(p) = min sampled-vertex angle is an UPPER
        bound on d(p, boundary); u(p) - gap_s is a LOWER bound, where
        gap_s = 2x the longest sampled run's arc length bounds how far any
        boundary point can be from its nearest sample along its own loop
@@ -269,6 +268,7 @@ def directed_hausdorff(
     The big point table is scanned once, joins a broadcast vertex sample,
     and never shuffles; the full edge set is only read against the tiny
     candidate band."""
+    step = 8  # loop edges per sampled vertex
     e_all = edges.dropDuplicates(["shape_id", "edge_id"])
     # shape_index_df emits a chain_id per loop; a table without one is
     # treated as one chain
@@ -295,7 +295,7 @@ def directed_hausdorff(
         e_all.select(
             "shape_id",
             "chain_id",
-            (F.col("_rel") / sample_step).cast("long").alias("run"),
+            (F.col("_rel") / step).cast("long").alias("run"),
             elen.alias("elen"),
         )
         .groupBy("shape_id", "chain_id", "run")
@@ -304,7 +304,7 @@ def directed_hausdorff(
         .agg((F.max("run_len") * 2).alias("gap"))
     )
     samples = F.broadcast(
-        e_all.where(F.col("_rel") % sample_step == 0).select(
+        e_all.where(F.col("_rel") % step == 0).select(
             "shape_id", "ax", "ay", "az"
         )
     )

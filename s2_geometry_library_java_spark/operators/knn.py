@@ -62,20 +62,10 @@ def knn_bruteforce(
     query_id: str = "query_id",
     lat: str = "lat",
     lng: str = "lng",
-    max_chord2: float | None = None,
-    distance_cap: str = "inclusive",
 ) -> DataFrame:
-    """(query_id, rank, neighbor_id, chord2) exact k nearest.
-
-    ``max_chord2`` adds the reference's maxDistance option
-    (S2ClosestPointQuery.Options): neighbors beyond the cap are dropped,
-    so queries may return fewer than k rows.
-    ``distance_cap='conservative'`` pads the cap by the max FP error
-    (setConservativeMaxDistance) so true-within-cap points are never
-    under-reported."""
+    """(query_id, rank, neighbor_id, chord2) exact k nearest."""
     q = ringsearch.query_rows(queries, query_id, lat, lng).toArrow()
-    res = _local(index, q, k, index_id, lat, lng)
-    return _capped(res, effective_max_chord2(max_chord2, distance_cap))
+    return _local(index, q, k, index_id, lat, lng)
 
 
 def choose_level(n_index: int, k: int) -> int:
@@ -91,37 +81,6 @@ def choose_level(n_index: int, k: int) -> int:
     return max(0, min(30, int(math.log(ratio, 4))))
 
 
-def _capped(df: DataFrame, max_chord2: float | None) -> DataFrame:
-    """Inclusive maxDistance post-filter (sound on exact top-k output:
-    capping after ranking equals ranking the capped candidate set)."""
-    if max_chord2 is None:
-        return df
-    return df.where(F.col("chord2") <= F.lit(float(max_chord2)))
-
-
-def effective_max_chord2(
-    max_chord2: float | None, distance_cap: str = "inclusive",
-    edges: bool = False,
-) -> float | None:
-    """Resolve a maxDistance option to the squared-chord filter value.
-
-    'inclusive' = setInclusiveMaxDistance (points AT the cap returned);
-    'conservative' = setConservativeMaxDistance
-    (S2ClosestPointQuery.java:174-186): the cap is padded by the maximum
-    floating-point distance error, so no point (edge, with
-    ``edges=True``) whose TRUE distance is within the cap can be
-    under-reported — callers then refine with exact predicates."""
-    from ..kernel import sphere
-
-    if max_chord2 is None:
-        return None
-    if distance_cap == "inclusive":
-        return float(max_chord2)
-    if distance_cap == "conservative":
-        return sphere.conservative_max_chord2(float(max_chord2), edges=edges)
-    raise ValueError(f"unknown distance_cap: {distance_cap!r}")
-
-
 def knn_cell_join(
     index: DataFrame,
     queries: DataFrame,
@@ -132,8 +91,6 @@ def knn_cell_join(
     lng: str = "lng",
     density_hist: list[tuple[int, int]] | None = None,
     hist_level: int | None = None,
-    max_chord2: float | None = None,
-    distance_cap: str = "inclusive",
 ) -> DataFrame:
     """Scale-path kNN: ringsearch.search over the index points.
 
@@ -184,12 +141,11 @@ def knn_cell_join(
     rings = max(seed_levels) > 0
     local = ringsearch.local_queries(queries, query_id, lat, lng, n_index, rings)
     if local is not None:
-        res = _local(index, local, k, index_id, lat, lng)
-        return _capped(res, effective_max_chord2(max_chord2, distance_cap))
+        return _local(index, local, k, index_id, lat, lng)
     # not held: a cold A/B (100k points x 2,000 queries) found the rounds'
     # re-run of this Arrow pass no slower than caching it
     idx = ringsearch.points(index, index_id, "neighbor_id", lat, lng, "i")
-    res = ringsearch.search(
+    return ringsearch.search(
         qs, k, ["neighbor_id"], _chord2(),
         items=idx.select("neighbor_id", "ix", "iy", "iz"),
         keyed=lambda levels: idx.crossJoin(levels).withColumn(
@@ -197,4 +153,3 @@ def knn_cell_join(
         ),
         seed_levels=seed_levels,
     )
-    return _capped(res, effective_max_chord2(max_chord2, distance_cap))

@@ -28,20 +28,17 @@ def with_prefix_sum(
     order_col: str,
     value_col: str,
     out_col: str = "cum",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact global running sum of ``value_col`` in ``order_col`` order
-    (inclusive), without a global single-task window.
+    (inclusive), without a global single-task window: the range
+    repartition makes spark.sql.shuffle.partitions partitions.
 
     REQUIRES: ``order_col`` values are unique (ties would make "global
     order" ambiguous). The range partitioner's sampled boundaries don't
     affect the result: offsets are computed from actual partition
     contents, and range partitioning guarantees inter-partition order.
     """
-    if num_partitions is None:
-        num_partitions = df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32"
-        )
+    num_partitions = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     ranged = df.repartitionByRange(int(num_partitions), F.col(order_col))
     local = ranged.withColumn("_pid", F.spark_partition_id()).withColumn(
         "_local_cum",
@@ -76,7 +73,6 @@ def with_chunk_assignments(
     budget: int,
     id_col: str = "doc_id",
     tokens_col: str = "re_tokens",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Adds (tok_start, chunk_first, chunk_last): the doc's byte-exact
     placement when all docs are concatenated in ``id_col`` order and cut
@@ -90,9 +86,7 @@ def with_chunk_assignments(
     crosses no extra shuffle for its cumsum (one equi-join attaches the
     three placement columns; AQE co-partitions it)."""
     slim = df.select(id_col, tokens_col)
-    cum = with_prefix_sum(
-        slim, id_col, tokens_col, out_col="_cum", num_partitions=num_partitions
-    )
+    cum = with_prefix_sum(slim, id_col, tokens_col, out_col="_cum")
     start = F.col("_cum") - F.col(tokens_col)
     last_tok = F.greatest(F.col("_cum") - 1, start)  # empty doc -> start
     b = int(budget)

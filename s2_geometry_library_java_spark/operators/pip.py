@@ -20,7 +20,7 @@ all build their candidates with step 3; the tolerant path swaps step 4 for
 its distance UDF.
 
 At 100 TB the point table never shuffles: the covering table is O(polygons
-x max_cells) rows and broadcasts; the PIP kernel sees only boundary-cell
+x MAX_CELLS) rows and broadcasts; the PIP kernel sees only boundary-cell
 candidates (a thin sliver of the data).
 """
 
@@ -41,12 +41,17 @@ from ..kernel.cell import Cell
 from ..localdf import local_df
 
 
+#: covering cells per polygon for the PIP joins (driver- and executor-side),
+#: tolerant.within_distance_of_polygons and booleanops' candidate pairs
+MAX_CELLS = 8
+
 #: driver-side memo for covering rows: the covering of a polygon is a pure
 #: function of its geometry + coverer params and is independent of any input
 #: table, yet the coverer costs ~0.5 s of driver time per 6-polygon call —
 #: paid on EVERY pip_join plan build. Keyed by a digest of loop vertices +
-#: orientation + params; bounded LRU so dynamically-constructed polygons
-#: (boolean-op results) can't grow it without bound.
+#: orientation + params; bounded LRU (a hit moves its key to the end, the
+#: first key is evicted) so dynamically-constructed polygons (boolean-op
+#: results) can't grow it without bound.
 _COVERING_MEMO: dict = {}
 _COVERING_MEMO_CAP = 256
 
@@ -68,12 +73,14 @@ def polygons_geometry_key(polygons: dict, *params) -> bytes:
 
 def memoized_rows(key: bytes, build) -> tuple[tuple, ...]:
     """``tuple(build())`` stored in the covering memo under ``key``."""
-    rows = _COVERING_MEMO.get(key)
+    rows = _COVERING_MEMO.pop(key, None)
     if rows is None:
         if len(_COVERING_MEMO) >= _COVERING_MEMO_CAP:
             _COVERING_MEMO.pop(next(iter(_COVERING_MEMO)))
         # a tuple: every caller shares the memoized value, so none may mutate it
-        rows = _COVERING_MEMO[key] = tuple(build())
+        rows = tuple(build())
+    # (re-)inserted last: the least recently used key stays first
+    _COVERING_MEMO[key] = rows
     return rows
 
 
@@ -91,21 +98,16 @@ def covering_cells(coverer, poly) -> list[tuple[int, bool]]:
     ]
 
 
-def covering_rows(
-    polygons: dict, max_cells: int = 8, min_level: int = 0, max_level: int = 30
-) -> tuple[tuple, ...]:
+def covering_rows(polygons: dict) -> tuple[tuple, ...]:
     """(polygon_id, cell_id, is_interior) rows of ``covering_cells``."""
 
     def build():
-        coverer = cov.RegionCoverer(
-            max_cells=max_cells, min_level=min_level, max_level=max_level
-        )
+        coverer = cov.RegionCoverer(max_cells=MAX_CELLS)
         for pid, poly in polygons.items():
             for cid, interior in covering_cells(coverer, poly):
                 yield pid, cid, interior
 
-    key = polygons_geometry_key(polygons, "cov", max_cells, min_level, max_level)
-    return memoized_rows(key, build)
+    return memoized_rows(polygons_geometry_key(polygons, "cov"), build)
 
 
 def leaf_points(
@@ -193,7 +195,6 @@ def pip_join(
     point_id: str = "id",
     lat: str = "lat",
     lng: str = "lng",
-    max_cells: int = 8,
     leaf_col: str | None = None,
 ) -> DataFrame:
     """(point_id, polygon_id) for every point contained in each polygon.
@@ -204,6 +205,6 @@ def pip_join(
     cand = candidate_join(
         spark,
         leaf_points(points, point_id, lat, lng, leaf_col),
-        covering_rows(polygons, max_cells=max_cells),
+        covering_rows(polygons),
     )
     return exact_filter(cand, polygons).select("point_id", "polygon_id")

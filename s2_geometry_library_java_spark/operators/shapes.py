@@ -35,7 +35,7 @@ def _parse_polygon(text: str):
 _COVERING_SCHEMA = "shape_id string, cell_id long, is_interior boolean"
 
 
-def coverings_df(shapes: DataFrame, max_cells: int = 8,
+def coverings_df(shapes: DataFrame, max_cells: int = pip.MAX_CELLS,
                  id_col: str = "shape_id", text_col: str = "text",
                  min_level: int = 0, max_level: int = 30,
                  level_mod: int = 1) -> DataFrame:
@@ -70,8 +70,7 @@ _INDEX_SCHEMA = (
 )
 
 
-def shape_index_df(shapes: DataFrame, max_edges_per_cell: int = 10,
-                   max_level: int = 20, min_level: int = 0,
+def shape_index_df(shapes: DataFrame, min_level: int = 0,
                    id_col: str = "shape_id", text_col: str = "text") -> DataFrame:
     """E2 build: (shape_id, cell_id, edge_id, edge endpoints) rows — the
     DataFrame form of S2ShapeIndex (an index IS a sorted table). Sort or
@@ -92,10 +91,7 @@ def shape_index_df(shapes: DataFrame, max_edges_per_cell: int = 10,
                 chain_of = np.repeat(
                     np.arange(len(loops)), [len(lp) for lp in loops]
                 )
-                for cid, edge_ids in si.build_shape_index(
-                    loops, max_edges_per_cell=max_edges_per_cell,
-                    max_level=max_level, min_level=min_level
-                ):
+                for cid, edge_ids in si.build_shape_index(loops, min_level=min_level):
                     for e in edge_ids:
                         rows["shape_id"].append(sid)
                         rows["cell_id"].append(int(s2.to_signed(np.uint64(cid))[0]))
@@ -119,7 +115,6 @@ def pip_join_indexed(
     point_id: str = "id",
     lat: str = "lat",
     lng: str = "lng",
-    max_cells: int = 8,
     leaf_col: str | None = None,
 ) -> DataFrame:
     """(point_id, polygon_id) PIP join with EXECUTOR-side coverings.
@@ -127,7 +122,7 @@ def pip_join_indexed(
     Same plan as pip.pip_join (one ancestor-level broadcast hash join,
     then the one exact filter with interior fast-accept), but the coverer
     runs on the executors over the shapes table, as in coverings_df. One
-    pass over the shapes and one collect bring back its rows (<= max_cells per
+    pass over the shapes and one collect bring back its rows (<= MAX_CELLS per
     shape), re-shipped as the local broadcast side, and each shape's text,
     parsed into the exact filter's closure: no geometry column rides on
     the candidate rows. A shape with an empty covering has no candidates,
@@ -137,7 +132,7 @@ def pip_join_indexed(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernel import coverer as cov
 
-        coverer = cov.RegionCoverer(max_cells=max_cells)
+        coverer = cov.RegionCoverer(max_cells=pip.MAX_CELLS)
         for pdf in batches:
             # the text rides on each shape's first covering row only
             rows = [

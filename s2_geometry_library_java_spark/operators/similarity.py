@@ -19,11 +19,8 @@ from pyspark.sql import Column, DataFrame, functions as F, Window
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from ..functions.columns import _c
 from ..plans import cache
-
-
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 def _vector_groups(cols: tuple, width: int | None = None):
@@ -174,7 +171,6 @@ def lsh_banded_pairs(
     planes_per_table: int = 16,
     dim: int = 64,
     min_cosine: float | None = None,
-    max_bucket: int = 10000,
 ) -> DataFrame:
     """(a, b) candidate pairs sharing any of n_tables LSH bands, optionally
     refined by exact cosine >= min_cosine — the ANN SCALE path.
@@ -183,9 +179,9 @@ def lsh_banded_pairs(
     8-plane table the self-join degenerates to ~all-pairs/256 on large
     inputs; 4x16 planes gives 2^16 buckets per table (tiny buckets, high
     recall via 4 independent chances). The skew guard drops bands larger
-    than max_bucket from the join (a hot bucket means the planes failed to
+    than MAX_BUCKET from the join (a hot bucket means the planes failed to
     split a dense cluster; callers refine those separately), bounding the
-    worst-case fanout to max_bucket^2 per band."""
+    worst-case fanout to MAX_BUCKET^2 per band."""
     bk = make_band_keys_udf(n_tables, planes_per_table, dim)
     # Held: the bucket-count aggregate and BOTH self-join sides read this
     # table; without it the Arrow band-key pass over the full embedding set
@@ -197,7 +193,7 @@ def lsh_banded_pairs(
         F.explode(bk(_c(vec_col))).alias("band"),
     ))
     counts = b.groupBy("band").agg(F.count("*").alias("n"))
-    kept = b.join(counts.where(F.col("n") <= max_bucket), "band")
+    kept = b.join(counts.where(F.col("n") <= MAX_BUCKET), "band")
     # Dedup on the SKINNY (a, b) id pair FIRST, then re-attach the vectors
     # for the cosine refine (guide §8: shuffle keys, not payloads). The
     # previous form carried both 64-float embeddings through the self-join
@@ -233,10 +229,19 @@ def lsh_banded_pairs(
     return pairs.select("a", "b")
 
 
+#: largest LSH band lsh_banded_pairs joins; bigger (hot) bands are dropped
+MAX_BUCKET = 10_000
+
 #: vector-table row cap for broadcasting the embedding side of the banded-
 #: LSH cosine refine (~50 MB of 64-dim doubles at the cap); above it the
 #: pair table shuffles for the attach as before.
 BROADCAST_VECTORS_MAX_ROWS = 100_000
+
+#: IVF training: 2**IVF_INIT_PLANES hyperplane sign buckets seed the
+#: centroids, then IVF_ITERS Lloyd iterations refine them (the ann_ivf
+#: oracle SQL mirrors both)
+IVF_INIT_PLANES = 6
+IVF_ITERS = 2
 
 #: fixed-point scale for exact (order-independent) centroid sums: component
 #: sums are BIGINT, so Lloyd updates hash-match any engine regardless of
@@ -258,60 +263,35 @@ def quantized_topk(
     id_col: str,
     vec_col: str,
     k: int,
-    rescore: int = 0,
 ) -> DataFrame:
     """(query_id, rank, neighbor_id, score_q) top-k by maximum inner
-    product over fixed-point-quantized vectors (the int8-rescore pattern
-    from large-scale embedding pipelines, at 2^20 fixed-point precision).
+    product over fixed-point-quantized vectors (the int8 pattern from
+    large-scale embedding pipelines, at 2^20 fixed-point precision).
 
     Scores are exact BIGINTs, so the result is engine-reproducible
     bit-for-bit — the compressed index is the thing a 100-TB deployment
     would actually scan (quantized vectors are 8 bytes/dim of BIGINT here
     standing in for 1 byte/dim int8; the plan shape is identical and the
     scan never shuffles — queries broadcast, one window per query id).
-
-    With ``rescore = m > 0``: keep the top m by quantized score, then
-    re-rank those m candidates by exact float cosine (the standard
-    two-stage retrieve-then-rescore). The rescore stage touches only
-    q x m rows.
     """
     q = F.broadcast(
         queries.select(
-            _c(id_col).alias("query_id"),
-            quantized_vec(vec_col).alias("qq"),
-            _c(vec_col).alias("qv"),
+            _c(id_col).alias("query_id"), quantized_vec(vec_col).alias("qq")
         )
     )
     x = index.select(
-        _c(id_col).alias("neighbor_id"),
-        quantized_vec(vec_col).alias("qx"),
-        _c(vec_col).alias("xv"),
+        _c(id_col).alias("neighbor_id"), quantized_vec(vec_col).alias("qx")
     )
     scored = q.join(x, F.col("query_id") != F.col("neighbor_id")).select(
         "query_id",
         "neighbor_id",
         seq_quantized_dot_udf(F.col("qq"), F.col("qx")).alias("score_q"),
-        "qv",
-        "xv",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score_q"), F.asc("neighbor_id")
     )
-    if not rescore:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "score_q")
-        )
-    cand = scored.withColumn("crank", F.row_number().over(w)).where(
-        F.col("crank") <= int(rescore)
-    )
-    rw = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
     return (
-        cand.withColumn("sim", seq_cosine_udf(F.col("qv"), F.col("xv")))
-        .withColumn("rank", F.row_number().over(rw))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "score_q")
     )
@@ -412,25 +392,23 @@ def ivf_train_centroids(
     vec_col: str,
     n_centroids: int,
     dim: int = 64,
-    iters: int = 2,
-    init_planes: int = 6,
 ) -> DataFrame:
     """(centroid_id, cv) deterministic k-means-style IVF coarse centroids.
 
     Seeding is a derandomized k-means|| analogue: ONE pass oversamples the
-    data into 2**init_planes hyperplane sign buckets (the same
+    data into 2**IVF_INIT_PLANES hyperplane sign buckets (the same
     deterministic rational hyperplanes as the LSH path — each bucket is a
     directional cluster candidate, standing in for k-means||'s sampled
     candidate set), then the ``n_centroids`` heaviest buckets' exact
     integer component sums seed the centroids (count DESC, bucket ASC).
-    ``iters`` Lloyd iterations refine: assignment is a single Arrow pass
+    IVF_ITERS Lloyd iterations refine: assignment is a single Arrow pass
     (argmax cosine against the broadcast K x dim matrix, no N x K row
     expansion); the update is an exact BIGINT elementwise sum (cosine is
     scale-invariant, so the sum vector needs no division) — every step is
     order-independent or sequential-order, hence SQL-oracle mirrorable.
 
     Scale: per iteration, one Arrow projection pass + one skinny
-    (centroid_id, pos) shuffle with map-side combine. K and iters are
+    (centroid_id, pos) shuffle with map-side combine. K and IVF_ITERS are
     constants; nothing is ever quadratic in N.
     """
     from ..localdf import local_df
@@ -442,7 +420,7 @@ def ivf_train_centroids(
             _c(id_col).alias("id"),
             _c(vec_col).alias("v"),
             quantized_vec(vec_col).alias("q"),
-            lsh_bucket_udf(init_planes, dim)(_c(vec_col)).alias("bucket"),
+            lsh_bucket_udf(IVF_INIT_PLANES, dim)(_c(vec_col)).alias("bucket"),
         ))
         wb = Window.orderBy(F.desc("n"), F.asc("bucket"))
         top = (
@@ -454,7 +432,7 @@ def ivf_train_centroids(
         )
         members = pts.join(F.broadcast(top), "bucket").select("centroid_id", "q")
         cents = _sum_vectors(members, dim)
-        for _ in range(iters):
+        for _ in range(IVF_ITERS):
             ids, C = _collect_centroid_matrix(cents)
             assign = make_ivf_assign_udf(ids, C)
             members = pts.select(assign(F.col("v")).alias("centroid_id"), "q")
@@ -479,8 +457,6 @@ def ivf_topk(
     k: int,
     n_centroids: int = 8,
     nprobe: int = 2,
-    centroids: DataFrame | None = None,
-    train_iters: int = 2,
     dim: int = 64,
 ) -> DataFrame:
     """(query_id, rank, neighbor_id) approximate top-k by cosine via an
@@ -488,9 +464,7 @@ def ivf_topk(
     the banded-LSH variant:
 
     1. coarse centroids from ``ivf_train_centroids`` (deterministic
-       bucket-sum seeding + exact-integer Lloyd refinement), or any
-       caller-supplied (centroid_id, cv) table — the plan is
-       centroid-table-agnostic;
+       bucket-sum seeding + exact-integer Lloyd refinement);
     2. every index vector is assigned to its best list in ONE Arrow pass
        (argmax cosine against the closure-held K x dim matrix — no
        N x K row expansion, no nested-loop join);
@@ -505,10 +479,7 @@ def ivf_topk(
     Approximate by construction: a true neighbor assigned to an unprobed
     list is missed (recall grows with nprobe).
     """
-    if centroids is None:
-        centroids = ivf_train_centroids(
-            index, id_col, vec_col, n_centroids, dim=dim, iters=train_iters
-        )
+    centroids = ivf_train_centroids(index, id_col, vec_col, n_centroids, dim=dim)
     ids, C = _collect_centroid_matrix(centroids)
     assign = make_ivf_assign_udf(ids, C)
     probe = make_ivf_probe_udf(ids, C, nprobe)

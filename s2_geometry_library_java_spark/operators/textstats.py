@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from ..functions.columns import _c
 from .dedup import normalized_words
 
 # Tiny English stopword list shared with the oracle (keep sorted & stable).
@@ -19,10 +20,6 @@ STOPWORDS = ["a", "and", "by", "for", "in", "of", "on", "or", "the", "to", "with
 
 #: BPE-ish token regex: alpha runs, digit runs, or single non-space symbols.
 TOKEN_REGEX = "[a-z]+|[0-9]+|[^a-z0-9 ]"
-
-
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 def _intdiv(a, b) -> Column:
@@ -220,40 +217,41 @@ def grouped_percentiles(
     )
 
 
-def quality_columns(
-    text,
-    min_tokens: int = 5,
-    max_tokens: int = 100_000,
-    max_word_len: int = 40,
-    min_quality: int = 50,
-    langs: tuple = ("en",),
-) -> tuple:
+# Token-count bounds of quality_columns; tests patch them to move a doc
+# across a rule.
+MIN_TOKENS = 5
+MAX_TOKENS = 100_000
+
+
+def quality_columns(text) -> tuple:
     """(keep, reason) Column pair for rule-based quality filtering — the
     C4/Gopher-style cleaning pass. ``reason`` is the FIRST failing rule in
-    a fixed order (too_short, too_long, long_word, low_quality, lang), ''
-    when the doc is kept. Every comparison is integer-exact, so the DuckDB
-    oracle twin agrees bit-for-bit."""
+    a fixed order (too_short: under MIN_TOKENS tokens, too_long: over
+    MAX_TOKENS, long_word: a word over 40 characters, low_quality:
+    quality_score under 50, lang: not 'en'), '' when the doc is kept.
+    Every comparison is integer-exact, so the DuckDB oracle twin agrees
+    bit-for-bit."""
     ntok = whitespace_token_count(text)
     t = F.trim(_c(text))
     longest = F.when(t == "", F.lit(0)).otherwise(
         F.array_max(F.transform(F.split(t, "\\s+"), lambda w: F.length(w)))
     )
     reason = (
-        F.when(ntok < min_tokens, F.lit("too_short"))
-        .when(ntok > max_tokens, F.lit("too_long"))
-        .when(longest > max_word_len, F.lit("long_word"))
-        .when(quality_score(text) < min_quality, F.lit("low_quality"))
-        .when(~lang_guess(text).isin(*langs), F.lit("lang"))
+        F.when(ntok < MIN_TOKENS, F.lit("too_short"))
+        .when(ntok > MAX_TOKENS, F.lit("too_long"))
+        .when(longest > 40, F.lit("long_word"))
+        .when(quality_score(text) < 50, F.lit("low_quality"))
+        .when(~lang_guess(text).isin("en"), F.lit("lang"))
         .otherwise(F.lit(""))
     )
     return (reason == "").alias("keep"), reason.alias("reason")
 
 
-def quality_filter(df: DataFrame, id_col: str, text_col: str, **opts) -> DataFrame:
+def quality_filter(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, keep, reason) per document: pure Column, zero shuffle — the
     filter itself is `WHERE keep`; the reason column is what a production
     pipeline logs/aggregates for drop-rate monitoring."""
-    keep, reason = quality_columns(text_col, **opts)
+    keep, reason = quality_columns(text_col)
     return df.select(_c(id_col).alias("id"), keep, reason)
 
 

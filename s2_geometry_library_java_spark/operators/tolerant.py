@@ -85,14 +85,12 @@ def tolerant_pairs(
     b_id: str = "b_id",
     lat: str = "lat",
     lng: str = "lng",
-    level: int | None = None,
 ) -> DataFrame:
     """(a_id, b_id, chord2) for all cross pairs within radius_rad.
 
     Side B carries the 9x ring fanout — pass the smaller table as ``b``.
     """
-    if level is None:
-        level = level_for_radius(radius_rad)
+    level = level_for_radius(radius_rad)
     threshold = float(sphere.chord2_from_angle(radius_rad))
     # coalesce makes the join key non-nullable: otherwise the join's pushed
     # isnotnull filter re-evaluates the Arrow encode kernel a second time
@@ -139,21 +137,19 @@ def tolerant_pairs(
 # point x polygon within-distance
 # ---------------------------------------------------------------------------
 
-def expanded_covering_rows(
-    polygons: dict, radius_rad: float, max_cells: int = 8
-) -> tuple[tuple, ...]:
+def expanded_covering_rows(polygons: dict, radius_rad: float) -> tuple[tuple, ...]:
     """(polygon_id, cell_id) rows of each polygon's covering buffered by
     radius (kernel union_expand_radius = S2CellUnion.expand(S1Angle)).
     Memoized like pip.covering_rows (pip.memoized_rows): pure function of
     geometry + params, ~0.5 s of driver plan-build time per call otherwise."""
 
     def build():
-        coverer = cov.RegionCoverer(max_cells=max_cells)
+        coverer = cov.RegionCoverer(max_cells=pip.MAX_CELLS)
         for pid, poly in polygons.items():
             ids = cov.union_expand_radius(coverer.get_covering(poly), radius_rad)
             yield from ((pid, int(s2.to_signed(np.uint64(c))[0])) for c in ids)
 
-    key = pip.polygons_geometry_key(polygons, "expcov", radius_rad, max_cells)
+    key = pip.polygons_geometry_key(polygons, "expcov", radius_rad)
     return pip.memoized_rows(key, build)
 
 
@@ -201,13 +197,12 @@ def within_distance_of_polygons(
     point_id: str = "id",
     lat: str = "lat",
     lng: str = "lng",
-    max_cells: int = 8,
 ) -> DataFrame:
     """(point_id, polygon_id, chord2) for points within radius of each
     polygon (inside counts as distance 0). The PIP join's candidate join
     (pip.candidate_join) over the buffered coverings, then the distance
     kernel only on covering candidates."""
-    rows = expanded_covering_rows(polygons, radius_rad, max_cells=max_cells)
+    rows = expanded_covering_rows(polygons, radius_rad)
     # expanded coverings are normalized (non-overlapping), so each point
     # matches a polygon through at most one covering cell — no dedup needed
     cand = pip.candidate_join(

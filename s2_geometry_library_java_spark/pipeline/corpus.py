@@ -21,13 +21,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import dedup, packing, sampling, textstats
 
+#: context-window size, in tokens, that the manifest's documents are packed into
+BUDGET = 512
+
 
 def assemble_corpus(
     spark: SparkSession,
     docs: DataFrame,
     weights: dict[str, float],
     total: int,
-    budget: int = 512,
     id_col: str = "doc_id",
     text_col: str = "text",
     stratum_col: str = "source",
@@ -76,7 +78,7 @@ def assemble_corpus(
         textstats.regex_token_count("text").alias("re_tokens"),
     )
     packed = packing.with_chunk_assignments(
-        stats, budget, id_col="id", tokens_col="re_tokens"
+        stats, BUDGET, id_col="id", tokens_col="re_tokens"
     )
     manifest = packed.join(
         sampled.select("id", "component"), "id"

@@ -42,7 +42,6 @@ class CheckpointedPipeline:
         name: str,
         fn: Callable[[], DataFrame],
         input_fingerprint: str,
-        partition_by: list[str] | None = None,
         rows_in: int | None = None,
         cells_col: str | None = None,
     ) -> DataFrame:
@@ -64,11 +63,7 @@ class CheckpointedPipeline:
         if prior is not None and success and prior.get("input_fingerprint") == input_fingerprint:
             return self.spark.read.parquet(data_path)
 
-        df = fn()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_path)
+        fn().write.mode("overwrite").parquet(data_path)
 
         out = self.spark.read.parquet(data_path)
         aggs = [F.count("*").alias("rows_out")]

@@ -78,11 +78,10 @@ def density_tree_histogram(
     leaf_col: str,
     base_level: int,
     target_weight: float,
-    max_level: int = 18,
 ) -> list[tuple[int, int]]:
     """Multi-level density histogram (S2DensityTree.java's ancestor-closed
     tree, flattened to its leaves): cells heavier than ``target_weight``
-    are refined two levels at a time until light enough or ``max_level``,
+    are refined two levels at a time until light enough or level 18,
     so a hot metro contributes MANY small cells instead of one opaque
     heavy cell — uniform-weight interpolation inside the remaining leaves
     is then a good approximation (the reference's CellInterpolator is
@@ -94,14 +93,14 @@ def density_tree_histogram(
     cells per round."""
     cur: dict[int, int] = dict(density_histogram(df, leaf_col, base_level))
     level = base_level
-    while level < max_level:
+    while level < 18:
         heavy = [
             c for c, w in cur.items()
             if w > target_weight and int(s2.level(np.uint64(c))) == level
         ]
         if not heavy:
             break
-        child_level = min(level + 2, max_level)
+        child_level = min(level + 2, 18)
         heavy_signed = [int(np.int64(np.uint64(c))) for c in heavy]
         sub = df.where(
             cc.parent(leaf_col, level).isin(heavy_signed)

@@ -2635,6 +2635,12 @@ def q_ann_topk_oracle() -> str:
     """
 
 
+#: the ann_ivf gate's top-k, coarse list count and lists probed per query
+ANN_IVF_K = 5
+ANN_IVF_CENTROIDS = 8
+ANN_IVF_NPROBE = 2
+
+
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) ANN scale path: deterministic k-means-style
     training (hyperplane bucket-sum seeding + 2 exact-integer Lloyd
@@ -2646,20 +2652,17 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables.load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
     return similarity.ivf_topk(
-        emb, queries, "vec_id", "embedding", k=5, n_centroids=8, nprobe=2
+        emb, queries, "vec_id", "embedding", k=ANN_IVF_K,
+        n_centroids=ANN_IVF_CENTROIDS, nprobe=ANN_IVF_NPROBE,
     )
 
 
-def q_ann_ivf_oracle(
-    n_centroids: int = 8,
-    iters: int = 2,
-    init_planes: int = 6,
-    dim: int = 64,
-    nprobe: int = 2,
-    k: int = 5,
-) -> str:
-    """SQL mirror of ivf_train_centroids + ivf_topk (defaults must match
-    q_ann_ivf / similarity.ivf_topk defaults)."""
+def q_ann_ivf_oracle(dim: int = 64) -> str:
+    """SQL mirror of ivf_train_centroids + ivf_topk: q_ann_ivf's ANN_IVF_K,
+    ANN_IVF_CENTROIDS and ANN_IVF_NPROBE, and the training constants
+    similarity.IVF_INIT_PLANES and similarity.IVF_ITERS."""
+    n_centroids, nprobe, k = ANN_IVF_CENTROIDS, ANN_IVF_NPROBE, ANN_IVF_K
+    init_planes, iters = similarity.IVF_INIT_PLANES, similarity.IVF_ITERS
     dot = (
         "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
         "list_transform(list_zip({a}, {b}), "

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from ..functions.columns import _c
+
 MAX_SIZE = 1 << 30
 
 # multipliers: Knuth hash, glibc LCG, and two primes — arbitrary but fixed.
@@ -20,10 +22,6 @@ _J_MULT = 1103515245
 _J_ADD = 12345
 _LAT_MULT = 7919
 _LNG_MULT = 104729
-
-
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 # -- Spark side ---------------------------------------------------------------

@@ -259,105 +259,6 @@ def test_furthest_local_pass_before_seed_route(spark, count_jobs, monkeypatch):
     _assert_furthest_brute(rows, texts, qs, 2)
 
 
-def test_conservative_max_distance_no_under_reporting(spark):
-    """Round-4 verdict #5 'done' criterion: points whose TRUE distance
-    equals the cap but whose computed chord2 lands 1-2 ulps above it
-    (FP rounding) are dropped by the raw inclusive cap but MUST survive
-    setConservativeMaxDistance's error-padded cap
-    (S2ClosestPointQuery.java:174-186)."""
-    import numpy as np
-
-    from s2_geometry_library_java_spark.kernel import sphere
-    from s2_geometry_library_java_spark.operators import knn
-
-    r = 0.37  # radians; all index points at ~this angle from q
-    qlat, qlng = 10.0, 40.0
-    n = 512
-    bearings = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
-    # rotate: point at angular distance r from q along each bearing
-    qlat_r, qlng_r = np.radians(qlat), np.radians(qlng)
-    lat = np.arcsin(
-        np.sin(qlat_r) * np.cos(r) + np.cos(qlat_r) * np.sin(r) * np.cos(bearings)
-    )
-    lng = qlng_r + np.arctan2(
-        np.sin(bearings) * np.sin(r) * np.cos(qlat_r),
-        np.cos(r) - np.sin(qlat_r) * np.sin(lat),
-    )
-    idx = spark.createDataFrame(
-        [(i, float(np.degrees(lat[i])), float(np.degrees(lng[i])))
-         for i in range(n)],
-        "id long, lat double, lng double",
-    )
-    qdf = spark.createDataFrame(
-        [(0, qlat, qlng)], "query_id long, lat double, lng double"
-    )
-    # TRUE distances: extended-precision chord2 from the very float64 xyz
-    # the operator itself uses (collected from its projection) — the
-    # conservative bound covers the distance CALCULATION error, given the
-    # index points as stored
-    ix = ringsearch.points(idx, "id", "id", "lat", "lng", "i").orderBy("id").collect()
-    qx = ringsearch.points(qdf, "query_id", "query_id", "lat", "lng", "q").collect()[0]
-    X = np.array([[row["ix"], row["iy"], row["iz"]] for row in ix],
-                 dtype=np.longdouble)
-    Q = np.array([qx["qx"], qx["qy"], qx["qz"]], dtype=np.longdouble)
-    true_chord2 = ((X - Q) ** 2).sum(axis=1)
-    computed = {
-        row["neighbor_id"]: row["chord2"]
-        for row in knn.knn_bruteforce(idx, qdf, k=n).collect()
-    }
-    assert len(computed) == n
-    # cap chosen so at least one point has TRUE distance within the cap
-    # but computed float64 chord2 a few ulps above it
-    cap = float(np.median([computed[i] for i in range(n)]))
-    within_true = {i for i in range(n) if true_chord2[i] <= cap}
-    missed_by_raw = {
-        i for i in within_true if computed[i] > cap
-    }
-    assert missed_by_raw, "fixture must produce true<=cap<computed points"
-    raw_ids = {
-        row["neighbor_id"]
-        for row in knn.knn_bruteforce(idx, qdf, k=n, max_chord2=cap).collect()
-    }
-    assert missed_by_raw & (within_true - raw_ids), (
-        "raw inclusive cap should under-report the ulp-above points"
-    )
-    cons_ids = {
-        row["neighbor_id"]
-        for row in knn.knn_bruteforce(
-            idx, qdf, k=n, max_chord2=cap, distance_cap="conservative"
-        ).collect()
-    }
-    assert within_true <= cons_ids, (
-        f"conservative cap under-reported {sorted(within_true - cons_ids)[:5]}"
-    )
-    # and the pad is tight: a point 1e-6 rad beyond the cap stays excluded
-    far_chord2 = float(sphere.chord2_from_angle(r + 1e-6))
-    assert sphere.conservative_max_chord2(float(cap)) < far_chord2
-
-
-def test_conservative_cap_on_closest_edges(spark):
-    """closest_edges exposes the same option (edge error bound)."""
-    shapes_df = spark.createDataFrame(
-        [("s0", "10.0:20.0, 10.0:30.0, 20.0:30.0, 20.0:20.0")],
-        "shape_id string, text string",
-    ).coalesce(1)
-    idx = shape_ops.shape_index_df(shapes_df, min_level=4)
-    qdf = spark.createDataFrame(
-        [(0, 15.0, 40.0)], "query_id long, lat double, lng double"
-    )
-    base = closestedge.closest_edges(idx, qdf, k=1, level=4).collect()
-    d = base[0]["chord2"]
-    kept = closestedge.closest_edges(
-        idx, qdf, k=1, level=4, max_chord2=d, distance_cap="conservative"
-    ).count()
-    assert kept == 1
-    dropped = closestedge.closest_edges(
-        idx, qdf, k=1, level=4,
-        max_chord2=float(np.nextafter(d, 0.0)), distance_cap="inclusive"
-    ).count()
-    assert dropped == 0
-
-
 def test_include_interiors_closest(spark):
     """Options.includeInteriors (S2BestEdgesQueryBase.java:399,410): a
     query point inside a polygon gets a distance-zero interior result

@@ -30,7 +30,7 @@ def _docs(spark):
 def test_funnel_and_manifest(spark):
     docs = _docs(spark)
     w = {"s0": 0.5, "s1": 0.3, "s2": 0.2}
-    manifest, funnel = corpus.assemble_corpus(spark, docs, w, total=12, budget=64)
+    manifest, funnel = corpus.assemble_corpus(spark, docs, w, total=12)
     f = {r["stage"]: r["n"] for r in funnel.collect()}
     # monotone funnel
     assert (
@@ -60,8 +60,8 @@ def test_funnel_and_manifest(spark):
 def test_deterministic(spark):
     docs = _docs(spark)
     w = {"s0": 0.5, "s1": 0.3, "s2": 0.2}
-    a, _ = corpus.assemble_corpus(spark, docs, w, total=12, budget=64)
-    b, _ = corpus.assemble_corpus(spark, docs, w, total=12, budget=64)
+    a, _ = corpus.assemble_corpus(spark, docs, w, total=12)
+    b, _ = corpus.assemble_corpus(spark, docs, w, total=12)
     ka = sorted((r["doc_id"], r["tok_start"]) for r in a.collect())
     kb = sorted((r["doc_id"], r["tok_start"]) for r in b.collect())
     assert ka == kb

@@ -246,7 +246,7 @@ def test_hausdorff_pruned_equals_brute(spark):
         for i in range(300)
     ]
     pdf = spark.createDataFrame(pts, "id long, lat double, lng double")
-    got = edgequeries.directed_hausdorff(pdf, idx, sample_step=8).collect()
+    got = edgequeries.directed_hausdorff(pdf, idx).collect()
     want = edgequeries.directed_hausdorff_brute(pdf, idx).collect()
     assert len(got) == len(want) == 1
     assert got[0]["worst_point_id"] == want[0]["worst_point_id"]
@@ -254,7 +254,7 @@ def test_hausdorff_pruned_equals_brute(spark):
 
 
 def test_hausdorff_pruned_tiny_hole_chain_aware(spark):
-    """A shape with a 4-edge hole (smaller than sample_step): the
+    """A shape with a 4-edge hole (smaller than the 8-edge sample step): the
     chain-aware gap bound must keep the pruned witness identical to
     brute — the case the un-chained run bound could not certify."""
     from s2_geometry_library_java_spark.operators import edgequeries
@@ -273,7 +273,7 @@ def test_hausdorff_pruned_tiny_hole_chain_aware(spark):
         for i in range(200)
     ] + [(900, 10.0, 10.0)]  # hole center: nearest boundary is the hole
     pdf = spark.createDataFrame(pts, "id long, lat double, lng double")
-    got = edgequeries.directed_hausdorff(pdf, idx, sample_step=8).collect()
+    got = edgequeries.directed_hausdorff(pdf, idx).collect()
     want = edgequeries.directed_hausdorff_brute(pdf, idx).collect()
     assert got[0]["worst_point_id"] == want[0]["worst_point_id"]
     assert got[0]["chord2"] == want[0]["chord2"]

@@ -3,6 +3,7 @@ assignment and sliding chunks."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window, functions as F
 
 from s2_geometry_library_java_spark.operators import packing
@@ -18,7 +19,17 @@ def _tokens_df(spark, n=997, seed=7):
     return spark.createDataFrame(rows, "doc_id long, re_tokens long")
 
 
-def test_prefix_sum_matches_global_window(spark):
+@pytest.fixture
+def shuffle_partitions(spark):
+    """set(n) sets spark.sql.shuffle.partitions, the partition count of
+    the prefix sum's range repartition; the session value comes back after
+    the test."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    yield lambda n: spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_prefix_sum_matches_global_window(spark, shuffle_partitions):
     """The two-phase prefix sum equals the single-task global window
     exactly, at several partition counts (incl. more partitions than
     rows in a partition-starved setting)."""
@@ -35,19 +46,19 @@ def test_prefix_sum_matches_global_window(spark):
         ).collect()
     }
     for nparts in (1, 7, 64):
+        shuffle_partitions(nparts)
         got = {
             r["doc_id"]: r["cum"]
-            for r in packing.with_prefix_sum(
-                df, "doc_id", "re_tokens", num_partitions=nparts
-            ).collect()
+            for r in packing.with_prefix_sum(df, "doc_id", "re_tokens").collect()
         }
         assert got == want
 
 
-def test_chunk_assignments_invariants(spark):
+def test_chunk_assignments_invariants(spark, shuffle_partitions):
     budget = 256
     df = _tokens_df(spark)
-    out = packing.with_chunk_assignments(df, budget, num_partitions=8)
+    shuffle_partitions(8)
+    out = packing.with_chunk_assignments(df, budget)
     rows = sorted(
         out.select("doc_id", "re_tokens", "tok_start", "chunk_first",
                    "chunk_last").collect(),
@@ -67,7 +78,7 @@ def test_chunk_assignments_invariants(spark):
     assert any(r["chunk_first"] != r["chunk_last"] for r in rows)
 
 
-def test_chunk_assignments_on_documents_table(spark):
+def test_chunk_assignments_on_documents_table(spark, shuffle_partitions):
     """Real documents table: total windows == ceil(total_tokens/budget)
     and every window in range is covered by at least one doc."""
     from s2_geometry_library_java_spark.operators import textstats
@@ -75,9 +86,8 @@ def test_chunk_assignments_on_documents_table(spark):
     budget = 512
     d = tables.load_table(spark, SF_DIR, "documents")
     stats = textstats.doc_stats(d, "doc_id", "text")
-    out = packing.with_chunk_assignments(
-        stats, budget, id_col="id", num_partitions=16
-    )
+    shuffle_partitions(16)
+    out = packing.with_chunk_assignments(stats, budget, id_col="id")
     agg = out.agg(
         F.sum("re_tokens").alias("total"),
         F.max("chunk_last").alias("last"),

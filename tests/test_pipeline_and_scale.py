@@ -233,101 +233,6 @@ def test_knn_density_seed_fewer_fallbacks(spark):
         assert lvl < uniform_level, (i, lvl, uniform_level, w)
 
 
-def test_boolean_pairs_mixed_distributed(spark):
-    """boolean_pairs(mixed=True): the distributed pair form surfaces
-    CLOSED-model degenerate outputs — a shared-edge tangent pair yields
-    an empty polygon plus degenerate edges spanning the shared edge; a
-    shared-vertex pair yields exactly one degenerate point."""
-    from s2_geometry_library_java_spark.operators import booleanops as bpo
-
-    def quad(pts):
-        return ", ".join(f"{float(la)!r}:{float(ln)!r}" for la, ln in pts)
-
-    sa = spark.createDataFrame(
-        [("a0", quad([(14.0, 24.0), (14.0, 36.0), (26.0, 36.0), (26.0, 24.0)])),
-         ("a1", quad([(10.0, 10.0), (10.0, 20.0), (20.0, 20.0), (20.0, 10.0)]))],
-        "shape_id string, text string",
-    )
-    sb = spark.createDataFrame(
-        [("b0", quad([(14.0, 36.0), (14.0, 48.0), (26.0, 48.0), (26.0, 36.0)])),
-         ("b1", quad([(20.0, 20.0), (20.0, 30.0), (30.0, 30.0), (30.0, 20.0)]))],
-        "shape_id string, text string",
-    )
-    rows = {
-        (r["a_id"], r["b_id"]): r
-        for r in bpo.boolean_pairs(sa, sb, "intersection", mixed=True).collect()
-    }
-    r_edge = rows[("a0", "b0")]
-    assert r_edge["n_loops"] == 0 and r_edge["n_degen_edges"] >= 1
-    assert r_edge["n_degen_points"] == 0 and r_edge["degen_edges"]
-    r_pt = rows[("a1", "b1")]
-    assert r_pt["n_loops"] == 0 and r_pt["n_degen_points"] == 1
-    assert "20.0:20.0" in r_pt["degen_points"]
-
-
-def test_boolean_pairs_mixed_open_model_distributed(spark):
-    """boolean_pairs(mixed=True, model="open"): the OPEN polygon model
-    rides the same distributed pair surface — the abutting pair's union
-    carries the shared edge as a subtractive crack, and its intersection
-    is empty with no degeneracies."""
-    from s2_geometry_library_java_spark.operators import booleanops as bpo
-
-    def quad(pts):
-        return ", ".join(f"{float(la)!r}:{float(ln)!r}" for la, ln in pts)
-
-    sa = spark.createDataFrame(
-        [("a0", quad([(14.0, 24.0), (14.0, 36.0), (26.0, 36.0), (26.0, 24.0)]))],
-        "shape_id string, text string",
-    )
-    sb = spark.createDataFrame(
-        [("b0", quad([(14.0, 36.0), (14.0, 48.0), (26.0, 48.0), (26.0, 36.0)]))],
-        "shape_id string, text string",
-    )
-    rows = {
-        r["op"]: r
-        for r in bpo.boolean_pairs(
-            sa, sb, ["union", "intersection"], mixed=True, model="open"
-        ).collect()
-    }
-    u = rows["union"]
-    assert u["n_loops"] == 1 and u["n_degen_edges"] >= 1
-    assert ":36.0" in u["degen_edges"]
-    i = rows["intersection"]
-    assert i["n_loops"] == 0 and i["n_degen_edges"] == 0 and i["n_degen_points"] == 0
-
-
-def test_knn_max_distance_cap(spark):
-    """F4 maxDistance option (S2ClosestPointQuery.Options.setMaxDistance):
-    capped cell-join kNN equals capped brute force, and queries with
-    fewer than k in-range neighbors return short result lists."""
-    import numpy as np
-
-    from s2_geometry_library_java_spark.kernel import sphere
-    from s2_geometry_library_java_spark.operators import knn
-
-    rng = np.random.RandomState(9)
-    pts = [(int(i), float(10 + rng.uniform(-1, 1)), float(20 + rng.uniform(-1, 1)))
-           for i in range(60)]
-    pts += [(1000, 50.0, -120.0)]  # a far outlier
-    idx = spark.createDataFrame(pts, "id long, lat double, lng double")
-    qs = [(0, 10.0, 20.0), (1, 50.0, -120.0), (2, -40.0, 100.0)]
-    queries = spark.createDataFrame(qs, "query_id long, lat double, lng double")
-    cap = float(sphere.chord2_from_angle(np.radians(3.0)))
-
-    def rows(df):
-        return sorted(
-            (r["query_id"], r["rank"], r["neighbor_id"]) for r in df.collect()
-        )
-
-    brute = rows(knn.knn_bruteforce(idx, queries, k=5, max_chord2=cap))
-    cell = rows(knn.knn_cell_join(idx, queries, k=5, max_chord2=cap))
-    assert brute == cell
-    per_q = {q: sum(1 for row in brute if row[0] == q) for q in (0, 1, 2)}
-    assert per_q[0] == 5          # dense cluster: full k
-    assert per_q[1] == 1          # only the outlier is in range
-    assert per_q[2] == 0          # nothing within 3 degrees
-
-
 def test_density_interpolation_splits_hot_metro(spark):
     """Round-4 verdict #4 'done' criterion: a single cell heavier than a
     whole target partition is split FRACTIONALLY along its Hilbert range

@@ -15,6 +15,7 @@ import ast
 import io
 import re
 from contextlib import redirect_stdout
+from functools import lru_cache
 from pathlib import Path
 
 import pytest
@@ -116,12 +117,27 @@ def _referenced_names(tree: ast.Module) -> set[str]:
     return names
 
 
+@lru_cache(maxsize=None)
+def _production() -> tuple[dict[Path, ast.Module], dict[Path, ast.Module]]:
+    """(roots, package): one parse of every production source, path ->
+    module. The roots are the entry point, the bench scripts, tools/ and
+    perfbench/; the package is every module under PKG, kernel/ included.
+    Both the reachability and the option guard read this one parse, so
+    they agree on what production is."""
+    roots = [
+        ROOT / "__spark_entry__.py", *ROOT.glob("bench*.py"),
+        *(ROOT / "tools").rglob("*.py"), *(ROOT / "perfbench").rglob("*.py"),
+    ]
+    parse = lambda paths: {p: ast.parse(p.read_text()) for p in sorted(paths)}  # noqa: E731
+    return parse(roots), parse(PKG.rglob("*.py"))
+
+
 def _package_definitions() -> dict[str, ast.AST]:
     """'module.name' -> node for every top-level package function or class."""
     return {
         f"{path.stem}.{stmt.name}": stmt
-        for path in sorted(PKG.rglob("*.py"))
-        for stmt in ast.parse(path.read_text()).body
+        for path, tree in _production()[1].items()
+        for stmt in tree.body
         if isinstance(stmt, DEFINITIONS)
     }
 
@@ -129,20 +145,17 @@ def _package_definitions() -> dict[str, ast.AST]:
 def _unreachable(definitions: dict[str, ast.AST], extra_roots=()) -> list[str]:
     """Package definitions outside kernel/ that no production root reaches.
 
-    The roots are the entry point, the bench scripts, tools/, perfbench/,
-    the package's module-level statements other than imports and
-    definitions, and ``extra_roots``. A definition is reached when a
-    reached body uses its name; matching is by name, so a name collision
-    can only over-approximate what production runs."""
-    roots = [
-        ROOT / "__spark_entry__.py", *ROOT.glob("bench*.py"),
-        *(ROOT / "tools").rglob("*.py"), *(ROOT / "perfbench").rglob("*.py"),
-    ]
+    The roots are the modules of ``_production()[0]``, the package's
+    module-level statements other than imports and definitions, and
+    ``extra_roots``. A definition is reached when a reached body uses its
+    name; matching is by name, so a name collision can only
+    over-approximate what production runs."""
+    roots, package = _production()
     reached = {q.split(".")[-1] for q in extra_roots}
-    for path in roots:
-        reached |= _used_names(ast.parse(path.read_text()))
-    for path in PKG.rglob("*.py"):
-        for stmt in ast.parse(path.read_text()).body:
+    for tree in roots.values():
+        reached |= _used_names(tree)
+    for tree in package.values():
+        for stmt in tree.body:
             if not isinstance(stmt, (*DEFINITIONS, ast.Import, ast.ImportFrom)):
                 reached |= _used_names(stmt)
     bodies: dict[str, list[ast.AST]] = {}
@@ -175,16 +188,97 @@ def test_every_package_definition_is_referenced():
     unreachable = _unreachable(definitions, UNREACHABLE_OK)
     assert unreachable == [], ", ".join(unreachable)
     assert set(UNREACHABLE_OK) <= set(_unreachable(definitions)), "stale UNREACHABLE_OK entry"
-    files = [
-        *PKG.rglob("*.py"), *(ROOT / "tools").rglob("*.py"), *ROOT.glob("bench*.py"),
-        ROOT / "__spark_entry__.py", *(ROOT / "perfbench").rglob("*.py"),
-        *(ROOT / "tests").rglob("*.py"),
+    trees = [
+        *_production()[0].values(), *_production()[1].values(),
+        *(ast.parse(path.read_text()) for path in (ROOT / "tests").rglob("*.py")),
     ]
     used = set()
-    for path in files:
-        used |= _referenced_names(ast.parse(path.read_text()))
+    for tree in trees:
+        used |= _referenced_names(tree)
     unused = sorted(
         q for q, node in definitions.items()
         if q.split(".")[0] in KERNEL_MODULES and node.name not in used
     )
     assert unused == sorted(UNREFERENCED_OK), unused
+
+
+#: defaulted parameters outside kernel/ that no production call passes,
+#: each with its reason ('module.function.parameter', methods as
+#: 'module.Class.method.parameter')
+UNPASSED_OK: dict[str, str] = {}
+
+
+def _is_input_name(name: str) -> bool:
+    """Parameters naming the caller's input columns, and the vector width:
+    they describe the input, not a behaviour."""
+    return name.endswith(("_col", "_id")) or name in {"lat", "lng", "src", "dst", "seq", "dim"}
+
+
+def _options() -> dict[str, tuple[str, int | None]]:
+    """'module.function.parameter' -> (function name, positional index or
+    None when keyword-only) for every defaulted behaviour parameter of a
+    package function or method outside kernel/ and UNREACHABLE_OK."""
+    out = {}
+    for path, tree in _production()[1].items():
+        if path.parent.name == "kernel":
+            continue
+        funcs = []
+        for stmt in tree.body:
+            if isinstance(stmt, ast.ClassDef):
+                funcs += [
+                    (f"{path.stem}.{stmt.name}.{f.name}", f, 1)
+                    for f in stmt.body if isinstance(f, ast.FunctionDef)
+                ]
+            elif isinstance(stmt, ast.FunctionDef):
+                if f"{path.stem}.{stmt.name}" not in UNREACHABLE_OK:
+                    funcs.append((f"{path.stem}.{stmt.name}", stmt, 0))
+        for qual, fn, skip in funcs:
+            a = fn.args
+            positional = a.posonlyargs + a.args
+            first = len(positional) - len(a.defaults)
+            params = [(p.arg, i - skip) for i, p in enumerate(positional) if i >= first]
+            params += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            for name, index in params:
+                if not _is_input_name(name):
+                    out[f"{qual}.{name}"] = (fn.name, index)
+    return out
+
+
+def _unpassed_options() -> list[str]:
+    """The ``_options`` that no production call passes, by keyword or
+    position. Calls match by function name, so a name collision can only
+    count an option as passed."""
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in (*_production()[0].values(), *_production()[1].values()):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                calls.setdefault(name, []).append(node)
+
+    def passes(call: ast.Call, name: str, index: int | None) -> bool:
+        if any(k.arg in (None, name) for k in call.keywords):
+            return True
+        return index is not None and (
+            len(call.args) > index or any(isinstance(a, ast.Starred) for a in call.args)
+        )
+
+    return sorted(
+        q for q, (func, index) in _options().items()
+        if not any(passes(c, q.split(".")[-1], index) for c in calls.get(func, []))
+    )
+
+
+def test_every_option_has_a_production_caller():
+    """An option no production call sets is a constant: fold it into the
+    body (an inline literal, or a module constant when modules share it or
+    a test patches it) and delete the branches only other values reached.
+
+    The rule covers every defaulted parameter of a function or method
+    outside kernel/ (which keeps reference-parity signatures) and outside
+    UNREACHABLE_OK, except the names of the caller's input columns and the
+    vector width (``_is_input_name``)."""
+    unpassed = _unpassed_options()
+    unset = [q for q in unpassed if q not in UNPASSED_OK]
+    assert unset == [], "no production call passes " + ", ".join(unset)
+    assert set(UNPASSED_OK) <= set(unpassed), "stale UNPASSED_OK entry"

@@ -18,11 +18,11 @@ DOCS = [
 ]
 
 
-def _run(spark, **opts):
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
+def _run(spark, docs=DOCS):
+    df = spark.createDataFrame(docs, "doc_id long, text string")
     return {
         r["id"]: (r["keep"], r["reason"])
-        for r in textstats.quality_filter(df, "doc_id", "text", **opts).collect()
+        for r in textstats.quality_filter(df, "doc_id", "text").collect()
     }
 
 
@@ -46,10 +46,26 @@ def test_keep_iff_empty_reason(spark):
         assert keep == (reason == "")
 
 
-def test_options_move_thresholds(spark):
-    # with min_tokens=1 doc 2 is no longer too_short
-    out = _run(spark, min_tokens=1)
+def test_options_move_thresholds(spark, monkeypatch):
+    # with MIN_TOKENS=1 doc 2 is no longer too_short
+    monkeypatch.setattr(textstats, "MIN_TOKENS", 1)
+    out = _run(spark)
     assert out[2][1] != "too_short"
-    # with max_tokens tiny, the good doc trips too_long
-    out = _run(spark, max_tokens=10)
+    # with MAX_TOKENS tiny, the good doc trips too_long
+    monkeypatch.setattr(textstats, "MAX_TOKENS", 10)
+    out = _run(spark)
     assert out[1] == (False, "too_long")
+
+
+def test_token_count_bounds(spark):
+    # too_short under 5 whitespace tokens, too_long over 100,000
+    out = _run(spark, [
+        (1, "the quick brown fox"),
+        (2, "the quick brown fox and"),
+        (3, " ".join(["the"] * 100_000)),
+        (4, " ".join(["the"] * 100_001)),
+    ])
+    assert out[1] == (False, "too_short")
+    assert out[2][1] != "too_short"
+    assert out[3][1] != "too_long"
+    assert out[4] == (False, "too_long")

@@ -4,9 +4,9 @@
 from s2_geometry_library_java_spark.operators import dedup
 
 
-def _spans(spark, rows, w=4, min_docs=2):
+def _spans(spark, rows, w=4):
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = dedup.repeated_window_spans(df, "doc_id", "text", w=w, min_docs=min_docs)
+    out = dedup.repeated_window_spans(df, "doc_id", "text", w=w)
     return sorted(
         (r["id"], r["tok_start"], r["tok_end"], r["n_windows"]) for r in out.collect()
     )
@@ -45,10 +45,10 @@ def test_two_disjoint_passages_two_islands(spark):
 
 
 def test_within_doc_repeat_not_flagged_across_min_docs(spark):
-    # the repeated phrase lives in ONE doc only -> min_docs=2 finds nothing
+    # the repeated phrase lives in ONE doc only -> no two docs share it
     phrase = _words("rep", 5)
     rows = [(1, phrase + " " + _words("mid", 4) + " " + phrase), (2, _words("u", 15))]
-    assert _spans(spark, rows, w=4, min_docs=2) == []
+    assert _spans(spark, rows, w=4) == []
 
 
 def test_adjacent_windows_merge_gap_splits(spark):

@@ -33,17 +33,16 @@ def test_banded_lsh_twin_recall(spark):
     assert found >= 0.9 * len(want), f"twin recall {found}/200"
 
 
-def test_banded_lsh_skew_guard(spark):
-    """50 identical vectors land in one band per table; with max_bucket=10
+def test_banded_lsh_skew_guard(spark, monkeypatch):
+    """50 identical vectors land in one band per table; with MAX_BUCKET=10
     the guard drops those bands entirely instead of emitting 50*49/2 pairs
     per table."""
     v = list(np.linspace(0.1, 0.7, 64))
     df = _emb_df(spark, [v] * 50)
-    out = similarity.lsh_banded_pairs(df, "vec_id", "v", max_bucket=10).collect()
-    assert out == []
-    # with the guard off they all pair up
-    out2 = similarity.lsh_banded_pairs(df, "vec_id", "v", max_bucket=10000).count()
-    assert out2 == 50 * 49 // 2
+    # under the default bound they all pair up
+    assert similarity.lsh_banded_pairs(df, "vec_id", "v").count() == 50 * 49 // 2
+    monkeypatch.setattr(similarity, "MAX_BUCKET", 10)
+    assert similarity.lsh_banded_pairs(df, "vec_id", "v").collect() == []
 
 
 def test_band_keys_table_disjoint(spark):

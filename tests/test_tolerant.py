@@ -153,3 +153,24 @@ def test_covering_memo_is_immutable(spark):
         assert list(rows_of()) == before
     hits = pip.pip_join(spark, pts, polys).collect()
     assert [(r["point_id"], r["polygon_id"]) for r in hits] == [(1, "p")]
+
+
+def test_covering_memo_keeps_a_hot_key(monkeypatch):
+    """The covering memo evicts its least recently used key: a key read
+    again before each of _COVERING_MEMO_CAP cold inserts stays memoized,
+    as geotag_docs' fixed polygon set does in a long-lived session."""
+    from s2_geometry_library_java_spark.operators import pip
+
+    monkeypatch.setattr(pip, "_COVERING_MEMO", {})
+    builds = []
+
+    def rows_of(key):
+        return pip.memoized_rows(key, lambda: builds.append(key) or [(key,)])
+
+    rows_of(b"hot")
+    for i in range(pip._COVERING_MEMO_CAP):
+        rows_of(b"hot")
+        rows_of(b"cold %d" % i)
+    assert rows_of(b"hot") == ((b"hot",),)
+    assert builds.count(b"hot") == 1
+    assert len(pip._COVERING_MEMO) == pip._COVERING_MEMO_CAP
