@@ -2,8 +2,12 @@
 edge-normal, and point-containment math. Parity: S2Cell.java:93-240,
 S2Projections getUNorm/getVNorm :858-899.
 
-Scalar-Python objects — used only inside the per-region coverer where
-candidate counts are tiny; batch paths use kernel.cellid directly.
+``Cell`` is a scalar object for one cell's geometry (areas, distances,
+the cap/rect/polyline cell tests). The batched forms below take arrays of
+cell ids: ``cells_geometry`` and ``cells_contain_points`` score the
+coverer's candidate cells, and the aligned distance kernels serve the
+covering-seed pruning. ``cells_contain_points`` is the one S2Cell.contains
+(point) kernel.
 """
 
 from __future__ import annotations
@@ -110,22 +114,6 @@ class Cell:
             ]
         )
 
-    def contains_point(self, p: np.ndarray) -> bool:
-        """Exact-ish uv containment (S2Cell.contains: project to this face)."""
-        f = np.array([self.face])
-        u, v = ci.face_xyz_to_uv(f, p[0:1], p[1:2], p[2:3])
-        u0, u1, v0, v1 = self.uv_bounds
-        # point must be on this face's hemisphere
-        face_norm = {0: (1, 0, 0), 1: (0, 1, 0), 2: (0, 0, 1),
-                     3: (-1, 0, 0), 4: (0, -1, 0), 5: (0, 0, -1)}[self.face]
-        if p @ np.array(face_norm, dtype=np.float64) <= 0:
-            return False
-        return bool(u0 <= u[0] <= u1 and v0 <= v[0] <= v1)
-
-    def children(self) -> list["Cell"]:
-        cid = np.uint64(self.id)
-        return [Cell(int(ci.child(cid, k))) for k in range(4)]
-
     def average_area(self) -> float:
         from . import sphere
 
@@ -162,7 +150,10 @@ class Cell:
         v = self.vertices
         vb = np.roll(v, -1, axis=0)
         d = ek.min_chord2_points_to_chain(pts, v, vb)
-        inside = np.array([self.contains_point(p) for p in pts])
+        n = len(pts)
+        inside = cells_contain_points(
+            np.full(n, self.face), np.tile(self.uv_bounds, (n, 1)), pts
+        )
         return np.where(inside, 0.0, d)
 
     def max_distance_chord2(self, points: np.ndarray) -> np.ndarray:
@@ -253,7 +244,8 @@ class Cell:
 # elementwise formula identically to the scalar Cell methods above, so
 # results are bit-equal (pinned by tests/test_cell_batch.py). Used by the
 # covering-seed pruning paths, where a pandas batch carries thousands of
-# (covering_cell, query_point) rows spanning many distinct cells.
+# (covering_cell, query_point) rows spanning many distinct cells, and by
+# the coverer's batched cell tests (kernel/region.py).
 # ---------------------------------------------------------------------------
 
 
@@ -273,11 +265,8 @@ def cells_geometry(unique_ids: np.ndarray):
     size = np.int64(1) << (ci.MAX_LEVEL - lev)
     i_lo = i & -size
     j_lo = j & -size
-    u_lo = ci.st_to_uv(ci.ij_to_st_min(i_lo))
-    u_hi = ci.st_to_uv(ci.ij_to_st_min(i_lo + size))
-    v_lo = ci.st_to_uv(ci.ij_to_st_min(j_lo))
-    v_hi = ci.st_to_uv(ci.ij_to_st_min(j_lo + size))
-    uvb = np.stack([u_lo, u_hi, v_lo, v_hi], axis=1)
+    uvb = ci.st_to_uv(ci.ij_to_st_min(np.stack([i_lo, i_lo + size, j_lo, j_lo + size], axis=1)))
+    u_lo, u_hi, v_lo, v_hi = uvb.T
     # vertex order SW,SE,NE,NW as in Cell.vertices
     us = np.stack([u_lo, u_hi, u_hi, u_lo], axis=1)
     vs = np.stack([v_lo, v_lo, v_hi, v_hi], axis=1)
@@ -298,8 +287,9 @@ def _aligned_geometry(cell_ids):
 
 def cells_contain_points(face: np.ndarray, uvb: np.ndarray,
                          pts: np.ndarray) -> np.ndarray:
-    """Aligned S2Cell.contains (same formulas as Cell.contains_point):
-    row k tests pts[k] against the cell geometry in row k."""
+    """Aligned S2Cell.contains(point) (S2Cell.java:435-447, projected to
+    the cell's face): row k tests pts[k] against the cell geometry in row
+    k; a point on the far hemisphere of the face is outside."""
     hemi = (pts * _FACE_NORMS[face]).sum(axis=1) > 0
     with np.errstate(divide="ignore", invalid="ignore"):
         u, v = ci.face_xyz_to_uv(face, pts[:, 0], pts[:, 1], pts[:, 2])

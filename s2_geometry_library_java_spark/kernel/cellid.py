@@ -301,26 +301,25 @@ def _face_xyz_to_uv_select(face, x, y, z):
     return u, v
 
 
+#: per face, which of (1, u, v) each of x, y, z takes, and its sign
+#: (XYZ_TRANSFORMS, S2Projections.java:444-542)
+_XYZ_SRC = np.array([[0, 1, 2], [1, 0, 2], [1, 2, 0], [0, 2, 1], [2, 0, 1], [2, 1, 0]])
+_XYZ_SGN = np.array(
+    [[1.0, 1.0, 1.0], [-1.0, 1.0, 1.0], [-1.0, -1.0, 1.0],
+     [-1.0, -1.0, -1.0], [1.0, -1.0, -1.0], [1.0, 1.0, -1.0]]
+)
+
+
 def face_uv_to_xyz(face, u, v):
     """Direction vector (not unit length) from face,(u,v)
-    (XYZ_TRANSFORMS, S2Projections.java:444-542)."""
-    one = np.ones_like(u)
-    x = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [one, -u, -u, -one, v],
-        default=v,
+    (XYZ_TRANSFORMS, S2Projections.java:444-542). A table pick times an
+    exact +-1, so every output is the reference's value bit for bit."""
+    face = np.asarray(face, dtype=np.int64)
+    src = (np.ones_like(u), u, v)
+    src_idx, sgn = _XYZ_SRC[face], _XYZ_SGN[face]
+    return tuple(
+        sgn[..., k] * np.choose(src_idx[..., k], src) for k in range(3)
     )
-    y = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [u, one, -v, -v, -one],
-        default=u,
-    )
-    z = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [v, v, one, -u, -u],
-        default=-one,
-    )
-    return x, y, z
 
 
 def st_to_uv(s):

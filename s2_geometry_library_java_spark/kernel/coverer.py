@@ -8,9 +8,15 @@ fewest terminal children — priority int at :604-609), expand via the
 region's 3-valued cell tests, stop at max_cells; then normalize +
 denormalize (S2CellUnion.java:898-960, :380-415) for min_level/level_mod.
 
-Runs scalar-per-region (regions are few, coverings <= max_cells); at scale
-it executes inside a pandas_udf over the polygon table, one covering per
-row, output exploded to (region_id, cell_id, is_interior) join rows.
+The queue loop is Python, but each expansion scores a candidate's 4
+children in one call of the region's batched cell tests
+(region.region_cell_tests): for a polygon, one numpy pass over loop
+vertices x cells, loop edges x the 16 cell edges, and the 16 cell corners.
+On 1.5 deg loops of 40-96 vertices that is ~0.02 s per polygon at
+max_cells=8, and ~0.05 s on 4-12 deg loops of 8-1,024 vertices (4 cpus;
+~0.27 s and ~0.67 s with per-cell scalar tests). At scale it executes
+inside a pandas_udf over the polygon table, one covering per row, output
+exploded to (region_id, cell_id, is_interior) join rows.
 
 Determinism: ties in the queue pop FIFO (insertion order), mirroring the
 reference's deterministic comparator + stable construction order
@@ -155,12 +161,18 @@ def _vertex_neighbors(cid: int, level: int) -> list[int]:
     return out
 
 
+def _children(cid: int) -> list[int]:
+    """The 4 child ids in traversal order (S2CellId.child, :638-646)."""
+    new_lsb = _lsb(cid) >> 2
+    return [cid + (2 * k - 3) * new_lsb for k in range(4)]
+
+
 @dataclass
 class _Candidate:
-    cell: Cell
+    id: int
+    level: int
     is_terminal: bool
     children: list = field(default_factory=list)
-    num_terminals: int = 0
 
 
 class RegionCoverer:
@@ -248,54 +260,58 @@ class RegionCoverer:
     def _max_children_shift(self) -> int:
         return 2 * self.level_mod
 
-    def _new_candidate(self, cell: Cell, interior, may_intersect, contains):
-        if not may_intersect(cell):
-            return None
-        is_terminal = False
-        if cell.level >= self.min_level:
-            if interior:
-                if contains(cell):
-                    is_terminal = True
-                elif cell.level + self.level_mod > self.max_level:
-                    return None
-            else:
-                if cell.level + self.level_mod > self.max_level or contains(cell):
-                    is_terminal = True
-        return _Candidate(cell, is_terminal)
-
-    def _expand_children(self, candidate, cell, num_levels, interior, mi, co):
-        num_levels -= 1
-        num_terminals = 0
-        for child in cell.children():
-            if num_levels > 0:
-                if mi(child):
-                    num_terminals += self._expand_children(
-                        candidate, child, num_levels, interior, mi, co
-                    )
+    def _new_candidates(self, ids: list[int], level: int, interior, tests) -> list:
+        """Candidates for cells ``ids``, all at ``level``, scored by one
+        batched call of the region's cell tests; dropped cells are left
+        out, the order is kept."""
+        may, contains = tests(ids)
+        out = []
+        for cid, m, c in zip(ids, may, contains):
+            if not m:
                 continue
-            c = self._new_candidate(child, interior, mi, co)
-            if c is not None:
-                candidate.children.append(c)
-                if c.is_terminal:
-                    num_terminals += 1
-        return num_terminals
+            is_terminal = False
+            if level >= self.min_level:
+                if interior:
+                    if c:
+                        is_terminal = True
+                    elif level + self.level_mod > self.max_level:
+                        continue
+                elif level + self.level_mod > self.max_level or c:
+                    is_terminal = True
+            out.append(_Candidate(cid, level, is_terminal))
+        return out
+
+    def _expand_children(self, candidate, cid, level, num_levels, interior, tests):
+        """Add the descendants ``num_levels`` below ``cid`` as candidate's
+        children, each level's 4 siblings scored in one batch; returns the
+        number of terminal children."""
+        num_levels -= 1
+        kids = _children(cid)
+        if num_levels > 0:
+            may, _ = tests(kids)
+            return sum(
+                self._expand_children(candidate, kid, level + 1, num_levels, interior, tests)
+                for kid, m in zip(kids, may)
+                if m
+            )
+        children = self._new_candidates(kids, level + 1, interior, tests)
+        candidate.children.extend(children)
+        return sum(c.is_terminal for c in children)
 
     def _covering_internal(self, region, interior: bool) -> list[int]:
-        contains, may_intersect, cap = rg.region_cell_tests(region)
+        tests, cap = rg.region_cell_tests(region)
         result: list[int] = []
         queue: list[tuple[int, int, _Candidate]] = []
         seq = 0
 
         def add_candidate(candidate):
             nonlocal seq
-            if candidate is None:
-                return
             if candidate.is_terminal:
-                result.append(candidate.cell.id)
+                result.append(candidate.id)
                 return
-            num_levels = 1 if candidate.cell.level < self.min_level else self.level_mod
+            num_levels = 1 if candidate.level < self.min_level else self.level_mod
             num_terminals = self._expand_children(
-                candidate, candidate.cell, num_levels, interior, may_intersect, contains
+                candidate, candidate.id, candidate.level, num_levels, interior, tests
             )
             shift = self._max_children_shift()
             if not candidate.children:
@@ -303,13 +319,13 @@ class RegionCoverer:
             if (
                 not interior
                 and num_terminals == (1 << shift)
-                and candidate.cell.level >= self.min_level
+                and candidate.level >= self.min_level
             ):
                 candidate.is_terminal = True
                 add_candidate(candidate)
                 return
             priority = -(
-                (((candidate.cell.level << shift) + len(candidate.children)) << shift)
+                (((candidate.level << shift) + len(candidate.children)) << shift)
                 + num_terminals
             )
             # reference pops LARGEST queue id first (:124-129); heapq is a
@@ -330,20 +346,19 @@ class RegionCoverer:
             if level > 0:
                 cx, cy, cz = cap.center
                 leaf = int(ci.xyz_to_cell_id(np.float64(cx), np.float64(cy), np.float64(cz)))
-                for nid in _vertex_neighbors(leaf, level):
-                    add_candidate(self._new_candidate(Cell(nid), interior, may_intersect, contains))
+                for c in self._new_candidates(_vertex_neighbors(leaf, level), level, interior, tests):
+                    add_candidate(c)
                 seeded = True
         if not seeded:
-            for f in range(6):
-                add_candidate(
-                    self._new_candidate(Cell(int(ci.from_face(f))), interior, may_intersect, contains)
-                )
+            faces = [int(ci.from_face(f)) for f in range(6)]
+            for c in self._new_candidates(faces, 0, interior, tests):
+                add_candidate(c)
 
         while queue and (not interior or len(result) < self.max_cells):
             _, _, candidate = heapq.heappop(queue)
             if (
                 interior
-                or candidate.cell.level < self.min_level
+                or candidate.level < self.min_level
                 or len(candidate.children) == 1
                 or len(result) + len(queue) + len(candidate.children) <= self.max_cells
             ):
@@ -353,7 +368,7 @@ class RegionCoverer:
             else:
                 candidate.is_terminal = True
                 candidate.children = []
-                result.append(candidate.cell.id)
+                result.append(candidate.id)
         return result
 
 
@@ -458,8 +473,7 @@ def get_simple_covering(region, start_latlng_deg: tuple[float, float], level: in
     """Fixed-level covering of a connected region by BFS flood fill over
     edge neighbors (S2RegionCoverer.getSimpleCovering/floodFill :395-398,
     :731-755). Output order follows the reference's stack discipline."""
-    _, may_intersect, _ = rg.region_cell_tests(region)
-    from .cell import Cell
+    tests, _ = rg.region_cell_tests(region)
 
     lat, lng = start_latlng_deg
     start = int(ci.parent(ci.latlng_degrees_to_cell_id(np.float64(lat), np.float64(lng)), level))
@@ -468,7 +482,7 @@ def get_simple_covering(region, start_latlng_deg: tuple[float, float], level: in
     output: list[int] = []
     while frontier:
         cid = frontier.pop()
-        if not may_intersect(Cell(cid)):
+        if not tests([cid])[0][0]:
             continue
         output.append(cid)
         for nbr in ci.get_edge_neighbors(np.uint64(cid))[0]:

@@ -108,7 +108,9 @@ def sign_batch(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
     Never returns 0 for distinct points off a common great circle; exact
     zeros (degenerate inputs) stay 0 (SoS perturbation is phase-2).
     """
-    a, b, c = np.broadcast_arrays(a, b, c)
+    a, b, c = np.asarray(a), np.asarray(b), np.asarray(c)
+    # the arithmetic broadcasts by itself; materialized broadcast views are
+    # only needed to gather the uncertain rows
     det = _det3(
         a[..., 0], a[..., 1], a[..., 2],
         b[..., 0], b[..., 1], b[..., 2],
@@ -118,6 +120,7 @@ def sign_batch(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
     uncertain = np.abs(det) <= TRIAGE_ERROR
     if not np.any(uncertain):
         return out
+    a, b, c = np.broadcast_arrays(a, b, c)
     # stable recomputation: det via differences from the longest edge
     # (S2Predicates.Sign.stable) — subtractions cancel shared magnitude.
     ia = a[uncertain]

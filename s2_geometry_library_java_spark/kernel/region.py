@@ -750,19 +750,24 @@ class Polygon:
 # 3-valued cell tests (the S2Region contract, S2Region.java:37-76) used by
 # the coverer. contains(cell) may false-negative (covering just refines
 # further); may_intersect(cell) must NEVER false-negative (covering validity).
+#
+# The coverer asks them batched: ``region_cell_tests`` returns one function
+# ``tests(ids) -> (may_intersect, contains)`` over a list of cell ids, so a
+# polygon scores an expanded candidate's 4 children in one numpy pass.
+# contains[k] implies may_intersect[k] for every region type here.
 # ---------------------------------------------------------------------------
 
 def _cap_intersects_cell(cap: Cap, cell, vertices: np.ndarray) -> bool:
     """S2Cap.intersects(cell, vertices) (S2Cap.java:545-594): true iff the
     cap intersects the cell given no cell vertex is inside the cap."""
-    from . import sphere
+    from .cell import cells_contain_points
 
     if cap.radius2 >= 2.0:  # hemisphere or larger (chord2 of 90deg = 2)
         return False
     if cap.radius2 < 0:
         return False
     axis = np.array(cap.center)
-    if cell.contains_point(axis):
+    if cells_contain_points(np.array([cell.face]), np.array([cell.uv_bounds]), axis[None, :])[0]:
         return True
     sin2_angle = cap.radius2 * (1 - 0.25 * cap.radius2)  # S1ChordAngle.sin2
     for k in range(4):
@@ -833,51 +838,77 @@ def rect_may_intersect_cell(rect: LatLngRect, cell) -> bool:
     return lng_hi >= rect.lng_lo and lng_lo <= rect.lng_hi
 
 
-def _edges_cross_cell(loop: Loop, cell) -> bool:
-    """Any loop edge crosses OR touches any cell edge (four-triangle arc
-    test). Zero signs — shared/duplicated vertices, exactly-degenerate
-    configurations — count as touching (robustCrossing >= 0 semantics,
-    mirroring the polyline path), so may_intersect never false-negatives
-    on loops that graze a cell at a vertex or edge; for contains this is
+def _per_cell(contains_cell, may_intersect_cell):
+    """The batched ``tests(ids)`` signature over scalar per-cell tests;
+    contains is asked only of cells that may intersect."""
+    from .cell import Cell
+
+    def tests(ids):
+        cells = [Cell(int(c)) for c in ids]
+        may = np.array([bool(may_intersect_cell(c)) for c in cells], dtype=bool)
+        contains = np.array(
+            [bool(m) and bool(contains_cell(c)) for m, c in zip(may, cells)], dtype=bool
+        )
+        return may, contains
+
+    return tests
+
+
+def loop_edges_touch_cells(a: np.ndarray, verts: np.ndarray) -> np.ndarray:
+    """Per cell, whether any loop edge crosses OR touches any of its 4 edges
+    (four-triangle arc test): loop edges x all cell edges in one four-sign
+    pass. ``a`` is the (m,3) loop, ``verts`` the (n,4,3) cell vertices.
+
+    Zero signs -- shared/duplicated vertices, exactly-degenerate
+    configurations -- count as touching (robustCrossing >= 0 semantics,
+    mirroring the polyline path), so may_intersect never false-negatives on
+    loops that graze a cell at a vertex or edge; for contains this is
     conservative (touching boundary => not strictly contained)."""
     from . import predicates
 
-    a = loop.vertices
+    n = len(verts)
+    a = a[:, None, :]
     b = np.roll(a, -1, axis=0)
-    cv = cell.vertices
-    for k in range(4):
-        c = cv[k]
-        d = cv[(k + 1) & 3]
-        acb = predicates.sign_batch(a, c[None, :], b)
-        bda = predicates.sign_batch(b, d[None, :], a)
-        cbd = predicates.sign_batch(c[None, :], b, d[None, :])
-        dac = predicates.sign_batch(d[None, :], a, c[None, :])
-        if bool(np.any((acb == bda) & (acb == cbd) & (acb == dac) & (acb != 0))):
-            return True
-        if bool(np.any((acb == 0) | (bda == 0) | (cbd == 0) | (dac == 0))):
-            return True
-    return False
+    c = verts.reshape(1, -1, 3)
+    d = np.roll(verts, -1, axis=1).reshape(1, -1, 3)
+    acb = predicates.sign_batch(a, c, b)
+    bda = predicates.sign_batch(b, d, a)
+    cbd = predicates.sign_batch(c, b, d)
+    dac = predicates.sign_batch(d, a, c)
+    crossing = (acb == bda) & (acb == cbd) & (acb == dac) & (acb != 0)
+    touching = (acb == 0) | (bda == 0) | (cbd == 0) | (dac == 0)
+    return (crossing | touching).reshape(-1, n, 4).any(axis=(0, 2))
 
 
-def polygon_contains_cell(poly: Polygon, cell) -> bool:
-    """Conservative: XOR-of-loops region contains the cell if the cell's
-    4 vertices and center are inside and no loop edge crosses the cell."""
-    v = cell.vertices
-    if not bool(np.all(poly.contains_points(v[:, 0], v[:, 1], v[:, 2]))):
-        return False
-    return not any(_edges_cross_cell(lp, cell) for lp in poly.loops)
+def _polygon_cell_tests(poly: Polygon):
+    """Batched polygon cell tests. may_intersect: a cell vertex is inside
+    the polygon, or a loop vertex is inside the cell, or a loop edge
+    crosses or touches a cell edge. contains (conservative): all 4 cell
+    vertices are inside and no loop edge crosses or touches the cell. The
+    vertex and edge results are computed once and serve both."""
+    from .cell import cells_contain_points, cells_geometry
 
+    def tests(ids):
+        n = len(ids)
+        if n == 0:
+            return np.zeros(0, dtype=bool), np.zeros(0, dtype=bool)
+        face, uvb, verts = cells_geometry(np.array(ids, dtype=np.uint64))
+        cv = verts.reshape(-1, 3)
+        corners_in = poly.contains_points(cv[:, 0], cv[:, 1], cv[:, 2]).reshape(n, 4)
+        touched = np.zeros(n, dtype=bool)
+        holds_vertex = np.zeros(n, dtype=bool)
+        for lp in poly.loops:
+            v = lp.vertices
+            m = len(v)
+            holds_vertex |= cells_contain_points(
+                np.repeat(face, m), np.repeat(uvb, m, axis=0), np.tile(v, (n, 1))
+            ).reshape(n, m).any(axis=1)
+            touched |= loop_edges_touch_cells(v, verts)
+        may = corners_in.any(axis=1) | holds_vertex | touched
+        contains = corners_in.all(axis=1) & ~touched
+        return may, contains
 
-def polygon_may_intersect_cell(poly: Polygon, cell) -> bool:
-    v = cell.vertices
-    if bool(np.any(poly.contains_points(v[:, 0], v[:, 1], v[:, 2]))):
-        return True
-    for lp in poly.loops:
-        if any(cell.contains_point(lp.vertices[i]) for i in range(len(lp.vertices))):
-            return True
-        if _edges_cross_cell(lp, cell):
-            return True
-    return False
+    return tests
 
 
 @dataclass
@@ -1062,12 +1093,13 @@ class BufferedRegion:
 
 
 def region_cell_tests(region):
-    """(contains_cell, may_intersect_cell, cap_bound) dispatch for a region."""
+    """(tests, cap_bound) dispatch for a region: ``tests(ids)`` returns the
+    (may_intersect, contains) bool arrays of a list of cell ids."""
     from . import sphere
 
     if isinstance(region, (ShapeIndexRegion, BufferedRegion)):
         base = region.polygon if isinstance(region, ShapeIndexRegion) else region.base
-        _, _, base_cap = region_cell_tests(base)
+        _, base_cap = region_cell_tests(base)
         if isinstance(region, BufferedRegion):
             ang = base_cap.bound_angle() + region.radius_rad
             cap = Cap(
@@ -1076,20 +1108,22 @@ def region_cell_tests(region):
             )
         else:
             cap = base_cap
-        return (region.contains_cell, region.may_intersect_cell, cap)
+        return _per_cell(region.contains_cell, region.may_intersect_cell), cap
     if isinstance(region, RegionIntersection):
         subs = [region_cell_tests(r) for r in region.regions]
         # tightest sub-cap bounds the intersection
-        cap = min((s[2] for s in subs), key=lambda c: c.radius2)
-        return (
-            lambda cell: all(s[0](cell) for s in subs),
-            lambda cell: all(s[1](cell) for s in subs),
-            cap,
-        )
+        cap = min((s[1] for s in subs), key=lambda c: c.radius2)
+
+        def all_tests(ids):
+            verdicts = [s[0](ids) for s in subs]
+            return (np.logical_and.reduce([v[0] for v in verdicts]),
+                    np.logical_and.reduce([v[1] for v in verdicts]))
+
+        return all_tests, cap
     if isinstance(region, RegionUnion):
         subs = [region_cell_tests(r) for r in region.regions]
         # bounding cap: grow the first sub-cap to cover every other one
-        caps = [s[2] for s in subs]
+        caps = [s[1] for s in subs]
         axis = np.zeros(3)
         for c in caps:
             axis += np.array(c.center)
@@ -1105,17 +1139,18 @@ def region_cell_tests(region):
                 )
                 ang = max(ang, float(d) + c.bound_angle())
             cap = Cap(tuple(axis), min(4.0, float(sphere.chord2_from_angle(ang)) * (1 + 1e-12)))
-        return (
-            lambda cell: any(s[0](cell) for s in subs),
-            lambda cell: any(s[1](cell) for s in subs),
-            cap,
-        )
+
+        def any_tests(ids):
+            verdicts = [s[0](ids) for s in subs]
+            return (np.logical_or.reduce([v[0] for v in verdicts]),
+                    np.logical_or.reduce([v[1] for v in verdicts]))
+
+        return any_tests, cap
     if isinstance(region, Cap):
-        return (
+        return _per_cell(
             lambda cell: cap_contains_cell(region, cell),
             lambda cell: cap_may_intersect_cell(region, cell),
-            region,
-        )
+        ), region
     if isinstance(region, LatLngRect):
         # cap bound: centered at rect center, radius to the farthest corner
         clat = 0.5 * (region.lat_lo + region.lat_hi)
@@ -1133,17 +1168,15 @@ def region_cell_tests(region):
         vx, vy, vz = ci.latlng_to_xyz(corners_lat, corners_lng)
         r2 = float(sphere.chord2_between(vx, vy, vz, cx, cy, cz).max()) * (1 + 1e-12)
         cap = Cap((float(cx[0]), float(cy[0]), float(cz[0])), min(4.0, r2))
-        return (
+        return _per_cell(
             lambda cell: rect_contains_cell(region, cell),
             lambda cell: rect_may_intersect_cell(region, cell),
-            cap,
-        )
+        ), cap
     if isinstance(region, Polyline):
-        return (
+        return _per_cell(
             lambda cell: False,
             lambda cell: polyline_may_intersect_cell(region, cell),
-            _polyline_cap(region),
-        )
+        ), _polyline_cap(region)
     if isinstance(region, Loop):
         region = Polygon([region])
     if isinstance(region, Polygon):
@@ -1162,11 +1195,7 @@ def region_cell_tests(region):
             anti = -centroid
             if bool(region.contains_points(anti[0:1], anti[1:2], anti[2:3])[0]):
                 cap = Cap((1.0, 0.0, 0.0), 4.0)
-        return (
-            lambda cell: polygon_contains_cell(region, cell),
-            lambda cell: polygon_may_intersect_cell(region, cell),
-            cap,
-        )
+        return _polygon_cell_tests(region), cap
     raise TypeError(f"unsupported region {type(region)}")
 
 
@@ -1383,7 +1412,11 @@ def polyline_may_intersect_cell(line: Polyline, cell) -> bool:
     v = line.vertices
     if len(v) == 0:
         return False
-    if any(cell.contains_point(v[i]) for i in range(len(v))):
+    from .cell import cells_contain_points
+
+    if bool(cells_contain_points(
+        np.full(len(v), cell.face), np.tile(cell.uv_bounds, (len(v), 1)), v
+    ).any()):
         return True
     cv4 = cell.vertices
     for j in range(4):

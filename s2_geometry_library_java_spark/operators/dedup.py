@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.columns import _c
+from ..plans import cache
 
 
 def hash32(col, seed: int) -> Column:
@@ -423,8 +424,9 @@ def connected_components(
     duplicate chain would need 1M shuffles); star contraction collapses
     giant components without ever serializing one through a single task.
     No driver-side state: the edge set stays distributed, monotonically
-    contracting toward stars; ``localCheckpoint`` truncates the iterative
-    lineage so the Catalyst plan doesn't double per round.
+    contracting toward stars; ``cache.checkpoint`` truncates the iterative
+    lineage so the Catalyst plan doesn't double per round, and the caller's
+    ``cache.scope()`` releases every round's blocks.
 
     Convergence is detected exactly (count + exceptAll emptiness), not by
     hash. Raises after 25 rounds, which cover n ~ 2^25 splits.
@@ -438,14 +440,13 @@ def connected_components(
     never the corpus: above it the fully distributed star contraction
     runs.
     """
-    e = (
+    e = cache.checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
         .distinct()
-        .localCheckpoint()
     )
     # (A limit-guarded single collect was tried here instead of the
     # checkpoint + count: CollectLimit's incremental partition scaling
@@ -514,7 +515,7 @@ def connected_components(
         )
 
     for _ in range(25):
-        nxt = small_star(large_star(e)).localCheckpoint()
+        nxt = cache.checkpoint(small_star(large_star(e)))
         nxt_cnt = nxt.count()
         # counts equal + multiset difference empty == exact convergence;
         # each round's count is carried forward, never recomputed

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..plans import cache
+
 
 def with_prefix_sum(
     df: DataFrame,
@@ -48,7 +50,7 @@ def with_prefix_sum(
             .rowsBetween(Window.unboundedPreceding, 0)
         ),
     )
-    local = local.localCheckpoint()  # pin partitioning: offsets must
+    local = cache.checkpoint(local)  # pin partitioning: offsets must
     # describe the same physical partitions the rows carry in _pid
     totals = {
         r["_pid"]: r["t"]

@@ -37,7 +37,6 @@ from ..functions import udfs
 from ..kernel import cellid as s2
 from ..kernel import coverer as cov
 from ..kernel import region as rg
-from ..kernel.cell import Cell
 from ..localdf import local_df
 
 
@@ -47,8 +46,9 @@ MAX_CELLS = 8
 
 #: driver-side memo for covering rows: the covering of a polygon is a pure
 #: function of its geometry + coverer params and is independent of any input
-#: table, yet the coverer costs ~0.5 s of driver time per 6-polygon call —
-#: paid on EVERY pip_join plan build. Keyed by a digest of loop vertices +
+#: table, yet the coverer costs ~0.02-0.05 s of driver time per polygon
+#: (4 cpus, perfbench-shaped loops of 8-1,024 vertices) — paid on EVERY
+#: pip_join plan build. Keyed by a digest of loop vertices +
 #: orientation + params; bounded LRU (a hit moves its key to the end, the
 #: first key is evicted) so dynamically-constructed polygons (boolean-op
 #: results) can't grow it without bound.
@@ -88,14 +88,15 @@ def covering_cells(coverer, poly) -> list[tuple[int, bool]]:
     """(signed cell_id, is_interior) for each cell of one polygon's covering.
 
     is_interior marks covering cells fully contained in the polygon
-    (computed with the polygon's own contains-cell test), enabling the
-    exact-test skip (SURVEY.md §4 'interior fast accept').
+    (one batched call of the polygon's own contains-cell test over the
+    whole covering), enabling the exact-test skip (SURVEY.md §4 'interior
+    fast accept').
     """
-    contains_cell, _, _ = rg.region_cell_tests(poly)
-    return [
-        (int(s2.to_signed(np.uint64(cid))[0]), bool(contains_cell(Cell(cid))))
-        for cid in coverer.get_covering(poly)
-    ]
+    tests, _ = rg.region_cell_tests(poly)
+    ids = coverer.get_covering(poly)
+    _, interior = tests(ids)
+    signed = s2.to_signed(np.array(ids, dtype=np.uint64))
+    return [(int(cid), bool(f)) for cid, f in zip(signed, interior)]
 
 
 def covering_rows(polygons: dict) -> tuple[tuple, ...]:

@@ -9,12 +9,14 @@ spread): it cannot read blocks the first call left behind.
 
 import pytest
 from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.operators import (
     booleanops,
     closestedge,
     dedup,
     knn,
+    packing,
     ringsearch,
     similarity,
 )
@@ -35,6 +37,10 @@ def _quads(spark, prefix, centers, h):
 
 def _docs(spark):
     return tables.load_table(spark, SF_DIR, "documents")
+
+
+def _doc_lengths(spark):
+    return _docs(spark).select("doc_id", F.length("text").alias("re_tokens"))
 
 
 def _emb(spark):
@@ -77,6 +83,11 @@ CALLS = {
                                   "embedding", n_centroids=8),
     "lsh_candidate_pairs": _table(dedup.lsh_candidate_pairs, _docs, "doc_id", "text"),
     "repeated_window_spans": _table(dedup.repeated_window_spans, _docs, "doc_id", "text"),
+    # these three checkpoint instead of holding
+    "near_dup_clusters": _table(dedup.near_dup_clusters, _docs, "doc_id", "text"),
+    "near_dup_clusters_star_route": _table(
+        dedup.near_dup_clusters, _docs, "doc_id", "text"),
+    "with_chunk_assignments": _table(packing.with_chunk_assignments, _doc_lengths, 512),
 }
 
 #: jobs by which two identical calls may differ with nothing cached between
@@ -89,10 +100,12 @@ SEED_JOB_SPREAD = 4
 
 #: name -> (module, constant, value) that routes the call to the route that
 #: holds: the covering seed on the 302-row edge index, the distributed
-#: covering join for three shapes a side
+#: covering join for three shapes a side, and the star-contraction rounds
+#: of connected_components
 ROUTES = {
     "furthest_edges_seed_route": (closestedge, "AUTO_COVERING_SEED_EDGES", 1),
     "candidate_pairs": (booleanops, "SMALL_SHAPES_THRESHOLD", 0),
+    "near_dup_clusters_star_route": (dedup, "SMALL_GRAPH_EDGES", 0),
 }
 
 

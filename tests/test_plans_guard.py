@@ -64,8 +64,12 @@ def test_no_python_row_loop_or_cartesian(spark, name):
 
 def test_only_plans_cache_persists():
     """plans/cache.py is the package's one owner of cached intermediates:
-    no other module persists, caches, unpersists or names a StorageLevel."""
-    pattern = re.compile(r"\.(persist|cache|unpersist)\(|StorageLevel")
+    no other module persists, caches, unpersists, checkpoints or names a
+    StorageLevel. ``cache.checkpoint(`` is the owner's own checkpoint."""
+    pattern = re.compile(
+        r"\.(persist|cache|unpersist)\(|StorageLevel|localCheckpoint"
+        r"|(?<!\bcache)\.checkpoint\("
+    )
     found = [
         f"{path.relative_to(PKG)}:{n}: {line.strip()}"
         for path in sorted(PKG.rglob("*.py"))

@@ -7,7 +7,7 @@ from s2_geometry_library_java_spark.kernel import coverer as cov
 from s2_geometry_library_java_spark.kernel import edges as ek
 from s2_geometry_library_java_spark.kernel import region as rg
 from s2_geometry_library_java_spark.kernel import sphere
-from s2_geometry_library_java_spark.kernel.cell import Cell
+from s2_geometry_library_java_spark.kernel.cell import Cell, cells_geometry
 
 
 def _poly():
@@ -23,16 +23,20 @@ def test_shape_index_region_cell_tests_sound():
     lat = rng.uniform(-10, 22, 200)
     lng = rng.uniform(-10, 22, 200)
     lvls = rng.integers(4, 10, 200)
-    for k in range(200):
-        cid = int(ci.parent(ci.latlng_degrees_to_cell_id(lat[k], lng[k]), int(lvls[k])))
+    ids = [
+        int(ci.parent(ci.latlng_degrees_to_cell_id(lat[k], lng[k]), int(lvls[k])))
+        for k in range(200)
+    ]
+    exact_may, exact_contains = rg.region_cell_tests(poly)[0](ids)
+    _, _, verts = cells_geometry(np.array(ids, dtype=np.uint64))
+    touched = rg.loop_edges_touch_cells(poly.loops[0].vertices, verts)
+    for k, cid in enumerate(ids):
         cell = Cell(cid)
-        exact_contains = rg.polygon_contains_cell(poly, cell)
-        exact_may = rg.polygon_may_intersect_cell(poly, cell)
         # soundness: contains never over-claims; may_intersect never under-claims
         if reg.contains_cell(cell):
-            assert exact_contains or not rg._edges_cross_cell(poly.loops[0], cell)
-            assert exact_may  # contained cells certainly intersect
-        if exact_may:
+            assert exact_contains[k] or not touched[k]
+            assert exact_may[k]  # contained cells certainly intersect
+        if exact_may[k]:
             assert reg.may_intersect_cell(cell)
 
 
